@@ -112,28 +112,12 @@ final class GraphRunner(
     * action does see the narrow width — run analytics on their own
     * session if that window matters). `graft.engine.
     * shufflePartitions`: override for deployments whose per-batch state
-    * joins need cluster-wide width (e.g. executor-mode JDBC with a huge
+    * joins need cluster-wide width (e.g. a segment store with a huge
     * live set); 0 disables the override entirely.
     */
   private val engineShuffleParts: Int =
     spark.conf.getOption("graft.engine.shufflePartitions").map(_.toInt)
       .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
-
-  /** Opt-in per-commit phase timing (`graft.engine.timing=true`):
-    * prints materialize/checkpoint/write wall times per batch to stderr.
-    * Observability for perf attribution — off by default, zero cost when
-    * disabled.
-    */
-  private val timing: Boolean =
-    spark.conf.getOption("graft.engine.timing").exists(_.toBoolean)
-  private def timed[A](phase: String)(f: => A): A =
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally System.err.println(
-        f"[engine-timing] $phase ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    }
 
   private def withEngineShuffle[A](f: => A): A =
     if (engineShuffleParts <= 0) f
@@ -337,7 +321,7 @@ final class GraphRunner(
     // RollForwardAsync concurrently per batch too).
     val toUnpersist = mutable.ArrayBuffer[DataFrame]()
     try {
-      timed("materialize") { levels.foreach { level =>
+      levels.foreach { level =>
         val built = level.map { r =>
           // T9: blocks at or before the reducer's start point are not
           // delivered to it (a late-starting reducer indexes from its
@@ -374,7 +358,7 @@ final class GraphRunner(
           ctx.outputs = ctx.outputs.updated(name, out)
           out.foreach { case (t, df) => appends(t) = (df, slotCols(t)) }
         }
-      } }
+      }
       flushCommit(blocksDf, batchId, appends, top, minSlot, ctx)
     } finally {
       toUnpersist.foreach(_.unpersist(false))
@@ -385,7 +369,7 @@ final class GraphRunner(
   private def flushCommit(blocksDf: DataFrame, batchId: Long,
       appends: mutable.LinkedHashMap[String, (DataFrame, String)],
       top: Seq[Point], minSlot: Long, ctx: BatchContext): Unit = {
-    val stored = timed("checkpoint-read") { store.checkpoints }
+    val stored = store.checkpoints
     val newCps = topoOrder.map { r =>
       val prior = pendingPoints.getOrElse(r.name,
         stored.getOrElse(r.name, Seq.empty))
@@ -395,9 +379,9 @@ final class GraphRunner(
     // Rows whose retraction can never be requested (rollback depth guard,
     // T6) may be dropped at compaction: frontier = new tip − guard.
     val frontier = top.head.slot - maxRollbackSlots
-    // Bind each registered compaction to this commit's frontier: the
-    // declarative shapes carry a SQL form (DB backends run them as one
-    // in-txn DELETE) AND a DataFrame form (segment-store fold). Schemas
+    // Bind each registered compaction to this commit's frontier: both
+    // shapes carry a SQL form (DB backends run them as one in-txn
+    // DELETE) AND a DataFrame form (segment-store fold). Schemas
     // come from the registry, so tables with no appends this batch still
     // compact on compaction cycles.
     // Compactor view of a table = committed state ∪ THIS commit's own
@@ -419,19 +403,16 @@ final class GraphRunner(
                 tableAtCommit(against).filter(col(slotCol) <= frontier)
                   .select(keys.map(col): _*),
                 keys, "left_anti"),
-              Some(SqlCompaction(against, keys, slotCol, frontier,
-                dropMatched = true)))
+              SqlCompaction(against, keys, slotCol, frontier,
+                dropMatched = true))
           case Compaction.DropUnmatched(against, keys, slotCol) =>
             BoundCompactor(d.schema,
               df => df.filter(col(slotCol) > frontier).unionByName(
                 df.filter(col(slotCol) <= frontier).join(
                   tableAtCommit(against).select(keys.map(col): _*),
                   keys, "left_semi")),
-              Some(SqlCompaction(against, keys, slotCol, frontier,
-                dropMatched = false)))
-          case Compaction.Custom(fn) =>
-            BoundCompactor(d.schema,
-              df => fn(df, tableAtCommit, frontier), None)
+              SqlCompaction(against, keys, slotCol, frontier,
+                dropMatched = false))
         })
     }
     // segment-write times aggregate PER REDUCER per batch (a reducer may
@@ -442,9 +423,8 @@ final class GraphRunner(
         val owner = tableOwner.getOrElse(table, table)
         segTimes(owner) = segTimes.getOrElse(owner, 0.0) + sec
       }
-    val wrote = timed("store-commit") {
+    val wrote =
       store.commit(batchId, appends.toMap, newCps, compactors, onSegment)
-    }
     telemetry.foreach(t => segTimes.foreach { case (r, sec) =>
       t.record(r, sec, top.head.slot)
     })

@@ -1,27 +1,21 @@
 package graft.core
 
-import java.sql.{Connection, DriverManager, PreparedStatement, Types}
+import java.sql.{Connection, DriverManager, PreparedStatement}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
 /** Transactional JDBC backend (embedded Derby) behind the `Store` seam —
   * the deployment shape of the reference's EF/Postgres unit-of-work
-  * (`EfBlockUnitOfWork.cs:18-247`): data rows, checkpoints, and the
-  * commit marker all land through one database, with visibility gated by
-  * the marker.
+  * (`EfBlockUnitOfWork.cs:18-247`).
   *
-  * Commit protocol (crash-safe without multi-statement DDL coordination):
-  *  1. data rows are appended tagged with a `_batch` column via Spark
-  *     JDBC (executor-parallel writes — NOT yet visible: readers filter
-  *     `_batch <= max(committed)`);
-  *  2. one driver-side JDBC transaction replaces the checkpoint rows and
-  *     inserts the commit marker `graft_commits(batch_id)` — the atomic
-  *     point, exactly the reference's data+state single transaction (T3);
-  *  3. a crash between 1 and 2 leaves orphan rows with `_batch` above
-  *     the marker — invisible to readers and deleted when the batch id
-  *     is retried (idempotent at-least-once replay).
+  * Commit (T3): the batch's plans are collected on the driver, then ONE
+  * database transaction inserts every table's rows (tagged with a
+  * `_batch` column, which `readLatestSegment` selects by), replaces the
+  * checkpoint rows, runs any due compaction and inserts the commit
+  * marker `graft_commits(batch_id)`. A crash or error anywhere before
+  * the COMMIT leaves nothing behind (Derby DDL is transactional too), so
+  * a retried batch id starts from clean state.
   *
   * Rollback (T5) runs entirely in one transaction: slot-keyed deletes on
   * every user table + checkpoint rewind + marker. Retraction here is
@@ -32,16 +26,15 @@ import scala.collection.mutable
   * reference pairs Postgres with its design's scale notes.
   *
   * SINGLE WRITER REQUIRED (like the reference's Postgres backend behind
-  * its advisory lock, T13): the commit-marker primary key stops a racing
-  * writer from double-committing a batch id, but the loser's already-
-  * appended data rows would share the winner's (now visible) `_batch`
-  * tag. `ChainIngest.start`/`Rewind` acquire the store lock; direct
-  * GraphRunner embedders must do the same.
+  * its advisory lock, T13): the store caches table existence and the
+  * committed batch id between its own writes. `ChainIngest.start`/
+  * `Rewind` acquire the store lock; direct GraphRunner embedders must do
+  * the same.
   */
 object JdbcStore {
   // Engine-wide Derby tuning, set before the first connection boots the
   // embedded engine: 4k-page cache x 4000 = ~16 MB (default 1000 pages
-  // starves the index lookups the visibility filter and rollback rely on).
+  // starves the index lookups the latest-segment read and rollback rely on).
   private lazy val tuneDerby: Unit = {
     if (System.getProperty("derby.storage.pageCacheSize") == null)
       System.setProperty("derby.storage.pageCacheSize", "4000")
@@ -58,27 +51,12 @@ object JdbcStore {
 final class JdbcStore(val root: String, spark: SparkSession) extends Store {
   JdbcStore.tuneDerby
 
-  private val url = s"jdbc:derby:$root/derby;create=true"
-  private val props = new java.util.Properties()
-  // Executor-side write shape: statement batches of 5000 (default 1000)
-  // and a bounded number of writer connections. Embedded Derby serializes
-  // page writes anyway, so 32 one-row-commit tasks are pure overhead —
-  // a handful of fat partitions each commit once. Against a server-grade
-  // backend (the reference's Postgres) raise graft.jdbc.writeParts.
-  private val writeParts: Int =
-    spark.conf.getOption("graft.jdbc.writeParts").map(_.toInt)
-      .getOrElse(math.min(4, math.max(1,
-        spark.sparkContext.defaultParallelism)))
-  private val writeProps = new java.util.Properties()
-  writeProps.setProperty("batchsize", "5000")
-  writeProps.setProperty("numPartitions", writeParts.toString)
-
-  /** One persistent driver-side connection for all metadata/txn work —
-    * commit markers, checkpoints, cleanup — instead of a fresh embedded
-    * boot-handshake per statement. Single-writer (T13) makes this safe;
-    * executor write tasks still open their own connections.
+  /** One persistent driver-side connection for all reads and writes,
+    * instead of a fresh embedded boot-handshake per statement.
+    * Single-writer (T13) makes this safe.
     */
-  private lazy val conn: Connection = DriverManager.getConnection(url)
+  private lazy val conn: Connection =
+    DriverManager.getConnection(s"jdbc:derby:$root/derby;create=true")
   private def withConn[A](f: Connection => A): A = synchronized {
     val saved = conn.getAutoCommit
     var restore = true
@@ -98,14 +76,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     } finally if (restore) conn.setAutoCommit(saved)
   }
 
-  /** The SQL dialect behind all generated DDL/type mapping
-    * ([[SqlDialect]]): Derby is the embedded runner; `postgres` emits
-    * the reference deployment's DDL (golden-pinned by SqlDialectSpec).
-    */
-  private val dialect: SqlDialect = SqlDialect.forName(
-    spark.conf.getOption("graft.jdbc.dialect").getOrElse("derby"))
-
-  private def q(ident: String): String = dialect.quote(ident)
+  private def q(ident: String): String = DerbyDialect.quote(ident)
 
   // bootstrap the framework tables
   withConn { c =>
@@ -113,14 +84,14 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     val st = c.createStatement()
     try {
       if (!existing.contains("graft_commits"))
-        st.executeUpdate(dialect.commitsDdl)
+        st.executeUpdate(DerbyDialect.commitsDdl)
       if (!existing.contains("graft_checkpoints"))
-        st.executeUpdate(dialect.checkpointsDdl)
+        st.executeUpdate(DerbyDialect.checkpointsDdl)
       if (!existing.contains("graft_tables"))
         // per-table retraction column, persisted at first write: a later
         // rollback from a subset-registered runner must know every
         // table's slot column (same role as StateStore manifest slotCols)
-        st.executeUpdate(dialect.tablesDdl)
+        st.executeUpdate(DerbyDialect.tablesDdl)
     } finally st.close()
   }
 
@@ -137,11 +108,11 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
 
   private val registeredCols = mutable.Map[String, String]()
 
-  /** In-transaction registration on the CALLER'S connection — the
-    * driver-commit path, where the INSERT must commit atomically with
-    * the data it describes. Duplicate key = already registered.
+  /** Registration inside the commit transaction, so the INSERT commits
+    * atomically with the data it describes. Duplicate key = already
+    * registered.
     */
-  private def registerSlotColIn(c: Connection, table: String,
+  private def registerSlotCol(c: Connection, table: String,
       slotCol: String): Unit =
     if (!registeredCols.contains(table)) {
       val ps = c.prepareStatement(
@@ -151,21 +122,13 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
       finally ps.close()
     }
 
-  private def registerSlotCol(table: String, slotCol: String): Unit =
-    if (!registeredCols.contains(table)) {
-      // ONE spelling of the INSERT + duplicate-key-swallow (r08
-      // review): the driver-commit and standalone paths must not drift
-      withConn(c => registerSlotColIn(c, table, slotCol))
-      registeredCols += table -> slotCol
-    }
-
   private def listTables(c: Connection): Set[String] = {
     val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
     val names = mutable.Set[String]()
     // exclude catalogs by SCHEMA, not by name prefix: a user table
     // legitimately named SYS-something must stay in the registry (it
-    // needs orphan cleanup and rollback like any other); Derby system
-    // tables live in the SYS schema and are type SYSTEM TABLE anyway
+    // needs rollback like any other); Derby system tables live in the
+    // SYS schema and are type SYSTEM TABLE anyway
     while (rs.next())
       if (rs.getString("TABLE_SCHEM") != "SYS")
         names += rs.getString("TABLE_NAME")
@@ -180,7 +143,6 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
   private val userTableCache: mutable.Set[String] =
     mutable.Set(withConn(listTables).filterNot(_.startsWith("graft_"))
       .toSeq: _*)
-  private def userTables(c: Connection): Set[String] = userTableCache.toSet
 
   // positive-only existence cache (tables are never dropped)
   private val knownTables = mutable.Set[String]()
@@ -254,19 +216,19 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
 
   /** Driver-side read: one ResultSet → a LOCAL relation. The serving-DB
     * state a reducer re-reads each batch is bounded (latest segment /
-    * live set), so skipping the per-read Spark JDBC job + schema probe
-    * is pure win — and a local relation is broadcast-join fodder for
-    * Catalyst. Tables too big for this belong on the segment store or
-    * behind `graft.jdbc.driverCommit=false` (executor-parallel scans).
+    * live set), so skipping a Spark JDBC job + schema probe per read is
+    * pure win — and a local relation is broadcast-join fodder for
+    * Catalyst. Tables too big for this belong on the segment store.
+    * `onlyBatch` restricts the read to one `_batch` tag.
     */
   private def driverRead(table: String, schema: StructType,
-      where: String): DataFrame = {
+      onlyBatch: Option[Long]): DataFrame = {
     val cols = schema.fields.map(f => q(f.name)).mkString(", ")
+    val where = onlyBatch.fold("")(b => s" WHERE ${q("_batch")} = $b")
     val rows = withConn { c =>
       val st = c.createStatement()
       try {
-        val rs = st.executeQuery(
-          s"SELECT $cols FROM ${q(table)} WHERE $where")
+        val rs = st.executeQuery(s"SELECT $cols FROM ${q(table)}$where")
         val buf = new java.util.ArrayList[Row]()
         while (rs.next()) buf.add(Row.fromSeq(
           schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
@@ -278,56 +240,31 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     spark.createDataFrame(rows, schema)
   }
 
-  private def latestBatchOf(table: String, committed: Long): Long =
+  private def latestBatchOf(table: String): Long =
     withConn { c =>
       val st = c.createStatement()
       try {
         val rs = st.executeQuery(
-          s"SELECT MAX(${q("_batch")}) FROM ${q(table)} " +
-            s"WHERE ${q("_batch")} <= $committed")
+          s"SELECT MAX(${q("_batch")}) FROM ${q(table)}")
         rs.next()
         val v = rs.getLong(1)
         if (rs.wasNull()) -1L else v
       } finally st.close()
     }
 
-  private def readCommitted(table: String, schema: StructType,
-      latestOnly: Boolean): DataFrame = {
+  // every row in the database is committed: rows and their marker
+  // land in one transaction, so no read needs a visibility gate
+  def read(table: String, schema: StructType): DataFrame =
     if (!tableExists(table)) emptyDf(schema)
-    else {
-      val committed = batchId
-      if (driverCommit) {
-        val where =
-          if (latestOnly) {
-            val latest = latestBatchOf(table, committed)
-            if (latest < 0) return emptyDf(schema)
-            s"${q("_batch")} = $latest"
-          } else s"${q("_batch")} <= $committed"
-        driverRead(table, schema, where)
-      } else {
-        // Spark-side predicate: backtick-quoted identifiers (double
-        // quotes are string literals in Spark SQL); pushed down to
-        // Derby by the JDBC source.
-        val pred =
-          if (latestOnly) {
-            val latest = latestBatchOf(table, committed)
-            if (latest < 0) return emptyDf(schema)
-            s"`_batch` = $latest"
-          } else s"`_batch` <= $committed"
-        spark.read.jdbc(url, q(table), props).filter(pred)
-          .select(schema.fields.toSeq.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)): _*)
-      }
-    }
+    else driverRead(table, schema, None)
+
+  def readLatestSegment(table: String, schema: StructType): DataFrame = {
+    val latest = if (tableExists(table)) latestBatchOf(table) else -1L
+    if (latest < 0) emptyDf(schema)
+    else driverRead(table, schema, Some(latest))
   }
 
-  def read(table: String, schema: StructType): DataFrame =
-    readCommitted(table, schema, latestOnly = false)
-
-  def readLatestSegment(table: String, schema: StructType): DataFrame =
-    readCommitted(table, schema, latestOnly = true)
-
-  /** Secondary indexes on `_batch` (visibility filter) and the slot
+  /** Secondary indexes on `_batch` (latest-segment read) and the slot
     * column (rollback deletes) — the reference's P9 sargability
     * (`TestDbContext.cs:36-37` `HasIndex(SpentSlot)`). Created lazily
     * after the table exists; best-effort (Derby errors if present).
@@ -339,7 +276,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
         Seq("_batch" -> s"ix_${table}_batch", slotCol -> s"ix_${table}_slot")
           .foreach { case (column, ix) =>
             val st = c.createStatement()
-            try st.executeUpdate(dialect.createIndex(ix, table, Seq(column)))
+            try st.executeUpdate(DerbyDialect.createIndex(ix, table, Seq(column)))
             catch { case _: Exception => () }
             finally st.close()
           }
@@ -347,31 +284,21 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
       indexed += table
     }
 
-  // ---- driver-batched commit (default): the reference's unit-of-work
-  // shape (`EfBlockUnitOfWork.cs:94-121`) — every table's rows, the
-  // checkpoint rewrite, and the commit marker in ONE database
-  // transaction (one log fsync per batch, truly atomic, no orphan
-  // phase). Plan execution (collect) happens before the txn opens; a
-  // micro-batch's rows are bounded by the trigger size, so the driver
-  // hop is the deployment shape here exactly as it is in the reference.
-  // For appends too large for the driver, `graft.jdbc.driverCommit=
-  // false` switches to executor-parallel Spark JDBC writes gated by the
-  // marker (the two-phase protocol in the header comment).
+  // ---- commit: the reference's unit-of-work shape
+  // (`EfBlockUnitOfWork.cs:94-121`) — every table's rows, the checkpoint
+  // rewrite, and the commit marker in ONE database transaction (one log
+  // fsync per batch). Plan execution (collect) happens before the txn
+  // opens; a micro-batch's rows are bounded by the trigger size, so the
+  // driver hop is the deployment shape here exactly as it is in the
+  // reference.
 
-  private val driverCommit: Boolean =
-    spark.conf.getOption("graft.jdbc.driverCommit").forall(_.toBoolean)
-
-  override def preferLocalOutputs: Boolean = driverCommit
+  override def preferLocalOutputs: Boolean = true
 
   // DDL/JDBC type mapping lives in the dialect (see its doc for the
-  // Derby VARCHAR-not-CLOB and setNull rationales). Both commit modes
-  // create tables through `ensureTable`, so the mapping stays
-  // interchangeable.
-  private def jdbcTypeCode(dt: DataType): Int = dialect.jdbcTypeCode(dt)
-
+  // Derby VARCHAR-not-CLOB and setNull rationales)
   private def setParam(ps: PreparedStatement, idx: Int, dt: DataType,
       v: Any): Unit =
-    if (v == null) ps.setNull(idx, jdbcTypeCode(dt))
+    if (v == null) ps.setNull(idx, DerbyDialect.jdbcTypeCode(dt))
     else dt match {
       case StringType => ps.setString(idx, v.asInstanceOf[String])
       case LongType => ps.setLong(idx, v.asInstanceOf[Long])
@@ -391,11 +318,10 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     }
 
   private def ensureTable(c: Connection, table: String,
-      schema: StructType,
-      created: mutable.Buffer[String] = mutable.Buffer.empty): Unit =
+      schema: StructType, created: mutable.Buffer[String]): Unit =
     if (!tableExists(table)) {
       val st = c.createStatement()
-      try st.executeUpdate(dialect.createUserTable(table, schema))
+      try st.executeUpdate(DerbyDialect.createUserTable(table, schema))
       finally st.close()
       knownTables += table
       userTableCache += table
@@ -403,7 +329,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     }
 
   private def insertRows(c: Connection, table: String, schema: StructType,
-      rows: Iterable[Row], batchOf: Row => Long): Unit = {
+      rows: Iterable[Row], batchId: Long): Unit = {
     val names = schema.fields.map(f => q(f.name)) :+ q("_batch")
     val ps = c.prepareStatement(
       s"INSERT INTO ${q(table)} (${names.mkString(", ")}) VALUES (${
@@ -414,7 +340,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
         schema.fields.zipWithIndex.foreach { case (f, i) =>
           setParam(ps, i + 1, f.dataType, row.get(i))
         }
-        ps.setLong(schema.fields.length + 1, batchOf(row))
+        ps.setLong(schema.fields.length + 1, batchId)
         ps.addBatch(); pending += 1
         if (pending >= 5000) { ps.executeBatch(); pending = 0 }
       }
@@ -429,21 +355,13 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     * keeps (e.g. utxo_created drops pairs whose spend is final behind
     * the rollback frontier). Runs INSIDE the commit transaction, so it
     * is atomic with the batch and replay-safe; rows keep their original
-    * `_batch` tag so visibility and idempotent-replay cleanup are
-    * untouched. Without this the spend-matching read grows O(chain) —
+    * `_batch` tag. Without this the spend-matching read grows O(chain) —
     * the reference leans on `HasIndex(SpentSlot)` sargability (P9), but
     * an index does not shrink the scan the way the live set does.
     */
   private val compactEvery: Long =
     spark.conf.getOption("graft.jdbc.compactEvery").map(_.toLong)
       .getOrElse(8L)
-
-  /** Rows the most recent compaction buffered on the driver: 0 whenever
-    * every compactor ran as in-database SQL (the declarative shapes).
-    * Specs assert this stays 0 for the UTxO compactors — the guard
-    * against reintroducing an O(live-set) driver allocation.
-    */
-  @volatile private[graft] var lastCompactionBufferedRows: Long = 0L
 
   /** Best-effort index on the key columns a compaction DELETE probes —
     * the analogue of the reference's `HasIndex(SpentSlot)` (P9) for the
@@ -456,114 +374,24 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     if (!keyIndexed.contains(table)) {
       val st = c.createStatement()
       try st.executeUpdate(
-        dialect.createIndex(s"ix_${table}_cmpkey", table, keyCols))
+        DerbyDialect.createIndex(s"ix_${table}_cmpkey", table, keyCols))
       catch { case _: Exception => () }
       finally st.close()
       keyIndexed += table
     }
 
-  /** Stage a `Compaction.Custom` rewrite as a SPARK plan (r10 verdict
-    * #3): the old path buffered the whole table through the driver
-    * (O(table) driver memory, tracked by `lastCompactionBufferedRows`
-    * and flagged as the backend's one unbounded driver allocation). Now
-    * the custom fn runs over `committed rows (Spark JDBC scan, filter
-    * pushed to the database) ∪ this commit's appends` BEFORE the
-    * transaction opens, its survivors land executor-parallel in a
-    * `graft_cstage_*` scratch table, and the in-txn step
-    * ([[compactTables]]) is one set-based DELETE + INSERT…SELECT swap —
-    * zero driver residency, O(live set) database work, same replay
-    * safety (`_batch` provenance rides through the stage).
-    *
-    * This also retires the old in-txn lock hazard: the fn's reads of
-    * OTHER store tables now execute with no transaction open, so they
-    * can never block on this commit's own write locks.
-    *
-    * Stage tables are `graft_`-prefixed, so the user-table registry
-    * (orphan cleanup, rollback) never sees them; a crashed attempt's
-    * leftover stage is dropped and rebuilt on retry, and successful
-    * commits drop their stages best-effort afterwards.
-    *
-    * `visibleThrough`: the highest `_batch` the committed scan may see —
-    * the previous marker in driver-commit mode (this batch's rows are
-    * not in the database yet; they arrive via `appends`), the current
-    * batch id in executor mode (phase-1 rows are already durable).
-    */
-  private def stageCustomCompactions(
-      compactors: Map[String, BoundCompactor],
-      appends: Map[String, DataFrame],
-      visibleThrough: Long,
-      newBatch: Long): Map[String, String] =
-    compactors.collect { case (table, comp) if comp.sql.isEmpty &&
-        (tableExists(table) || appends.contains(table)) =>
-      val withBatch = comp.schema.add("_batch", LongType)
-      def shaped(df: DataFrame): DataFrame =
-        df.select(withBatch.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
-      val committed =
-        if (tableExists(table))
-          shaped(spark.read.jdbc(url, q(table), props)
-            .filter(s"`_batch` <= $visibleThrough"))
-        else emptyDf(withBatch)
-      val merged = appends.get(table) match {
-        case Some(df) =>
-          committed.unionByName(shaped(df.withColumn("_batch", lit(newBatch))))
-        case None => committed
-      }
-      val kept = comp.run(merged)
-      // CROSS-BACKEND CONTRACT (r08 review): on this backend the custom
-      // fn receives — and must PRESERVE — the trailing _batch column
-      // (survivor rows keep their batch provenance). The segment store
-      // passes the bare declared schema; a fn that projects _batch away
-      // fails loudly here with the contract instead of corrupting reads.
-      require(kept.columns.toSeq == withBatch.fields.map(_.name).toSeq,
-        s"Compaction.Custom on $table must preserve the declared columns " +
-          s"plus the trailing _batch on the JDBC backend: got " +
-          s"[${kept.columns.mkString(", ")}]")
-      val stage = s"graft_cstage_$table"
-      withConn { c =>
-        val st = c.createStatement()
-        try st.executeUpdate(s"DROP TABLE ${q(stage)}")
-        catch { case _: Exception => () } finally st.close()
-        val st2 = c.createStatement()
-        // createUserTable appends the _batch column itself
-        try st2.executeUpdate(dialect.createUserTable(stage, comp.schema))
-        finally st2.close()
-      }
-      kept.write.mode("append").jdbc(url, q(stage), writeProps)
-      table -> stage
-    }
-
-  /** Best-effort post-commit cleanup of [[stageCustomCompactions]]'
-    * scratch tables (a leftover stage is harmless — the next cycle
-    * drops and rebuilds it).
-    */
-  private def dropStages(stages: Map[String, String]): Unit =
-    if (stages.nonEmpty) withConn { c =>
-      stages.values.foreach { s =>
-        val st = c.createStatement()
-        try st.executeUpdate(s"DROP TABLE ${q(s)}")
-        catch { case _: Exception => () } finally st.close()
-      }
-    }
-
   /** Live-set compaction, run INSIDE the commit transaction (atomic with
-    * the batch, replay-safe; surviving rows keep their `_batch` tag so
-    * visibility and idempotent-replay cleanup are untouched).
-    *
-    * The declarative shapes (`DropMatched`/`DropUnmatched`) execute as
-    * ONE set-based DELETE each — the database does the anti/semi join,
-    * the driver buffers nothing, and on a server-grade backend the same
-    * statement is a hash anti-join. `Compaction.Custom` arrives here as
-    * a pre-staged survivor table ([[stageCustomCompactions]]) and swaps
-    * in with one DELETE + INSERT…SELECT — also zero driver memory.
+    * the batch, replay-safe; surviving rows keep their `_batch` tag).
+    * Each shape (`DropMatched`/`DropUnmatched`) executes as ONE
+    * set-based DELETE — the database does the anti/semi join, the
+    * driver buffers nothing, and on a server-grade backend the same
+    * statement is a hash anti-join.
     */
   private def compactTables(c: Connection,
-      compactors: Map[String, BoundCompactor],
-      stages: Map[String, String]): Unit = {
-    lastCompactionBufferedRows = 0L
-    compactors.toSeq.foreach { case (table, comp) =>
+      compactors: Map[String, BoundCompactor]): Unit =
+    compactors.foreach { case (table, comp) =>
       if (tableExists(table)) comp.sql match {
-        case Some(sc) if tableExists(sc.againstTable) =>
+        case sc if tableExists(sc.againstTable) =>
           ensureKeyIndex(c, sc.againstTable, sc.keyCols)
           val probe = sc.keyCols
             .map(k => s"a.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ")
@@ -579,28 +407,15 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
                 s"WHERE $probe)"
           val st = c.createStatement()
           try st.executeUpdate(stmt) finally st.close()
-        case Some(sc) if !sc.dropMatched =>
+        case sc if !sc.dropMatched =>
           // against-table absent: every final row is unmatched
           val st = c.createStatement()
           try st.executeUpdate(s"DELETE FROM ${q(table)} WHERE " +
             s"${q(table)}.${q(sc.slotCol)} <= ${sc.frontier}")
           finally st.close()
-        case Some(_) => () // DropMatched with no against-table: keep all
-        case None => stages.get(table).foreach { stage =>
-          // pre-staged Custom survivors: one set-based swap, all rows
-          // stay database-side (zero driver residency)
-          val cols = (comp.schema.fields.map(f => q(f.name)) :+ q("_batch"))
-            .mkString(", ")
-          val st = c.createStatement()
-          try {
-            st.executeUpdate(s"DELETE FROM ${q(table)}")
-            st.executeUpdate(s"INSERT INTO ${q(table)} ($cols) " +
-              s"SELECT $cols FROM ${q(stage)}")
-          } finally st.close()
-        }
+        case _ => () // DropMatched with no against-table: keep all
       }
     }
-  }
 
   /** Replace the committing runner's checkpoint windows within an open
     * transaction. MERGE semantics (like StateStore's `stored ++
@@ -630,171 +445,69 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
       checkpoints: Map[String, Seq[Point]],
       compactors: Map[String, BoundCompactor],
       onSegment: (String, Double) => Unit): Boolean = {
-    val committed = this.batchId
-    if (batchId <= committed) return false
-    if (driverCommit) {
-      // Spark actions run BEFORE the txn opens (reads see only
-      // committed state; nothing below touches the plan). The per-table
-      // plans are independent — run them as CONCURRENT Spark actions so
-      // scheduler latency overlaps instead of summing (the reference
-      // runs its reducers' RollForwardAsync concurrently too).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val collected = Await.result(
-        Future.sequence(appends.toSeq.map { case (table, (df, slotCol)) =>
-          Future {
-            // clock the collect INSIDE the future: a shared t0 would
-            // charge every table for its slowest sibling plus the
-            // serialized inserts ahead of it in the txn loop below
-            val t0 = System.nanoTime()
-            val rows = df.collect()
-            (table, slotCol, df.schema, rows,
-              (System.nanoTime() - t0) / 1e9)
-          }
-        }), Duration.Inf)
-      if (collected.forall(_._4.isEmpty)) return false
-      // Custom-compaction staging is a SPARK action set too — runs with
-      // the txn still closed (committed scan ∪ this batch's collected
-      // rows as a local relation); the txn below only swaps
-      val stages: Map[String, String] =
-        if (compactEvery > 0 && batchId % compactEvery == 0)
-          stageCustomCompactions(compactors,
-            collected.map { case (t, _, schema, rows, _) =>
-              t -> spark.createDataFrame(
-                java.util.Arrays.asList(rows: _*), schema)
-            }.toMap,
-            visibleThrough = committed, newBatch = batchId)
-        else Map.empty
-      withConn { c =>
-        c.setAutoCommit(false)
-        val createdThisTxn = mutable.Buffer[String]()
-        try {
-          // retried-batch cleanup joins the same txn: orphans can only
-          // exist from a crashed EXECUTOR-mode attempt at this id
-          userTables(c).foreach { t =>
-            val st = c.createStatement()
-            try st.executeUpdate(
-              s"DELETE FROM ${q(t)} WHERE ${q("_batch")} >= $batchId")
-            finally st.close()
-          }
-          collected.foreach { case (table, slotCol, schema, rows, collectSec) =>
-            val t1 = System.nanoTime()
-            ensureTable(c, table, schema, createdThisTxn)
-            if (rows.nonEmpty) insertRows(c, table, schema, rows, _ => batchId)
-            // the graft_tables registration JOINS the commit txn: a
-            // crash between commit and a post-commit INSERT left a
-            // durable data-bearing table unregistered, making a later
-            // subset-registered rollback guess (or fail on) its
-            // retraction column (r07 review)
-            registerSlotColIn(c, table, slotCol)
-            onSegment(table, collectSec + (System.nanoTime() - t1) / 1e9)
-          }
-          if (compactEvery > 0 && batchId % compactEvery == 0)
-            compactTables(c, compactors, stages)
-          writeCheckpoints(c, checkpoints)
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"INSERT INTO ${q("graft_commits")} VALUES ($batchId)")
-          finally st.close()
-          c.commit() // the atomic point — data + state + marker together
-          cachedBatchId = None // the committed id just moved
-        } catch {
-          case e: Throwable =>
-            c.rollback()
-            // Derby DDL is transactional: the rollback just UNDID any
-            // CREATE TABLE from this txn, so the existence caches must
-            // forget them — a poisoned cache made every later commit
-            // DELETE from a phantom table forever (r07 review)
-            createdThisTxn.foreach { t =>
-              knownTables -= t; userTableCache -= t
-            }
-            throw e
+    if (batchId <= this.batchId) return false
+    // Spark actions run BEFORE the txn opens (reads see only committed
+    // state; nothing below touches the plan). The per-table plans are
+    // independent — run them as CONCURRENT Spark actions so scheduler
+    // latency overlaps instead of summing (the reference runs its
+    // reducers' RollForwardAsync concurrently too).
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    val collected = Await.result(
+      Future.sequence(appends.toSeq.map { case (table, (df, slotCol)) =>
+        Future {
+          // clock the collect INSIDE the future: a shared t0 would
+          // charge every table for its slowest sibling plus the
+          // serialized inserts ahead of it in the txn loop below
+          val t0 = System.nanoTime()
+          val rows = df.collect()
+          (table, slotCol, df.schema, rows, (System.nanoTime() - t0) / 1e9)
         }
-      }
-      // indexes + caches + stage cleanup only after the durable commit
-      // (dropStages on its own autocommit connection state — running it
-      // inside the marker txn block would leave the DROPs riding the
-      // autocommit restore)
-      dropStages(stages)
-      collected.foreach { case (table, slotCol, _, _, _) =>
-        ensureIndexes(table, slotCol)
-        registeredCols += table -> slotCol
-      }
-      return true
-    }
-    // executor-parallel mode: data rows land outside the txn, invisible
-    // until the marker (two-phase; see class header). NOT idempotent
-    // under task RE-execution: a speculative duplicate of a partition
-    // that already committed its JDBC txn inserts its rows twice under
-    // this batch's own tag, and the orphan cleanup never removes rows
-    // of a SUCCESSFUL batch — refuse the configuration outright (r07
-    // review)
-    require(!spark.conf.getOption("spark.speculation")
-        .exists(_.equalsIgnoreCase("true")),
-      "executor-parallel JDBC mode is not idempotent under speculative " +
-        "task re-execution; disable spark.speculation or use " +
-        "driver-commit mode")
-    withConn { c =>
-      userTables(c).foreach { t =>
-        val st = c.createStatement()
-        try st.executeUpdate(
-          s"DELETE FROM ${q(t)} WHERE ${q("_batch")} >= $batchId")
-        finally st.close()
-      }
-    }
-    appends.foreach { case (table, (df, slotCol)) =>
-      val t0 = System.nanoTime()
-      // pre-create through our own DDL (not the Spark JDBC writer's
-      // dialect) so both commit modes share the VARCHAR/index layout
-      withConn(c => ensureTable(c, table, df.schema))
-      df.withColumn("_batch", lit(batchId))
-        .write.mode("append").jdbc(url, q(table), writeProps)
-      ensureIndexes(table, slotCol)
-      registerSlotCol(table, slotCol)
-      onSegment(table, (System.nanoTime() - t0) / 1e9)
-    }
-    // Empty-commit deferral (T4) needs "did ANY table get a row?": one
-    // indexed existence probe per table against the _batch tag. (An
-    // `Observation` on the write plan does not fire for V1 JDBC writes
-    // on this Spark line — metrics silently stay null, which would
-    // defer EVERY commit.)
-    val wroteAny = appends.keys.exists { table =>
-      withConn { c =>
-        val st = c.createStatement()
-        try {
-          val rs = st.executeQuery(s"SELECT 1 FROM ${q(table)} WHERE " +
-            s"${q("_batch")} = $batchId FETCH FIRST 1 ROWS ONLY")
-          try rs.next() finally rs.close()
-        } finally st.close()
-      }
-    }
-    if (!wroteAny) return false
-    // phase-1 rows are durable, so the committed scan sees them at
-    // `_batch <= batchId`; staging runs before the marker txn opens
-    val stages: Map[String, String] =
-      if (compactEvery > 0 && batchId % compactEvery == 0)
-        stageCustomCompactions(compactors, Map.empty,
-          visibleThrough = batchId, newBatch = batchId)
-      else Map.empty
+      }), Duration.Inf)
+    if (collected.forall(_._4.isEmpty)) return false
     withConn { c =>
       c.setAutoCommit(false)
-      val st = c.createStatement()
+      val createdThisTxn = mutable.Buffer[String]()
       try {
-        // same cadence as driver-commit mode: the set-based compaction
-        // DELETEs join the marker transaction, so executor-parallel
-        // deployments get bounded live-set state too
+        collected.foreach { case (table, slotCol, schema, rows, collectSec) =>
+          val t1 = System.nanoTime()
+          ensureTable(c, table, schema, createdThisTxn)
+          if (rows.nonEmpty) insertRows(c, table, schema, rows, batchId)
+          // the graft_tables registration JOINS the commit txn: a
+          // durable data-bearing table must never be unregistered, or a
+          // later subset-registered rollback would guess (or fail on)
+          // its retraction column
+          registerSlotCol(c, table, slotCol)
+          onSegment(table, collectSec + (System.nanoTime() - t1) / 1e9)
+        }
         if (compactEvery > 0 && batchId % compactEvery == 0)
-          compactTables(c, compactors, stages)
+          compactTables(c, compactors)
         writeCheckpoints(c, checkpoints)
-        st.executeUpdate(
+        val st = c.createStatement()
+        try st.executeUpdate(
           s"INSERT INTO ${q("graft_commits")} VALUES ($batchId)")
-        c.commit()
+        finally st.close()
+        c.commit() // the atomic point — data + state + marker together
         cachedBatchId = None // the committed id just moved
-      } catch { case e: Throwable => c.rollback(); throw e }
-      finally st.close()
+      } catch {
+        case e: Throwable =>
+          c.rollback()
+          // Derby DDL is transactional: the rollback just UNDID any
+          // CREATE TABLE from this txn, so the existence caches must
+          // forget them — a stale entry would make every later read and
+          // rollback query a table that does not exist
+          createdThisTxn.foreach { t =>
+            knownTables -= t; userTableCache -= t
+          }
+          throw e
+      }
     }
-    dropStages(stages) // after the durable commit, own autocommit txn
+    // indexes + caches only after the durable commit
+    collected.foreach { case (table, slotCol, _, _, _) =>
+      ensureIndexes(table, slotCol)
+      registeredCols += table -> slotCol
+    }
     true
   }
 
@@ -806,14 +519,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
       val st = c.createStatement()
       try {
         val stored = storedSlotCols
-        userTables(c).foreach { t =>
-          // crashed-attempt orphans first: a phase-1 append above the
-          // committed marker (executor mode, crash before phase 2) is
-          // invisible NOW but the marker this rollback inserts is the
-          // orphans' own batch id — without this delete they'd become
-          // visible and no retried-batch cleanup would ever reach them
-          st.executeUpdate(
-            s"DELETE FROM ${q(t)} WHERE ${q("_batch")} >= $next")
+        userTableCache.foreach { t =>
           // stored registry wins (a subset-registered runner doesn't
           // know other tables' retraction columns)
           val slotCol = stored.getOrElse(t, slotCols.getOrElse(t, "slot"))

@@ -10,13 +10,10 @@ import org.apache.spark.sql.types.StructType
   * instead of chain length — the segment-log analogue of the reference's
   * `HasIndex(SpentSlot)` sargability (P9, `TestDbContext.cs:36-37`).
   *
-  * The two declarative shapes are SQL-pushable: a DB backend runs them
-  * as one set-based `DELETE` inside the commit transaction (zero driver
+  * Both shapes are SQL-pushable: a DB backend runs them as one
+  * set-based `DELETE` inside the commit transaction (zero driver
   * memory); the segment store runs them as anti/semi joins during the
-  * segment fold. `Custom` carries an arbitrary DataFrame transform; the
-  * segment store folds it, and DB backends run it as a Spark plan over
-  * a JDBC scan staged into a scratch table, swapped in-transaction —
-  * also zero driver memory (the pre-r11 driver-side rewrite is gone).
+  * segment fold.
   */
 sealed trait Compaction
 object Compaction {
@@ -31,9 +28,6 @@ object Compaction {
     * rollback window are always kept. */
   final case class DropUnmatched(againstTable: String, keyCols: Seq[String],
       selfSlotCol: String) extends Compaction
-  /** Arbitrary filter `(merged, readTable, frontierSlot) => kept`. */
-  final case class Custom(
-      fn: (DataFrame, String => DataFrame, Long) => DataFrame) extends Compaction
 }
 
 /** A table a reducer owns: schema plus the slot column used for

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
   * provider swap Npgsql ⇄ anything — `Argus.Sync.EntityFramework`).
   *
   * Two instances ship:
-  *   - [[DerbyDialect]] — the embedded backend every test RUNS
-  *     (StoreContractSpec ×3 commit modes, CompactionSpec,
+  *   - [[DerbyDialect]] — the embedded backend `JdbcStore` opens and
+  *     every test RUNS (StoreContractSpec, CompactionSpec and
   *     ReorgFuzzSpec all drive the store through this object);
   *   - [[PostgresDialect]] — the reference deployment's server backend
   *     (`appsettings.json` `ConnectionStrings:CardanoContext`), pinned
@@ -22,10 +22,9 @@ import org.apache.spark.sql.types._
   *     timestamp).
   *
   * Everything else the store issues — INSERT … VALUES (?), DELETE with
-  * EXISTS subqueries, MAX() probes — is ANSI and shared verbatim; the
-  * store's Spark-JDBC executor writes already take a per-URL vendor
-  * driver. What this seam does NOT claim: a live Postgres run (no
-  * server exists offline) — the caveat is narrowed to exactly that.
+  * EXISTS subqueries, MAX() probes — is ANSI and shared verbatim. What
+  * this seam does NOT claim: a live Postgres run (no server exists
+  * offline) — the caveat is narrowed to exactly that.
   */
 sealed trait SqlDialect {
   def name: String
@@ -147,14 +146,5 @@ case object PostgresDialect extends SqlDialect {
     case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
     case other =>
       throw new IllegalArgumentException(s"unsupported JDBC column type $other")
-  }
-}
-
-object SqlDialect {
-  def forName(name: String): SqlDialect = name.toLowerCase match {
-    case "derby" => DerbyDialect
-    case "postgres" | "postgresql" => PostgresDialect
-    case other =>
-      throw new IllegalArgumentException(s"unknown JDBC dialect '$other'")
   }
 }

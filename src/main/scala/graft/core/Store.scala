@@ -5,17 +5,16 @@ import org.apache.spark.sql.types.StructType
 
 /** A table's [[Compaction]] bound to one commit's rollback frontier,
   * carrying BOTH execution forms so each backend picks its native one:
-  * `run` is the DataFrame filter (segment-store fold, or DB fallback for
-  * `Compaction.Custom`); `sql`, when present, is the declarative shape a
-  * DB backend executes as one set-based `DELETE` in the commit
-  * transaction — no driver-side buffering of the live set.
+  * `run` is the DataFrame filter the segment store folds; `sql` is the
+  * same shape as a DB backend executes it, one set-based `DELETE` in the
+  * commit transaction — no driver-side buffering of the live set.
   *
   * `schema` comes from the table REGISTRY (not from the committing
   * batch's appends), so a registered compactor runs on every compaction
   * cycle even when its table received no rows that batch.
   */
 final case class BoundCompactor(schema: StructType,
-    run: DataFrame => DataFrame, sql: Option[SqlCompaction])
+    run: DataFrame => DataFrame, sql: SqlCompaction)
 
 /** Declarative, SQL-pushable compaction: delete rows of the target table
   * that `DropMatched`/`DropUnmatched` (see [[Compaction]]) prove dead at
@@ -32,9 +31,10 @@ final case class SqlCompaction(againstTable: String, keyCols: Seq[String],
   * batchId is a no-op.
   *
   * Implementations here: `StateStore` (parquet segment log + manifest —
-  * the 100 TB scale path) and `JdbcStore` (embedded Derby over Spark
-  * JDBC — the transactional-DB path matching the reference's deployment
-  * shape). The GraphRunner contract suite runs against both.
+  * the 100 TB scale path) and `JdbcStore` (embedded Derby, one JDBC
+  * transaction per commit — the transactional-DB path matching the
+  * reference's deployment shape). The GraphRunner contract suite runs
+  * against both.
   */
 trait Store {
 

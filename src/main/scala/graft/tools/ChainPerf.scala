@@ -35,9 +35,6 @@ object ChainPerf {
       // engine shuffle-width experiments (see GraphRunner.withEngineShuffle)
       .config("graft.engine.shufflePartitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUF", "8"))
-      // SPARK_GRAFT_TIMING=1: per-commit phase breakdown to stderr
-      .config("graft.engine.timing",
-        sys.env.get("SPARK_GRAFT_TIMING").exists(v => v == "1" || v == "true").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val blocks = ChainGen.generate(nBlocks)

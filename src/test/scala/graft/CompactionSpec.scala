@@ -47,127 +47,52 @@ class CompactionSpec extends SparkSpec {
     oracle.foreach { case (slot, bal) => assert(snaps()(slot) == bal) }
   }
 
-  Seq(true, false).foreach { driverMode =>
-    test(s"jdbc backend (driverCommit=$driverMode): in-database live-set " +
-      "compaction bounds BOTH utxo tables; state and rollback survive") {
-      val blocks = ChainGen.generate(60, seed = 7L)
-      val oracle = ChainGen.balanceOracle(blocks)
-      // compact every 2 commits; tight rollback horizon so the frontier
-      // advances and finalized spends become droppable
-      spark.conf.set("graft.jdbc.compactEvery", "2")
-      spark.conf.set("graft.jdbc.driverCommit", driverMode.toString)
-      try {
-        val store = new JdbcStore(tmpDir(s"jdbc-compact-$driverMode"), spark)
-        val runner = new GraphRunner(spark, store, reducers, batchSize = 5,
-          maxRollbackSlots = 20L)
-        runner.processEvents(blocks.map(RollForward.apply))
+  test("jdbc backend: in-database live-set compaction bounds BOTH utxo " +
+    "tables; state and rollback survive") {
+    val blocks = ChainGen.generate(60, seed = 7L)
+    val oracle = ChainGen.balanceOracle(blocks)
+    // compact every 2 commits; tight rollback horizon so the frontier
+    // advances and finalized spends become droppable
+    spark.conf.set("graft.jdbc.compactEvery", "2")
+    try {
+      val store = new JdbcStore(tmpDir("jdbc-compact"), spark)
+      val runner = new GraphRunner(spark, store, reducers, batchSize = 5,
+        maxRollbackSlots = 20L)
+      runner.processEvents(blocks.map(RollForward.apply))
 
-        val utxoDefs = reducers(1).tables
-        val kept = store.read("utxo_created", utxoDefs.head.schema).count()
-        val createdSet = blocks.flatMap(b => b.transactions.flatMap(tx =>
-          tx.outputs.zipWithIndex.collect {
-            case (o, i) if ChainGen.Watched.contains(o.address) =>
-              (tx.txHash, i)
-          })).toSet
-        val totalCreated = createdSet.size
-        val totalSpent = blocks.flatMap(_.transactions).flatMap(_.inputs)
-          .count(in => createdSet.contains((in.txId, in.index)))
-        assert(totalSpent > 0, "chain must actually spend watched outputs")
-        assert(kept < totalCreated,
-          s"compaction dropped nothing: kept=$kept of $totalCreated")
-        // the tombstone table is live-set-bounded too (DropUnmatched):
-        // final spends whose created pair is gone must not accumulate
-        val keptSpent = store.read("utxo_spent", utxoDefs(1).schema).count()
-        assert(keptSpent < totalSpent,
-          s"spent log not compacted: kept=$keptSpent of $totalSpent")
-        // the declarative compactors must run as in-database SQL — any
-        // driver-side buffering here is the O(live-set) scale bug
-        assert(store.lastCompactionBufferedRows == 0L,
-          s"compaction buffered ${store.lastCompactionBufferedRows} rows " +
-            "on the driver")
+      val utxoDefs = reducers(1).tables
+      val kept = store.read("utxo_created", utxoDefs.head.schema).count()
+      val createdSet = blocks.flatMap(b => b.transactions.flatMap(tx =>
+        tx.outputs.zipWithIndex.collect {
+          case (o, i) if ChainGen.Watched.contains(o.address) =>
+            (tx.txHash, i)
+        })).toSet
+      val totalCreated = createdSet.size
+      val totalSpent = blocks.flatMap(_.transactions).flatMap(_.inputs)
+        .count(in => createdSet.contains((in.txId, in.index)))
+      assert(totalSpent > 0, "chain must actually spend watched outputs")
+      assert(kept < totalCreated,
+        s"compaction dropped nothing: kept=$kept of $totalCreated")
+      // the tombstone table is live-set-bounded too (DropUnmatched):
+      // final spends whose created pair is gone must not accumulate
+      val keptSpent = store.read("utxo_spent", utxoDefs(1).schema).count()
+      assert(keptSpent < totalSpent,
+        s"spent log not compacted: kept=$keptSpent of $totalSpent")
 
-        val snapSchema = reducers(2).tables.head.schema
-        def snaps() = store.read("balance_snapshots", snapSchema)
-          .collect().groupBy(_.getLong(3))
-          .map { case (slot, rs) =>
-            slot -> rs.map(r => r.getString(1) -> r.getLong(4)).toMap }
-        assert(snaps().size == oracle.size)
-        oracle.foreach { case (slot, bal) => assert(snaps()(slot) == bal) }
+      val snapSchema = reducers(2).tables.head.schema
+      def snaps() = store.read("balance_snapshots", snapSchema)
+        .collect().groupBy(_.getLong(3))
+        .map { case (slot, rs) =>
+          slot -> rs.map(r => r.getString(1) -> r.getLong(4)).toMap }
+      assert(snaps().size == oracle.size)
+      oracle.foreach { case (slot, bal) => assert(snaps()(slot) == bal) }
 
-        // shallow rollback (within the horizon) + replay converges
-        val cut = blocks(55)
-        runner.applyRollback(Point(cut.hash, cut.slot), Exclusive)
-        runner.processEvents(blocks.drop(56).map(RollForward.apply))
-        oracle.foreach { case (slot, bal) => assert(snaps()(slot) == bal) }
-      } finally {
-        spark.conf.unset("graft.jdbc.compactEvery")
-        spark.conf.unset("graft.jdbc.driverCommit")
-      }
-    }
-  }
-
-  Seq(true, false).foreach { driverMode =>
-    test(s"jdbc Compaction.Custom (driverCommit=$driverMode) runs as a " +
-      "staged Spark plan — zero driver buffering, provenance intact") {
-      val sp = spark
-      import org.apache.spark.sql.{Row => SRow}
-      import org.apache.spark.sql.types._
-      import org.apache.spark.sql.functions.col
-      sp.conf.set("graft.jdbc.driverCommit", driverMode.toString)
-      sp.conf.set("graft.jdbc.compactEvery", "2")
-      try {
-        val store = new JdbcStore(tmpDir(s"jdbc-custom-$driverMode"), spark)
-        val schema = StructType(Seq(
-          StructField("slot", LongType),
-          StructField("k", StringType),
-          StructField("dead", BooleanType)))
-        val comp = Map("live_t" -> BoundCompactor(
-          schema, df => df.filter(!col("dead")), None))
-        def dfOf(rows: (Long, String, Boolean)*) = sp.createDataFrame(
-          java.util.Arrays.asList(rows.map(r => SRow(r._1, r._2, r._3)): _*),
-          schema)
-        // batch 0 (compaction cycle, table created this very commit):
-        // the custom filter must apply to the batch's own rows
-        assert(store.commit(0L,
-          Map("live_t" -> (dfOf((1L, "a", false), (2L, "b", true)), "slot")),
-          Map.empty, comp))
-        // batch 1 (no cycle): dead rows accumulate
-        assert(store.commit(1L,
-          Map("live_t" -> (dfOf((3L, "c", true), (4L, "d", false)), "slot")),
-          Map.empty, comp))
-        // batch 2 (cycle): merged view = committed ∪ this batch; every
-        // dead row — batch 1's included — is gone afterwards
-        assert(store.commit(2L,
-          Map("live_t" -> (dfOf((5L, "e", false), (6L, "f", true)), "slot")),
-          Map.empty, comp))
-        val live = store.read("live_t", schema).collect()
-          .map(r => (r.getLong(0), r.getString(1))).sorted
-        assert(live.toSeq == Seq((1L, "a"), (4L, "d"), (5L, "e")), live.toSeq)
-        // THE r10 verdict-#3 gate: Custom must no longer buffer the
-        // table through the driver in either commit mode
-        assert(store.lastCompactionBufferedRows == 0L,
-          s"Custom buffered ${store.lastCompactionBufferedRows} rows")
-        // idempotent replay stays a no-op
-        assert(!store.commit(2L,
-          Map("live_t" -> (dfOf((9L, "x", false)), "slot")), Map.empty, comp))
-        // rollback still retracts by slot across the swapped table
-        store.rollback(5L, Map("live_t" -> "slot"), Map.empty)
-        val after = store.read("live_t", schema).collect().map(_.getLong(0))
-        assert(after.sorted.toSeq == Seq(1L, 4L), after.toSeq)
-        // contract: a fn that projects _batch away fails loudly at the
-        // next compaction cycle, not silently corrupting positions
-        val bad = Map("live_t" -> BoundCompactor(
-          schema, df => df.select("slot", "k", "dead"), None))
-        val e = intercept[IllegalArgumentException] {
-          store.commit(4L,
-            Map("live_t" -> (dfOf((7L, "g", false)), "slot")), Map.empty, bad)
-        }
-        assert(e.getMessage.contains("_batch"), e.getMessage)
-      } finally {
-        sp.conf.unset("graft.jdbc.driverCommit")
-        sp.conf.unset("graft.jdbc.compactEvery")
-      }
-    }
+      // shallow rollback (within the horizon) + replay converges
+      val cut = blocks(55)
+      runner.applyRollback(Point(cut.hash, cut.slot), Exclusive)
+      runner.processEvents(blocks.drop(56).map(RollForward.apply))
+      oracle.foreach { case (slot, bal) => assert(snaps()(slot) == bal) }
+    } finally spark.conf.unset("graft.jdbc.compactEvery")
   }
 
   test("jdbc backend: null values commit and read back on the driver path") {

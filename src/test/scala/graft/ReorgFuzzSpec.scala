@@ -33,22 +33,11 @@ class ReorgFuzzSpec extends SparkSpec {
       spark.conf.set("graft.jdbc.compactEvery", "2")
       try new JdbcStore(root, spark)
       finally spark.conf.unset("graft.jdbc.compactEvery")
-    },
-    // executor-parallel two-phase commit mode, same aggressive compaction
-    "jdbc-exec" -> { root =>
-      spark.conf.set("graft.jdbc.compactEvery", "2")
-      spark.conf.set("graft.jdbc.driverCommit", "false")
-      try new JdbcStore(root, spark)
-      finally {
-        spark.conf.unset("graft.jdbc.compactEvery")
-        spark.conf.unset("graft.jdbc.driverCommit")
-      }
     })
 
-  // segment-log backend fuzzed on all seeds; Derby on one per commit
-  // mode (runtime bound)
+  // segment-log backend fuzzed on all seeds; Derby on two (runtime bound)
   private val plan = Seq((1, "segments"), (7, "segments"), (23, "segments"),
-    (7, "jdbc"), (23, "jdbc-exec"))
+    (7, "jdbc"), (23, "jdbc"))
 
   plan.foreach { case (seed, backend) =>
     test(s"random extend/rollback interleavings converge with the oracle (seed=$seed, $backend)") {

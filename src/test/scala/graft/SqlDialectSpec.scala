@@ -86,8 +86,6 @@ class SqlDialectSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](d.quote("x" * 200))
       assert(d.quote("WalletUtxo") == "\"WalletUtxo\"")
     }
-    assert(SqlDialect.forName("postgresql") == PostgresDialect)
-    intercept[IllegalArgumentException](SqlDialect.forName("oracle"))
   }
 
   test("an unsupported column type names itself in the failure") {

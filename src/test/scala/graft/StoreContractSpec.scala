@@ -15,13 +15,7 @@ class StoreContractSpec extends SparkSpec {
 
   private def backends: Seq[(String, String => Store)] = Seq(
     "segment-log" -> (root => new StateStore(root, spark)),
-    "jdbc-derby" -> (root => new JdbcStore(root, spark)),
-    // executor-parallel commit mode: two-phase (rows gated by marker)
-    "jdbc-derby-exec" -> { root =>
-      spark.conf.set("graft.jdbc.driverCommit", "false")
-      try new JdbcStore(root, spark)
-      finally spark.conf.unset("graft.jdbc.driverCommit")
-    })
+    "jdbc-derby" -> (root => new JdbcStore(root, spark)))
 
   private def reducers = Seq(
     new BlockSummaryReducer,
@@ -146,36 +140,42 @@ class StoreContractSpec extends SparkSpec {
     }
   }
 
-  test("jdbc-derby: rollback clears crashed-attempt orphans above the marker") {
-    val root = tmpDir("orphan-jdbc")
+  test("jdbc-derby: a commit that fails mid-transaction leaves no rows, tables or marker behind") {
+    val sp = spark
+    import sp.implicits._
+    val root = tmpDir("atomic-jdbc")
     val store = new JdbcStore(root, spark)
-    val runner = new GraphRunner(spark, store,
-      Seq(new BlockSummaryReducer), batchSize = 6)
-    val blocks = ChainGen.generate(12, seed = 7L)
-    runner.processEvents(blocks.map(RollForward.apply))
-    val schema = (new BlockSummaryReducer).tables.head.schema
-    val committed = store.batchId
-    val visibleBefore = store.read("blocks", schema).count()
-    // simulate an executor-mode phase-1 append that crashed before its
-    // marker txn: a row tagged committed+1 with a LOW slot, so the
-    // rollback's slot-keyed delete cannot be what removes it
+    def rows(slot: Long, valueCol: String = "v") =
+      (Seq((slot, "x")).toDF("slot", valueCol), "slot")
+    val schema = rows(0L)._1.schema
+    def slots(t: String) =
+      store.read(t, schema).collect().map(_.getLong(0)).sorted.toSeq
+    assert(store.commit(0L, Map("kept_t" -> rows(1L)), Map.empty))
+    // batch 1 inserts into the existing table, creates and fills a new
+    // one, then fails on the third table's hostile column name — all
+    // inside the one commit transaction
+    val failing = Map("kept_t" -> rows(2L), "new_t" -> rows(2L),
+      "bad_t" -> rows(2L, """v" CASCADE --"""))
+    intercept[IllegalArgumentException] {
+      store.commit(1L, failing, Map("r" -> Seq(Point("h2", 2L))))
+    }
+    assert(store.batchId == 0L)
+    assert(store.checkpoints.isEmpty)
+    assert(slots("kept_t") == Seq(1L))
+    assert(slots("new_t").isEmpty)
     val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$root/derby")
     try {
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""INSERT INTO "blocks" VALUES ('orphan', 1, 1, ${committed + 1})""")
-      finally st.close()
+      val rs = c.getMetaData.getTables(null, null, "new_t", Array("TABLE"))
+      try assert(!rs.next(), "rolled-back CREATE TABLE survived")
+      finally rs.close()
     } finally c.close()
-    assert(store.read("blocks", schema).collect()
-      .forall(_.getString(0) != "orphan"),
-      "orphan visible before rollback — two-phase gating broken")
-    // rewind with delSlot above every slot: the slot-keyed deletes are
-    // no-ops, and the marker this writes IS the orphan's own batch id
-    store.rollback(Long.MaxValue, Map("blocks" -> "slot"), Map.empty)
-    val rows = store.read("blocks", schema).collect()
-    assert(rows.forall(_.getString(0) != "orphan"),
-      "crashed-attempt orphan became visible after rollback")
-    assert(rows.length == visibleBefore)
+    // the same batch id with valid appends commits: the existence caches
+    // forgot new_t, so it is created again rather than assumed present
+    assert(store.commit(1L, failing - "bad_t", Map("r" -> Seq(Point("h2", 2L)))))
+    assert(store.batchId == 1L)
+    assert(slots("kept_t") == Seq(1L, 2L))
+    assert(slots("new_t") == Seq(2L))
+    assert(store.checkpoints.keySet == Set("r"))
   }
 
   test("jdbc-derby: hostile SQL identifiers fail loudly instead of reaching DDL/DML") {
