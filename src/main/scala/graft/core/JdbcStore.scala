@@ -136,22 +136,16 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     names.toSet
   }
 
-  // User-table registry, seeded from the database at construction and
-  // extended as tables are created. Single-writer (T13) makes the cache
-  // sound: no other process creates tables while this store holds the
-  // root, and a metadata scan per commit is not free in Derby.
+  // User-table registry, seeded from the database at construction,
+  // extended as tables are created and repaired when a commit rolls
+  // back. It is complete: single-writer (T13) means no other process
+  // creates tables while this store holds the root, and GraphRunner
+  // rejects user tables named graft_*, so every user table is in it. A
+  // Derby metadata scan is not free, so existence checks read the cache.
   private val userTableCache: mutable.Set[String] =
     mutable.Set(withConn(listTables).filterNot(_.startsWith("graft_"))
       .toSeq: _*)
-
-  // positive-only existence cache (tables are never dropped)
-  private val knownTables = mutable.Set[String]()
-  private def tableExists(t: String): Boolean =
-    knownTables.contains(t) || {
-      val e = withConn(c => listTables(c).contains(t))
-      if (e) knownTables += t
-      e
-    }
+  private def tableExists(t: String): Boolean = userTableCache.contains(t)
 
   // the committed id can only move at this single-writer store's own
   // commit/rollback (T13), yet every state read re-probed it — and
@@ -323,9 +317,8 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
       val st = c.createStatement()
       try st.executeUpdate(DerbyDialect.createUserTable(table, schema))
       finally st.close()
-      knownTables += table
       userTableCache += table
-      created += table // caller repairs the caches if its txn rolls back
+      created += table // caller repairs the cache if its txn rolls back
     }
 
   private def insertRows(c: Connection, table: String, schema: StructType,
@@ -366,18 +359,22 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
   /** Best-effort index on the key columns a compaction DELETE probes —
     * the analogue of the reference's `HasIndex(SpentSlot)` (P9) for the
     * EXISTS lookup side. Derby warns (and only fails per-row at insert)
-    * if a key exceeds the index limit; failures here are non-fatal.
+    * if a key exceeds the index limit; failures here are non-fatal. The
+    * CREATE INDEX runs inside the commit transaction, so a table is
+    * recorded in `indexedThisTxn` and joins `keyIndexed` only once that
+    * transaction commits — a rollback undoes the index, and the next
+    * compaction must create it again.
     */
   private val keyIndexed = mutable.Set[String]()
   private def ensureKeyIndex(c: Connection, table: String,
-      keyCols: Seq[String]): Unit =
-    if (!keyIndexed.contains(table)) {
+      keyCols: Seq[String], indexedThisTxn: mutable.Buffer[String]): Unit =
+    if (!keyIndexed.contains(table) && !indexedThisTxn.contains(table)) {
       val st = c.createStatement()
       try st.executeUpdate(
         DerbyDialect.createIndex(s"ix_${table}_cmpkey", table, keyCols))
       catch { case _: Exception => () }
       finally st.close()
-      keyIndexed += table
+      indexedThisTxn += table
     }
 
   /** Live-set compaction, run INSIDE the commit transaction (atomic with
@@ -388,11 +385,12 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     * statement is a hash anti-join.
     */
   private def compactTables(c: Connection,
-      compactors: Map[String, BoundCompactor]): Unit =
+      compactors: Map[String, BoundCompactor],
+      indexedThisTxn: mutable.Buffer[String]): Unit =
     compactors.foreach { case (table, comp) =>
       if (tableExists(table)) comp.sql match {
         case sc if tableExists(sc.againstTable) =>
-          ensureKeyIndex(c, sc.againstTable, sc.keyCols)
+          ensureKeyIndex(c, sc.againstTable, sc.keyCols, indexedThisTxn)
           val probe = sc.keyCols
             .map(k => s"a.${q(k)} = ${q(table)}.${q(k)}").mkString(" AND ")
           val stmt =
@@ -469,6 +467,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     withConn { c =>
       c.setAutoCommit(false)
       val createdThisTxn = mutable.Buffer[String]()
+      val indexedThisTxn = mutable.Buffer[String]()
       try {
         collected.foreach { case (table, slotCol, schema, rows, collectSec) =>
           val t1 = System.nanoTime()
@@ -482,24 +481,23 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
           onSegment(table, collectSec + (System.nanoTime() - t1) / 1e9)
         }
         if (compactEvery > 0 && batchId % compactEvery == 0)
-          compactTables(c, compactors)
+          compactTables(c, compactors, indexedThisTxn)
         writeCheckpoints(c, checkpoints)
         val st = c.createStatement()
         try st.executeUpdate(
           s"INSERT INTO ${q("graft_commits")} VALUES ($batchId)")
         finally st.close()
         c.commit() // the atomic point — data + state + marker together
+        keyIndexed ++= indexedThisTxn
         cachedBatchId = None // the committed id just moved
       } catch {
         case e: Throwable =>
           c.rollback()
           // Derby DDL is transactional: the rollback just UNDID any
-          // CREATE TABLE from this txn, so the existence caches must
+          // CREATE TABLE from this txn, so the existence cache must
           // forget them — a stale entry would make every later read and
           // rollback query a table that does not exist
-          createdThisTxn.foreach { t =>
-            knownTables -= t; userTableCache -= t
-          }
+          userTableCache --= createdThisTxn
           throw e
       }
     }

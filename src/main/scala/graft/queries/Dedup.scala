@@ -1519,10 +1519,10 @@ object Dedup extends QueryModule {
 
   /** The frozen LEXICAL dedup index as a value: the exact-identity
     * table (norm_md5 → lowest owning doc) and the MinHash band table
-    * (band_key → doc). q69 probes this shape in-plan; the MERGE API
-    * below is the missing lifecycle operation — promoting a verified
-    * delta batch into the stored index WITHOUT rebuilding it from
-    * corpus text (the operation a rolling 100 TB corpus runs daily).
+    * (band_key → doc). q69 probes this shape in-plan; q100–q103 keep it
+    * as [[Partials]] so a verified delta batch promotes into the stored
+    * index WITHOUT rebuilding it from corpus text (the operation a
+    * rolling 100 TB corpus runs daily), and a bad batch demotes again.
     */
   private[graft] final case class LexIndex(exact: DataFrame, bands: DataFrame)
 
@@ -1535,22 +1535,24 @@ object Dedup extends QueryModule {
       .groupBy(col("norm_md5")).agg(min(col("doc_id")).as("idx_doc")),
     bandEntries(docs.select(col("doc_id"), col("text"))))
 
-  /** MERGE a delta batch into a stored index. Cost is |delta| signature
-    * work + an |index|+|delta| state merge — frozen TEXT is never read:
-    * the band table is append-only (band keys are per-document), and
-    * the exact table is a min-mergeable aggregate state, so
-    * `min ∘ union` of partial states equals the aggregate over the
-    * union of documents. Both merged relations stay partitioned by
-    * their probe keys, so a stored (bucketed) index keeps its layout.
+  /** One batch's lexical partials: `exact` keeps per-(norm_md5, batch)
+    * partial mins instead of one collapsed min — a plain min is not
+    * subtractable, per-batch partials are — and `bands` is append-only
+    * (band keys are per-document). Frozen text is never read again:
+    * later promotes union their own partials in.
     */
-  private[graft] def mergeLexIndex(idx: LexIndex, deltaDocs: DataFrame)
-      : LexIndex = {
-    val d = buildLexIndex(deltaDocs)
-    LexIndex(
-      idx.exact.union(d.exact)
-        .groupBy(col("norm_md5")).agg(min(col("idx_doc")).as("idx_doc")),
-      idx.bands.union(d.bands))
+  private[graft] def lexPartials(docs: DataFrame, batchId: Long): Partials = {
+    val b = buildLexIndex(docs)
+    Partials.tagged(batchId, "exact" -> b.exact, "bands" -> b.bands)
   }
+
+  /** Collapse surviving partials to the probe shape: min over each key's
+    * batch partials (a per-key group of batches, not of documents).
+    */
+  private[graft] def collapseLex(p: Partials): LexIndex =
+    LexIndex(
+      p("exact").groupBy(col("norm_md5")).agg(min(col("idx_doc")).as("idx_doc")),
+      p("bands").select(col("band_key"), col("doc_id")))
 
   /** q69's probe contract over an explicit index value: every probe doc
     * reports its exact duplicate, nearest banded near-duplicate, or
@@ -1576,27 +1578,22 @@ object Dedup extends QueryModule {
   }
 
   /** Frozen-index MERGE equivalence (q100): bootstrap the lexical index
-    * over the frozen third (doc_id ≡ 0,1,2 mod 10), STORE it (Scratch
-    * parquet — the stand-in for the bucketed index tables a deployment
-    * keeps), merge the next batch (≡ 3,4,5) into the stored state via
-    * [[mergeLexIndex]], then probe a third batch (≡ 6..9) against the
-    * merged index. The DuckDB oracle answers the same probe against an
-    * index REBUILT from scratch over frozen∪delta — the hash gate IS
-    * the merged ≡ rebuilt proof, which is exactly what lets a 100 TB
-    * deployment promote daily batches without ever re-indexing the
-    * corpus.
+    * over the frozen third (doc_id ≡ 0,1,2 mod 10) as batch 0, STORE it
+    * (the stand-in for the bucketed index tables a deployment keeps),
+    * union the next batch's partials (≡ 3,4,5) into the stored state,
+    * then probe a third batch (≡ 6..9) against the collapsed index. The
+    * DuckDB oracle answers the same probe against an index REBUILT from
+    * scratch over frozen∪delta — the hash gate IS the merged ≡ rebuilt
+    * proof, which is exactly what lets a 100 TB deployment promote
+    * daily batches without ever re-indexing the corpus.
     */
   private def q100(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 10
-    val f0 = buildLexIndex(docs.filter(m < 3))
-    // materialized = the stored index: the merge below consumes INDEX
-    // STATE from disk, provably not frozen text
-    val stored = LexIndex(
-      Scratch.materialize(f0.exact, "q100_exact"),
-      Scratch.materialize(f0.bands, "q100_bands"))
-    val merged = mergeLexIndex(stored, docs.filter(m >= 3 && m < 6))
-    probeLex(merged, docs.filter(m >= 6))
+    // the merge consumes stored INDEX STATE, provably not frozen text
+    val stored = lexPartials(docs.filter(m < 3), 0L).store("q100")
+    val merged = stored.union(lexPartials(docs.filter(m >= 3 && m < 6), 1L))
+    probeLex(collapseLex(merged), docs.filter(m >= 6))
   }
 
   private val q100Sql = {
@@ -1632,67 +1629,6 @@ object Dedup extends QueryModule {
        |ORDER BY n.doc_id""".stripMargin
   }
 
-  /** Provenance-tagged frozen lexical index — the RETRACTABLE variant
-    * of [[LexIndex]] (r09 verdict #1): every state row carries the
-    * batch_id of the promote that produced it, and the exact table
-    * keeps per-(norm_md5, batch) PARTIAL mins instead of one collapsed
-    * min. That single representational change buys the inverse
-    * operation a rolling corpus needs for bad-data recall: a plain min
-    * is not subtractable (dropping a batch can RAISE the true min, and
-    * the collapsed state no longer knows to what), but per-batch
-    * partials are — retracting batch B is `filter(batch_id =!= B)`,
-    * and the min over the survivors IS the index over the surviving
-    * documents. Mirrors the reference's retraction-first design
-    * (`ReducerGraphProcessor.cs:176-209` rolls reducer state back by
-    * replaying inverse deltas) re-expressed as algebra on a stored
-    * relation: no replay, no rebuild, no read of frozen text.
-    *
-    * Cost shape at 100 TB: promote = pure APPEND (the min collapse
-    * moves to probe time, where the group is batches-per-key — a
-    * handful — not docs-per-key); retract = partition pruning over a
-    * batch_id-partitioned store ([[Scratch.materializePartitioned]]),
-    * i.e. the retracted batch's files are never opened and dropping
-    * them physically is one directory delete.
-    */
-  private[graft] final case class LexIndexP(exact: DataFrame, bands: DataFrame)
-
-  private[graft] def buildLexIndexP(docs: DataFrame, batchId: Long)
-      : LexIndexP = {
-    val b = buildLexIndex(docs)
-    LexIndexP(b.exact.withColumn("batch_id", lit(batchId)),
-      b.bands.withColumn("batch_id", lit(batchId)))
-  }
-
-  /** Promote under provenance: append the delta batch's partial states.
-    * No re-aggregation at all — cheaper than [[mergeLexIndex]], whose
-    * merge-time min this representation defers to probe time.
-    */
-  private[graft] def mergeLexIndexP(idx: LexIndexP, deltaDocs: DataFrame,
-      batchId: Long): LexIndexP = {
-    val d = buildLexIndexP(deltaDocs, batchId)
-    LexIndexP(idx.exact.union(d.exact), idx.bands.union(d.bands))
-  }
-
-  /** Retract (demote) one promoted batch — the exact inverse of its
-    * promote, by construction: both tables drop precisely the rows that
-    * promote appended. Equality with an index REBUILT without the batch
-    * is the q102 oracle's hash gate and FrozenIndexSpec's round-trips.
-    */
-  private[graft] def retractLexIndexP(idx: LexIndexP, batchId: Long)
-      : LexIndexP =
-    LexIndexP(idx.exact.filter(col("batch_id") =!= batchId),
-      idx.bands.filter(col("batch_id") =!= batchId))
-
-  /** Collapse provenance state to the probe shape: min over each key's
-    * surviving batch partials (a per-key group of batches, not of
-    * documents). `probeLex(collapseLex(idx), …)` is the provenance
-    * index's probe contract.
-    */
-  private[graft] def collapseLex(idx: LexIndexP): LexIndex =
-    LexIndex(
-      idx.exact.groupBy(col("norm_md5")).agg(min(col("idx_doc")).as("idx_doc")),
-      idx.bands.select(col("band_key"), col("doc_id")))
-
   /** Frozen-index RETRACTION equivalence (q102) — the lifecycle q100
     * cannot run backwards: bootstrap the index over the frozen third
     * (doc_id ≡ 0,1,2 mod 10) as batch 0, promote batch 1 (≡ 3,4) and
@@ -1706,16 +1642,13 @@ object Dedup extends QueryModule {
   private def q102(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 10
-    val b0 = buildLexIndexP(docs.filter(m < 3), 0L)
-    val p1 = mergeLexIndexP(b0, docs.filter(m >= 3 && m < 5), 1L)
-    val p2 = mergeLexIndexP(p1, docs.filter(m >= 5 && m < 7), 2L)
     // the stored index: retraction consumes partitioned INDEX STATE —
     // batch 2's files are pruned out, frozen text is never read
-    val stored = LexIndexP(
-      Scratch.materializePartitioned(p2.exact, "q102_exact", "batch_id"),
-      Scratch.materializePartitioned(p2.bands, "q102_bands", "batch_id"))
-    val demoted = retractLexIndexP(stored, 2L)
-    probeLex(collapseLex(demoted), docs.filter(m >= 7))
+    val stored = lexPartials(docs.filter(m < 3), 0L)
+      .union(lexPartials(docs.filter(m >= 3 && m < 5), 1L))
+      .union(lexPartials(docs.filter(m >= 5 && m < 7), 2L))
+      .store("q102")
+    probeLex(collapseLex(stored.retract(2L)), docs.filter(m >= 7))
   }
 
   private val q102Sql = {
@@ -2107,15 +2040,15 @@ object Dedup extends QueryModule {
     * (q111/q124's release pair). Results are deterministic — each
     * side's plan is unchanged; only job SUBMISSION overlaps.
     *
-    * r14 advice hardening: (1) a dedicated unbounded cached pool, not
-    * the global ForkJoinPool — nested calls (q128/q129/q132 reach
-    * depth 2–3) block their submitting thread in Await, and on a fixed
-    * pool that is a starvation deadlock waiting to happen; daemon
-    * threads so the pool never blocks JVM exit. (2) BOTH futures are
-    * awaited even when the first fails, so a failing leg can never
-    * leave the other leg's Spark jobs running past the entry boundary
-    * (into Harness.settle or the next timed rep), and neither leg's
-    * failure is silently swallowed (the second rides as suppressed).
+    * (1) A dedicated unbounded cached pool, not the global
+    * ForkJoinPool: nested calls (q128/q129/q132 and `Partials.write`
+    * reach depth 2–3) block their submitting thread in Await, and on a
+    * fixed pool that is a starvation deadlock; daemon threads so the
+    * pool never blocks JVM exit. (2) BOTH futures are awaited even when
+    * the first fails, so a failing leg can never leave the other leg's
+    * Spark jobs running past the entry boundary (into Harness.settle or
+    * the next timed rep), and neither leg's failure is silently
+    * swallowed (the second rides as suppressed).
     */
   private[graft] lazy val driverPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
@@ -2410,78 +2343,60 @@ object Dedup extends QueryModule {
     probeContain(idx, idx.g, idx.sizes)
   }
 
-  // ---- q128/q129: the INCREMENTAL lifecycle of the containment index
-  // (the q100/q102 frozen-index discipline on a FOURTH state algebra):
-  // the lex index merges by per-key MIN, the semantic index by
-  // per-cluster append, the census by SUM — the containment index is
-  // APPEND-pure: gram postings and per-doc sizes are per-DOCUMENT rows,
-  // so a delta batch's partial index simply unions in (delta-only
-  // work), and the per-gram df collapses at probe time as one COUNT
-  // over the surviving postings. Exactly-once promotion is the same
-  // contract as the census (a doc in two batches would double its
-  // postings and inflate df); retraction is the exact inverse of its
-  // promote — drop the batch's partition rows, and the collapsed index
-  // over the survivors IS the index over the surviving documents.
-  // Cost shape at 100 TB: promote = the delta's gram scan + APPEND;
-  // retract = partition pruning over the batch_id-partitioned store.
+  // ---- q128/q129: the INCREMENTAL lifecycle of the containment index,
+  // as [[Partials]]. The lex index collapses by per-key MIN, the
+  // semantic index by per-cluster append, the census by SUM — the
+  // containment index is APPEND-pure: gram postings and per-doc sizes
+  // are per-DOCUMENT rows, so a delta batch's partials simply union in
+  // (delta-only work), and the per-gram df collapses at probe time as
+  // one COUNT over the surviving postings. Exactly-once promotion is the
+  // same contract as the census (a doc in two batches would double its
+  // postings and inflate df); retraction drops the batch's partition
+  // rows, and the collapsed index over the survivors IS the index over
+  // the surviving documents.
 
-  /** Provenance-tagged containment-index partials. */
-  private[graft] final case class ContainIndexP(g: DataFrame,
-      sizes: DataFrame)
+  /** Per-doc gram-set sizes off tagged postings `(doc_id, gid,
+    * batch_id)` — derived from the postings, never a second text pass. */
+  private[graft] def containSizes(g: DataFrame): DataFrame =
+    g.groupBy(col("doc_id"), col("batch_id")).agg(count(lit(1)).as("ng"))
+      .select(col("doc_id"), col("ng"), col("batch_id"))
 
-  /** Build one batch's partials with the gram scan MATERIALIZED once
-    * (r13 attribution: the lazy `gramIds` plan was consumed by BOTH the
-    * postings and the sizes leg, so every store/write of a partial ran
-    * the batch's full gram expansion TWICE — q129's three-batch build
-    * re-expanded the whole corpus a second time for the sizes
-    * materialize alone). The release handle is for the streaming
-    * promote path (bounded per-batch scratch, the StreamingContain
-    * discipline); batch entries use [[buildContainIndexP]] and let the
-    * harness settle sweep. */
-  private[graft] def buildContainIndexPManaged(docs: DataFrame,
-      batchId: Long): (ContainIndexP, () => Unit) = {
+  /** One batch's containment partials (`g` postings, `sizes`) with the
+    * gram scan materialized once: both relations read the stored scan,
+    * so writing or storing them never re-expands the batch's grams. The
+    * release handle frees the scan once a streaming promote's writes
+    * land, keeping per-batch scratch bounded on an unbounded stream. */
+  private[graft] def containPartials(docs: DataFrame, batchId: Long)
+      : Partials = {
     val (gRaw, release) =
       Scratch.materializeManaged(gramIds(docs), s"cip${batchId}_g")
-    val g = gRaw.toDF("doc_id", "gid")
-    (ContainIndexP(
-      g.withColumn("batch_id", lit(batchId)),
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng"))
-        .withColumn("batch_id", lit(batchId))), release)
+    val g = gRaw.toDF("doc_id", "gid").withColumn("batch_id", lit(batchId))
+    Partials(Seq("g" -> g, "sizes" -> containSizes(g)), release)
   }
 
-  private[graft] def buildContainIndexP(docs: DataFrame, batchId: Long)
-      : ContainIndexP =
-    buildContainIndexPManaged(docs, batchId)._1
-
-  /** Promote a delta batch: append its partials — no re-aggregation. */
-  private[graft] def mergeContainIndexP(idx: ContainIndexP,
-      deltaDocs: DataFrame, batchId: Long): ContainIndexP = {
-    val d = buildContainIndexP(deltaDocs, batchId)
-    ContainIndexP(idx.g.union(d.g), idx.sizes.union(d.sizes))
+  /** Store tagged postings, then the sizes derived from the STORED
+    * postings — the batch entries' one-scan build (q128/q129/q131/q132):
+    * batch_id is a per-row function of doc_id, so one tagged scan IS the
+    * union of the per-batch partials, with one text pass instead of one
+    * per batch. */
+  private[graft] def storeContain(g: DataFrame, tag: String): Partials = {
+    val sg = Partials(Seq("g" -> g)).store(tag)
+    sg ++ Partials(Seq("sizes" -> containSizes(sg("g")))).store(tag)
   }
 
-  /** Retract (demote) one promoted batch — drops exactly the rows its
-    * promote appended; over a batch_id-partitioned store this filter is
-    * partition pruning (ContainmentSpec pins it). */
-  private[graft] def retractContainIndexP(idx: ContainIndexP,
-      batchId: Long): ContainIndexP =
-    ContainIndexP(idx.g.filter(col("batch_id") =!= batchId),
-      idx.sizes.filter(col("batch_id") =!= batchId))
-
-  /** Collapse the surviving partials to the probe-ready index: df is
-    * ONE count over the stored postings (the census SUM-at-probe-time
-    * discipline — promote stays delta-only). */
-  private[graft] def collapseContain(p: ContainIndexP): ContainIndex = {
-    val g = p.g.drop("batch_id")
-    ContainIndex(g, p.sizes.drop("batch_id"),
+  /** Collapse surviving partials to the probe-ready index: df is ONE
+    * count over the stored postings, so promote stays delta-only. */
+  private[graft] def collapseContain(p: Partials): ContainIndex = {
+    val g = p("g").drop("batch_id")
+    ContainIndex(g, p("sizes").drop("batch_id"),
       g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
   }
 
-  /** Containment-index MERGE equivalence (q128): bootstrap the index
-    * over the frozen batch (doc_id ≡ 0,1,2 mod 7), STORE it, promote
-    * the delta (≡ 3,4) by appending its partials, then probe snippets
-    * of the INDEX population (guaranteed engulfments) plus the unseen
-    * docs (≡ 5,6). Oracle = the probe against the index REBUILT over
+  /** Containment-index MERGE equivalence (q128): the frozen batch
+    * (doc_id ≡ 0,1,2 mod 7) and the promoted delta (≡ 3,4) land in the
+    * store as batches 0 and 1, then snippets of the INDEX population
+    * (guaranteed engulfments) plus the unseen docs (≡ 5,6) probe the
+    * collapsed index. Oracle = the probe against the index REBUILT over
     * frozen∪delta — merged ≡ rebuilt, the delta-only-work proof (the
     * q115 census pattern on the append algebra). Batch moduli 7/9 are
     * coprime to the generator's 20-source round-robin.
@@ -2489,31 +2404,13 @@ object Dedup extends QueryModule {
   private def q128(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    // r14 optimization: the probe-side gram scan is independent of the
-    // whole index chain — overlap it on a driver thread (guide §2.6).
-    // r15 optimization (guide §6 — scans, not threads): the frozen
-    // batch (m<3 → batch 0) and the promoted delta (m∈{3,4} → batch 1)
-    // previously ran as TWO full corpus gram scans whose partials were
-    // materialized separately and re-materialized merged; batch_id is
-    // a per-row function of doc_id, so ONE scan tagged with batch_id
-    // produces the identical row set — landed directly in the
-    // batch_id-partitioned store (the StreamingPromote layout: the
-    // promote IS its own partition, merged ≡ the filter-free read of
-    // both partitions), with per-doc sizes derived from the stored
-    // postings rather than a second text pass.
-    val (live, gp) = inParallel({
-      val g = Scratch.materializePartitioned(
-        gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
-          .withColumn("batch_id",
-            when(col("doc_id") % 7 < 3, lit(0L)).otherwise(lit(1L))),
-        "q128_g", "batch_id")
-      ContainIndexP(g,
-        Scratch.materializePartitioned(
-          g.groupBy(col("doc_id"), col("batch_id"))
-            .agg(count(lit(1)).as("ng"))
-            .select(col("doc_id"), col("ng"), col("batch_id")),
-          "q128_sz", "batch_id"))
-    }, probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q128"))
+    // the probe-side gram scan is independent of the whole index chain,
+    // so it overlaps the store on a driver thread
+    val (live, gp) = inParallel(
+      storeContain(gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
+        .withColumn("batch_id", when(m < 3, lit(0L)).otherwise(lit(1L))),
+        "q128"),
+      probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q128"))
     probeFromG(collapseContain(live), gp, "q128")
   }
 
@@ -2529,40 +2426,20 @@ object Dedup extends QueryModule {
   private def q129(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    // same r14 overlap as q128: probe scan beside the build chain.
-    // r15 optimization (guide §6): the three batch builds previously
-    // ran as THREE full corpus gram scans (independent doc slices,
-    // overlapped on driver threads — overlap hides serial latency but
-    // not I/O); batch_id is a per-row function of doc_id, so ONE scan
-    // tagged with batch_id produces the identical row set, landed
-    // directly in the batch_id-partitioned store. The union algebra is
-    // untouched — the tagged single scan IS the union of the per-batch
-    // partials (disjoint, exhaustive slices of m < 5); sizes derive
-    // from the stored postings, not a second text pass.
-    val (stored, gp) = inParallel({
-      val sg = Scratch.materializePartitioned(
-        gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
-          .withColumn("batch_id",
-            when(col("doc_id") % 7 < 2, lit(0L))
-              .when(col("doc_id") % 7 < 4, lit(1L)).otherwise(lit(2L))),
-        "q129_g", "batch_id")
-      val ssz = Scratch.materializePartitioned(
-        sg.groupBy(col("doc_id"), col("batch_id"))
-          .agg(count(lit(1)).as("ng"))
-          .select(col("doc_id"), col("ng"), col("batch_id")),
-        "q129_sz", "batch_id")
-      ContainIndexP(sg, ssz)
-    }, probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q129"))
-    val demoted = retractContainIndexP(stored, 2L)
-    probeFromG(collapseContain(demoted), gp, "q129")
+    // one tagged scan, the probe scan overlapped beside it (see q128)
+    val (stored, gp) = inParallel(
+      storeContain(gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
+        .withColumn("batch_id", when(m < 2, lit(0L))
+          .when(m < 4, lit(1L)).otherwise(lit(2L))), "q129"),
+      probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q129"))
+    probeFromG(collapseContain(stored.retract(2L)), gp, "q129")
   }
 
   /** The lifecycle entries' shared probe-side gram scan: snippets of
     * `snipBase` ∪ the unseen `rest` docs, materialized (three probe
-    * legs consume it). Split from the probe itself (r14 optimization):
-    * at word grain this scan depends on NOTHING the index chain
-    * produces, so q128/q129 run it on a driver thread overlapped with
-    * the build/store/merge chain (guide §2.6). */
+    * legs consume it). Split from the probe itself: at word grain this
+    * scan depends on NOTHING the index chain produces, so q128/q129 run
+    * it on a driver thread overlapped with the store (guide §2.6). */
   private def probeGramsOf(snipBase: DataFrame, rest: DataFrame,
       tag: String): DataFrame = {
     val probeDocs = snipOf(snipBase)

@@ -478,10 +478,10 @@ object Similarity extends QueryModule {
 
   /** The frozen SEMANTIC index as a value: the (frozen) coarse
     * quantizer plus its inverted lists (idx vector → owning list).
-    * q99 probes this shape in-plan; the MERGE API below is the
-    * lifecycle operation — promote a delta batch of vectors into the
-    * stored lists WITHOUT re-assigning the corpus. The quantizer does
-    * NOT retrain on merge (that is what "frozen" means operationally —
+    * q99 probes this shape in-plan; q101/q103 keep the lists as
+    * [[Partials]] so a delta batch of vectors promotes into the stored
+    * lists WITHOUT re-assigning the corpus. The quantizer does NOT
+    * retrain on promote (that is what "frozen" means operationally —
     * retraining is the periodic full-rebuild event, not the daily
     * promote).
     */
@@ -498,16 +498,6 @@ object Similarity extends QueryModule {
 
   private[graft] def buildSemIndex(e: DataFrame, cent: DataFrame): SemIndex =
     SemIndex(cent, assignLists(e, cent))
-
-  /** MERGE: assign ONLY the delta under the frozen quantizer and append
-    * to the lists — cost |delta| × NCent cosines + an append; frozen
-    * vectors never reshuffle. Equals the from-scratch build over
-    * corpus∪delta because assignment is per-vector under a fixed
-    * quantizer (the q101 oracle proves exactly this).
-    */
-  private[graft] def mergeSemIndex(idx: SemIndex, deltaE: DataFrame)
-      : SemIndex =
-    SemIndex(idx.cent, idx.lists.union(assignLists(deltaE, idx.cent)))
 
   /** q99's probe contract over an explicit index value. */
   private[graft] def probeSem(idx: SemIndex, probeE: DataFrame): DataFrame = {
@@ -533,23 +523,21 @@ object Similarity extends QueryModule {
   /** Semantic frozen-index MERGE equivalence (q101) — q100's lifecycle
     * story for the embedding signal: bootstrap the inverted lists over
     * the frozen corpus (vec_id ≥ DeltaMax, quantizer = the seeded
-    * centroids inside it), STORE them, merge the delta batch
-    * (DeltaMax/2 ≤ vec_id < DeltaMax) into the stored lists, then
-    * probe the next batch (vec_id < DeltaMax/2) against the merged
-    * index. The oracle rebuilds the index from scratch over
-    * frozen∪delta under the same quantizer — hash equality is the
-    * merged ≡ rebuilt proof.
+    * centroids inside it) as batch 0, STORE them, union the delta
+    * batch's lists (DeltaMax/2 ≤ vec_id < DeltaMax), then probe the next
+    * batch (vec_id < DeltaMax/2) against the collapsed index. The oracle
+    * rebuilds the index from scratch over frozen∪delta under the same
+    * quantizer — hash equality is the merged ≡ rebuilt proof.
     */
   private def q101(s: SparkSession, d: String): DataFrame = {
     val e = Scratch.materialize(withNorm(Tables.embeddings(s, d)), "q101_e")
-    val cent = seededCent(e)
-    val f0 = buildSemIndex(e.filter(col("vec_id") >= DeltaMax), cent)
-    val stored = SemIndex(
-      Scratch.materialize(f0.cent, "q101_cent"),
-      Scratch.materialize(f0.lists, "q101_lists"))
-    val merged = mergeSemIndex(stored,
-      e.filter(col("vec_id") >= DeltaMax / 2 && col("vec_id") < DeltaMax))
-    probeSem(merged, e.filter(col("vec_id") < DeltaMax / 2))
+    val cent = Scratch.materialize(seededCent(e), "q101_cent")
+    val stored = semPartials(e.filter(col("vec_id") >= DeltaMax), cent, 0L)
+      .store("q101")
+    val merged = stored.union(semPartials(
+      e.filter(col("vec_id") >= DeltaMax / 2 && col("vec_id") < DeltaMax),
+      cent, 1L))
+    probeSem(collapseSem(cent, merged), e.filter(col("vec_id") < DeltaMax / 2))
   }
 
   /** The (normalized embeddings, frozen quantizer) pair q99/q101/q103
@@ -563,43 +551,20 @@ object Similarity extends QueryModule {
     (e, seededCent(e))
   }
 
-  /** Provenance-tagged frozen semantic index — the RETRACTABLE variant
-    * of [[SemIndex]] (r09 verdict #1, the semantic twin of
-    * `Dedup.LexIndexP`): every inverted-list row carries the batch_id
-    * of the promote that appended it. The lists were already
-    * append-only — assignment under a FROZEN quantizer is per-vector —
-    * so provenance is the only thing retraction was missing: demoting
-    * batch B is `filter(batch_id =!= B)`, exactly the rows B's promote
-    * appended, and over a batch_id-partitioned store it is partition
-    * pruning (B's files never open; dropping them is one directory
-    * delete). The quantizer is shared state, not per-batch: retraction
-    * never touches it, the same way promote never retrains it.
+  /** One batch's semantic partials: its `lists` rows, assigned under
+    * the FROZEN quantizer `cent`. Assignment is per-vector under a fixed
+    * quantizer, so the lists are append-only and a batch's rows are
+    * exactly what its retraction drops. The quantizer is shared state,
+    * not a relation: promote never retrains it and retraction never
+    * touches it, so it is passed to [[collapseSem]] instead.
     */
-  private[graft] final case class SemIndexP(cent: DataFrame, lists: DataFrame)
-
-  private[graft] def buildSemIndexP(e: DataFrame, cent: DataFrame,
-      batchId: Long): SemIndexP =
-    SemIndexP(cent, assignLists(e, cent).withColumn("batch_id", lit(batchId)))
-
-  /** Promote under provenance: assign ONLY the delta under the frozen
-    * quantizer, tag, append — [[mergeSemIndex]]'s cost, plus one lit.
-    */
-  private[graft] def mergeSemIndexP(idx: SemIndexP, deltaE: DataFrame,
-      batchId: Long): SemIndexP =
-    SemIndexP(idx.cent, idx.lists.union(
-      assignLists(deltaE, idx.cent).withColumn("batch_id", lit(batchId))))
-
-  /** Retract (demote) one promoted batch — the exact inverse of its
-    * promote. Equality with lists REBUILT without the batch is the
-    * q103 oracle's hash gate.
-    */
-  private[graft] def retractSemIndexP(idx: SemIndexP, batchId: Long)
-      : SemIndexP =
-    SemIndexP(idx.cent, idx.lists.filter(col("batch_id") =!= batchId))
+  private[graft] def semPartials(e: DataFrame, cent: DataFrame,
+      batchId: Long): Partials =
+    Partials.tagged(batchId, "lists" -> assignLists(e, cent))
 
   /** Collapse to the probe shape: provenance off, [[probeSem]] on. */
-  private[graft] def collapseSem(idx: SemIndexP): SemIndex =
-    SemIndex(idx.cent, idx.lists.drop("batch_id"))
+  private[graft] def collapseSem(cent: DataFrame, p: Partials): SemIndex =
+    SemIndex(cent, p("lists").drop("batch_id"))
 
   /** Semantic frozen-index RETRACTION equivalence (q103) — q102's
     * story for the embedding signal: bootstrap the inverted lists over
@@ -613,19 +578,16 @@ object Similarity extends QueryModule {
     */
   private def q103(s: SparkSession, d: String): DataFrame = {
     val e = Scratch.materialize(withNorm(Tables.embeddings(s, d)), "q103_e")
-    val cent = seededCent(e)
+    val cent = Scratch.materialize(seededCent(e), "q103_cent")
     val q3 = DeltaMax * 3 / 4
     val h = DeltaMax / 2
-    val b0 = buildSemIndexP(e.filter(col("vec_id") >= DeltaMax), cent, 0L)
-    val p1 = mergeSemIndexP(b0,
-      e.filter(col("vec_id") >= q3 && col("vec_id") < DeltaMax), 1L)
-    val p2 = mergeSemIndexP(p1,
-      e.filter(col("vec_id") >= h && col("vec_id") < q3), 2L)
-    val stored = SemIndexP(
-      Scratch.materialize(p2.cent, "q103_cent"),
-      Scratch.materializePartitioned(p2.lists, "q103_lists", "batch_id"))
-    val demoted = retractSemIndexP(stored, 2L)
-    probeSem(collapseSem(demoted), e.filter(col("vec_id") < h))
+    val stored = semPartials(e.filter(col("vec_id") >= DeltaMax), cent, 0L)
+      .union(semPartials(
+        e.filter(col("vec_id") >= q3 && col("vec_id") < DeltaMax), cent, 1L))
+      .union(semPartials(
+        e.filter(col("vec_id") >= h && col("vec_id") < q3), cent, 2L))
+      .store("q103")
+    probeSem(collapseSem(cent, stored.retract(2L)), e.filter(col("vec_id") < h))
   }
 
   // lazy: the q99Sql/q101Sql discipline (interpolates SemTau)

@@ -1761,71 +1761,44 @@ object TextAnalysis extends QueryModule {
         col("n_docs").cast("long").as("n_docs"))
       .orderBy(col("source"), col("lmd5"))
 
-  // ---- q115/q116: the INCREMENTAL lifecycle of the boilerplate census
-  // (the q100/q102 frozen-index discipline on a THIRD state algebra):
-  // the lex index merges by per-key MIN and retracts via per-batch
-  // partials; the semantic index by per-cluster append; the census is
-  // SUM-mergeable — per-batch distinct-doc counts and per-source doc
-  // counts ADD exactly, PROVIDED promote batches partition the
-  // documents (a doc in two batches would double-count; exactly-once
-  // promotion is the same contract StreamingPromote's doc gate
-  // enforces on the lex index). Retraction is then the exact inverse
-  // of its promote: drop the batch's partition rows, and the summed
-  // census over the survivors IS the census over the surviving
-  // documents — a re-crawled source's chrome can be demoted without
-  // re-counting the corpus. Cost shape at 100 TB: promote = build the
-  // delta batch's partial census (delta-only work) + APPEND; retract =
-  // partition pruning over the batch_id-partitioned store.
+  // ---- q115/q116: the INCREMENTAL lifecycle of the boilerplate census,
+  // as [[Partials]]. The lex index collapses by per-key MIN, the
+  // semantic index by per-cluster append; the census is SUM-mergeable —
+  // per-batch distinct-doc counts and per-source doc counts ADD exactly,
+  // PROVIDED promote batches partition the documents (a doc in two
+  // batches would double-count; exactly-once promotion is the contract
+  // StreamingPromote's doc gate enforces). Retraction drops the batch's
+  // partition rows, and the summed census over the survivors IS the
+  // census over the surviving documents — a re-crawled source's chrome
+  // can be demoted without re-counting the corpus.
 
-  /** Provenance-tagged census partials: per-batch (source, lmd5, cnt)
-    * distinct-doc counts and per-batch (source, n_docs). */
-  private[graft] final case class BoilerIndexP(
-      counts: DataFrame, srcn: DataFrame)
-
-  private[graft] def buildBoilerIndexP(docs: DataFrame, batchId: Long)
-      : BoilerIndexP = {
+  /** One batch's census partials: `counts` (source, lmd5, cnt)
+    * distinct-doc counts and `srcn` (source, n_docs). */
+  private[graft] def censusPartials(docs: DataFrame, batchId: Long)
+      : Partials = {
     val pd = pageDocs(docs)
-    BoilerIndexP(
-      lineDigests(pd)
+    Partials.tagged(batchId,
+      "counts" -> lineDigests(pd)
         .groupBy(col("source"), col("lmd5"))
-        .agg(countDistinct(col("doc_id")).as("cnt"))
-        .withColumn("batch_id", lit(batchId)),
-      pd.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-        .withColumn("batch_id", lit(batchId)))
+        .agg(countDistinct(col("doc_id")).as("cnt")),
+      "srcn" -> pd.groupBy(col("source")).agg(count(lit(1)).as("n_docs")))
   }
-
-  /** Promote a delta batch: append its partial census — no
-    * re-aggregation (the SUM collapse defers to probe time, where the
-    * group is batches-per-key, not docs-per-key). */
-  private[graft] def mergeBoilerIndexP(idx: BoilerIndexP,
-      deltaDocs: DataFrame, batchId: Long): BoilerIndexP = {
-    val d = buildBoilerIndexP(deltaDocs, batchId)
-    BoilerIndexP(idx.counts.union(d.counts), idx.srcn.union(d.srcn))
-  }
-
-  /** Retract (demote) one promoted batch — drops exactly the rows its
-    * promote appended; over a batch_id-partitioned store this filter
-    * is partition pruning (BoilerplateSpec pins it). */
-  private[graft] def retractBoilerIndexP(idx: BoilerIndexP, batchId: Long)
-      : BoilerIndexP =
-    BoilerIndexP(idx.counts.filter(col("batch_id") =!= batchId),
-      idx.srcn.filter(col("batch_id") =!= batchId))
 
   /** SUM-collapse the surviving partials and threshold — the stored
     * state's census view, (source, lmd5, cnt, n_docs) rows exactly
     * like [[boilerCensus]] over the equivalent document set. */
-  private[graft] def collapsedCensus(idx: BoilerIndexP): DataFrame = {
-    val srcN = idx.srcn.groupBy(col("source"))
+  private[graft] def collapsedCensus(p: Partials): DataFrame = {
+    val srcN = p("srcn").groupBy(col("source"))
       .agg(sum(col("n_docs")).as("n_docs"))
-    idx.counts
+    p("counts")
       .groupBy(col("source"), col("lmd5")).agg(sum(col("cnt")).as("cnt"))
       .join(broadcast(srcN), "source")
       .where(boilerThreshold)
   }
 
   /** Collapse to the per-source chrome sets — the strip/probe shape. */
-  private[graft] def collapseBoiler(idx: BoilerIndexP): DataFrame =
-    collapsedCensus(idx)
+  private[graft] def collapseBoiler(p: Partials): DataFrame =
+    collapsedCensus(p)
       .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset"))
 
   /** Strip arriving documents against an index's chrome sets — the
@@ -1858,19 +1831,19 @@ object TextAnalysis extends QueryModule {
   private def q115(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    val b0 = buildBoilerIndexP(docs.filter(m < 3), 0L)
-    // materialized = the stored census: the merge consumes INDEX STATE
-    // from disk, provably not the frozen batch's text
-    val stored = BoilerIndexP(
-      Scratch.materialize(b0.counts, "q115_counts"),
-      Scratch.materialize(b0.srcn, "q115_srcn"))
-    val merged = mergeBoilerIndexP(stored, docs.filter(m >= 3 && m < 5), 1L)
-    collapsedCensus(merged)
-      .select(col("source"), col("lmd5"),
+    // the merge consumes stored INDEX STATE, provably not the frozen
+    // batch's text
+    val stored = censusPartials(docs.filter(m < 3), 0L).store("q115")
+    censusRows(collapsedCensus(
+      stored.union(censusPartials(docs.filter(m >= 3 && m < 5), 1L))))
+  }
+
+  /** The lifecycle entries' output shape over a collapsed census. */
+  private def censusRows(census: DataFrame): DataFrame =
+    census.select(col("source"), col("lmd5"),
         col("cnt").cast("long").as("cnt"),
         col("n_docs").cast("long").as("n_docs"))
       .orderBy(col("source"), col("lmd5"))
-  }
 
   /** Census-index RETRACTION equivalence (q116): promote batches 0/1/2
     * (doc_id ≡ 0,1 / 2,3 / 4 mod 7), store partitioned by batch_id,
@@ -1884,20 +1857,11 @@ object TextAnalysis extends QueryModule {
   private def q116(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    val p2 = mergeBoilerIndexP(
-      mergeBoilerIndexP(
-        buildBoilerIndexP(docs.filter(m < 2), 0L),
-        docs.filter(m >= 2 && m < 4), 1L),
-      docs.filter(m === 4), 2L)
-    val stored = BoilerIndexP(
-      Scratch.materializePartitioned(p2.counts, "q116_counts", "batch_id"),
-      Scratch.materializePartitioned(p2.srcn, "q116_srcn", "batch_id"))
-    val demoted = retractBoilerIndexP(stored, 2L)
-    collapsedCensus(demoted)
-      .select(col("source"), col("lmd5"),
-        col("cnt").cast("long").as("cnt"),
-        col("n_docs").cast("long").as("n_docs"))
-      .orderBy(col("source"), col("lmd5"))
+    val stored = censusPartials(docs.filter(m < 2), 0L)
+      .union(censusPartials(docs.filter(m >= 2 && m < 4), 1L))
+      .union(censusPartials(docs.filter(m === 4), 2L))
+      .store("q116")
+    censusRows(collapsedCensus(stored.retract(2L)))
   }
 
   /** The constructed page-line CTEs alone (d + lines) — the SQL twin of
@@ -2841,8 +2805,8 @@ object TextAnalysis extends QueryModule {
       broadcast(boiler.select(col("source"), explode(col("bset")).as("lmd5"))))
   }
 
-  /** r15 one-scan lifecycle front half (guide §6 — scans, not
-    * threads): materialize the page-line relation ONCE over the full
+  /** One-scan lifecycle front half (guide §6 — scans, not threads):
+    * materialize the page-line relation ONCE over the full
     * promoted population with `batch_id` derived per row (batch
     * membership is a pure function of doc_id), and freeze the chrome
     * census over the `censusPred` slice only. Value-identical to
@@ -2972,34 +2936,25 @@ object TextAnalysis extends QueryModule {
   // a production promote actually runs, not a census rebuilt per
   // delta (which would be corpus-linear work on every micro-batch).
 
-  /** One batch's line-grain partials under a FROZEN chrome set, the
-    * line scan materialized once (both partial legs read the stored
-    * scan — the buildContainIndexPManaged discipline); the release
-    * handle is for the streaming promote path's bounded per-batch
-    * scratch. */
-  private[graft] def buildLineContainIndexPManaged(docs: DataFrame,
-      chrome: DataFrame, batchId: Long, tag: String)
-      : (Dedup.ContainIndexP, () => Unit) = {
+  /** One batch's line-grain containment partials (`g`, `sizes`) under
+    * a FROZEN chrome set, the line scan materialized once so both
+    * relations read the stored scan; the release handle frees it once a
+    * streaming promote's writes land (see [[Dedup.containPartials]]). */
+  private[graft] def lineContainPartials(docs: DataFrame,
+      chrome: DataFrame, batchId: Long, tag: String): Partials = {
     val (gRaw, release) = Scratch.materializeManaged(
       lineGramIds(pageDocs(docs), chrome), s"${tag}_lcp${batchId}_g")
-    val g = gRaw.toDF("doc_id", "gid")
-    (Dedup.ContainIndexP(
-      g.withColumn("batch_id", lit(batchId)),
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng"))
-        .withColumn("batch_id", lit(batchId))), release)
+    val g = gRaw.toDF("doc_id", "gid").withColumn("batch_id", lit(batchId))
+    Partials(Seq("g" -> g, "sizes" -> Dedup.containSizes(g)), release)
   }
-
-  private[graft] def buildLineContainIndexP(docs: DataFrame,
-      chrome: DataFrame, batchId: Long, tag: String): Dedup.ContainIndexP =
-    buildLineContainIndexPManaged(docs, chrome, batchId, tag)._1
 
   /** The lifecycle entries' shared probe-side line scan: constructed
     * quotes of `quoteBase` parents ∪ the unseen `rest` docs, reduced to
     * surviving line gids under the frozen `chrome`, materialized. Split
-    * from the probe itself (r14 optimization): this scan depends ONLY
-    * on the chrome census, so the lifecycle entries run it on a driver
-    * thread OVERLAPPED with the index build/store/re-freeze chain
-    * (guide §2.6) instead of serially after it. */
+    * from the probe itself: this scan depends ONLY on the chrome census,
+    * so the lifecycle entries run it on a driver thread OVERLAPPED with
+    * the index store/re-freeze chain (guide §2.6) instead of serially
+    * after it. */
   private def probeLineGrams(chrome: DataFrame, quoteBase: DataFrame,
       rest: DataFrame, tag: String): DataFrame = {
     val probeDocs = quoteOf(quoteBase)
@@ -3017,47 +2972,28 @@ object TextAnalysis extends QueryModule {
       .withColumnRenamed("n_grams", "n_lines")
 
   /** Line-containment MERGE equivalence (q131): freeze the chrome
-    * census over the bootstrap batch (doc_id ≡ 0,1,2 mod 7), build its
-    * partials off the SAME materialized line scan, STORE them, promote
-    * the delta (≡ 3,4) under the frozen chrome by appending its
-    * partials, then probe quotes of the INDEX population (guaranteed
-    * line-set engulfments) plus the unseen docs (≡ 5,6). Oracle = the
-    * probe against the index REBUILT over frozen∪delta with the census
-    * still spelled over the bootstrap only — merged ≡ rebuilt under
-    * frozen chrome. Batch modulus 7 is coprime to the generator's
-    * 20-source round-robin, so every source has bootstrap census
-    * evidence. */
+    * census over the bootstrap batch (doc_id ≡ 0,1,2 mod 7), store its
+    * partials and the delta's (≡ 3,4) under the frozen chrome as
+    * batches 0 and 1, then probe quotes of the INDEX population
+    * (guaranteed line-set engulfments) plus the unseen docs (≡ 5,6).
+    * Oracle = the probe against the index REBUILT over frozen∪delta
+    * with the census still spelled over the bootstrap only — merged ≡
+    * rebuilt under frozen chrome. Batch modulus 7 is coprime to the
+    * generator's 20-source round-robin, so every source has bootstrap
+    * census evidence. */
   private def q131(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(
       col("doc_id").cast("long").as("doc_id"), col("source"), col("text"))
     val m = col("doc_id") % 7
-    // r15 optimization (guide §6): the bootstrap (m<3 → batch 0) and
-    // delta (m∈{3,4} → batch 1) line scans previously ran as TWO full
-    // text passes (overlapped on driver threads in r14 — overlap hides
-    // serial latency but not I/O); batch membership is a per-row
-    // function of doc_id, so ONE tagged page-line scan produces the
-    // identical line relation, the chrome census still spelled over
-    // the BOOTSTRAP slice only (the frozen-chrome contract), and the
-    // per-batch partials derive from the STORED line relation in one
-    // plan — the store consumes index state, never a second text pass.
     val batchCol = when(col("doc_id") % 7 < 3, lit(0L)).otherwise(lit(1L))
     val (li, chrome) = taggedLinesAndChrome(docs.filter(m < 5), batchCol,
       col("batch_id") === 0L, "q131")
-    // r14 optimization: the probe-side line scan needs only the frozen
-    // chrome, so it overlaps the store/collapse chain on a driver thread
-    val (live, gp) = Dedup.inParallel({
-      // the promote LANDS in the store before any probe (q128's
-      // contract); sizes derive from the stored postings
-      val sg = Scratch.materialize(
-        taggedLineGrams(li, chrome, batchCol), "q131_mg")
-      Dedup.ContainIndexP(sg,
-        Scratch.materialize(
-          sg.groupBy(col("doc_id"), col("batch_id"))
-            .agg(count(lit(1)).as("ng"))
-            .select(col("doc_id"), col("ng"), col("batch_id")),
-          "q131_msz"))
-    }, probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
-      "q131"))
+    // the probe-side line scan needs only the frozen chrome, so it
+    // overlaps the store on a driver thread
+    val (live, gp) = Dedup.inParallel(
+      Dedup.storeContain(taggedLineGrams(li, chrome, batchCol), "q131"),
+      probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
+        "q131"))
     probeFromG(Dedup.collapseContain(live), gp, "q131")
   }
 
@@ -3074,32 +3010,15 @@ object TextAnalysis extends QueryModule {
     val docs = Tables.documents(s, d).select(
       col("doc_id").cast("long").as("doc_id"), col("source"), col("text"))
     val m = col("doc_id") % 7
-    // r15 optimization (guide §6): the bootstrap (m<2 → batch 0) and
-    // the two delta slices (m∈{2,3} → 1, m=4 → 2) previously ran as
-    // THREE full text passes (overlapped in r14); ONE tagged page-line
-    // scan produces the identical line relation — chrome census over
-    // the bootstrap slice only (frozen-chrome contract), per-batch
-    // partials derived from the STORED relation in one plan, landed in
-    // the batch_id-partitioned store the retraction prunes.
     val batchCol = when(col("doc_id") % 7 < 2, lit(0L))
       .when(col("doc_id") % 7 < 4, lit(1L)).otherwise(lit(2L))
     val (li, chrome) = taggedLinesAndChrome(docs.filter(m < 5), batchCol,
       col("batch_id") === 0L, "q132")
-    // r14 optimization: probe-side scan overlaps the store chain (it
-    // needs only the frozen chrome)
-    val (stored, gp) = Dedup.inParallel({
-      val sg = Scratch.materializePartitioned(
-        taggedLineGrams(li, chrome, batchCol), "q132_g", "batch_id")
-      val ssz = Scratch.materializePartitioned(
-        sg.groupBy(col("doc_id"), col("batch_id"))
-          .agg(count(lit(1)).as("ng"))
-          .select(col("doc_id"), col("ng"), col("batch_id")),
-        "q132_sz", "batch_id")
-      Dedup.ContainIndexP(sg, ssz)
-    }, probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
-      "q132"))
-    val demoted = Dedup.retractContainIndexP(stored, 2L)
-    probeFromG(Dedup.collapseContain(demoted), gp, "q132")
+    val (stored, gp) = Dedup.inParallel(
+      Dedup.storeContain(taggedLineGrams(li, chrome, batchCol), "q132"),
+      probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
+        "q132"))
+    probeFromG(Dedup.collapseContain(stored.retract(2L)), gp, "q132")
   }
 
   /** The two-population line-grain probe oracle under a FROZEN chrome
@@ -3188,50 +3107,59 @@ object TextAnalysis extends QueryModule {
   // keep the 8-byte-gid width. Moved rows keep their origin batch_id,
   // so retraction (partition prune) still composes after a re-freeze.
 
-  /** Line-containment store WITH the quarantined chrome complement —
-    * both sides `(source, doc_id, gid, batch_id)`, append-pure per
-    * promoted batch under the chrome frozen at that batch's promote. */
-  private[graft] final case class LineContainStateP(
-      surv: DataFrame, strip: DataFrame)
-
-  /** One batch's store rows off a `(source, doc_id, lmd5)` line
-    * relation: the anti-join side indexes, the semi-join side is
-    * quarantined — ONE split spelling so a line is on exactly one side
-    * of the store for its batch's frozen chrome. */
-  private[graft] def buildLineStateP(li: DataFrame, chromePairs: DataFrame,
-      batchId: Long): LineContainStateP = {
+  /** One batch's line-containment store WITH the quarantined chrome
+    * complement, off a `(source, doc_id, lmd5)` line relation: `surv`
+    * (the anti-join side) indexes, `strip` (the semi-join side) is
+    * quarantined — both `(source, doc_id, gid, batch_id)`, ONE split
+    * spelling so a line is on exactly one side of the store for its
+    * batch's frozen chrome. */
+  private[graft] def lineStatePartials(li: DataFrame, chromePairs: DataFrame,
+      batchId: Long): Partials = {
     def side(joinType: String): DataFrame =
       li.join(chromePairs, Seq("source", "lmd5"), joinType)
         .select(col("source"), col("doc_id"),
           Dedup.hex12ToLong(col("lmd5")).as("gid"))
         .distinct()
-        .withColumn("batch_id", lit(batchId))
-    LineContainStateP(side("left_anti"), side("left_semi"))
+    Partials.tagged(batchId,
+      "surv" -> side("left_anti"), "strip" -> side("left_semi"))
   }
 
   /** One batch's census partials off the SAME line relation (the
     * one-scan discipline: postings split and census read one stored
-    * scan) — [[BoilerIndexP]]-shaped, so the q115/q116 collapse
-    * applies. n_docs = distinct doc ids, the [[boilerCensusOfLines]]
+    * scan) — [[censusPartials]]-shaped, so [[collapsedCensus]] applies.
+    * n_docs = distinct doc ids, the [[boilerCensusOfLines]]
     * equivalence (every page emits its header line). */
-  private[graft] def lineCensusP(li: DataFrame, batchId: Long)
-      : BoilerIndexP = BoilerIndexP(
-    li.groupBy(col("source"), col("lmd5"))
-      .agg(countDistinct(col("doc_id")).as("cnt"))
-      .withColumn("batch_id", lit(batchId)),
-    li.groupBy(col("source"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-      .withColumn("batch_id", lit(batchId)))
+  private[graft] def lineCensusPartials(li: DataFrame, batchId: Long)
+      : Partials = Partials.tagged(batchId,
+    "counts" -> li.groupBy(col("source"), col("lmd5"))
+      .agg(countDistinct(col("doc_id")).as("cnt")),
+    "srcn" -> li.groupBy(col("source"))
+      .agg(countDistinct(col("doc_id")).as("n_docs")))
 
-  /** The re-freeze move: surv loses the ADDED chrome's postings to the
-    * quarantine, strip returns the REMOVED chrome's postings to the
-    * index — flip sets are per-source chrome deltas (tiny: lines that
-    * crossed the half-the-source verdict), broadcast into scan-stage
-    * joins over the stored gid rows. Algebra: surv' = lines ∉
-    * ((C_old ∪ added) ∖ removed) = lines ∉ C_new — exactly the index a
-    * full rebuild under C_new produces, without touching text. */
-  private[graft] def refreezeLineState(st: LineContainStateP,
-      oldChrome: DataFrame, newChrome: DataFrame): LineContainStateP = {
+  /** One micro-batch of `(doc_id, source, text)` pages for the
+    * re-freeze-capable store, under the currently published `chrome`:
+    * ONE digests scan, materialized, feeds the census partials AND both
+    * postings sides (release frees it once the writes land). */
+  private[graft] def lineRefreezePartials(docs: DataFrame, chrome: DataFrame,
+      batchId: Long): Partials = {
+    val (liRaw, release) = Scratch.materializeManaged(
+      lineDigests(pageDocs(docs)), s"sprf_li$batchId")
+    val li = liRaw.toDF("source", "doc_id", "lmd5")
+    val p = lineCensusPartials(li, batchId) ++
+      lineStatePartials(li, broadcast(chrome), batchId)
+    p.copy(release = release)
+  }
+
+  /** The re-freeze move over a store's `surv`/`strip` partials: surv
+    * loses the ADDED chrome's postings to the quarantine, strip returns
+    * the REMOVED chrome's postings to the index — flip sets are
+    * per-source chrome deltas (tiny: lines that crossed the
+    * half-the-source verdict), broadcast into scan-stage joins over the
+    * stored gid rows. Algebra: surv' = lines ∉ ((C_old ∪ added) ∖
+    * removed) = lines ∉ C_new — exactly the index a full rebuild under
+    * C_new produces, without touching text. */
+  private[graft] def refreezeLineState(st: Partials,
+      oldChrome: DataFrame, newChrome: DataFrame): Partials = {
     def gidPairs(pairs: DataFrame): DataFrame =
       pairs.select(col("source"), Dedup.hex12ToLong(col("lmd5")).as("gid"))
     val added = gidPairs(
@@ -3243,15 +3171,16 @@ object TextAnalysis extends QueryModule {
     // positional rename silently swaps doc_id↔gid (both LONG)
     def shaped(df: DataFrame): DataFrame = df.select(
       col("source"), col("doc_id"), col("gid"), col("batch_id"))
-    LineContainStateP(
-      shaped(st.surv.join(broadcast(added), Seq("source", "gid"),
+    val (surv, strip) = (st("surv"), st("strip"))
+    Partials(Seq(
+      "surv" -> shaped(surv.join(broadcast(added), Seq("source", "gid"),
           "left_anti"))
-        .union(shaped(st.strip.join(broadcast(removed),
+        .union(shaped(strip.join(broadcast(removed),
           Seq("source", "gid"), "left_semi"))),
-      shaped(st.strip.join(broadcast(removed), Seq("source", "gid"),
+      "strip" -> shaped(strip.join(broadcast(removed), Seq("source", "gid"),
           "left_anti"))
-        .union(shaped(st.surv.join(broadcast(added), Seq("source", "gid"),
-          "left_semi"))))
+        .union(shaped(surv.join(broadcast(added), Seq("source", "gid"),
+          "left_semi")))))
   }
 
   /** Collapse the store to the probe-ready index. Sizes DERIVE from the
@@ -3259,9 +3188,8 @@ object TextAnalysis extends QueryModule {
     * re-freeze changes per-doc counts, and deriving at publish keeps
     * the move itself append/prune-pure. `source` is projected away
     * FIRST — probe shuffles stay (doc_id, 8-byte gid). */
-  private[graft] def collapseLineState(st: LineContainStateP)
-      : Dedup.ContainIndex = {
-    val g = st.surv.select(col("doc_id"), col("gid"))
+  private[graft] def collapseLineState(st: Partials): Dedup.ContainIndex = {
+    val g = st("surv").select(col("doc_id"), col("gid"))
     Dedup.ContainIndex(g,
       g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")),
       g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
@@ -3278,15 +3206,10 @@ object TextAnalysis extends QueryModule {
     * population — refrozen ≡ rebuilt-under-C_new. */
   private def lineRefreezeLifecycle(pop: DataFrame, bootPred: Column,
       rest: DataFrame, tag: String): DataFrame = {
-    // r14 optimization (guide §2.4 + §2.6): C_new materialized once
-    // (was a LAZY census re-aggregated once per consumer); partitioned
-    // store writes overlap; the probe-side line scan (which depends
+    // ONE tagged page-line scan produces both batches' line relations
+    // (batch membership is a per-row predicate of doc_id); C_new is
+    // materialized once, and the probe-side line scan (which depends
     // only on C_new) overlaps the re-freeze/republish chain.
-    // r15 optimization (guide §6): the bootstrap and delta line scans
-    // previously ran as TWO full text passes (overlapped in r14 —
-    // overlap hides serial latency but not I/O); batch membership is a
-    // per-row predicate of doc_id, so ONE tagged page-line scan
-    // produces both batches' identical line relations.
     val li = Scratch.materialize(
       lineDigests(pageDocs(pop)).withColumn("batch_id",
         when(bootPred, lit(0L)).otherwise(lit(1L))),
@@ -3301,34 +3224,26 @@ object TextAnalysis extends QueryModule {
         .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset")),
       s"${tag}_boiler").toDF("source", "bset")
       .select(col("source"), explode(col("bset")).as("lmd5")))
-    val c0 = lineCensusP(li0, 0L)
-    val st0 = buildLineStateP(li0, oldChrome, 0L)
-    val c1 = lineCensusP(li1, 1L)
-    val st1 = buildLineStateP(li1, oldChrome, 1L)
     // the STORE: both sides land partitioned by batch_id before any
     // re-freeze — the move provably consumes stored postings, not text
-    val (storedSurv, storedStrip) = Dedup.inParallel(
-      Scratch.materializePartitioned(st0.surv.union(st1.surv),
-        s"${tag}_surv", "batch_id"),
-      Scratch.materializePartitioned(st0.strip.union(st1.strip),
-        s"${tag}_strip", "batch_id"))
-    val stored = LineContainStateP(storedSurv, storedStrip)
+    val stored = lineStatePartials(li0, oldChrome, 0L)
+      .union(lineStatePartials(li1, oldChrome, 1L))
+      .store(tag)
     val newChrome = broadcast(Scratch.materialize(
-      collapsedCensus(BoilerIndexP(
-        c0.counts.union(c1.counts), c0.srcn.union(c1.srcn)))
+      collapsedCensus(lineCensusPartials(li0, 0L)
+          .union(lineCensusPartials(li1, 1L)))
         .select(col("source"), col("lmd5")), s"${tag}_nc")
       .toDF("source", "lmd5"))
     val refrozen = refreezeLineState(stored, oldChrome, newChrome)
     val (rsurv, gp) = Dedup.inParallel(
       // republish the surviving index (strip' stays lazy — the probe
       // never consumes it; LineRefreezeSpec pins its correctness)
-      Scratch.materialize(refrozen.surv, s"${tag}_rsurv"),
+      Scratch.materialize(refrozen("surv"), s"${tag}_rsurv"),
       probeLineGrams(newChrome, pop, rest, tag))
     // name-preserving re-alias (fresh attribute ids for the probe's
     // self-joins) — NOT a positional rename, see refreezeLineState
-    val live = LineContainStateP(rsurv.toDF(rsurv.columns: _*),
-      refrozen.strip)
-    probeFromG(collapseLineState(live), gp, tag)
+    probeFromG(collapseLineState(
+      Partials(Seq("surv" -> rsurv.toDF(rsurv.columns: _*)))), gp, tag)
   }
 
   /** Chrome re-freeze, EMERGED direction (q133): the bootstrap is the

@@ -1,425 +1,170 @@
 package graft.streaming
 
-import graft.queries.{Dedup, Similarity}
+import graft.queries.{Dedup, Partials, Scratch, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming index PROMOTE — the micro-batch twin of batch q100/q101,
-  * closing the streaming lifecycle that [[StreamingProbe]] opened: the
-  * probe reads a frozen index; this maintains one, merging each
-  * arriving delta micro-batch into LIVE stored index state.
+/** Streaming index PROMOTE — the micro-batch twin of the batch
+  * lifecycle entries (q100/q101, q115, q128, q131, q133), closing the
+  * streaming lifecycle that [[StreamingProbe]] opened: the probe reads a
+  * frozen index; this maintains one, landing each arriving delta
+  * micro-batch in LIVE stored index state.
   *
-  * Shape: `foreachBatch` over a document (or embedding) stream, with
-  * the provenance-tagged index representation (q102/q103's
-  * `LexIndexP`/`SemIndexP`) as the state table. That representation is
-  * what makes the streaming spelling trivial AND exactly-once:
+  * Every family stores its state as [[Partials]], which makes the
+  * streaming spelling one function and exactly-once:
   *
-  *  - promote under provenance is a PURE APPEND (per-batch partial
-  *    states; the min collapse is deferred to probe time), so a
-  *    micro-batch's work is its own signature pass plus one partition
-  *    write — no read-modify-write of corpus-sized state, no state
-  *    store, no per-batch reshuffle of the frozen index;
-  *  - each micro-batch writes to its OWN `batch_id=<id>` partition
-  *    with overwrite. Structured Streaming replays a failed batch
-  *    under the SAME batch id, so redelivery overwrites the identical
-  *    partition instead of duplicating rows — the standard idempotent-
-  *    sink idiom, here doubling as q102's retraction layout: demoting
-  *    any promoted micro-batch later is the same
-  *    `filter(batch_id =!= B)` partition prune (or a directory drop).
+  *  - promote is a PURE APPEND (per-batch partial states; the collapse
+  *    is deferred to probe time), so a micro-batch's work is its own
+  *    build plus one partition write per relation — no read-modify-write
+  *    of corpus-sized state, no per-batch reshuffle of the index;
+  *  - each micro-batch writes its OWN `batch_id=<id>` partitions with
+  *    overwrite. Structured Streaming replays a failed batch under the
+  *    SAME batch id, so redelivery overwrites the identical partition
+  *    instead of duplicating rows — the idempotent-sink idiom, doubling
+  *    as the retraction layout: demoting a promoted micro-batch is a
+  *    partition-directory delete;
+  *  - the document gate (`dropDuplicates` on the key) holds every
+  *    promoted id in keyed streaming state, so an at-least-once source
+  *    redelivering a document in a LATER micro-batch (a fresh batch id —
+  *    the case the partition overwrite cannot catch) never promotes it
+  *    twice. The lexical MIN algebra would absorb the duplicate
+  *    verdict-wise, but the census SUMS and the containment postings
+  *    COUNT, so a duplicate there double-counts; and in every family a
+  *    duplicate would live under two partitions, making demote-by-batch
+  *    a PARTIAL retraction. With the gate, a document exists in exactly
+  *    one partition and a demote is total. The gate's state is one key
+  *    per corpus document, unbounded by design (a promoted id must never
+  *    re-promote, so no watermark can expire it): the 100 TB
+  *    configuration runs it on the RocksDB state provider, which
+  *    RocksDbStateSpec proves behavior-neutral and engaged.
   *
-  * Convergence contract (StreamingPromoteSpec): after any in-order
-  * chunking of the delta, probing the live state equals batch
-  * q100/q101's probe of the one-shot merged index — and the min-merge
-  * algebra absorbs at-least-once redelivery on top of the
-  * partition-overwrite guarantee (FrozenIndexSpec proved the algebra
-  * batch-side; the sink makes even the append-only band/list tables
-  * safe under replay).
+  * Convergence contract (StreamingPromoteSpec, StreamingRefreezeSpec,
+  * RocksDbStateSpec): after any in-order chunking of the delta, probing
+  * the live state equals the batch entry's probe of the one-shot merged
+  * index, and a demote equals an index built without the batch.
   */
 object StreamingPromote {
 
-  /** One batch's partial state → its own partition, overwrite-on-replay
-    * (exactly-once under Structured Streaming's stable batch ids).
-    */
-  private def writePart(df: DataFrame, dir: String, batchId: Long): Unit =
-    df.drop("batch_id").write.mode("overwrite")
-      .parquet(s"$dir/batch_id=$batchId")
-
-  /** Promote one micro-batch of `(doc_id, text)` into the lexical index
-    * state rooted at `exactDir`/`bandsDir`. Also the bootstrap entry
-    * point: seed the frozen corpus as a (negative) batch id before
-    * starting the stream.
-    */
-  def promoteLexBatch(batch: DataFrame, batchId: Long,
-      exactDir: String, bandsDir: String): Unit = {
-    val p = Dedup.buildLexIndexP(batch, batchId)
-    // the two partition writes are independent jobs — overlap them so
-    // one write's task tail back-fills the other's idle cores (guide
-    // §2.6; the r14 batch-entry discipline carried to the micro-batch
-    // path, which pays this latency once per batch)
-    Dedup.inParallel(
-      writePart(p.exact, exactDir, batchId),
-      writePart(p.bands, bandsDir, batchId))
-    ()
-  }
-
-  /** The streaming lexical promote: every micro-batch of the document
-    * stream lands as one promoted batch. Caller starts/stops the query.
-    */
-  def promoteLex(deltaDocs: DataFrame, exactDir: String,
-      bandsDir: String): StreamingQuery =
-    deltaDocs.writeStream
+  /** The gated streaming promote: every micro-batch of `stream`, gated
+    * on `key`, lands as one promoted batch of `build`'s partials under
+    * `dirs`. Caller starts/stops the query. */
+  def promote(stream: DataFrame, key: String, dirs: Partials.Dirs)(
+      build: (DataFrame, Long) => Partials): StreamingQuery =
+    stream.dropDuplicates(key)
+      .writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], id: Long) =>
-        promoteLexBatch(df, id, exactDir, bandsDir)
+        promoteBatch(build(df, id), dirs, id)
       }
       .start()
 
-  /** [[promoteLex]] behind an EXACTLY-ONCE document gate:
-    * `dropDuplicates("doc_id")` holds every promoted id in keyed
-    * streaming state, so an at-least-once source redelivering a
-    * document in a LATER micro-batch (a fresh batch id — the case the
-    * partition overwrite cannot catch) never promotes it twice.
-    *
-    * Why it matters for the LIFECYCLE and not just the probe: the
-    * min-merge algebra already absorbs duplicate promotes verdict-wise,
-    * but the duplicate would live under TWO batch partitions — and
-    * demoting the document's original batch would silently leave the
-    * copy, making demote-by-batch a PARTIAL retraction. With the gate,
-    * every document exists in exactly one partition and a demote is
-    * total (RocksDbStateSpec pins the round trip).
-    *
-    * State is one long per corpus document, unbounded by design (a
-    * promoted id must never re-promote, so no watermark can expire it):
-    * the 100 TB configuration runs this on the RocksDB state provider
-    * — per-executor, off-heap, disk-bounded — which RocksDbStateSpec
-    * proves behavior-neutral and actually engaged.
-    */
+  /** Land one batch's partials: overwrite its partitions, then release
+    * its per-batch scan once the writes are in. Also the bootstrap entry
+    * point: seed the frozen corpus under a (negative) batch id before
+    * starting the stream. */
+  def promoteBatch(p: Partials, dirs: Partials.Dirs, batchId: Long): Unit =
+    try p.write(dirs, batchId) finally p.release()
+
+  // ---- lexical (q100/q102's streaming side)
+
+  def lexDirs(exactDir: String, bandsDir: String): Partials.Dirs =
+    Seq("exact" -> exactDir, "bands" -> bandsDir)
+
+  /** The gated lexical promote over a `(doc_id, text)` stream. */
   def promoteLexGated(deltaDocs: DataFrame, exactDir: String,
       bandsDir: String): StreamingQuery =
-    deltaDocs.dropDuplicates("doc_id")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        promoteLexBatch(df, id, exactDir, bandsDir)
-      }
-      .start()
+    promote(deltaDocs, "doc_id", lexDirs(exactDir, bandsDir))(Dedup.lexPartials)
 
-  /** The live lexical index as a value — partition-discovered state,
-    * probe-ready via `Dedup.collapseLex`. batch_id rides the directory
-    * names; cast back to long (partition inference narrows to int).
-    */
-  def liveLexIndex(spark: SparkSession, exactDir: String,
-      bandsDir: String): Dedup.LexIndexP =
-    Dedup.LexIndexP(
-      spark.read.parquet(exactDir)
-        .withColumn("batch_id", col("batch_id").cast("long")),
-      spark.read.parquet(bandsDir)
-        .withColumn("batch_id", col("batch_id").cast("long")))
+  /** DEMOTE one promoted micro-batch: one partition-directory delete per
+    * relation, no read of surviving state, no rebuild. */
+  def demoteLexBatch(exactDir: String, bandsDir: String,
+      batchId: Long): Unit =
+    Partials.demote(lexDirs(exactDir, bandsDir), batchId)
 
   /** Probe the live lexical state: batch q100's probe contract over
-    * whatever has been promoted so far.
-    */
+    * whatever has been promoted so far. */
   def probeLexLive(spark: SparkSession, exactDir: String, bandsDir: String,
       probeDocs: DataFrame): DataFrame =
-    Dedup.probeLex(
-      Dedup.collapseLex(liveLexIndex(spark, exactDir, bandsDir)), probeDocs)
+    Dedup.probeLex(Dedup.collapseLex(
+      Partials.read(spark, lexDirs(exactDir, bandsDir))), probeDocs)
 
-  /** DEMOTE one promoted micro-batch from the stored state — q102's
-    * retraction applied to the stream's own layout. Because every
-    * promote landed in its own `batch_id=<id>` partition, the exact
-    * inverse is that directory's delete: O(1) metadata work, no read
-    * of surviving state, no rebuild — the physical form of
-    * `retractLexIndexP`'s partition-pruned filter. (The reference
-    * rolls reducer state back by replaying inverse deltas; here the
-    * provenance layout makes the inverse a drop.)
-    */
-  def demoteLexBatch(exactDir: String, bandsDir: String,
-      batchId: Long): Unit = {
-    graft.queries.Scratch.deleteTree(s"$exactDir/batch_id=$batchId")
-    graft.queries.Scratch.deleteTree(s"$bandsDir/batch_id=$batchId")
-  }
-
-  /** DEMOTE one promoted micro-batch of semantic lists (see
-    * [[demoteLexBatch]]).
-    */
-  def demoteSemBatch(listsDir: String, batchId: Long): Unit =
-    graft.queries.Scratch.deleteTree(s"$listsDir/batch_id=$batchId")
-
-  /** Promote one micro-batch of normalized embeddings `(vec_id,
-    * embedding, nrm)` into the semantic inverted lists at `listsDir`,
-    * assigned under the FROZEN quantizer `cent` — no retrain on
-    * promote, exactly like batch q101.
-    */
-  def promoteSemBatch(batch: DataFrame, batchId: Long, cent: DataFrame,
-      listsDir: String): Unit =
-    writePart(Similarity.buildSemIndexP(batch, cent, batchId).lists,
-      listsDir, batchId)
-
-  /** The streaming semantic promote under a frozen quantizer. */
-  def promoteSem(deltaE: DataFrame, cent: DataFrame,
-      listsDir: String): StreamingQuery =
-    deltaE.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        promoteSemBatch(df, id, cent, listsDir)
-      }
-      .start()
-
-  /** Probe the live semantic state (batch q101's probe contract). */
-  def probeSemLive(spark: SparkSession, cent: DataFrame, listsDir: String,
+  /** Probe the live semantic lists (`Similarity.semPartials`, assigned
+    * under the FROZEN quantizer `cent` — no retrain on promote, exactly
+    * like batch q101). */
+  def probeSemLive(spark: SparkSession, cent: DataFrame, dirs: Partials.Dirs,
       probeE: DataFrame): DataFrame =
     Similarity.probeSem(
-      Similarity.collapseSem(Similarity.SemIndexP(cent,
-        spark.read.parquet(listsDir)
-          .withColumn("batch_id", col("batch_id").cast("long")))),
-      probeE)
+      Similarity.collapseSem(cent, Partials.read(spark, dirs)), probeE)
 
-  // ---- the boilerplate-CENSUS lifecycle (q115/q116's streaming side).
-  // Same partition layout, one honest algebra difference: the lex
-  // index's MIN-merge absorbs at-least-once duplication verdict-wise,
-  // but the census SUMS — a document promoted under two batch ids
-  // double-counts its lines and can push a line over the chrome
-  // threshold. Same-batch replay is still covered by the partition
-  // overwrite; for an at-least-once SOURCE the gated variant is not a
-  // hygiene upgrade here but the correctness requirement.
-
-  /** Promote one micro-batch of `(doc_id, text, source)` documents into
-    * the census state rooted at `countsDir`/`srcnDir`. Also the
-    * bootstrap entry point for the frozen corpus (negative batch id).
-    */
-  def promoteCensusBatch(batch: DataFrame, batchId: Long,
-      countsDir: String, srcnDir: String): Unit = {
-    val p = graft.queries.TextAnalysis.buildBoilerIndexP(batch, batchId)
-    // independent writes — overlapped (see promoteLexBatch)
-    Dedup.inParallel(
-      writePart(p.counts, countsDir, batchId),
-      writePart(p.srcn, srcnDir, batchId))
-    ()
-  }
-
-  /** The streaming census promote behind the exactly-once document
-    * gate (see the algebra note above — REQUIRED for at-least-once
-    * sources, not merely preferred as with the min-merge index).
-    */
-  def promoteCensusGated(deltaDocs: DataFrame, countsDir: String,
-      srcnDir: String): StreamingQuery =
-    deltaDocs.dropDuplicates("doc_id")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        promoteCensusBatch(df, id, countsDir, srcnDir)
-      }
-      .start()
-
-  /** The live census state as a value — probe-ready via
-    * `TextAnalysis.collapseBoiler` / `collapsedCensus`. */
-  def liveCensusIndex(spark: SparkSession, countsDir: String,
-      srcnDir: String): graft.queries.TextAnalysis.BoilerIndexP =
-    graft.queries.TextAnalysis.BoilerIndexP(
-      spark.read.parquet(countsDir)
-        .withColumn("batch_id", col("batch_id").cast("long")),
-      spark.read.parquet(srcnDir)
-        .withColumn("batch_id", col("batch_id").cast("long")))
-
-  /** DEMOTE one promoted census micro-batch — the directory drop, the
-    * physical form of `retractBoilerIndexP` (see [[demoteLexBatch]]).
-    */
-  def demoteCensusBatch(countsDir: String, srcnDir: String,
-      batchId: Long): Unit = {
-    graft.queries.Scratch.deleteTree(s"$countsDir/batch_id=$batchId")
-    graft.queries.Scratch.deleteTree(s"$srcnDir/batch_id=$batchId")
-  }
-
-  // ---- the CONTAINMENT-index lifecycle (q128/q129's streaming side —
-  // r12 verdict #5: the fourth state algebra gets the same streaming
-  // promote/demote surface as the other three). APPEND-pure like the
-  // census: gram postings and per-doc sizes are per-DOCUMENT rows, a
-  // micro-batch's promote is its own gram scan + one partition write,
-  // and per-gram df collapses at probe time as one COUNT over the
-  // surviving postings — no read-modify-write of corpus-sized state.
-  // Same honest algebra note as the census: a document promoted under
-  // TWO batch ids doubles its postings (inflating df AND n_shared), so
-  // for an at-least-once source the GATED variant is the correctness
-  // requirement, not hygiene; same-batch replay is already absorbed by
-  // the partition overwrite.
-
-  /** Promote one micro-batch of `(doc_id, text)` documents into the
-    * containment-index state rooted at `gDir`/`szDir`. Also the
-    * bootstrap entry point for the frozen corpus (negative batch id).
-    */
-  def promoteContainBatch(batch: DataFrame, batchId: Long,
-      gDir: String, szDir: String): Unit = {
-    // managed: the build materializes the batch's gram scan once (both
-    // partition writes read the stored scan instead of re-expanding);
-    // release after the writes land so per-batch scratch stays bounded
-    // on an unbounded stream (the StreamingContain discipline)
-    val (p, release) = Dedup.buildContainIndexPManaged(batch, batchId)
-    try {
-      // independent writes off the one stored scan — overlapped (see
-      // promoteLexBatch)
-      Dedup.inParallel(
-        writePart(p.g, gDir, batchId),
-        writePart(p.sizes, szDir, batchId))
-      ()
-    } finally release()
-  }
-
-  /** The streaming containment promote behind the exactly-once document
-    * gate (REQUIRED for at-least-once sources — see the algebra note
-    * above; the keyed state runs on RocksDB in the 100 TB
-    * configuration, as with [[promoteLexGated]]).
-    */
-  def promoteContainGated(deltaDocs: DataFrame, gDir: String,
-      szDir: String): StreamingQuery =
-    deltaDocs.dropDuplicates("doc_id")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        promoteContainBatch(df, id, gDir, szDir)
-      }
-      .start()
-
-  /** The live containment state as a value — probe-ready via
-    * `Dedup.collapseContain`. */
-  def liveContainIndex(spark: SparkSession, gDir: String,
-      szDir: String): Dedup.ContainIndexP =
-    Dedup.ContainIndexP(
-      spark.read.parquet(gDir)
-        .withColumn("batch_id", col("batch_id").cast("long")),
-      spark.read.parquet(szDir)
-        .withColumn("batch_id", col("batch_id").cast("long")))
-
-  /** Probe the live containment state: batch q128's probe contract
-    * (rarest-gram probes by the COLLAPSED df, candidate-bounded
-    * confirm) over whatever has been promoted so far. */
-  def probeContainLive(spark: SparkSession, gDir: String, szDir: String,
+  /** Probe the live containment state (`Dedup.containPartials`): batch
+    * q128's probe contract (rarest-gram probes by the COLLAPSED df,
+    * candidate-bounded confirm) over whatever has been promoted so far. */
+  def probeContainLive(spark: SparkSession, dirs: Partials.Dirs,
       probeDocs: DataFrame): DataFrame = {
-    val idx = Dedup.collapseContain(liveContainIndex(spark, gDir, szDir))
+    val idx = Dedup.collapseContain(Partials.read(spark, dirs))
     val gp = Dedup.gramIds(probeDocs)
     Dedup.probeContain(idx, gp,
       gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "spromc")
   }
 
-  /** DEMOTE one promoted containment micro-batch — the directory drop,
-    * the physical form of `retractContainIndexP`'s partition-pruned
-    * filter (see [[demoteLexBatch]]). */
-  def demoteContainBatch(gDir: String, szDir: String,
-      batchId: Long): Unit = {
-    graft.queries.Scratch.deleteTree(s"$gDir/batch_id=$batchId")
-    graft.queries.Scratch.deleteTree(s"$szDir/batch_id=$batchId")
-  }
-
-  // ---- the LINE-grain containment lifecycle (q131/q132's streaming
-  // side — the word-grain algebra above at q130's grain). Postings are
-  // APPEND-pure exactly as the word grain: per-doc surviving-LINE gids
-  // and sizes, one partition write per micro-batch, df collapsed at
-  // probe time. The extra frozen input is the CHROME census
-  // (`chrome` — per-source boilerplate line pairs, captured at index
-  // publish like StreamingLineContain's freeze): every delta batch is
-  // stripped against the PUBLISH-time census, so chrome that emerges
-  // only within the delta stream indexes un-stripped until the next
-  // re-freeze — the same horizon StreamingBoiler documents. Same
-  // at-least-once algebra note as the word grain: a document promoted
-  // under TWO batch ids doubles its line postings, so the GATED
-  // variant is the correctness requirement for at-least-once sources.
-
-  /** Promote one micro-batch of `(doc_id, source, text)` pages into the
-    * line-containment state rooted at `gDir`/`szDir`, stripped against
-    * the FROZEN `chrome` pairs. Also the bootstrap entry point for the
-    * frozen corpus (negative batch id). */
-  def promoteLineContainBatch(batch: DataFrame, batchId: Long,
-      chrome: DataFrame, gDir: String, szDir: String): Unit = {
-    val (p, release) = graft.queries.TextAnalysis
-      .buildLineContainIndexPManaged(batch, chrome, batchId, "splc")
-    try {
-      // independent writes off the one stored scan — overlapped (see
-      // promoteLexBatch)
-      Dedup.inParallel(
-        writePart(p.g, gDir, batchId),
-        writePart(p.sizes, szDir, batchId))
-      ()
-    } finally release()
-  }
-
-  /** The streaming line-containment promote behind the exactly-once
-    * document gate (REQUIRED for at-least-once sources; keyed state on
-    * RocksDB in the 100 TB configuration, as with
-    * [[promoteLexGated]]). */
-  def promoteLineContainGated(deltaDocs: DataFrame, chrome: DataFrame,
-      gDir: String, szDir: String): StreamingQuery =
-    deltaDocs.dropDuplicates("doc_id")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        promoteLineContainBatch(df, id, chrome, gDir, szDir)
-      }
-      .start()
-
-  /** Probe the live line-containment state: batch q131's probe
-    * contract (rarest-line probes by the COLLAPSED df, candidate-
-    * bounded confirm) over whatever has been promoted so far, the
-    * probe side stripped against the SAME frozen chrome. */
+  /** Probe the live line-containment state
+    * (`TextAnalysis.lineContainPartials`, every batch stripped against
+    * the FROZEN publish-time `chrome`): batch q131's probe contract, the
+    * probe side stripped against the SAME chrome. Chrome that emerges
+    * only within the delta stream indexes un-stripped until a re-freeze
+    * — the horizon the re-freeze store below removes. */
   def probeLineContainLive(spark: SparkSession, chrome: DataFrame,
-      gDir: String, szDir: String, probeDocs: DataFrame): DataFrame = {
-    val idx = Dedup.collapseContain(liveContainIndex(spark, gDir, szDir))
-    val gp = graft.queries.TextAnalysis.lineGramIds(
-      graft.queries.TextAnalysis.pageDocs(probeDocs), chrome)
+      dirs: Partials.Dirs, probeDocs: DataFrame): DataFrame = {
+    val idx = Dedup.collapseContain(Partials.read(spark, dirs))
+    val gp = TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome)
     Dedup.probeContain(idx, gp,
       gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "spromlc")
       .withColumnRenamed("n_grams", "n_lines")
   }
 
-  /** DEMOTE one promoted line-containment micro-batch — the identical
-    * two-directory layout, so the word grain's drop applies. */
-  def demoteLineContainBatch(gDir: String, szDir: String,
-      batchId: Long): Unit =
-    demoteContainBatch(gDir, szDir, batchId)
-
-  // ---- the RE-FREEZE-capable line store (q133/q134's streaming side):
-  // the promote above is the frozen-chrome contract with its drift
-  // horizon; this store removes the horizon. Four partitioned relations
-  // — surv + strip postings (BOTH sides of the chrome split, with
-  // `source` on stored rows), census count + srcn partials — plus the
-  // published chrome pairs as a small epoch-overwritten relation. Every
-  // promote strips against the CURRENTLY PUBLISHED chrome and appends
-  // its own census partial; `refreezeLineLive` is the maintenance
-  // operation a production pipeline runs when the collapsed census has
-  // drifted: re-publish the chrome and move ONLY the flipped lines'
-  // postings between the two sides (`TextAnalysis.refreezeLineState` —
-  // broadcast flip sets, scan-stage, no text re-parse). The store
-  // rewrite is postings-linear (compact gid rows, ~the cost of one
-  // stored column), never corpus-linear; batch ids survive the move, so
+  // ---- the RE-FREEZE-capable line store (q133/q134's streaming side).
+  // Four partitioned relations — surv + strip postings (BOTH sides of
+  // the chrome split, with `source` on stored rows), census counts +
+  // srcn partials — plus the published chrome pairs as a small
+  // epoch-overwritten relation. Every promote strips against the
+  // CURRENTLY PUBLISHED chrome and appends its own census partial;
+  // `refreezeLineLive` is the maintenance operation a production
+  // pipeline runs when the collapsed census has drifted: re-publish the
+  // chrome and move ONLY the flipped lines' postings between the two
+  // sides (`TextAnalysis.refreezeLineState` — broadcast flip sets,
+  // scan-stage, no text re-parse). The store rewrite is
+  // postings-linear, never corpus-linear; batch ids survive the move, so
   // demote stays a partition drop on all four relations.
 
-  /** Directory bundle for the re-freeze-capable line store. */
+  /** Directory bundle for the re-freeze-capable line store: the four
+    * partitioned relations plus the published chrome. */
   final case class LineRefreezeDirs(survDir: String, stripDir: String,
-      cntDir: String, srcnDir: String, chromeDir: String)
-
-  private val PostingsDdl =
-    "source STRING, doc_id BIGINT, gid BIGINT, batch_id BIGINT"
-  private val CntDdl = "source STRING, lmd5 STRING, cnt BIGINT, batch_id BIGINT"
-  private val SrcnDdl = "source STRING, n_docs BIGINT, batch_id BIGINT"
-
-  /** Read a batch_id-partitioned store, tolerating a store whose
-    * partitions are ALL empty (Spark writes no part files for 0-row
-    * partitions, so schema inference fails — the strip store is
-    * legitimately empty before the bootstrap freeze). */
-  private def readPartsOr(spark: SparkSession, dir: String,
-      ddl: String): DataFrame = {
-    val d = new java.io.File(dir)
-    val hasFiles = d.isDirectory && Option(d.listFiles).exists(
-      _.exists(sub => sub.isDirectory && Option(sub.listFiles).exists(
-        _.exists(_.getName.endsWith(".parquet")))))
-    if (hasFiles) readParts(spark, dir)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      cntDir: String, srcnDir: String, chromeDir: String) {
+    def parts: Partials.Dirs = Seq("surv" -> survDir, "strip" -> stripDir,
+      "counts" -> cntDir, "srcn" -> srcnDir)
   }
 
-  private def readParts(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+  /** Any of the four relations can still be empty — the strip store
+    * before the bootstrap freeze. */
+  private val RefreezeEmptyAs = {
+    val postings = "source STRING, doc_id BIGINT, gid BIGINT, batch_id BIGINT"
+    Map("surv" -> postings, "strip" -> postings,
+      "counts" -> "source STRING, lmd5 STRING, cnt BIGINT, batch_id BIGINT",
+      "srcn" -> "source STRING, n_docs BIGINT, batch_id BIGINT")
+  }
+
+  private def readRefreeze(spark: SparkSession, dirs: LineRefreezeDirs)
+      : Partials = Partials.read(spark, dirs.parts, RefreezeEmptyAs)
+
+  /** The re-freeze store's per-batch build: pages stripped against the
+    * chrome published when the micro-batch runs (empty before the
+    * bootstrap freeze → everything lands in surv, exactly the
+    * pre-publish state the bootstrap re-freeze then splits). */
+  def refreezePartials(dirs: LineRefreezeDirs)(batch: DataFrame,
+      batchId: Long): Partials =
+    TextAnalysis.lineRefreezePartials(batch,
+      publishedChrome(batch.sparkSession, dirs), batchId)
 
   /** The currently published chrome pairs `(source, lmd5)` — EMPTY
     * before the first freeze, which makes the bootstrap publish a plain
@@ -442,58 +187,16 @@ object StreamingPromote {
   private def stageNext(df: DataFrame, dir: String,
       partCol: Option[String]): Unit = {
     val next = dir + ".next"
-    graft.queries.Scratch.deleteTree(next)
+    Scratch.deleteTree(next)
     val w = df.write.mode("overwrite")
     partCol.fold(w)(w.partitionBy(_)).parquet(next)
   }
 
   private def commitNext(dir: String): Unit = {
-    graft.queries.Scratch.deleteTree(dir)
+    Scratch.deleteTree(dir)
     java.nio.file.Files.move(java.nio.file.Paths.get(dir + ".next"),
       java.nio.file.Paths.get(dir))
   }
-
-  /** Promote one micro-batch under the CURRENTLY PUBLISHED chrome
-    * (empty before the bootstrap freeze → everything lands in surv,
-    * exactly the pre-publish state the bootstrap re-freeze then
-    * splits): ONE digests scan feeds the census partials AND both
-    * postings sides. */
-  def promoteLineRefreezeBatch(batch: DataFrame, batchId: Long,
-      dirs: LineRefreezeDirs): Unit = {
-    val ta = graft.queries.TextAnalysis
-    val spark = batch.sparkSession
-    val (liRaw, release) = graft.queries.Scratch.materializeManaged(
-      ta.lineDigests(ta.pageDocs(batch)), s"sprf_li$batchId")
-    try {
-      val li = liRaw.toDF("source", "doc_id", "lmd5")
-      val chrome = broadcast(publishedChrome(spark, dirs))
-      val c = ta.lineCensusP(li, batchId)
-      val st = ta.buildLineStateP(li, chrome, batchId)
-      // all four writes read only the stored li scan — independent
-      // jobs, overlapped (guide §2.6; one micro-batch previously paid
-      // four serial write latencies)
-      Dedup.inParallel(
-        Dedup.inParallel(
-          writePart(c.counts, dirs.cntDir, batchId),
-          writePart(c.srcn, dirs.srcnDir, batchId)),
-        Dedup.inParallel(
-          writePart(st.surv, dirs.survDir, batchId),
-          writePart(st.strip, dirs.stripDir, batchId)))
-      ()
-    } finally release()
-  }
-
-  /** The gated streaming promote over the re-freeze-capable store
-    * (exactly-once document gate, RocksDB-keyed at 100 TB). */
-  def promoteLineRefreezeGated(deltaDocs: DataFrame,
-      dirs: LineRefreezeDirs): StreamingQuery =
-    deltaDocs.dropDuplicates("doc_id")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        promoteLineRefreezeBatch(df, id, dirs)
-      }
-      .start()
 
   /** The maintenance RE-FREEZE: collapse the census partials to C_new,
     * move the flipped lines' postings between the stored sides, swap
@@ -504,33 +207,27 @@ object StreamingPromote {
     * the bootstrap census's chrome. */
   def refreezeLineLive(spark: SparkSession, dirs: LineRefreezeDirs)
       : Unit = {
-    val ta = graft.queries.TextAnalysis
+    val ta = TextAnalysis
     // chrome relations are tiny by construction (per-source frequent
     // lines) — pin them DRIVER-SIDE so the flip sets stay stable
     // across the staged writes and the chrome swap (and the bootstrap's
     // EMPTY old chrome never round-trips through a scratch write)
     def pinned(df: DataFrame): DataFrame = spark.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
+    val live = readRefreeze(spark, dirs)
     val oldC = pinned(publishedChrome(spark, dirs))
-    val newC = pinned(ta.collapsedCensus(ta.BoilerIndexP(
-      readPartsOr(spark, dirs.cntDir, CntDdl),
-      readPartsOr(spark, dirs.srcnDir, SrcnDdl)))
+    val newC = pinned(ta.collapsedCensus(live)
       .select(col("source"), col("lmd5")))
-    val refrozen = ta.refreezeLineState(
-      ta.LineContainStateP(
-        readPartsOr(spark, dirs.survDir, PostingsDdl),
-        readPartsOr(spark, dirs.stripDir, PostingsDdl)),
-      oldC, newC)
+    val refrozen = ta.refreezeLineState(live, oldC, newC)
     // BOTH sides read BOTH old stores (the cross moves) — stage both
     // .next dirs fully before the first swap, or the strip rewrite
-    // would read the already-swapped surv and lose the quarantine.
-    // The three staged writes only READ old state — independent jobs,
+    // would read the already-swapped surv and lose the quarantine. The
+    // three staged writes only READ old state — independent jobs,
     // overlapped (guide §2.6)
-    Dedup.inParallel(
-      Dedup.inParallel(
-        stageNext(refrozen.surv, dirs.survDir, Some("batch_id")),
-        stageNext(refrozen.strip, dirs.stripDir, Some("batch_id"))),
-      stageNext(newC, dirs.chromeDir, None))
+    Partials.overlapped(Seq(
+      () => stageNext(refrozen("surv"), dirs.survDir, Some("batch_id")),
+      () => stageNext(refrozen("strip"), dirs.stripDir, Some("batch_id")),
+      () => stageNext(newC, dirs.chromeDir, None)))
     commitNext(dirs.survDir)
     commitNext(dirs.stripDir)
     commitNext(dirs.chromeDir)
@@ -541,24 +238,12 @@ object StreamingPromote {
     * re-freeze changes per-doc counts, so none are stored). */
   def probeLineRefreezeLive(spark: SparkSession, dirs: LineRefreezeDirs,
       probeDocs: DataFrame): DataFrame = {
-    val ta = graft.queries.TextAnalysis
-    val idx = ta.collapseLineState(ta.LineContainStateP(
-      readPartsOr(spark, dirs.survDir, PostingsDdl),
-      readPartsOr(spark, dirs.stripDir, PostingsDdl)))
+    val ta = TextAnalysis
+    val idx = ta.collapseLineState(readRefreeze(spark, dirs))
     val chrome = broadcast(publishedChrome(spark, dirs))
     val gp = ta.lineGramIds(ta.pageDocs(probeDocs), chrome)
     Dedup.probeContain(idx, gp,
       gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "sprfp")
       .withColumnRenamed("n_grams", "n_lines")
   }
-
-  /** DEMOTE one promoted batch from all four relations — postings AND
-    * census partials, so the next re-freeze's census no longer counts
-    * the recalled documents. Batch ids survive re-freezes (moved rows
-    * keep their origin id), so this stays a partition drop. */
-  def demoteLineRefreezeBatch(dirs: LineRefreezeDirs,
-      batchId: Long): Unit =
-    Seq(dirs.survDir, dirs.stripDir, dirs.cntDir, dirs.srcnDir)
-      .foreach(d =>
-        graft.queries.Scratch.deleteTree(s"$d/batch_id=$batchId"))
 }

@@ -155,9 +155,9 @@ class BoilerplateSpec extends SparkSpec {
 
   test("q115 algebra: merged partial censuses equal the census rebuilt over the union — and the merge is observable") {
     val rows = lifecycleRows
-    val b0 = TextAnalysis.buildBoilerIndexP(docsDf(rows.filter(_._1 < 6)), 0L)
-    val merged = TextAnalysis.mergeBoilerIndexP(
-      b0, docsDf(rows.filter(_._1 >= 6)), 1L)
+    val b0 = TextAnalysis.censusPartials(docsDf(rows.filter(_._1 < 6)), 0L)
+    val merged = b0.union(
+      TextAnalysis.censusPartials(docsDf(rows.filter(_._1 >= 6)), 1L))
     val rebuilt = TextAnalysis.boilerStrip(docsDf(rows))
     // stripping ALL docs against the merged-collapsed census must
     // equal the one-shot q114 rewrite over the union
@@ -180,22 +180,16 @@ class BoilerplateSpec extends SparkSpec {
   test("q116 algebra: retract equals rebuilt-without, is observable, and prunes partitions on the stored index") {
     val rows = lifecycleRows
     val sp = spark
-    val b01 = TextAnalysis.mergeBoilerIndexP(
-      TextAnalysis.buildBoilerIndexP(docsDf(rows.filter(_._1 < 4)), 0L),
-      docsDf(rows.filter(r => r._1 >= 4 && r._1 < 8)), 1L)
-    val p2 = TextAnalysis.mergeBoilerIndexP(
-      b01, docsDf(rows.filter(_._1 >= 8)), 2L)
+    val b01 = TextAnalysis.censusPartials(docsDf(rows.filter(_._1 < 4)), 0L)
+      .union(TextAnalysis.censusPartials(
+        docsDf(rows.filter(r => r._1 >= 4 && r._1 < 8)), 1L))
+    val p2 = b01.union(
+      TextAnalysis.censusPartials(docsDf(rows.filter(_._1 >= 8)), 2L))
     val key = "graft.scratch.dir"
     sp.conf.set(key, tmpDir("boiler-part"))
-    val stored =
-      try TextAnalysis.BoilerIndexP(
-        graft.queries.Scratch.materializePartitioned(
-          p2.counts, "t116_counts", "batch_id"),
-        graft.queries.Scratch.materializePartitioned(
-          p2.srcn, "t116_srcn", "batch_id"))
-      finally sp.conf.unset(key)
-    val demoted = TextAnalysis.retractBoilerIndexP(stored, 2L)
-    val plan = demoted.counts.queryExecution.executedPlan.toString
+    val stored = try p2.store("t116") finally sp.conf.unset(key)
+    val demoted = stored.retract(2L)
+    val plan = demoted("counts").queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("batch_id"),
       s"retraction did not reach the scan as partition pruning:\n$plan")
     val probe = docsDf(rows)

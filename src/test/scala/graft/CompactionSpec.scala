@@ -95,6 +95,40 @@ class CompactionSpec extends SparkSpec {
     } finally spark.conf.unset("graft.jdbc.compactEvery")
   }
 
+  test("jdbc backend: a compaction commit that rolls back leaves its key index to be created again") {
+    val sp = spark
+    import sp.implicits._
+    spark.conf.set("graft.jdbc.compactEvery", "2")
+    try {
+      val root = tmpDir("jdbc-keyix")
+      val store = new JdbcStore(root, spark)
+      def rows(slot: Long) = (Seq((slot, slot * 10)).toDF("slot", "k"), "slot")
+      val compactors = Map("target_t" -> BoundCompactor(rows(0L)._1.schema,
+        identity, SqlCompaction("against_t", Seq("k"), "slot", 0L,
+          dropMatched = true)))
+      assert(store.commit(1L,
+        Map("target_t" -> rows(1L), "against_t" -> rows(1L)), Map.empty))
+      // batch 2 compacts: the key index is created inside the commit
+      // transaction, then the checkpoint insert overflows VARCHAR(256)
+      // and the whole transaction — index included — rolls back
+      intercept[java.sql.SQLException] {
+        store.commit(2L, Map("target_t" -> rows(2L)),
+          Map("r" -> Seq(Point("h" * 300, 2L))), compactors)
+      }
+      assert(store.commit(2L, Map("target_t" -> rows(2L)),
+        Map("r" -> Seq(Point("h2", 2L))), compactors))
+      val c = java.sql.DriverManager.getConnection(s"jdbc:derby:$root/derby")
+      try {
+        val rs = c.getMetaData.getIndexInfo(null, null, "against_t", false, false)
+        val names = Iterator.continually(rs).takeWhile(_.next())
+          .map(_.getString("INDEX_NAME")).toSet
+        rs.close()
+        assert(names.contains("ix_against_t_cmpkey"),
+          s"compaction key index missing after the retried commit: $names")
+      } finally c.close()
+    } finally spark.conf.unset("graft.jdbc.compactEvery")
+  }
+
   test("jdbc backend: null values commit and read back on the driver path") {
     // Derby rejects setNull(Types.NULL) — the null path must map real
     // JDBC type codes (a reducer output with any null column otherwise

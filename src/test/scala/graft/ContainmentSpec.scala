@@ -142,16 +142,14 @@ class ContainmentSpec extends SparkSpec {
   }
 
   test("partial build materializes its gram scan ONCE — both legs read the stored scan, never re-expanding the corpus") {
-    // r13 attribution: the lazy gramIds plan used to be consumed by
-    // BOTH the postings and the sizes leg, so every store of a partial
-    // ran the batch's full gram expansion twice (q129's three-batch
-    // build re-expanded the corpus a second time for the sizes
-    // materialize alone). Structural gate, host-independent: the
-    // partial's legs must scan the checkpointed relation (ExistingRDD),
-    // with the gram HOF chain (regexp + md5) absent from their plans.
-    val p = Dedup.buildContainIndexP(
+    // a lazy gramIds plan consumed by BOTH the postings and the sizes
+    // leg would run the batch's full gram expansion twice per store or
+    // write. Structural gate, host-independent: the partial's legs must
+    // scan the checkpointed relation (ExistingRDD), with the gram HOF
+    // chain (regexp + md5) absent from their plans.
+    val p = Dedup.containPartials(
       docsDf(Seq(1L -> words("a", 40), 2L -> words("b", 40))), 0L)
-    Seq("g" -> p.g, "sizes" -> p.sizes).foreach { case (leg, df) =>
+    p.rels.foreach { case (leg, df) =>
       val s = df.queryExecution.executedPlan.toString
       assert(s.contains("ExistingRDD"),
         s"$leg leg must read the stored gram scan:\n$s")
@@ -165,10 +163,10 @@ class ContainmentSpec extends SparkSpec {
     import sp.implicits._
     val frozen = Seq(1L -> words("a", 40))
     val deltaParent = Seq(2L -> words("b", 40))
-    val b0 = Dedup.buildContainIndexP(docsDf(frozen), 0L)
-    val merged = Dedup.mergeContainIndexP(b0, docsDf(deltaParent), 1L)
+    val b0 = Dedup.containPartials(docsDf(frozen), 0L)
+    val merged = b0.union(Dedup.containPartials(docsDf(deltaParent), 1L))
     val probe = docsDf(Seq(102L -> words("b", 12)))
-    def rows(p: Dedup.ContainIndexP) = {
+    def rows(p: graft.queries.Partials) = {
       val gp = Dedup.gramIds(probe)
       Dedup.probeContain(Dedup.collapseContain(p), gp,
         gp.groupBy(org.apache.spark.sql.functions.col("doc_id"))
@@ -184,28 +182,21 @@ class ContainmentSpec extends SparkSpec {
   test("q129 algebra: retract equals rebuilt-without, is observable, and prunes partitions on the stored postings") {
     val sp = spark
     import sp.implicits._
-    val b01 = Dedup.mergeContainIndexP(
-      Dedup.buildContainIndexP(docsDf(Seq(1L -> words("a", 40))), 0L),
-      docsDf(Seq(2L -> words("b", 40))), 1L)
-    val p2 = Dedup.mergeContainIndexP(
-      b01, docsDf(Seq(3L -> words("c", 40))), 2L)
+    val b01 = Dedup.containPartials(docsDf(Seq(1L -> words("a", 40))), 0L)
+      .union(Dedup.containPartials(docsDf(Seq(2L -> words("b", 40))), 1L))
+    val p2 = b01.union(
+      Dedup.containPartials(docsDf(Seq(3L -> words("c", 40))), 2L))
     val key = "graft.scratch.dir"
     sp.conf.set(key, tmpDir("contain-part"))
-    val stored =
-      try Dedup.ContainIndexP(
-        graft.queries.Scratch.materializePartitioned(
-          p2.g, "t129_g", "batch_id"),
-        graft.queries.Scratch.materializePartitioned(
-          p2.sizes, "t129_sz", "batch_id"))
-      finally sp.conf.unset(key)
-    val demoted = Dedup.retractContainIndexP(stored, 2L)
-    val plan = demoted.g.queryExecution.executedPlan.toString
+    val stored = try p2.store("t129") finally sp.conf.unset(key)
+    val demoted = stored.retract(2L)
+    val plan = demoted("g").queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("batch_id"),
       s"retraction did not reach the scan as partition pruning:\n$plan")
     // probe with snippets of ALL three parents
     val probe = docsDf(Seq(101L -> words("a", 12), 102L -> words("b", 12),
       103L -> words("c", 12)))
-    def rows(p: Dedup.ContainIndexP, tag: String) = {
+    def rows(p: graft.queries.Partials, tag: String) = {
       val gp = Dedup.gramIds(probe)
       Dedup.probeContain(Dedup.collapseContain(p), gp,
         gp.groupBy(org.apache.spark.sql.functions.col("doc_id"))

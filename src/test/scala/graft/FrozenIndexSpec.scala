@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.queries.{Dedup, Similarity}
+import graft.queries.{Dedup, Partials, Similarity}
 
-/** Frozen-index MERGE lifecycle (q100/q101's API): promoting a delta
-  * batch into a stored dedup index must be indistinguishable from
+/** Frozen-index MERGE lifecycle (q100/q101's [[Partials]] spelling):
+  * promoting a delta batch into a stored dedup index must be
+  * indistinguishable from
   * rebuilding the index from scratch over corpus∪delta — for both the
   * lexical (norm-hash + MinHash-band) and semantic (inverted-list)
   * signals — and must consume only STORED index state plus delta text
@@ -52,6 +53,16 @@ class FrozenIndexSpec extends SparkSpec {
     spark.read.parquet(dir)
   }
 
+  /** Promote each delta in order (batch ids 1, 2, …) onto `idx`. */
+  private def lexMerge(idx: Partials, deltas: DataFrame*): Partials =
+    deltas.zipWithIndex.foldLeft(idx) { case (p, (d, i)) =>
+      p.union(Dedup.lexPartials(d, i + 1L)) }
+
+  private def lexFrozen: Partials = Dedup.lexPartials(frozenDocs, 0L)
+
+  private def lexProbeP(idx: Partials, probe: DataFrame) =
+    lexRows(Dedup.probeLex(Dedup.collapseLex(idx), probe))
+
   test("lexical: probe against frozen index — delta content is is_new") {
     val idx = Dedup.buildLexIndex(frozenDocs)
     val got = lexRows(Dedup.probeLex(idx, probeDocs))
@@ -62,9 +73,9 @@ class FrozenIndexSpec extends SparkSpec {
   }
 
   test("lexical: merged index ≡ index rebuilt from scratch over corpus∪delta") {
-    val merged = Dedup.mergeLexIndex(Dedup.buildLexIndex(frozenDocs), deltaDocs)
+    val merged = lexMerge(lexFrozen, deltaDocs)
     val rebuilt = Dedup.buildLexIndex(frozenDocs.union(deltaDocs))
-    val got = lexRows(Dedup.probeLex(merged, probeDocs))
+    val got = lexProbeP(merged, probeDocs)
     assert(got == lexRows(Dedup.probeLex(rebuilt, probeDocs)))
     // and the merge changed exactly the delta-twin verdict
     assert(got == Seq(
@@ -74,14 +85,14 @@ class FrozenIndexSpec extends SparkSpec {
   }
 
   test("lexical: merge consumes STORED index state (parquet roundtrip), not frozen text") {
-    val f0 = Dedup.buildLexIndex(frozenDocs)
-    val stored = Dedup.LexIndex(
-      roundtrip(f0.exact, "lex-exact"), roundtrip(f0.bands, "lex-bands"))
+    val f0 = lexFrozen
+    val stored = Partials(Seq(
+      "exact" -> roundtrip(f0("exact"), "lex-exact"),
+      "bands" -> roundtrip(f0("bands"), "lex-bands")))
     // before merge: the stored copy answers identically to the live plan
-    assert(lexRows(Dedup.probeLex(stored, probeDocs))
-      == lexRows(Dedup.probeLex(f0, probeDocs)))
+    assert(lexProbeP(stored, probeDocs) == lexProbeP(f0, probeDocs))
     // after merge: stored+delta ≡ rebuilt over corpus∪delta
-    assert(lexRows(Dedup.probeLex(Dedup.mergeLexIndex(stored, deltaDocs), probeDocs))
+    assert(lexProbeP(lexMerge(stored, deltaDocs), probeDocs)
       == lexRows(Dedup.probeLex(
         Dedup.buildLexIndex(frozenDocs.union(deltaDocs)), probeDocs)))
   }
@@ -89,33 +100,29 @@ class FrozenIndexSpec extends SparkSpec {
   test("lexical: two sequential daily merges ≡ one merge of the union ≡ rebuild") {
     val day1 = Seq((20L, loremA)).toDF("doc_id", "text")
     val day2 = Seq((21L, deltaText)).toDF("doc_id", "text")
-    val seq2 = Dedup.mergeLexIndex(
-      Dedup.mergeLexIndex(Dedup.buildLexIndex(frozenDocs), day1), day2)
-    val one = Dedup.mergeLexIndex(Dedup.buildLexIndex(frozenDocs),
-      day1.union(day2))
+    val seq2 = lexMerge(lexFrozen, day1, day2)
+    val one = lexMerge(lexFrozen, day1.union(day2))
     val rebuilt = Dedup.buildLexIndex(frozenDocs.union(day1).union(day2))
-    val a = lexRows(Dedup.probeLex(seq2, probeDocs))
-    assert(a == lexRows(Dedup.probeLex(one, probeDocs)))
+    val a = lexProbeP(seq2, probeDocs)
+    assert(a == lexProbeP(one, probeDocs))
     assert(a == lexRows(Dedup.probeLex(rebuilt, probeDocs)))
   }
 
   test("lexical: re-merging the SAME delta is probe-idempotent (at-least-once promote)") {
     // a retried promote job must not change verdicts: the exact table
-    // is a min-merge (idempotent by algebra) and the band table's
+    // collapses by min (idempotent by algebra) and the band table's
     // duplicate rows cannot move a min(idx_doc) — the probe contract
     // absorbs at-least-once delivery without a dedup pass
-    val once = Dedup.mergeLexIndex(Dedup.buildLexIndex(frozenDocs), deltaDocs)
-    val twice = Dedup.mergeLexIndex(once, deltaDocs)
-    assert(lexRows(Dedup.probeLex(twice, probeDocs))
-      == lexRows(Dedup.probeLex(once, probeDocs)))
+    val once = lexMerge(lexFrozen, deltaDocs)
+    val twice = once.union(Dedup.lexPartials(deltaDocs, 1L))
+    assert(lexProbeP(twice, probeDocs) == lexProbeP(once, probeDocs))
   }
 
   test("lexical: exact-min survives a merge that brings a HIGHER-id duplicate") {
     // frozen owns loremA at id 10; delta re-adds it at 20 — the merged
     // min-state must keep 10 as the canonical owner
-    val merged = Dedup.mergeLexIndex(Dedup.buildLexIndex(frozenDocs), deltaDocs)
-    val got = lexRows(Dedup.probeLex(merged,
-      Seq((40L, loremA)).toDF("doc_id", "text")))
+    val merged = lexMerge(lexFrozen, deltaDocs)
+    val got = lexProbeP(merged, Seq((40L, loremA)).toDF("doc_id", "text"))
     assert(got == Seq((40L, 10L, 10L, false)))
   }
 
@@ -155,8 +162,8 @@ class FrozenIndexSpec extends SparkSpec {
     val before = semRows(Similarity.probeSem(f0, probeE))
     assert(before.map(t => (t._1, t._3)) == Seq((1L, 200L), (2L, -1L)),
       before.toString)
-    val merged = Similarity.mergeSemIndex(f0, deltaE)
-    val after = semRows(Similarity.probeSem(merged, probeE))
+    val merged = semMerge(semFrozen, deltaE)
+    val after = semProbeP(merged, probeE)
     // dup_of = LOWEST index id ≥ SemTau: the merged-in 150 wins
     assert(after.map(t => (t._1, t._3)) == Seq((1L, 150L), (2L, -1L)),
       after.toString)
@@ -165,20 +172,19 @@ class FrozenIndexSpec extends SparkSpec {
   test("semantic: re-merging the SAME delta is probe-idempotent (at-least-once promote)") {
     // duplicate inverted-list entries cannot move min-id dup verdicts
     // or max_cos — a retried semantic promote is absorbed the same way
-    val f0 = Similarity.buildSemIndex(frozenE, cents)
-    val once = Similarity.mergeSemIndex(f0, deltaE)
-    val twice = Similarity.mergeSemIndex(once, deltaE)
-    assert(semRows(Similarity.probeSem(twice, probeE))
-      == semRows(Similarity.probeSem(once, probeE)))
+    val once = semMerge(semFrozen, deltaE)
+    val twice = once.union(Similarity.semPartials(deltaE, cents, 1L))
+    assert(semProbeP(twice, probeE) == semProbeP(once, probeE))
   }
 
   test("semantic: merged index ≡ rebuilt from scratch over corpus∪delta (incl. stored roundtrip)") {
-    val f0 = Similarity.buildSemIndex(frozenE, cents)
-    val stored = Similarity.SemIndex(
-      roundtrip(f0.cent, "sem-cent"), roundtrip(f0.lists, "sem-lists"))
-    val merged = Similarity.mergeSemIndex(stored, deltaE)
+    val cent = roundtrip(cents, "sem-cent")
+    val stored = Partials(Seq(
+      "lists" -> roundtrip(semFrozen("lists"), "sem-lists")))
+    val merged = stored.union(Similarity.semPartials(deltaE, cent, 1L))
     val rebuilt = Similarity.buildSemIndex(frozenE.union(deltaE), cents)
-    assert(semRows(Similarity.probeSem(merged, probeE))
+    assert(semRows(Similarity.probeSem(
+        Similarity.collapseSem(cent, merged), probeE))
       == semRows(Similarity.probeSem(rebuilt, probeE)))
   }
 
@@ -190,19 +196,14 @@ class FrozenIndexSpec extends SparkSpec {
   private def batch2Docs =
     Seq((5L, loremA), (22L, loremC)).toDF("doc_id", "text")
 
-  private def lexProbeP(idx: Dedup.LexIndexP, probe: DataFrame) =
-    lexRows(Dedup.probeLex(Dedup.collapseLex(idx), probe))
-
   test("lexical: retract ≡ rebuild-without — including a shadowed min that must resurface") {
-    val p1 = Dedup.mergeLexIndexP(
-      Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L)
-    val p2 = Dedup.mergeLexIndexP(p1, batch2Docs, 2L)
+    val p2 = lexMerge(lexFrozen, deltaDocs, batch2Docs)
     // while batch 2 is in: 5 owns loremA, loremC is a known dup
     assert(lexProbeP(p2, probeDocs) == Seq(
       (30L, 11L, 11L, false),
       (31L, 21L, 21L, false),
       (32L, 22L, 22L, false)))
-    val demoted = Dedup.retractLexIndexP(p2, 2L)
+    val demoted = p2.retract(2L)
     // after: ownership of loremA falls BACK to frozen 10 (the partial
     // min the collapsed representation would have lost), loremC is
     // novel again — and the whole verdict set equals an index REBUILT
@@ -220,18 +221,14 @@ class FrozenIndexSpec extends SparkSpec {
   }
 
   test("lexical: demote → re-promote round-trips to the merged verdicts") {
-    val p2 = Dedup.mergeLexIndexP(
-      Dedup.mergeLexIndexP(Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L),
-      batch2Docs, 2L)
-    val back = Dedup.mergeLexIndexP(
-      Dedup.retractLexIndexP(p2, 2L), batch2Docs, 3L)
+    val p2 = lexMerge(lexFrozen, deltaDocs, batch2Docs)
+    val back = p2.retract(2L).union(Dedup.lexPartials(batch2Docs, 3L))
     assert(lexProbeP(back, probeDocs) == lexProbeP(p2, probeDocs))
   }
 
   test("lexical: retracting a never-promoted batch id is a no-op") {
-    val p1 = Dedup.mergeLexIndexP(
-      Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L)
-    assert(lexProbeP(Dedup.retractLexIndexP(p1, 99L), probeDocs)
+    val p1 = lexMerge(lexFrozen, deltaDocs)
+    assert(lexProbeP(p1.retract(99L), probeDocs)
       == lexProbeP(p1, probeDocs))
   }
 
@@ -241,20 +238,12 @@ class FrozenIndexSpec extends SparkSpec {
     // must reach the scan as a PARTITION filter — the retracted
     // batch's files are never opened (the 100 TB retract-cost claim,
     // machine-checked), and verdicts still equal rebuild-without
-    val p2 = Dedup.mergeLexIndexP(
-      Dedup.mergeLexIndexP(Dedup.buildLexIndexP(frozenDocs, 0L), deltaDocs, 1L),
-      batch2Docs, 2L)
+    val p2 = lexMerge(lexFrozen, deltaDocs, batch2Docs)
     val key = "graft.scratch.dir"
     spark.conf.set(key, tmpDir("fidx-part"))
-    val stored =
-      try Dedup.LexIndexP(
-        graft.queries.Scratch.materializePartitioned(
-          p2.exact, "t102_exact", "batch_id"),
-        graft.queries.Scratch.materializePartitioned(
-          p2.bands, "t102_bands", "batch_id"))
-      finally spark.conf.unset(key)
-    val demoted = Dedup.retractLexIndexP(stored, 2L)
-    val plan = demoted.exact.queryExecution.executedPlan.toString
+    val stored = try p2.store("t102") finally spark.conf.unset(key)
+    val demoted = stored.retract(2L)
+    val plan = demoted("exact").queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("batch_id"),
       s"retraction filter did not reach the scan as partition pruning:\n$plan")
     assert(lexProbeP(demoted, probeDocs) == lexRows(Dedup.probeLex(
@@ -265,17 +254,21 @@ class FrozenIndexSpec extends SparkSpec {
   // promoted, plus probes must fall back to 150 after retraction
   private def batch2E = embDF(140L -> v(0.87, 0.13, 0, 0))
 
-  private def semProbeP(idx: Similarity.SemIndexP, probe: DataFrame) =
-    semRows(Similarity.probeSem(Similarity.collapseSem(idx), probe))
+  private def semFrozen: Partials = Similarity.semPartials(frozenE, cents, 0L)
+
+  /** Promote each delta in order (batch ids 1, 2, …) onto `idx`. */
+  private def semMerge(idx: Partials, deltas: DataFrame*): Partials =
+    deltas.zipWithIndex.foldLeft(idx) { case (p, (d, i)) =>
+      p.union(Similarity.semPartials(d, cents, i + 1L)) }
+
+  private def semProbeP(idx: Partials, probe: DataFrame) =
+    semRows(Similarity.probeSem(Similarity.collapseSem(cents, idx), probe))
 
   test("semantic: retract ≡ rebuild-without — dup_of falls back to the surviving twin") {
-    val p2 = Similarity.mergeSemIndexP(
-      Similarity.mergeSemIndexP(
-        Similarity.buildSemIndexP(frozenE, cents, 0L), deltaE, 1L),
-      batch2E, 2L)
+    val p2 = semMerge(semFrozen, deltaE, batch2E)
     assert(semProbeP(p2, probeE).map(t => (t._1, t._3))
       == Seq((1L, 140L), (2L, -1L)))
-    val demoted = Similarity.retractSemIndexP(p2, 2L)
+    val demoted = p2.retract(2L)
     val rebuilt = Similarity.buildSemIndex(frozenE.union(deltaE), cents)
     val got = semProbeP(demoted, probeE)
     assert(got == semRows(Similarity.probeSem(rebuilt, probeE)))
@@ -283,12 +276,8 @@ class FrozenIndexSpec extends SparkSpec {
   }
 
   test("semantic: demote → re-promote round-trips to the merged verdicts") {
-    val p2 = Similarity.mergeSemIndexP(
-      Similarity.mergeSemIndexP(
-        Similarity.buildSemIndexP(frozenE, cents, 0L), deltaE, 1L),
-      batch2E, 2L)
-    val back = Similarity.mergeSemIndexP(
-      Similarity.retractSemIndexP(p2, 2L), batch2E, 3L)
+    val p2 = semMerge(semFrozen, deltaE, batch2E)
+    val back = p2.retract(2L).union(Similarity.semPartials(batch2E, cents, 3L))
     assert(semProbeP(back, probeE) == semProbeP(p2, probeE))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.queries.{Dedup, Scratch, TextAnalysis}
+import graft.queries.{Dedup, Partials, Scratch, TextAnalysis}
 
 /** Behavioral gates for the incremental chrome re-freeze (q133/q134) —
   * the contracts the value-hash oracles cannot stage on the generated
@@ -28,13 +28,13 @@ class LineRefreezeSpec extends SparkSpec {
     * entries' collapsedCensus spelling over one batch. */
   private def chromeOf(docs: DataFrame): DataFrame = {
     val li = TextAnalysis.lineDigests(TextAnalysis.pageDocs(docs))
-    TextAnalysis.collapsedCensus(TextAnalysis.lineCensusP(li, 0L))
+    TextAnalysis.collapsedCensus(TextAnalysis.lineCensusPartials(li, 0L))
       .select(col("source"), col("lmd5"))
   }
 
   private def stateOf(docs: DataFrame, chrome: DataFrame, batchId: Long)
-      : TextAnalysis.LineContainStateP =
-    TextAnalysis.buildLineStateP(
+      : Partials =
+    TextAnalysis.lineStatePartials(
       TextAnalysis.lineDigests(TextAnalysis.pageDocs(docs)), chrome,
       batchId)
 
@@ -58,19 +58,14 @@ class LineRefreezeSpec extends SparkSpec {
   private def fixtureDelta = deltaIds.map(i =>
     (i, "s0", words("NEW", 8) + " " + words(s"u$i", 8)))
 
-  private def fixtureStores(): (TextAnalysis.LineContainStateP,
-      TextAnalysis.LineContainStateP, DataFrame, DataFrame) = {
+  private def fixtureStores(): (Partials, Partials, DataFrame, DataFrame) = {
     val boot = docsDf(fixtureBoot)
     val delta = docsDf(fixtureDelta)
     val all = docsDf(fixtureBoot ++ fixtureDelta)
     val cOld = chromeOf(boot)
     val cNew = chromeOf(all)
-    val stored = TextAnalysis.LineContainStateP(
-      stateOf(boot, cOld, 0L).surv.union(stateOf(delta, cOld, 1L).surv),
-      stateOf(boot, cOld, 0L).strip.union(stateOf(delta, cOld, 1L).strip))
-    val rebuilt = TextAnalysis.LineContainStateP(
-      stateOf(boot, cNew, 0L).surv.union(stateOf(delta, cNew, 1L).surv),
-      stateOf(boot, cNew, 0L).strip.union(stateOf(delta, cNew, 1L).strip))
+    val stored = stateOf(boot, cOld, 0L).union(stateOf(delta, cOld, 1L))
+    val rebuilt = stateOf(boot, cNew, 0L).union(stateOf(delta, cNew, 1L))
     (stored, rebuilt, cOld, cNew)
   }
 
@@ -83,19 +78,19 @@ class LineRefreezeSpec extends SparkSpec {
     assert((oldSet -- newSet).nonEmpty, "fixture stages no REMOVED flip")
     assert((oldSet & newSet).nonEmpty, "fixture stages no no-flip chrome")
     val refrozen = TextAnalysis.refreezeLineState(stored, cOld, cNew)
-    assert(rows(refrozen.surv) == rows(rebuilt.surv),
+    assert(rows(refrozen("surv")) == rows(rebuilt("surv")),
       "refrozen surv diverged from rebuild under C_new")
-    assert(rows(refrozen.strip) == rows(rebuilt.strip),
+    assert(rows(refrozen("strip")) == rows(rebuilt("strip")),
       "refrozen strip diverged from rebuild under C_new")
     // and the move is observable: the resurrected SHARED postings are
     // bootstrap rows now in surv; the quarantined NEW postings are
     // delta rows now in strip
-    val sharedGid = rows(refrozen.surv)
+    val sharedGid = rows(refrozen("surv"))
       .filter(r => bootIds.contains(r._2))
-      .map(_._3) & rows(stored.strip).map(_._3)
+      .map(_._3) & rows(stored("strip")).map(_._3)
     assert(sharedGid.nonEmpty, "no strip→surv resurrection happened")
-    val movedOut = rows(refrozen.strip).map(_._3) &
-      rows(stored.surv).filter(r => deltaIds.contains(r._2)).map(_._3)
+    val movedOut = rows(refrozen("strip")).map(_._3) &
+      rows(stored("surv")).filter(r => deltaIds.contains(r._2)).map(_._3)
     assert(movedOut.nonEmpty, "no surv→strip quarantine happened")
   }
 
@@ -103,13 +98,12 @@ class LineRefreezeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val (stored, _, cOld, cNew) = fixtureStores()
     // the entries' store step: both sides land on disk first
-    val st = TextAnalysis.LineContainStateP(
-      Scratch.materialize(stored.surv, "lrf_surv"),
-      Scratch.materialize(stored.strip, "lrf_strip"))
+    val st = Partials(Seq(
+      "surv" -> Scratch.materialize(stored("surv"), "lrf_surv"),
+      "strip" -> Scratch.materialize(stored("strip"), "lrf_strip")))
     val refrozen = TextAnalysis.refreezeLineState(st,
       broadcast(cOld), cNew)
-    for ((side, name) <- Seq((refrozen.surv, "surv"),
-        (refrozen.strip, "strip"))) {
+    for ((name, side) <- refrozen.rels) {
       val p = side.queryExecution.executedPlan
       val shuffles = p.collect { case e: ShuffleExchangeLike => e }
       assert(shuffles.isEmpty,
@@ -123,16 +117,12 @@ class LineRefreezeSpec extends SparkSpec {
 
   test("re-freeze commutes with retraction: moved rows keep their origin batch_id") {
     val (stored, _, cOld, cNew) = fixtureStores()
-    def retract(st: TextAnalysis.LineContainStateP, b: Long) =
-      TextAnalysis.LineContainStateP(
-        st.surv.filter(col("batch_id") =!= b),
-        st.strip.filter(col("batch_id") =!= b))
-    val thenRetract = retract(
-      TextAnalysis.refreezeLineState(stored, cOld, cNew), 1L)
+    val thenRetract =
+      TextAnalysis.refreezeLineState(stored, cOld, cNew).retract(1L)
     val retractFirst = TextAnalysis.refreezeLineState(
-      retract(stored, 1L), cOld, cNew)
-    assert(rows(thenRetract.surv) == rows(retractFirst.surv) &&
-      rows(thenRetract.strip) == rows(retractFirst.strip),
+      stored.retract(1L), cOld, cNew)
+    assert(rows(thenRetract("surv")) == rows(retractFirst("surv")) &&
+      rows(thenRetract("strip")) == rows(retractFirst("strip")),
       "re-freeze does not commute with batch retraction")
   }
 
@@ -155,20 +145,12 @@ class LineRefreezeSpec extends SparkSpec {
       val boot = docsDf(bootRows); val delta = docsDf(deltaRows)
       val all = docsDf(bootRows ++ deltaRows)
       val cOld = chromeOf(boot); val cNew = chromeOf(all)
-      val stored = TextAnalysis.LineContainStateP(
-        stateOf(boot, cOld, 0L).surv
-          .union(stateOf(delta, cOld, 1L).surv),
-        stateOf(boot, cOld, 0L).strip
-          .union(stateOf(delta, cOld, 1L).strip))
-      val rebuilt = TextAnalysis.LineContainStateP(
-        stateOf(boot, cNew, 0L).surv
-          .union(stateOf(delta, cNew, 1L).surv),
-        stateOf(boot, cNew, 0L).strip
-          .union(stateOf(delta, cNew, 1L).strip))
+      val stored = stateOf(boot, cOld, 0L).union(stateOf(delta, cOld, 1L))
+      val rebuilt = stateOf(boot, cNew, 0L).union(stateOf(delta, cNew, 1L))
       val refrozen = TextAnalysis.refreezeLineState(stored, cOld, cNew)
-      assert(rows(refrozen.surv) == rows(rebuilt.surv),
+      assert(rows(refrozen("surv")) == rows(rebuilt("surv")),
         s"seed $seed: surv diverged")
-      assert(rows(refrozen.strip) == rows(rebuilt.strip),
+      assert(rows(refrozen("strip")) == rows(rebuilt("strip")),
         s"seed $seed: strip diverged")
     }
   }

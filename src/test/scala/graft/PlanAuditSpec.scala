@@ -683,14 +683,13 @@ class PlanAuditSpec extends SparkSpec {
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dDir)
     Seq((30L, "aa bb cc dd ee ff gg hh"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(pDir)
-    val f0 = graft.queries.Dedup.buildLexIndex(spark.read.parquet(fDir))
-    val seDir = tmpDir("a100-se"); val sbDir = tmpDir("a100-sb")
-    f0.exact.write.mode("overwrite").parquet(seDir)
-    f0.bands.write.mode("overwrite").parquet(sbDir)
-    val stored = graft.queries.Dedup.LexIndex(
-      spark.read.parquet(seDir), spark.read.parquet(sbDir))
+    val dirs = Seq("exact" -> tmpDir("a100-se"), "bands" -> tmpDir("a100-sb"))
+    graft.queries.Dedup.lexPartials(spark.read.parquet(fDir), 0L)
+      .write(dirs, 0L)
+    val stored = graft.queries.Partials.read(spark, dirs)
     val p = planOfDf(graft.queries.Dedup.probeLex(
-      graft.queries.Dedup.mergeLexIndex(stored, spark.read.parquet(dDir)),
+      graft.queries.Dedup.collapseLex(stored.union(
+        graft.queries.Dedup.lexPartials(spark.read.parquet(dDir), 1L))),
       spark.read.parquet(pDir)))
     val paths = scanPaths(p)
     assert(paths.nonEmpty, p.toString)
@@ -732,14 +731,14 @@ class PlanAuditSpec extends SparkSpec {
             org.apache.spark.sql.functions.col("cent_emb"))).as("cent_nrm"))
       .write.mode("overwrite").parquet(cDir)
     val cent = spark.read.parquet(cDir)
-    val f0 = graft.queries.Similarity.buildSemIndex(
-      spark.read.parquet(fDir), cent)
-    val slDir = tmpDir("a101-sl")
-    f0.lists.write.mode("overwrite").parquet(slDir)
-    val stored = graft.queries.Similarity.SemIndex(
-      cent, spark.read.parquet(slDir))
+    val dirs = Seq("lists" -> tmpDir("a101-sl"))
+    graft.queries.Similarity.semPartials(spark.read.parquet(fDir), cent, 0L)
+      .write(dirs, 0L)
+    val stored = graft.queries.Partials.read(spark, dirs)
     val p = planOfDf(graft.queries.Similarity.probeSem(
-      graft.queries.Similarity.mergeSemIndex(stored, spark.read.parquet(dDir)),
+      graft.queries.Similarity.collapseSem(cent, stored.union(
+        graft.queries.Similarity.semPartials(
+          spark.read.parquet(dDir), cent, 1L))),
       spark.read.parquet(pDir)))
     val paths = scanPaths(p)
     assert(paths.nonEmpty, p.toString)

@@ -82,8 +82,9 @@ class RocksDbStateSpec extends SparkSpec {
         (docs.filter(m < 3), docs.filter(m >= 3 && m < 6), docs.filter(m >= 6))
       val exactDir = tmpDir("rocks-promote-exact")
       val bandsDir = tmpDir("rocks-promote-bands")
-      graft.streaming.StreamingPromote.promoteLexBatch(
-        frozen, -1L, exactDir, bandsDir)
+      graft.streaming.StreamingPromote.promoteBatch(
+        graft.queries.Dedup.lexPartials(frozen, -1L),
+        graft.streaming.StreamingPromote.lexDirs(exactDir, bandsDir), -1L)
       val deltaRows = delta.as[(Long, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped((deltaRows.length + 2) / 3).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)

@@ -53,7 +53,8 @@ class StreamingRefreezeSpec extends SparkSpec {
       // bootstrap: promote under the (empty) pre-freeze chrome, then
       // the bootstrap freeze — a re-freeze from ∅ that must quarantine
       // exactly the bootstrap census's chrome
-      StreamingPromote.promoteLineRefreezeBatch(boot, -1L, dirs)
+      StreamingPromote.promoteBatch(
+        StreamingPromote.refreezePartials(dirs)(boot, -1L), dirs.parts, -1L)
       StreamingPromote.refreezeLineLive(sp, dirs)
       val chromeAfterBoot = StreamingPromote.publishedChrome(sp, dirs)
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -65,8 +66,9 @@ class StreamingRefreezeSpec extends SparkSpec {
         math.max(1, (deltaRows.length + 2) / 3)).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)
       val mem = MemoryStream[(Long, String, String)]
-      val q = StreamingPromote.promoteLineRefreezeGated(
-        mem.toDF().toDF("doc_id", "source", "text"), dirs)
+      val q = StreamingPromote.promote(
+        mem.toDF().toDF("doc_id", "source", "text"), "doc_id", dirs.parts)(
+        StreamingPromote.refreezePartials(dirs))
       try {
         mem.addData(chunks(0).toIndexedSeq)
         q.processAllAvailable()
@@ -99,7 +101,7 @@ class StreamingRefreezeSpec extends SparkSpec {
       // demote micro-batch 1 (chunk 1 ∪ the redelivered half was
       // gated down to chunk 1 alone) — rebuilt-without is built under
       // the PUBLISHED chrome, not a re-collapsed census
-      StreamingPromote.demoteLineRefreezeBatch(dirs, 1L)
+      graft.queries.Partials.demote(dirs.parts, 1L)
       val surviving = boot
         .union(chunks(0).toSeq.toDF("doc_id", "source", "text"))
         .union(chunks(2).toSeq.toDF("doc_id", "source", "text"))
@@ -107,9 +109,8 @@ class StreamingRefreezeSpec extends SparkSpec {
       val want = {
         val ta = graft.queries.TextAnalysis
         val li = ta.lineDigests(ta.pageDocs(surviving))
-        val st = ta.buildLineStateP(li, broadcast(chromeNow), 0L)
-        val idx = ta.collapseLineState(ta.LineContainStateP(
-          st.surv, st.strip))
+        val idx = ta.collapseLineState(
+          ta.lineStatePartials(li, broadcast(chromeNow), 0L))
         val gp = ta.lineGramIds(ta.pageDocs(probeDocs),
           broadcast(chromeNow))
         containRows(graft.queries.Dedup.probeContain(idx, gp,
