@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query warm timings.
   *
   * Each query runs once unmeasured — paying whole-stage-codegen
@@ -18,43 +16,23 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = Harness.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Harness.session()
     // ERROR, not WARN: the per-rep unpersist of locally-checkpointed
     // scratch RDDs emits a WARN per rep; with stdout+stderr captured
     // together by the harness, those lines can push the JSON line out
-    // of the 2000-char tail the driver parses (BENCH_r05 recorded
-    // "parsed": null with a WARN line AS the tail for exactly this
-    // reason).
+    // of the 2000-char stdout tail a bench harness parses (a WARN line
+    // AS the tail leaves nothing to parse).
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_SCRATCH_DIR: route Scratch.materialize through parquet
     // instead of localCheckpoint (the cluster mode) — the A/B knob for
     // attributing block-manager-pinning GC tails vs filesystem cost
     sys.env.get("SPARK_GRAFT_SCRATCH_DIR")
       .foreach(d => spark.conf.set("graft.scratch.dir", d))
-    // JOB counter (r13 verdict #2): a per-query job count is the other
-    // half of the scheduler-attribution model — an entry's scheduler
-    // floor is jobs × the sched probe's per-job latency. onJobStart is
-    // posted async on the listener bus; the count is snapshotted AFTER
-    // the warmup's settle() (whose blocking gc gives the bus ample
-    // drain time), so it reads the WARMUP execution's job count — the
-    // same plan the measured reps run, without touching timed regions.
-    val jobCounter = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobCounter.incrementAndGet()
-      })
     def exec(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     // settle + only-filter live in graft.Harness (one spelling across
-    // Bench/Verify/ScaleSlope — the r05 blocking=true tail lesson must
+    // Bench/Verify/ScaleSlope — the blocking=true tail lesson must
     // not diverge between the tools)
     def settle(): Unit = Harness.settle(spark)
     // clear the file-based summary FIRST: a crashed run must leave a
@@ -62,7 +40,7 @@ object Bench {
     // previous summary for the file contract to misattribute
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get("BENCH_SUMMARY.json"))
-    // host calibration FIRST (r08 verdict #3): a fixed-work generated
+    // host calibration FIRST: a fixed-work generated
     // micro-task whose median lets any two rounds' totals be compared
     // in host-normalized units (total/calib) without rebuilding old
     // commits to re-measure on today's host
@@ -71,14 +49,14 @@ object Bench {
       calibReps.map(t => f"$t%.2f").mkString("[", ",", "]"))
     Harness.schedOnce(spark) // warmup the sched probe's plan shape too
     Harness.settle(spark)
-    // INTERLEAVED calib probes (r09 verdict #3): the r9 driver run's
+    // INTERLEAVED calib probes: one driver run's
     // start-of-run calib reps spread 0.81–1.87 within one run — a
     // single median cannot attribute intra-run host drift, which is
     // the dominant noise in every cross-round comparison. One probe
     // lands after every ~25 queries and one at the end; each records
     // (position, seconds, wall-clock) so any query's timing can be
     // normalized against its NEAREST probe, not a run-global constant.
-    // Each probe point records TWO flavors (r13 verdict #2): the
+    // Each probe point records TWO flavors: the
     // CPU+shuffle task and the scheduler round-trip per-job latency —
     // job-count-dominated entries (CC loops, iterative trainers) are
     // explained by the second, not the first.
@@ -94,7 +72,7 @@ object Bench {
       System.err.println(f"[bench] calib@$at $t%.3fs sched $s%.4fs/job")
     }
     calibProbe("start")
-    // adjacent probes for the heavy tail (r13 verdict "Next" #1): a
+    // adjacent probes for the heavy tail: a
     // minutes-stale probe is exactly the coarseness that left q98
     // without a receipt — any entry whose WARMUP exceeds this gets a
     // probe immediately before its measured reps, so its calib_adj
@@ -106,29 +84,39 @@ object Bench {
     val results = names.zipWithIndex.map { case (name, i) =>
       System.err.println(s"[bench] $name ...")
       val r = try {
-        val j0 = jobCounter.get()
+        Ledger.take(spark) // the probes' and the previous entry's legs
         val w0 = System.nanoTime()
-        exec(name) // warmup: codegen + JIT for this plan shape
+        Ledger.leg(name)(exec(name)) // warmup: codegen + JIT for this plan
         val wdt = (System.nanoTime() - w0) / 1e9
         settle()
-        val jobs = jobCounter.get() - j0 // post-settle: bus has drained
+        // the warmup's job count — the same plan the measured reps run —
+        // is the scheduler half of the attribution model: an entry's
+        // scheduler floor is jobs × the sched probe's per-job latency
+        val (mine, stray) =
+          Ledger.take(spark).partition(l => Ledger.within(l.leg, name))
+        val jobs = mine.map(_.jobs).sum
+        if (stray.exists(_.jobs > 0)) System.err.println(
+          s"[bench] WARN $name: ${stray.map(_.jobs).sum} jobs outside its leg")
         if (wdt > heavyWarmupSec) calibProbe(s"pre-$name")
         val times = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          exec(name)
+          Ledger.leg(name)(exec(name))
           val dt = (System.nanoTime() - t0) / 1e9
           settle()
           dt
         }
+        // the measured reps' legs, summed over the reps
+        val legs = Ledger.take(spark).filter(l => Ledger.within(l.leg, name))
         val dt = Harness.median(times)
         System.err.println(f"[bench] $name median $dt%.2fs of " +
           times.map(t => f"$t%.2f").mkString("[", ",", "]") +
           s" jobs $jobs")
-        (name, dt, times, System.currentTimeMillis(), jobs)
+        (name, dt, times, System.currentTimeMillis(), jobs, legs)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         settle()
-        (name, -1.0, Seq.empty[Double], System.currentTimeMillis(), 0L)
+        (name, -1.0, Seq.empty[Double], System.currentTimeMillis(), 0L,
+          Seq.empty[LegRow])
       }
       if ((i + 1) % probeEvery == 0 && i + 1 < names.size)
         calibProbe(s"q${i + 1}")
@@ -140,15 +128,15 @@ object Bench {
     // names + full-precision reps, 6KB+) overflowed it and recorded
     // "parsed": null. The stdout line therefore stays under ~1.2KB:
     // qNN-prefix keys + 3-decimal medians. Full names, full precision,
-    // and per-rep arrays (the round-3 q31-forensics lesson) go to
+    // and per-rep arrays (the q31-forensics lesson) go to
     // BENCH_DETAIL.json in the repo root for the judge.
     // qNN prefix, disambiguated on collision (two catalog entries sharing
     // a number once silently dropped a timing from the parsed JSON map —
-    // the r11 duplicate-q114 lesson): a repeat key gets a letter suffix.
+    // the duplicate-q114 lesson): a repeat key gets a letter suffix.
     def short(k: String): String = k.takeWhile(_ != '_')
     val shortKeys = {
       val seen = scala.collection.mutable.Map.empty[String, Int]
-      results.map { case (k, _, _, _, _) =>
+      results.map { case (k, _, _, _, _, _) =>
         val base = short(k)
         val n = seen.getOrElse(base, 0)
         seen(base) = n + 1
@@ -156,10 +144,9 @@ object Bench {
       }
     }
     def r3(v: Double): String = f"$v%.3f"
-    // PROBE-NORMALIZED per-query figure (r12 verdict #1): raw medians
-    // have been host-noise-dominated two rounds running — the judge had
-    // to reconstruct host-vs-plan attribution by hand from the probe
-    // timeline both times. calib_adj = raw median ÷ the NEAREST-IN-TIME
+    // PROBE-NORMALIZED per-query figure: raw medians follow the host,
+    // so host-vs-plan attribution would otherwise be rebuilt by hand
+    // from the probe timeline. calib_adj = raw median ÷ the NEAREST-IN-TIME
     // interleaved probe (units: "calib tasks" — a probe-1.0s reference
     // host reads it as seconds), so a cross-round diff of calib_adj
     // self-annotates: a plan regression moves it, a slow host does not.
@@ -168,11 +155,11 @@ object Bench {
       val p = calibTimeline.minBy(p => math.abs(p._4 - ts))
       (p._2, p._3)
     }
-    val adj = results.map { case (_, v, _, ts, _) =>
+    val adj = results.map { case (_, v, _, ts, _, _) =>
       if (v < 0) -1.0 else v / nearestProbe(ts)._1
     }
     def qsAt(prec: Double => String): String =
-      shortKeys.zip(results).map { case (sk, (_, v, _, _, _)) =>
+      shortKeys.zip(results).map { case (sk, (_, v, _, _, _, _)) =>
         "\"" + sk + "\":" + prec(v)
       }.mkString("{", ",", "}")
     val qs = qsAt(r3)
@@ -183,13 +170,15 @@ object Bench {
     // the warmup job count, and sched_est = jobs × per-job scheduler
     // latency — the entry's scheduler FLOOR in this run's units, so a
     // job-count-dominated entry's cross-session envelope is explained
-    // by a recorded number instead of prose (r13 verdict #2)
-    val detail = results.zip(adj).map { case ((k, v, ts, at, jobs), a) =>
+    // by a recorded number instead of prose — and the measured reps'
+    // ledger legs, so an A/B names the leg that moved
+    val detail = results.zip(adj).map { case ((k, v, ts, at, jobs, legs), a) =>
       val (pc, psc) = nearestProbe(at)
       s""""$k":{"median":$v,"reps":${ts.mkString("[", ",", "]")},""" +
         s""""calib_adj":${r3(a)},"probe":${r3(pc)},""" +
         s""""probe_sched":${f"$psc%.4f"},"jobs":$jobs,""" +
-        s""""sched_est":${r3(jobs * psc)}}"""
+        s""""sched_est":${r3(jobs * psc)},""" +
+        s""""legs":${legs.map(_.json).mkString("[", ",", "]")}}"""
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalAdj = adj.filter(_ >= 0).sum
@@ -216,7 +205,7 @@ object Bench {
     // line measures 1,801 chars — ~15 more entries would push it past
     // the 2000-char tail and record "parsed": null. If the line nears
     // the cliff, the STDOUT copy drops to 2 decimals (saving one char
-    // per entry); if even THAT overflows (r13 advice: the one-step
+    // per entry); if even THAT overflows (the one-step
     // fallback re-created the cliff it guarded), the stdout copy drops
     // the queries map entirely — pointing at the file — and warns on
     // stderr. The file copy below always keeps 3 decimals (no size

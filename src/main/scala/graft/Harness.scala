@@ -2,23 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared measurement-harness discipline — ONE spelling (r07 review:
-  * Bench, Verify, and ScaleSlope each carried their own copy of the
-  * settle/only-filter idioms, so a fix to either — e.g. the
-  * blocking=true unpersist lesson encoded in Bench's history — had to
-  * be applied in three places or the tools silently measured
-  * differently).
+/** Shared measurement-harness discipline, one spelling for every main:
+  * the session, the settle between executions, the host probes and the
+  * entry filter. A fix to any of them (e.g. the blocking unpersist in
+  * `settle`) reaches Bench, Verify and every tool at once, so the tools
+  * never measure under a different discipline than the bench.
   */
 object Harness {
 
-  /** Engine-level join-strategy tuning shared by Bench and Verify (ONE
+  /** Engine-level join-strategy tuning shared by every session (ONE
     * spelling, so correctness always gates exactly the plans the bench
     * times) — the optimization guide's §3.1/§9 baseline: let the
     * planner pick a shuffled-hash join when its size conditions are
     * met (`preferSortMergeJoin=false`), and let AQE rewrite a planned
     * sort-merge join to shuffled-hash at runtime when every
     * post-shuffle partition's build side fits 64 MB — skipping both
-    * sort passes. Measured (QueryProf A/B at sf0.1, r14): ~5–10% on the
+    * sort passes. A QueryProf A/B at sf0.1 measures ~5–10% on the
     * SMJ-carrying entries (q79 2.40→2.09, q70 1.77→1.67, q94
     * 1.24→1.00 median-of-reps), flat elsewhere. Production posture:
     * 64 MB per-partition build side is safe at ≥ 2 GB executors and is
@@ -33,6 +32,24 @@ object Harness {
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         "64m")
 
+  /** The session every main runs under: `local[SPARK_GRAFT_CPUS]`
+    * (default 32) with the shuffle width equal to the core count, UTC,
+    * no UI, [[tuned]] joins — and the [[Ledger]] installed, so every
+    * tool reports its legs. (`tuned` alone installs nothing; embedders
+    * that build their own session keep their listeners to themselves.)
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    Ledger.install(spark)
+    spark
+  }
+
   /** Per-execution cleanup, run OUTSIDE timed regions: a rep must not
     * inherit the previous execution's localCheckpoint-pinned scratch
     * RDDs (old-gen pressure that surfaces as single-rep tails), nor
@@ -45,7 +62,7 @@ object Harness {
     spark.catalog.clearCache()
     // gc only for the TIMED harnesses (blocking mode): an untimed tool
     // like Verify wants the cheap non-blocking release, not a full gc
-    // per entry (r08 review made this the one spelling Verify uses too)
+    // per entry
     if (blocking) System.gc()
   }
 
@@ -54,7 +71,7 @@ object Harness {
     * chain → 64Ki-key hash aggregate → noop sink): no files, no SF
     * dependence, no data skew, identical work every host, every round.
     *
-    * Purpose (r08 verdict): documented 2–2.5× same-commit host swings
+    * Purpose: documented 2–2.5× same-commit host swings
     * between rounds have made every cross-round total comparison cost a
     * same-day A/B rebuild of the previous round's commit. Dividing any
     * two rounds' bench totals by their calib medians normalizes out
@@ -74,8 +91,8 @@ object Harness {
   }
 
   /** One timed run of the calibration micro-task. Exposed for the
-    * bench's INTERLEAVED probes (r09 verdict #3): a start-of-run median
-    * cannot attribute intra-run host drift (the r09 driver run's calib
+    * bench's INTERLEAVED probes: a start-of-run median
+    * cannot attribute intra-run host drift (one driver run's calib
     * reps spread 0.81–1.87 within ONE run), so Bench re-probes every
     * ~25 queries and at the end — by then the task is JITted, so a
     * single rep per probe point is comparable to the start median's
@@ -95,7 +112,7 @@ object Harness {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Scheduler-latency probe (r13 verdict #2): the CPU+shuffle calib
+  /** Scheduler-latency probe: the CPU+shuffle calib
     * task cannot attribute JOB-LAUNCH overhead — iterative entries
     * (connected-components loops, gradient-descent trainers) launch
     * tens of near-empty jobs whose cost is scheduler round-trip, not
@@ -118,7 +135,7 @@ object Harness {
   }
 
   /** True median: averages the two middle elements for an even count
-    * (r09 advice — `sorted(n/2)` alone is the UPPER middle, biased
+    * (`sorted(n/2)` alone is the UPPER middle, biased
     * high for even reps).
     */
   def median(ts: Seq[Double]): Double = {
@@ -133,7 +150,7 @@ object Harness {
   def onlyFilter(names: Seq[String]): Seq[String] = {
     // an EMPTY value (wrapper scripts exporting SPARK_GRAFT_ONLY="$X"
     // with X unset) means "no filter", not "zero queries" — a silent
-    // empty selection would zero a round's bench/correctness (r08)
+    // empty selection would zero a bench or correctness run
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)

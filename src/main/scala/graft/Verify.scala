@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Harness.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // builder pre-flight: SPARK_GRAFT_ONLY=q53,q54 limits the dump to
@@ -28,7 +21,7 @@ object Verify {
         // release localCheckpoint-pinned scratch RDDs alongside cached
         // relations — 79 queries in one session otherwise accumulate
         // every materialized subtree in the block manager. ONE settle
-        // spelling with the timed tools (r08 review); non-blocking:
+        // spelling with the timed tools; non-blocking:
         // Verify is untimed, the cheap async release suffices
         Harness.settle(spark, blocking = false)
       }

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.{Ledger, Overlap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, first, min}
 import scala.collection.mutable
@@ -83,7 +84,7 @@ final class GraphRunner(
     // the graft_ prefix is RESERVED for engine metadata: the JDBC
     // backend seeds its user-table registry by filtering it out on
     // restart, so a user table named graft_* would silently drop out
-    // of rollback/cleanup there (r08 review) — reject loudly instead
+    // of rollback/cleanup there — reject loudly instead
     val reserved = reducers.flatMap(_.tables.map(_.name))
       .filter(_.startsWith("graft_"))
     require(reserved.isEmpty,
@@ -281,7 +282,7 @@ final class GraphRunner(
   def flush(blocksDf: DataFrame): Unit = {
     val cached = blocksDf.cache()
     try {
-      // distinct-by-slot BEFORE the limit (r08 review): a micro-batch
+      // distinct-by-slot BEFORE the limit: a micro-batch
       // carrying a duplicate-slot row (at-least-once file delivery)
       // would otherwise spend window slots on duplicates and persist a
       // shallower-than-10 resume window — a modest reorg could then
@@ -340,16 +341,13 @@ final class GraphRunner(
           r.name -> out
         }
         val shapedByReducer: Seq[(String, Map[String, DataFrame])] =
-          if (store.preferLocalOutputs) {
-            import scala.concurrent.{Await, Future}
-            import scala.concurrent.ExecutionContext.Implicits.global
-            import scala.concurrent.duration.Duration
-            Await.result(Future.sequence(built.map { case (name, out) =>
-              Future(name -> out.map { case (t, df) =>
+          if (store.preferLocalOutputs)
+            Overlap.all(built.map { case (name, out) => () =>
+              name -> Ledger.leg(name)(out.map { case (t, df) =>
                 t -> BatchContext.localized(spark, df)
               })
-            }), Duration.Inf)
-          } else built.map { case (name, out) =>
+            })
+          else built.map { case (name, out) =>
             name -> out.map { case (t, df) =>
               val c = df.cache(); toUnpersist += c; t -> c
             }
@@ -423,8 +421,8 @@ final class GraphRunner(
         val owner = tableOwner.getOrElse(table, table)
         segTimes(owner) = segTimes.getOrElse(owner, 0.0) + sec
       }
-    val wrote =
-      store.commit(batchId, appends.toMap, newCps, compactors, onSegment)
+    val wrote = Ledger.leg("commit")(
+      store.commit(batchId, appends.toMap, newCps, compactors, onSegment))
     telemetry.foreach(t => segTimes.foreach { case (r, sec) =>
       t.record(r, sec, top.head.slot)
     })
@@ -464,7 +462,7 @@ final class GraphRunner(
     // ~10-slot window depth (any real Rewind, any deep reorg) emptied
     // every window while the tables kept their rows below delSlot; the
     // next restart then saw "no checkpoints", replayed from genesis,
-    // and silently DUPLICATED the whole retained prefix (r07 review).
+    // and silently DUPLICATED the whole retained prefix.
     // Sentinel points (resume/rebuild/origin) are not chain positions
     // and are never persisted; Inclusive destroys its point, so an
     // emptied window there is handled by reconcileStartup's
@@ -536,7 +534,7 @@ final class GraphRunner(
   def reconcileStartup(): Seq[StartDiag] = {
     val diags = adjustStartPoints()
     // a parent whose effective start sits AHEAD of a dependent's resume
-    // base would silently lose rows (r08 review): flushImpl filters
+    // base would silently lose rows: flushImpl filters
     // each reducer's input by its OWN start, so the dependent processes
     // blocks the parent skips — the inner parent-output join then drops
     // them permanently (tx_index) or corrupts running state
@@ -567,7 +565,7 @@ final class GraphRunner(
     if (tip >= 0) {
       if (safe >= 0) {
         // roll back to the REAL chain point at the safe slot whenever
-        // one is known (r08 review): the "resume" sentinel is never
+        // one is known: the "resume" sentinel is never
         // persisted, so when the min-across-graph gap exceeds a
         // veteran's ~10-slot window depth (a newly registered root with
         // a configured start far behind the veterans), the sentinel
@@ -594,8 +592,7 @@ final class GraphRunner(
       // points anywhere (a legacy deep rollback, or an Inclusive one
       // that legitimately emptied the windows). Treating it as a fresh
       // store would replay from genesis OVER the retained rows,
-      // duplicating them — rebuild instead: wipe and replay clean
-      // (r07 review).
+      // duplicating them — rebuild instead: wipe and replay clean.
       applyRollback(Point("rebuild", 0L), Inclusive, guarded = false)
     }
     diags
@@ -643,7 +640,7 @@ private[graft] object EngineShuffle {
     // EXPLICIT-set detection, not RuntimeConfig.getOption: getOption
     // answers the registered default ("200") even when the caller never
     // set a width, which made the unset-restore leg below unreachable
-    // and silently pinned the default as if user-chosen (r10 ADVICE).
+    // and silently pinned the default as if user-chosen.
     // SQLConf.contains consults only explicitly-set session entries.
     val (stack, saved) = state.getOrElse(spark,
       (Nil,

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.Overlap
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -150,7 +151,7 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
   // the committed id can only move at this single-writer store's own
   // commit/rollback (T13), yet every state read re-probed it — and
   // graft_commits grows one row per batch forever, so the probe was a
-  // repeated index walk on the hot path (r08 review). Cached between
+  // repeated index walk on the hot path. Cached between
   // our own state changes; invalidated, not updated, so a reopen or a
   // first read always sees the database's truth.
   @volatile private var cachedBatchId: Option[Long] = None
@@ -449,20 +450,15 @@ final class JdbcStore(val root: String, spark: SparkSession) extends Store {
     // independent — run them as CONCURRENT Spark actions so scheduler
     // latency overlaps instead of summing (the reference runs its
     // reducers' RollForwardAsync concurrently too).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val collected = Await.result(
-      Future.sequence(appends.toSeq.map { case (table, (df, slotCol)) =>
-        Future {
-          // clock the collect INSIDE the future: a shared t0 would
-          // charge every table for its slowest sibling plus the
-          // serialized inserts ahead of it in the txn loop below
-          val t0 = System.nanoTime()
-          val rows = df.collect()
-          (table, slotCol, df.schema, rows, (System.nanoTime() - t0) / 1e9)
-        }
-      }), Duration.Inf)
+    val collected = Overlap.all(appends.toSeq.map {
+      case (table, (df, slotCol)) => () =>
+        // clock the collect INSIDE the job: a shared t0 would charge
+        // every table for its slowest sibling plus the serialized
+        // inserts ahead of it in the txn loop below
+        val t0 = System.nanoTime()
+        val rows = df.collect()
+        (table, slotCol, df.schema, rows, (System.nanoTime() - t0) / 1e9)
+    })
     if (collected.forall(_._4.isEmpty)) return false
     withConn { c =>
       c.setAutoCommit(false)

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.Overlap
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.Properties
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -108,7 +109,7 @@ final class StateStore(val root: String, spark: SparkSession,
   private def parseManifest(bytes: Array[Byte]): Manifest = {
     // an EXISTING but empty manifest is a torn write, not a fresh
     // store: parsing it as batchId -1 would pass the idempotency guard
-    // and reuse segment ids over committed data (r07 review). Only
+    // and reuse segment ids over committed data. Only
     // file ABSENCE means fresh (see manifest()).
     require(bytes.nonEmpty,
       s"manifest at $manifestPath exists but is empty — torn write; " +
@@ -286,20 +287,16 @@ final class StateStore(val root: String, spark: SparkSession,
     // jobs (ids pre-allocated; gaps from empty appends are fine). On
     // local[32] this turns per-commit wall time from Σ(write) into
     // max(write); on a cluster it simply keeps the executors busy across
-    // the per-table commit jobs.
+    // the per-table commit jobs. A failed write returns only after its
+    // siblings have finished, so a retry never races them for a
+    // segment id.
     val appendSeq = appends.toSeq
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val written = Await.result(Future.sequence(
-      appendSeq.zipWithIndex.map { case ((table, (df, slotCol)), i) =>
-        Future {
-          val t0 = System.nanoTime()
-          val seg = writeSegment(df, table, m.nextSegId + i, slotCol)
-          (table, seg, (System.nanoTime() - t0) / 1e9)
-        }
-      }), Duration.Inf)
+    val written = Overlap.all(
+      appendSeq.zipWithIndex.map { case ((table, (df, slotCol)), i) => () =>
+        val t0 = System.nanoTime()
+        val seg = writeSegment(df, table, m.nextSegId + i, slotCol)
+        (table, seg, (System.nanoTime() - t0) / 1e9)
+      })
     var nextId = m.nextSegId + appendSeq.size
     var wroteAny = false
     written.foreach { case (table, segOpt, sec) =>
@@ -312,8 +309,8 @@ final class StateStore(val root: String, spark: SparkSession,
     }
     if (!wroteAny) return false
     // Compaction: a table's segment list would otherwise grow by one per
-    // commit, making every state read an ever-wider union (measured as
-    // per-batch cost growth in ChainPerf). Fold the OLDEST segments into
+    // commit, making every state read an ever-wider union (a per-batch
+    // cost that grows with the chain). Fold the OLDEST segments into
     // one — applying the table's compactWith filter, if any, so rows
     // beyond the rollback horizon that can no longer matter are dropped —
     // keeping the newest few separate so retraction of a shallow reorg
@@ -338,17 +335,15 @@ final class StateStore(val root: String, spark: SparkSession,
       }
     }
     // compaction merges are independent per table — same concurrency
-    val compacted = Await.result(Future.sequence(
-      toCompact.zipWithIndex.map { case ((table, segs, slotCol), i) =>
-        Future {
-          val (old, recent) = segs.splitAt(segs.size - keepRecent)
-          val merged0 = spark.read
-            .parquet(old.map(s => segPath(table, s.id)): _*)
-          val merged = compactors.get(table).fold(merged0)(b => b.run(merged0))
-          val seg = writeSegment(merged, table, nextId + i, slotCol)
-          table -> (seg.toSeq ++ recent)
-        }
-      }), Duration.Inf).toMap
+    val compacted = Overlap.all(
+      toCompact.zipWithIndex.map { case ((table, segs, slotCol), i) => () =>
+        val (old, recent) = segs.splitAt(segs.size - keepRecent)
+        val merged0 = spark.read
+          .parquet(old.map(s => segPath(table, s.id)): _*)
+        val merged = compactors.get(table).fold(merged0)(b => b.run(merged0))
+        val seg = writeSegment(merged, table, nextId + i, slotCol)
+        table -> (seg.toSeq ++ recent)
+      }).toMap
     nextId += toCompact.size
     tables = tables.map { case (table, segs) =>
       table -> compacted.getOrElse(table, segs)

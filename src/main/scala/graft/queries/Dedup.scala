@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Overlap, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -175,7 +175,7 @@ object Dedup extends QueryModule {
 
   // primitive copy for the per-shingle JVM loop: Seeds(k) on a Seq is
   // a boxed Vector apply, paid H times per shingle on the hot path the
-  // surrounding code exists to keep cheap (r07 review)
+  // surrounding code exists to keep cheap
   private val SeedsArr: Array[Long] = Seeds.toArray
 
   /** First 6 md5 bytes of `s`, big-endian — the JVM twin of the
@@ -249,7 +249,7 @@ object Dedup extends QueryModule {
     // null-tolerant like the codegen'd column paths (SQL null in,
     // null/empty out): WordRe.findAllIn(null) would NPE inside
     // mapPartitions and kill a streaming consumer on one poison row
-    // (r07 review; StreamingCurate guards the same hazard)
+    // (StreamingCurate guards the same hazard)
     if (text == null) return Seq.empty
     val words = WordRe.findAllIn(text).toArray
     if (words.length < 3) return Seq.empty
@@ -299,7 +299,7 @@ object Dedup extends QueryModule {
 
   /** The per-doc signature/band stage of [[minhashPairs]] — a PURE
     * per-document function of `text` (no corpus-wide state), factored
-    * out (r14 optimization) so callers that cluster several corpus
+    * out so callers that cluster several corpus
     * SNAPSHOTS of one fixture (q111/q124's two releases) can compute
     * the band keys ONCE over the union and filter per snapshot, instead
     * of re-running the shingle explode + 16-min aggregation per side.
@@ -344,7 +344,7 @@ object Dedup extends QueryModule {
     * moves every consumer together instead of silently forking the
     * canonical-survivor decision between them.
     *
-    * KNOWN cross-engine edge (r08 review, the wordsCol discipline):
+    * KNOWN cross-engine edge (the wordsCol discipline):
     * `lower()` on a row containing NON-ASCII bytes takes Spark's
     * String.toLowerCase slow path, which is JVM-default-locale
     * sensitive (the Turkish-I case maps 'I' to a dotless form DuckDB's
@@ -418,7 +418,7 @@ object Dedup extends QueryModule {
   private def simhashSigs(s: SparkSession, d: String): DataFrame = {
     // wordsCol, not a re-spelled \S+: SimHash must tokenize with the
     // same word class as the MinHash family or an edit to one silently
-    // forks the two near-dup definitions (r07 review)
+    // forks the two near-dup definitions
     val words = Tables.documents(s, d)
       .select(col("doc_id"), explode(wordsCol).as("w"))
       .withColumn("h", md5(col("w")))
@@ -610,7 +610,7 @@ object Dedup extends QueryModule {
     */
   private[graft] def connectedComponents(pairs: DataFrame,
       maxRounds: Int = 20, tag: String = "cc"): DataFrame = {
-    // scratch names are CALLER-keyed (r08 review, the dekOf
+    // scratch names are CALLER-keyed (the dekOf
     // discipline): four entry points route here, and in durable-
     // scratch mode a shared fixed name would let a later invocation's
     // loop overwrite the labels a still-lazy earlier result reads
@@ -633,7 +633,7 @@ object Dedup extends QueryModule {
       // pointer jump: labels are always node ids, so label(label(v)) is
       // resolvable against this same round's propagation result
       val jump = prop.select(col("doc_id").as("jid"), col("mid").as("jl"))
-      // convergence rides the materialize job itself (r14 optimization):
+      // convergence rides the materialize job itself:
       // a `chg` column counts label changes into an accumulator WHILE
       // the round materializes, replacing the former per-round isEmpty
       // probe job. Task retries can only INFLATE the count (a retried
@@ -645,7 +645,7 @@ object Dedup extends QueryModule {
       // out of the plan and never counted) and is projected away after.
       val chgAcc = labels.sparkSession.sparkContext.longAccumulator(
         s"${tag}_chg_$iter")
-      // asNondeterministic (r14 advice): the udf has a side effect (the
+      // asNondeterministic: the udf has a side effect (the
       // accumulator add), so pin the evaluate-once-per-output-row
       // contract — a deterministic udf could legally be eliminated,
       // duplicated, or reordered by a future Catalyst version
@@ -661,7 +661,7 @@ object Dedup extends QueryModule {
               .as("cluster_id")),
         s"${tag}_labels${(iter + 1) % 2 + 1}") // ping-pong scratch names
       converged = chgAcc.value == 0L
-      // contract guard (r14 advice): round-1 convergence is only
+      // contract guard: round-1 convergence is only
       // legitimate for an EDGELESS input — any a<b edge lowers b's
       // label on round 1, so chgAcc == 0 here with a non-empty edge set
       // means Scratch.materialize did not eagerly evaluate the output
@@ -1220,7 +1220,7 @@ object Dedup extends QueryModule {
     val qual = docs.filter(TextAnalysis.qualityOkOn(col("text")))
     // trx materialized: feeds the gram/hits leg AND the survivor join —
     // without the barrier the three quality regexes re-run over the
-    // full corpus once per leg (r08 review; the q31 multi-leg
+    // full corpus once per leg (the q31 multi-leg
     // discipline). Measured perf-neutral at sf0.1 (regex recompute ≈
     // survivor-text checkpoint cost locally); kept for the cluster
     // shape, where one columnar re-read beats a second full regex pass
@@ -1229,7 +1229,7 @@ object Dedup extends QueryModule {
     // an independent corpus pass — it overlaps the trx materialize on
     // a driver thread (r14, guide §2.6) and broadcasts exactly as the
     // lazy subtree did.
-    val (trx, ev) = inParallel(
+    val (trx, ev) = Overlap.pair(
       Scratch.materialize(
         qual.filter(col("doc_id") % 10 =!= 3)
           .select(col("doc_id"), col("text")),
@@ -1541,6 +1541,11 @@ object Dedup extends QueryModule {
     * (band keys are per-document). Frozen text is never read again:
     * later promotes union their own partials in.
     */
+  /** The stored lexical relations' schemas ([[Partials.read]]). */
+  private[graft] val LexShape = Map(
+    "exact" -> "norm_md5 STRING, idx_doc BIGINT, batch_id BIGINT",
+    "bands" -> "doc_id BIGINT, band_key STRING, batch_id BIGINT")
+
   private[graft] def lexPartials(docs: DataFrame, batchId: Long): Partials = {
     val b = buildLexIndex(docs)
     Partials.tagged(batchId, "exact" -> b.exact, "bands" -> b.bands)
@@ -1769,8 +1774,8 @@ object Dedup extends QueryModule {
     * exchange exactly twice (this join and the output sort) — the q72
     * shape, shared by q104.
     */
-  private[graft] def cutRewrite(docs: DataFrame, cuts: DataFrame,
-      sorted: Boolean = true): DataFrame = {
+  private[graft] def cutRewrite(docs: DataFrame, cuts: DataFrame)
+      : DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val out = docs.select(col("doc_id"), col("text"))
@@ -1783,9 +1788,9 @@ object Dedup extends QueryModule {
         (id, n, clean)
       }
       .toDF("doc_id", "n_cut", "clean_text")
-    // sorted=false: DecontProf's phase split — a production rewrite
-    // writes unordered; the sort is the oracle-comparability harness
-    if (sorted) out.orderBy(col("doc_id")) else out
+    // the sort is the oracle-comparability harness; a production
+    // rewrite would write unordered
+    out.orderBy(col("doc_id"))
   }
 
   private val q72Sql = {
@@ -1844,11 +1849,7 @@ object Dedup extends QueryModule {
     */
   /** The q104 cut-POSITION pipeline over the canonical train/eval
     * mod-split: eval distinct grams → broadcast → positional train-gram
-    * probe → per-doc cut arrays. ONE spelling shared by q104 and
-    * `tools.DecontProf` (r10 ADVICE: the profiler carried a verbatim
-    * copy, so a change here would have silently desynced its phase
-    * attribution from the benchmarked entry — the cutRewrite `sorted`
-    * discipline applied to the builder too).
+    * probe → per-doc cut arrays; PlanAuditSpec audits it un-materialized.
     */
   private[graft] def decontCuts(docs: DataFrame): DataFrame = {
     val ev = ngramEntries(docs.filter(col("doc_id") % 10 === 3), DecontN)
@@ -2032,48 +2033,6 @@ object Dedup extends QueryModule {
         when(hx < "cc", "train").when(hx < "e6", "val").otherwise("test"))
   }
 
-  /** Run two independent Spark-driving computations on driver threads
-    * (guide §2.6 "overlap independent jobs"): the scheduler happily
-    * interleaves both sides' jobs, so one side's stage tails back-fill
-    * the other's idle cores. Used where an entry composes two
-    * per-snapshot pipelines whose results only meet at the final join
-    * (q111/q124's release pair). Results are deterministic — each
-    * side's plan is unchanged; only job SUBMISSION overlaps.
-    *
-    * (1) A dedicated unbounded cached pool, not the global
-    * ForkJoinPool: nested calls (q128/q129/q132 and `Partials.write`
-    * reach depth 2–3) block their submitting thread in Await, and on a
-    * fixed pool that is a starvation deadlock; daemon threads so the
-    * pool never blocks JVM exit. (2) BOTH futures are awaited even when
-    * the first fails, so a failing leg can never leave the other leg's
-    * Spark jobs running past the entry boundary (into Harness.settle or
-    * the next timed rep), and neither leg's failure is silently
-    * swallowed (the second rides as suppressed).
-    */
-  private[graft] lazy val driverPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-driver-overlap")
-        t.setDaemon(true)
-        t
-      }))
-
-  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val f1 = Future(fa)(driverPool)
-    val f2 = Future(fb)(driverPool)
-    val r1 = scala.util.Try(Await.result(f1, Duration.Inf))
-    val r2 = scala.util.Try(Await.result(f2, Duration.Inf))
-    (r1, r2) match {
-      case (scala.util.Success(a), scala.util.Success(b)) => (a, b)
-      case _ =>
-        val e = r1.failed.toOption.getOrElse(r2.failed.get)
-        r2.failed.toOption.filter(_ ne e).foreach(e.addSuppressed)
-        throw e
-    }
-  }
-
   private def q107(s: SparkSession, d: String): DataFrame =
     splitAssign(Tables.documents(s, d), tag = "q107cc")
       .orderBy(col("doc_id"))
@@ -2145,7 +2104,7 @@ object Dedup extends QueryModule {
   // the operator true engulfments to find in both engines.
   private[graft] final val ContainTau = 0.9
   private[graft] final val ContainProbes = 3
-  /** Probe-gram df cap default — ONE spelling (r12 advice): the Scala
+  /** Probe-gram df cap default — ONE spelling: the Scala
     * probe's `getOrElse` AND the three containment SQL twins interpolate
     * this constant, so the default cannot drift between the engines.
     * Setting the `graft.contain.dfCap` session knob therefore DIVERGES
@@ -2156,7 +2115,7 @@ object Dedup extends QueryModule {
   /** The replica id-block convention the constructed-id guards check
     * against: corpus ids must sit in the LOW [0, SnipOff) region of
     * each IdBlock-sized id block. True of the driver corpora (ids
-    * < 10⁶) and of the ScaleSlope/ContainProf replicas (base ids
+    * < 10⁶) and of the ScaleSlope replicas (base ids
     * shifted by multiples of IdBlock — ScaleSlope.Off IS this
     * constant). When every real id passes, constructed snippet/quote
     * ids land in a block's [SnipOff, ~2·SnipOff) region — provably
@@ -2166,7 +2125,7 @@ object Dedup extends QueryModule {
   // The snippet-construction spelling — parent predicate (doc_id ≡
   // SnipRes mod SnipMod, ≥ SnipMinWords words) and the quoted fraction —
   // is consumed FOUR times: snipOf (Scala) and the q127/q128/q129 SQL
-  // twins. One set of constants (r12 verdict #3): a drift in any one
+  // twins. One set of constants: a drift in any one
   // spelling would silently weaken the constructed-engulfment layer,
   // and the fuzz gate (own corpora) could not catch it.
   private[graft] final val SnipMod = 9
@@ -2179,7 +2138,7 @@ object Dedup extends QueryModule {
     * words) — the observable-engulfment layer, deterministic in both
     * engines. Exposed separately so the lifecycle entries (q128/q129)
     * can probe with snippets of the INDEX population. The id offset is
-    * GUARDED (r12 advice, the q119 loud-refusal discipline): an id
+    * GUARDED (the q119 loud-refusal discipline): an id
     * outside the [[IdBlock]] low-region convention could alias a
     * snippet onto a real document with the SQL twin aliasing
     * identically — green gate, wrong report — so the scan-stage shift
@@ -2229,8 +2188,9 @@ object Dedup extends QueryModule {
   private[graft] def buildContainIndex(corpus: DataFrame,
       tag: String = "q127"): ContainIndex = {
     // materialized — sizes/dfs here plus the probe's three legs consume
-    // it. ContainProf attribution at 100×: this scan+checkpoint is the
-    // dominant, irreducible corpus-linear term (~80 s of 159 s) — the
+    // it. At 100× this scan+checkpoint is the dominant, irreducible
+    // corpus-linear term (~80 s of 159 s; its ledger leg is
+    // `<tag>_grams`) — the
     // q64 gram-scan class. Scratch names are tag-keyed (the dekOf
     // discipline): several containment surfaces coexist in one session.
     val g = Scratch.materialize(gramIds(corpus), s"${tag}_grams")
@@ -2305,11 +2265,10 @@ object Dedup extends QueryModule {
         "c")
       .where(col("nc") > col("nd"))
       .select(col("d"), col("c"), col("nd"))
-    // Exact confirm on CANDIDATE-BOUNDED gram relations (r12 ContainProf
-    // attribution: joining the full gram table twice — by d, then by
-    // (c, gid) — re-shuffled all 24M rows both times and was 98 of the
-    // entry's 213 s at 100×; with the id filters it shuffles only the
-    // candidates' grams). The id sets are candidate-bounded 8-byte
+    // Exact confirm on CANDIDATE-BOUNDED gram relations: joining the
+    // full gram table twice — by d, then by (c, gid) — re-shuffles all
+    // 24M rows both times, 98 of the entry's 213 s at 100×; with the id
+    // filters it shuffles only the candidates' grams. The id sets are candidate-bounded 8-byte
     // keys — probe fan-out already dfCap-guarded — and BROADCAST into
     // the gram scan, so the full table crosses no further exchange.
     val (candRaw, release) =
@@ -2365,14 +2324,21 @@ object Dedup extends QueryModule {
     * gram scan materialized once: both relations read the stored scan,
     * so writing or storing them never re-expands the batch's grams. The
     * release handle frees the scan once a streaming promote's writes
-    * land, keeping per-batch scratch bounded on an unbounded stream. */
-  private[graft] def containPartials(docs: DataFrame, batchId: Long)
-      : Partials = {
+    * land, keeping per-batch scratch bounded on an unbounded stream.
+    * The scan is named by the store's `tag` and the batch id, so two
+    * stores promoting the same batch id never share a scratch path. */
+  private[graft] def containPartials(docs: DataFrame, batchId: Long,
+      tag: String): Partials = {
     val (gRaw, release) =
-      Scratch.materializeManaged(gramIds(docs), s"cip${batchId}_g")
+      Scratch.materializeManaged(gramIds(docs), s"${tag}_cip${batchId}_g")
     val g = gRaw.toDF("doc_id", "gid").withColumn("batch_id", lit(batchId))
     Partials(Seq("g" -> g, "sizes" -> containSizes(g)), release)
   }
+
+  /** The stored containment relations' schemas, line-grain too. */
+  private[graft] val ContainShape = Map(
+    "g" -> "doc_id BIGINT, gid BIGINT, batch_id BIGINT",
+    "sizes" -> "doc_id BIGINT, ng BIGINT, batch_id BIGINT")
 
   /** Store tagged postings, then the sizes derived from the STORED
     * postings — the batch entries' one-scan build (q128/q129/q131/q132):
@@ -2406,7 +2372,7 @@ object Dedup extends QueryModule {
     val m = col("doc_id") % 7
     // the probe-side gram scan is independent of the whole index chain,
     // so it overlaps the store on a driver thread
-    val (live, gp) = inParallel(
+    val (live, gp) = Overlap.pair(
       storeContain(gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
         .withColumn("batch_id", when(m < 3, lit(0L)).otherwise(lit(1L))),
         "q128"),
@@ -2427,7 +2393,7 @@ object Dedup extends QueryModule {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
     // one tagged scan, the probe scan overlapped beside it (see q128)
-    val (stored, gp) = inParallel(
+    val (stored, gp) = Overlap.pair(
       storeContain(gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
         .withColumn("batch_id", when(m < 2, lit(0L))
           .when(m < 4, lit(1L)).otherwise(lit(2L))), "q129"),
@@ -2657,8 +2623,8 @@ object Dedup extends QueryModule {
   /** Release-gate SPLIT STABILITY (q111) — the cross-release eval gate
     * that composes the corpus diff (q109) with the cluster-keyed split
     * (q107): report every document whose train/val/test assignment
-    * FLIPS between two corpus releases. The failure mode it gates
-    * (r10 verdict #3): q107's split is a pure function of the CLUSTER
+    * FLIPS between two corpus releases. The failure mode it gates:
+    * q107's split is a pure function of the CLUSTER
     * id, and cluster ids are min-doc-id canonicals — when a release's
     * additions MERGE two clusters (or a removal takes a cluster's
     * min-id member), the surviving canonical changes, the md5 bucket
@@ -2710,7 +2676,7 @@ object Dedup extends QueryModule {
       .toDF("doc_id", "band_key")
     val predP = col("doc_id") % 7 =!= 2
     val predC = col("doc_id") % 9 =!= 4
-    val (prev, cur) = inParallel(
+    val (prev, cur) = Overlap.pair(
       splitAssignFrom(docs.filter(predP), banded.filter(predP), "q111p"),
       splitAssignFrom(docs.filter(predC), banded.filter(predC), "q111c"))
     flipReport(prev, cur)
@@ -2755,7 +2721,7 @@ object Dedup extends QueryModule {
       .toDF("doc_id", "band_key")
     val predP = col("doc_id") % 7 =!= 2
     val predC = col("doc_id") % 9 =!= 4
-    val (prev, cur) = inParallel(
+    val (prev, cur) = Overlap.pair(
       Scratch.materializePartitioned(
         splitAssignFrom(docs.filter(predP), banded.filter(predP), "q124p"),
         "q124_prev_assign", "split"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Overlap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,7 +60,7 @@ final case class Partials(rels: Seq[(String, DataFrame)],
   /** Store every relation partitioned by batch_id, named `<tag>_<name>`;
     * the stores are independent jobs and overlap like [[write]]'s. */
   def store(tag: String): Partials =
-    copy(rels = rels.map(_._1).zip(Partials.overlapped(rels.map {
+    copy(rels = rels.map(_._1).zip(Overlap.all(rels.map {
       case (n, df) => () =>
         Scratch.materializePartitioned(df, s"${tag}_$n", "batch_id")
     })))
@@ -70,7 +71,7 @@ final case class Partials(rels: Seq[(String, DataFrame)],
     * other's idle cores, and a micro-batch pays one write latency
     * instead of one per relation. */
   def write(dirs: Partials.Dirs, batchId: Long): Unit = {
-    Partials.overlapped(dirs.map { case (n, dir) => () =>
+    Overlap.all(dirs.map { case (n, dir) => () =>
       this(n).drop("batch_id").write.mode("overwrite")
         .parquet(s"$dir/batch_id=$batchId")
     })
@@ -88,15 +89,15 @@ object Partials {
     Partials(rels.map { case (n, df) => n -> df.withColumn("batch_id", lit(batchId)) })
 
   /** The stored value, partition-discovered; `batch_id` is cast back to
-    * long (partition inference narrows it to int). A relation named in
-    * `emptyAs` (name → DDL) may have no data files yet — Spark writes
-    * none for a 0-row partition, so schema inference would fail; it then
-    * reads as an empty relation of that schema (the strip store is
-    * legitimately empty before the bootstrap freeze). */
+    * long (partition inference narrows it to int). `shape` is the
+    * family's relation schemas (name → DDL): a relation with no data
+    * files — nothing promoted yet, every batch demoted, or a 0-row
+    * partition, for which Spark writes no file — reads as an empty
+    * relation of its shape, since schema inference would fail. */
   def read(spark: SparkSession, dirs: Dirs,
-      emptyAs: Map[String, String] = Map.empty): Partials =
+      shape: Map[String, String]): Partials =
     Partials(dirs.map { case (n, dir) =>
-      n -> emptyAs.get(n).filterNot(_ => hasData(dir)).fold(
+      n -> shape.get(n).filterNot(_ => hasData(dir)).fold(
         spark.read.parquet(dir)
           .withColumn("batch_id", col("batch_id").cast("long")))(ddl =>
         spark.createDataFrame(
@@ -116,15 +117,4 @@ object Partials {
     * surviving state. */
   def demote(dirs: Dirs, batchId: Long): Unit =
     dirs.foreach { case (_, dir) => Scratch.deleteTree(s"$dir/batch_id=$batchId") }
-
-  /** Run independent jobs overlapped on [[Dedup.driverPool]], split in
-    * halves over [[Dedup.inParallel]] (two jobs → one pair, four → two
-    * nested pairs); results keep the jobs' order. */
-  private[graft] def overlapped[A](jobs: Seq[() => A]): Seq[A] =
-    if (jobs.size <= 1) jobs.map(_())
-    else {
-      val (a, b) = jobs.splitAt(jobs.size / 2)
-      val (ra, rb) = Dedup.inParallel(overlapped(a), overlapped(b))
-      ra ++ rb
-    }
 }

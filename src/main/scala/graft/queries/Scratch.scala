@@ -25,7 +25,7 @@ object Scratch {
     * (HDFS/S3) — the cluster-scale requirement an executor-local
     * `.cache()` cannot meet.
     *
-    * The root is PROCESS-keyed (r08 review): two JVMs sharing one
+    * The root is PROCESS-keyed: two JVMs sharing one
     * durable scratch dir at different scale factors (driver verify at
     * sf0.01 while a builder bench runs sf0.1 — orderings outside this
     * repo's control) would otherwise overwrite each other's
@@ -87,7 +87,7 @@ object Scratch {
     *    partition, which is exactly why the durable path exists for
     *    cluster runs.
     *
-    * LIFECYCLE (r11 advice): each invocation pins a fresh checkpoint
+    * LIFECYCLE: each invocation pins a fresh checkpoint
     * copy for the session — repeated invocations accumulate unless the
     * caller sweeps. Both harnesses do: Bench/Verify run
     * `Harness.settle` (unpersist every persistent RDD + clearCache)
@@ -96,16 +96,17 @@ object Scratch {
     * use [[materializeManaged]] and release); iterative kernels whose
     * round-k−1 state dies mid-plan must use [[materializeManaged]].
     */
-  /** CONTRACT (r14 advice): materialize is EAGER in every mode — the
+  /** CONTRACT: materialize is EAGER in every mode — the
     * parquet write executes the plan, and localCheckpoint defaults to
     * eager=true — and evaluates EVERY output column (both modes write
     * the full schema). Callers rely on this for side-effecting output
     * columns (the CC convergence accumulator); a third mode must keep
     * both halves of the contract or connectedComponents' round-1 guard
-    * fails loudly.
+    * fails loudly. Being an action, every materialize is the
+    * [[graft.Ledger]] leg `name`.
     */
   def materialize(df: DataFrame, name: String): DataFrame =
-    df.sparkSession.conf.getOption("graft.scratch.dir") match {
+    graft.Ledger.leg(name)(df.sparkSession.conf.getOption("graft.scratch.dir") match {
       case Some(_) =>
         val root = scratchRoot(df)
         installCleanup(root)
@@ -113,7 +114,7 @@ object Scratch {
         df.write.mode("overwrite").parquet(path)
         df.sparkSession.read.parquet(path)
       case None => df.localCheckpoint()
-    }
+    })
 
   /** [[materialize]] with an explicit RELEASE handle — for iterative
     * kernels (q93's rank rounds, the CC label ping-pong) whose round-k−1
@@ -122,7 +123,7 @@ object Scratch {
     * blocks are only reclaimed when the driver GC happens to collect the
     * RDD reference, so a 10-round kernel × warmup+reps accumulates every
     * round's raw UnsafeRows in block-manager storage — the measured
-    * 64 GiB local-heap envelope of q93 at 100× (r10 verdict #1).
+    * 64 GiB local-heap envelope of q93 at 100×.
     *
     * Durable mode: release deletes the scratch parquet subtree. Local
     * mode: release unpersists the checkpoint's underlying RDD blocks
@@ -135,7 +136,7 @@ object Scratch {
     */
   def materializeManaged(df: DataFrame, name: String)
       : (DataFrame, () => Unit) =
-    df.sparkSession.conf.getOption("graft.scratch.dir") match {
+    graft.Ledger.leg(name)(df.sparkSession.conf.getOption("graft.scratch.dir") match {
       case Some(_) =>
         val root = scratchRoot(df)
         installCleanup(root)
@@ -150,7 +151,7 @@ object Scratch {
           case _ => () // unexpected plan shape: fall back to GC reclaim
         }
         (cp, release)
-    }
+    })
 
   /** [[materialize]] with a PARTITION column — for stored state whose
     * lifecycle operations are per-partition, e.g. the provenance-tagged
@@ -168,7 +169,7 @@ object Scratch {
     */
   def materializePartitioned(df: DataFrame, name: String, partCol: String)
       : DataFrame =
-    df.sparkSession.conf.getOption("graft.scratch.dir") match {
+    graft.Ledger.leg(name)(df.sparkSession.conf.getOption("graft.scratch.dir") match {
       case Some(_) =>
         val root = scratchRoot(df)
         installCleanup(root)
@@ -184,5 +185,5 @@ object Scratch {
           .select(df.columns.map(org.apache.spark.sql.functions.col)
             .toIndexedSeq: _*)
       case None => df.localCheckpoint()
-    }
+    })
 }

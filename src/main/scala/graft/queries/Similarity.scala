@@ -366,7 +366,6 @@ object Similarity extends QueryModule {
     // The scratch name is CALL-SITE-keyed: q37 and q88 both route here,
     // and in parquet-scratch mode a shared fixed name would let the
     // second call overwrite files a still-lazy first result reads
-    // (r08 review)
     val e = Scratch.materialize(withNorm(Tables.embeddings(s, d)), s"${tag}_e")
     ivfRanked(centroidRanks(e, mkCent(e)), nProbe, nq)._1
   }
@@ -550,6 +549,10 @@ object Similarity extends QueryModule {
     val e = withNorm(Tables.embeddings(s, d))
     (e, seededCent(e))
   }
+
+  /** The stored semantic relation's schema ([[Partials.read]]). */
+  private[graft] val SemShape = Map(
+    "lists" -> "idx_id BIGINT, cid BIGINT, i_emb ARRAY<FLOAT>, i_nrm DOUBLE, batch_id BIGINT")
 
   /** One batch's semantic partials: its `lists` rows, assigned under
     * the FROZEN quantizer `cent`. Assignment is per-vector under a fixed
@@ -1009,7 +1012,7 @@ object Similarity extends QueryModule {
         // Σ(x/‖x‖) — a raw-vector mean is norm-weighted, and one
         // large-norm outlier could tilt the update enough to RAISE the
         // objective, breaking the monotone-descent invariant q85 pins
-        // TRUE (r08 review; guaranteed descent needs the unit-vector
+        // TRUE (guaranteed descent needs the unit-vector
         // mean)
         val updated = assign.select(col("cid"), col("nrm"),
             posexplode(col("embedding")).as(Seq("dim", "v")))

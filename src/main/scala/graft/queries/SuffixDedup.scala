@@ -80,14 +80,13 @@ object SuffixDedup extends QueryModule {
     * suffix as TOKEN-ID longs plus a 64-bit routing hash of its
     * MinSpan-id prefix.
     *
-    * Hash encoding (r09, replacing the r08 dictionary — measured): the
-    * suffix exchange is the engine's widest shuffle — cross-doc-gram
-    * positions × MaxSpan blowup, shipped TWICE (ascending + descending
-    * scan) — and it must not carry token STRINGS. The r08 design built
-    * an exact distinct-token dictionary (dense int ids) whose encode
-    * leg — a corpus-wide token join plus a per-doc regroup — profiled
-    * as ~65% of the post-prune suffix build at 30× (tools/SfxProf).
-    * Token ids are now `xxhash64` of the token bytes, computed INLINE
+    * Hash encoding, not a dictionary (measured): the suffix exchange is
+    * the engine's widest shuffle — cross-doc-gram positions × MaxSpan
+    * blowup, shipped TWICE (ascending + descending scan) — and it must
+    * not carry token STRINGS. An exact distinct-token dictionary (dense
+    * int ids) needs an encode leg — a corpus-wide token join plus a
+    * per-doc regroup — that profiles as ~65% of the post-prune suffix
+    * build at 30×. Token ids are `xxhash64` of the token bytes, computed INLINE
     * in the per-doc tokenize pass: the encode leg is embarrassingly
     * parallel — no dictionary, no corpus-wide join, no regroup
     * shuffle — and trivially deterministic under lineage recompute.
@@ -118,7 +117,7 @@ object SuffixDedup extends QueryModule {
     // the vocab relation the expand is Heaps-law small. The xxhash64
     // here is the SQL twin of the lambda's XXH64 call.
     //
-    // Verdict CACHED per canonicalized input plan (r09 advice): q82,
+    // Verdict CACHED per canonicalized input plan: q82,
     // q83, and q98 each call suffixEntries on the same documents
     // relation, and the gate's corpus tokenize was paid three times
     // for one immutable input. Same canonical plan ⇒ same files ⇒ same
@@ -141,8 +140,7 @@ object SuffixDedup extends QueryModule {
     // per-doc token-id sequences, MATERIALIZED: the compact pivot of the
     // whole pipeline (8 bytes/token as one long array per doc) — both
     // the gram census below and the pruned wide emit re-read it, so the
-    // corpus tokenize+hash runs once
-    val tTids = System.nanoTime()
+    // corpus tokenize+hash runs once (the `qsa_tids` ledger leg)
     val tidsByDoc = Scratch.materialize(
       docs.select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)]
@@ -154,9 +152,6 @@ object SuffixDedup extends QueryModule {
         }
         .toDF("doc_id", "tids"),
       "qsa_tids")
-    if (s.conf.getOption("graft.engine.timing").contains("true"))
-      System.err.println(
-        f"[timing] sfx tidsByDoc ${(System.nanoTime() - tTids) / 1e9}%.3fs")
     // SINGLE-DOC-GRAM PRUNE (r09, measured): a position whose
     // MinSpan-gram occurs in only ONE document can never reach
     // ell ≥ MinSpan — every LCP ≥ MinSpan partner shares the exact

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Ledger, Overlap, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,9 +30,9 @@ object TextAnalysis extends QueryModule {
   // (q79's audit + streaming curate), and Dedup.dekOf (q67/q98's
   // composed front half). A tuned threshold must move ALL of them
   // together; hand-copies previously risked a silent fork between the
-  // composed pipelines and the verdict they cite (r07 review).
+  // composed pipelines and the verdict they cite.
   //
-  // KNOWN cross-engine edge (r08 review, the normMd5/wordsCol
+  // KNOWN cross-engine edge (the normMd5/wordsCol
   // discipline): \s and \w differ between Spark (Java regex — \s
   // includes U+000B vertical tab) and DuckDB's RE2 (\s is exactly
   // [\t\n\f\r ]). Every shared class here and every \S+ tokenizer in
@@ -1121,31 +1121,19 @@ object TextAnalysis extends QueryModule {
     } finally s.conf.set(key, saved)
   }
 
-  /** Opt-in phase timing (`graft.engine.timing=true`, the GraphRunner
-    * convention): wall time per training phase to stderr. Measured
-    * attribution lives in BASELINE.md (r07 verdict #7): the loop is
-    * job-fixed-cost-bound — a 4/8/16/32 partition sweep is flat-to-
-    * worse, and fusing the per-round gradient into the line-search job
-    * (4 decimal gradients per probe) was measured SLOWER than the
-    * split shape, so this spelling is the floor.
-    */
-  private def clsTimed[A](s: SparkSession, phase: String)(f: => A): A =
-    if (!s.conf.getOption("graft.engine.timing").exists(_.toBoolean)) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally System.err.println(
-        f"[q73-timing] $phase ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    }
-
   private def clsTrainNarrow(s: SparkSession, feats: DataFrame,
       labels: DataFrame): (Array[Double], Seq[Double]) = {
     import s.implicits._
-    val f = clsTimed(s, "feats-materialize")(Scratch.materialize(
+    // the loop is job-fixed-cost-bound: a 4/8/16/32 partition sweep is
+    // flat-to-worse, and fusing the per-round gradient into the
+    // line-search job (4 decimal gradients per probe) measures SLOWER
+    // than the split shape, so this spelling is the floor. Each phase
+    // is a ledger leg (the materialize is one by its scratch name).
+    val f = Scratch.materialize(
       feats.join(labels, "doc_id").repartition(
         s.conf.getOption("graft.q73.par").map(_.toInt).getOrElse(4)),
-      "q73_feats"))
-    val Seq((n, nPos)) = clsTimed(s, "label-counts")(labels
+      "q73_feats")
+    val Seq((n, nPos)) = Ledger.leg("label-counts")(labels
       .agg(count(lit(1)).cast("double"), sum(col("y")).cast("double"))
       .as[(Double, Double)].collect().toSeq)
 
@@ -1195,13 +1183,13 @@ object TextAnalysis extends QueryModule {
     w(ClsD) =
       if (nPos <= 0.0 || nPos >= n) 0.0
       else math.log(nPos / (n - nPos))
-    var loss = clsTimed(s, "probe0")(lossesOf(Seq(w, w, w, w)).head)
+    var loss = Ledger.leg("probe0")(lossesOf(Seq(w, w, w, w)).head)
     val losses = Seq.newBuilder[Double]
     losses += loss
     var lr = ClsLr
     var stalled = false
     for (_ <- 1 to ClsRounds if !stalled) {
-      val grad = clsTimed(s, "grad")(f.join(docOf(w)
+      val grad = Ledger.leg("grad")(f.join(docOf(w)
           .select(col("doc_id"), col("p"), col("y").as("yd")), "doc_id")
         .groupBy(col("idx"))
         .agg(sum((col("x") * (col("p") - col("yd"))).cast("decimal(30,15)"))
@@ -1216,7 +1204,7 @@ object TextAnalysis extends QueryModule {
       var accepted = false
       while (!accepted && tries < 3) {
         val steps = Seq(lr * 4, lr * 1.5, lr, lr / 4)
-        val ls = clsTimed(s, "linesearch")(lossesOf(steps.map(candAt)))
+        val ls = Ledger.leg("linesearch")(lossesOf(steps.map(candAt)))
         // 1e-9 acceptance margin: the probe losses are double sums
         // (shuffle-order jitter ~1e-15 relative), so require a real
         // improvement — the trajectory then depends only on the
@@ -1774,6 +1762,10 @@ object TextAnalysis extends QueryModule {
 
   /** One batch's census partials: `counts` (source, lmd5, cnt)
     * distinct-doc counts and `srcn` (source, n_docs). */
+  private[graft] val CensusShape = Map(
+    "counts" -> "source STRING, lmd5 STRING, cnt BIGINT, batch_id BIGINT",
+    "srcn" -> "source STRING, n_docs BIGINT, batch_id BIGINT")
+
   private[graft] def censusPartials(docs: DataFrame, batchId: Long)
       : Partials = {
     val pd = pageDocs(docs)
@@ -2249,12 +2241,12 @@ object TextAnalysis extends QueryModule {
   private[graft] def cleanManifest(docs: DataFrame): DataFrame = {
     val pd = pageDocs(docs)
     // ONE materialized digest scan feeds the census AND the election
-    // (the q130 LineContainProf lesson applied to the composition:
-    // both are digest-only consumers of the exploded page, and each
-    // previously re-ran the corpus-scale pageLines HOF chain from its
-    // own lineDigests/lineIdxDigests plan; the rewrite leg below still
-    // needs the page ARRAYS and keeps its own scan — three corpus
-    // scans become two)
+    // (q130's shared line scan applied to the composition: both are
+    // digest-only consumers of the exploded page, and separate
+    // lineDigests/lineIdxDigests plans would each re-run the
+    // corpus-scale pageLines HOF chain; the rewrite leg below still
+    // needs the page ARRAYS and keeps its own scan — two corpus scans,
+    // not three)
     val lid = Scratch.materialize(lineIdxDigests(pd), "q122_lid")
       .toDF("source", "doc_id", "line_idx", "lmd5")
     // materialized: the chrome set is semantically tiny (q114's bound)
@@ -2394,7 +2386,7 @@ object TextAnalysis extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     val ev = docs.filter(col("doc_id") % 10 === 3)
     val tr = docs.filter(col("doc_id") % 10 =!= 3)
-    // Eval-side size GUARD (r11 verdict): everything derived from `ev`
+    // Eval-side size GUARD: everything derived from `ev`
     // below (per-query term flags, the leaked-pair set, the eval gram
     // broadcast feeding it) is driver/broadcast-resident, and the pair
     // scorer is a DELIBERATE broadcast nested loop — |corpus|×|eval| by
@@ -2407,7 +2399,7 @@ object TextAnalysis extends QueryModule {
     // The count is one narrow pushed-down scan of the id column.
     val maxEvalDocs = docs.sparkSession.conf
       .getOption("graft.hn.maxEvalDocs").map(_.toLong).getOrElse(2000000L)
-    val nEval = ev.count()
+    val nEval = Ledger.leg("evcount")(ev.count())
     require(nEval <= maxEvalDocs,
       s"hard-negative mining premises a benchmark-sized eval shard " +
         s"($nEval docs > graft.hn.maxEvalDocs=$maxEvalDocs): the " +
@@ -2415,7 +2407,7 @@ object TextAnalysis extends QueryModule {
         "scorer is a broadcast nested loop. For an eval side this " +
         "large, summarize the leak grams with the q80 Bloom pattern " +
         "and shuffle the scorer instead of raising the bound.")
-    // ONE corpus word scan (r14 optimization, guide §2.3/§2.4): the
+    // ONE corpus word scan (guide §2.3/§2.4): the
     // words explode previously fed FOUR un-shared consumers (dl twice —
     // corpus agg + scored join — and tf twice — df agg + scored join),
     // so the full train-side regexp explode executed 4× per run (the
@@ -2696,7 +2688,7 @@ object TextAnalysis extends QueryModule {
        |FROM p ORDER BY doc_id""".stripMargin
 
   // ---- q130: PARAGRAPH-grain containment — the production complement
-  // of q127 (r12 verdict #4): whole-doc engulfment probes word grams,
+  // of q127: whole-doc engulfment probes word grams,
   // but a FineWeb-style pipeline also dedups QUOTED PARAGRAPHS living
   // inside otherwise-novel pages — a page that block-quotes most of
   // another page has low word-gram containment noise yet near-total
@@ -2787,10 +2779,9 @@ object TextAnalysis extends QueryModule {
   }
 
   /** ONE corpus page-line scan serving BOTH line-containment consumers
-    * (LineContainProf attribution at 100×: the census and the index
-    * each re-ran the exploded [[pageLines]] HOF chain — 39 s + 48 s of
-    * the entry's ~108 s — because they consumed separate [[lineDigests]]
-    * plans): materialize `(source, doc_id, lmd5)` once, derive the
+    * (at 100× separate [[lineDigests]] plans for the census and the
+    * index would each re-run the exploded [[pageLines]] HOF chain —
+    * 39 s + 48 s of the entry's ~108 s): materialize `(source, doc_id, lmd5)` once, derive the
     * chrome census AND the surviving-line index from the stored
     * relation. Returns (line relation, broadcast chrome pairs). */
   private[graft] def lineRelAndChrome(pd: DataFrame,
@@ -2990,7 +2981,7 @@ object TextAnalysis extends QueryModule {
       col("batch_id") === 0L, "q131")
     // the probe-side line scan needs only the frozen chrome, so it
     // overlaps the store on a driver thread
-    val (live, gp) = Dedup.inParallel(
+    val (live, gp) = Overlap.pair(
       Dedup.storeContain(taggedLineGrams(li, chrome, batchCol), "q131"),
       probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
         "q131"))
@@ -3014,7 +3005,7 @@ object TextAnalysis extends QueryModule {
       .when(col("doc_id") % 7 < 4, lit(1L)).otherwise(lit(2L))
     val (li, chrome) = taggedLinesAndChrome(docs.filter(m < 5), batchCol,
       col("batch_id") === 0L, "q132")
-    val (stored, gp) = Dedup.inParallel(
+    val (stored, gp) = Overlap.pair(
       Dedup.storeContain(taggedLineGrams(li, chrome, batchCol), "q132"),
       probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
         "q132"))
@@ -3139,11 +3130,12 @@ object TextAnalysis extends QueryModule {
   /** One micro-batch of `(doc_id, source, text)` pages for the
     * re-freeze-capable store, under the currently published `chrome`:
     * ONE digests scan, materialized, feeds the census partials AND both
-    * postings sides (release frees it once the writes land). */
+    * postings sides (release frees it once the writes land). The scan
+    * is named by the store's `tag` and the batch id. */
   private[graft] def lineRefreezePartials(docs: DataFrame, chrome: DataFrame,
-      batchId: Long): Partials = {
+      batchId: Long, tag: String): Partials = {
     val (liRaw, release) = Scratch.materializeManaged(
-      lineDigests(pageDocs(docs)), s"sprf_li$batchId")
+      lineDigests(pageDocs(docs)), s"${tag}_li$batchId")
     val li = liRaw.toDF("source", "doc_id", "lmd5")
     val p = lineCensusPartials(li, batchId) ++
       lineStatePartials(li, broadcast(chrome), batchId)
@@ -3235,7 +3227,7 @@ object TextAnalysis extends QueryModule {
         .select(col("source"), col("lmd5")), s"${tag}_nc")
       .toDF("source", "lmd5"))
     val refrozen = refreezeLineState(stored, oldChrome, newChrome)
-    val (rsurv, gp) = Dedup.inParallel(
+    val (rsurv, gp) = Overlap.pair(
       // republish the surviving index (strip' stays lazy — the probe
       // never consumes it; LineRefreezeSpec pins its correctness)
       Scratch.materialize(refrozen("surv"), s"${tag}_rsurv"),

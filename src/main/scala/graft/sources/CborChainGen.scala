@@ -8,8 +8,9 @@ import graft.core._
   * as a real chain producer's does: each tx spends outputs of earlier
   * blocks BY THEIR REAL HASH, and every block's prev-hash links the
   * real header digest of its predecessor. One implementation shared by
-  * CborCodecSpec, TcpChainSyncSpec and tools/TcpPerf so the specs and
-  * the perf tool always measure the same chain shape.
+  * CborCodecSpec, TcpChainSyncSpec and the benchmark's chain
+  * catch-up, so the specs and the benchmark exercise the same chain
+  * shape.
   */
 object CborChainGen {
 
@@ -37,7 +38,7 @@ object CborChainGen {
         // zero-input txs could otherwise draw byte-identical bodies
         // (same address, same amount) → identical content-derived
         // hashes → a DUPLICATE (txHash, 0) outpoint in the live pool,
-        // double-spendable and oracle-ambiguous (r07 review). Real
+        // double-spendable and oracle-ambiguous. Real
         // chains get this uniqueness from witnesses/fees; the fixture
         // gets it from the amount.
         txNonce += 1
@@ -64,7 +65,7 @@ object CborChainGen {
     */
   def balanceOracle(chain: Seq[(Array[Byte], Block)],
       watched: Map[String, String] = Watched): Seq[(Long, Map[String, Long])] =
-    // ONE spelling of the imperative pool fold (r08 review): two
+    // ONE spelling of the imperative pool fold: two
     // hand-copies of the oracle algorithm could silently diverge on a
     // same-block-ordering change
     ChainGen.balanceOracle(chain.map(_._2), watched)

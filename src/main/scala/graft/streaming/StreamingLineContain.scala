@@ -36,7 +36,7 @@ object StreamingLineContain {
   def freeze(corpus: DataFrame): FrozenLineIndex = {
     val pd = TextAnalysis.pageDocs(corpus)
     // one materialized page-line scan feeds the census AND the index —
-    // the LineContainProf-attributed shape batch q130 uses
+    // the shape batch q130 uses
     val (li, chrome) = TextAnalysis.lineRelAndChrome(pd, "slinec")
     val g = Scratch.materialize(
       TextAnalysis.lineGramIdsOfRel(li, chrome), "slinec_lines")

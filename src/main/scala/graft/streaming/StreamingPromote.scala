@@ -87,7 +87,8 @@ object StreamingPromote {
   def probeLexLive(spark: SparkSession, exactDir: String, bandsDir: String,
       probeDocs: DataFrame): DataFrame =
     Dedup.probeLex(Dedup.collapseLex(
-      Partials.read(spark, lexDirs(exactDir, bandsDir))), probeDocs)
+      Partials.read(spark, lexDirs(exactDir, bandsDir), Dedup.LexShape)),
+      probeDocs)
 
   /** Probe the live semantic lists (`Similarity.semPartials`, assigned
     * under the FROZEN quantizer `cent` — no retrain on promote, exactly
@@ -95,14 +96,16 @@ object StreamingPromote {
   def probeSemLive(spark: SparkSession, cent: DataFrame, dirs: Partials.Dirs,
       probeE: DataFrame): DataFrame =
     Similarity.probeSem(
-      Similarity.collapseSem(cent, Partials.read(spark, dirs)), probeE)
+      Similarity.collapseSem(cent,
+        Partials.read(spark, dirs, Similarity.SemShape)), probeE)
 
   /** Probe the live containment state (`Dedup.containPartials`): batch
     * q128's probe contract (rarest-gram probes by the COLLAPSED df,
     * candidate-bounded confirm) over whatever has been promoted so far. */
   def probeContainLive(spark: SparkSession, dirs: Partials.Dirs,
       probeDocs: DataFrame): DataFrame = {
-    val idx = Dedup.collapseContain(Partials.read(spark, dirs))
+    val idx = Dedup.collapseContain(
+      Partials.read(spark, dirs, Dedup.ContainShape))
     val gp = Dedup.gramIds(probeDocs)
     Dedup.probeContain(idx, gp,
       gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "spromc")
@@ -116,7 +119,8 @@ object StreamingPromote {
     * — the horizon the re-freeze store below removes. */
   def probeLineContainLive(spark: SparkSession, chrome: DataFrame,
       dirs: Partials.Dirs, probeDocs: DataFrame): DataFrame = {
-    val idx = Dedup.collapseContain(Partials.read(spark, dirs))
+    val idx = Dedup.collapseContain(
+      Partials.read(spark, dirs, Dedup.ContainShape))
     val gp = TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome)
     Dedup.probeContain(idx, gp,
       gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "spromlc")
@@ -143,19 +147,20 @@ object StreamingPromote {
       cntDir: String, srcnDir: String, chromeDir: String) {
     def parts: Partials.Dirs = Seq("surv" -> survDir, "strip" -> stripDir,
       "counts" -> cntDir, "srcn" -> srcnDir)
+    /** The store's scratch key: per-batch scans of two stores never
+      * share a path. */
+    def tag: String = "sprf" + Integer.toHexString(survDir.hashCode)
   }
 
-  /** Any of the four relations can still be empty — the strip store
-    * before the bootstrap freeze. */
-  private val RefreezeEmptyAs = {
+  /** The four relations' schemas; the strip store is legitimately
+    * empty before the bootstrap freeze. */
+  private val RefreezeShape = {
     val postings = "source STRING, doc_id BIGINT, gid BIGINT, batch_id BIGINT"
-    Map("surv" -> postings, "strip" -> postings,
-      "counts" -> "source STRING, lmd5 STRING, cnt BIGINT, batch_id BIGINT",
-      "srcn" -> "source STRING, n_docs BIGINT, batch_id BIGINT")
+    Map("surv" -> postings, "strip" -> postings) ++ TextAnalysis.CensusShape
   }
 
   private def readRefreeze(spark: SparkSession, dirs: LineRefreezeDirs)
-      : Partials = Partials.read(spark, dirs.parts, RefreezeEmptyAs)
+      : Partials = Partials.read(spark, dirs.parts, RefreezeShape)
 
   /** The re-freeze store's per-batch build: pages stripped against the
     * chrome published when the micro-batch runs (empty before the
@@ -164,7 +169,7 @@ object StreamingPromote {
   def refreezePartials(dirs: LineRefreezeDirs)(batch: DataFrame,
       batchId: Long): Partials =
     TextAnalysis.lineRefreezePartials(batch,
-      publishedChrome(batch.sparkSession, dirs), batchId)
+      publishedChrome(batch.sparkSession, dirs), batchId, dirs.tag)
 
   /** The currently published chrome pairs `(source, lmd5)` — EMPTY
     * before the first freeze, which makes the bootstrap publish a plain
@@ -224,7 +229,7 @@ object StreamingPromote {
     // would read the already-swapped surv and lose the quarantine. The
     // three staged writes only READ old state — independent jobs,
     // overlapped (guide §2.6)
-    Partials.overlapped(Seq(
+    graft.Overlap.all(Seq(
       () => stageNext(refrozen("surv"), dirs.survDir, Some("batch_id")),
       () => stageNext(refrozen("strip"), dirs.stripDir, Some("batch_id")),
       () => stageNext(newC, dirs.chromeDir, None)))

@@ -3,7 +3,6 @@ package graft.tools
 import graft.core._
 import graft.operators._
 import graft.sources.ChainGen
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only surface driver: exercises the chain engine end-to-end through
@@ -12,11 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object ChainDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     val root = java.nio.file.Files.createTempDirectory("chaindemo").toString
     val reducers = ReducerGraphs.default(ChainGen.Watched)

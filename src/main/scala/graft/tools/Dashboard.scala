@@ -4,7 +4,6 @@ import graft.core._
 import graft.operators._
 import graft.sources.ChainGen
 import graft.streaming.Telemetry
-import org.apache.spark.sql.SparkSession
 
 /** Console progress dashboard — the reference's TUI
   * (`CardanoIndexWorker.Dashboard.cs`) reduced to its data: renders the
@@ -34,11 +33,7 @@ object Dashboard {
     require(args.nonEmpty, "usage: Dashboard <storeRoot> [watchSeconds]")
     val root = args(0)
     val watchSec = if (args.length > 1) args(1).toInt else 0
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val store = new StateStore(root, spark)
     val reducers: Seq[ChainReducer] = ReducerGraphs.default(ChainGen.Watched)

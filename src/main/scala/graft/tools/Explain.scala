@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only plan audit: dump `explain("formatted")` for every catalog
   * query so pushdown (PushedFilters/ReadSchema), join strategy
@@ -13,13 +12,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
-    // Harness.tuned: dumped plans reflect the SAME session conf the
-    // bench/verify sessions plan under (r14 — the SHJ baseline)
-    val spark = graft.Harness.tuned(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // dumped plans reflect the SAME session conf the bench and verify
+    // sessions plan under (the shuffled-hash join baseline)
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

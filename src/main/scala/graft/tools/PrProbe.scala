@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: does the q93 per-iteration join re-shuffle the edge
@@ -9,11 +8,7 @@ import org.apache.spark.sql.functions._
 object PrProbe {
   def main(args: Array[String]): Unit = {
     val d = "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val s = spark
     val e0 = graft.Tables.orders(s, d)

@@ -3,7 +3,6 @@ package graft.tools
 import graft.core._
 import graft.operators._
 import graft.sources.ChainGen
-import org.apache.spark.sql.SparkSession
 
 /** Operator-initiated rewind — the reference's rollback mode (T11,
   * `CardanoIndexWorker.cs:181-202`): a one-shot maintenance entrypoint
@@ -23,7 +22,7 @@ object Rewind {
     // a DESTRUCTIVE maintenance tool must reject unrecognized words,
     // not default them: 'Rewind <root> <slot> jdbc' previously consumed
     // 'jdbc' as the mode (→ Exclusive) and rewound the WRONG backend
-    // while printing success (r07 review)
+    // while printing success
     val extra = args.drop(2).map(_.toLowerCase)
     extra.foreach(a => require(
       a == "inclusive" || a == "exclusive" || a == "jdbc",
@@ -31,11 +30,7 @@ object Rewind {
         "[inclusive|exclusive] [jdbc]"))
     val mode: RollbackMode =
       if (extra.contains("inclusive")) Inclusive else Exclusive
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val store: Store =
       if (extra.contains("jdbc")) new JdbcStore(root, spark)

@@ -4,7 +4,7 @@ import graft.{Harness, SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Measured scale-slope validation (r06 verdict #3): the engine's 100 TB
+/** Measured scale-slope validation: the engine's 100 TB
   * claims rest on plan-SHAPE audits; this tool adds the measured check.
   * It synthesizes a FACTOR× corpus from sf0.1 by replication with
   * shifted ids, times the expensive catalog entries at 1× and FACTOR×,
@@ -125,19 +125,11 @@ object ScaleSlope {
     // execution on BOTH dirs, so the slope measures data scaling
     val reps = math.max(2, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
     val out = s"/tmp/graft_scale$factor"
-    // Harness.tuned (r15, verdict #1): the slope tool now measures the
-    // SAME session conf Bench/Verify/Explain plan under (the r14 SHJ
-    // baseline) — at-scale rows must validate the shipped posture, not
-    // a conf the bench no longer runs. Pre-r15 ledger rows were
-    // measured WITHOUT it; new rows land in a new ledger section, and
-    // SPARK_GRAFT_SHJ=off reproduces the historical conf on any tool.
-    val spark = Harness.tuned(SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // the slope tool measures under the SAME session Bench and Verify
+    // plan under — at-scale rows must validate the shipped posture, not
+    // a conf the bench does not run; SPARK_GRAFT_SHJ=off reproduces the
+    // sort-merge-only conf.
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     buildCorpus(spark, base, out, factor)
@@ -146,7 +138,7 @@ object ScaleSlope {
 
     // per-query failure RECORDS a -1 data point instead of aborting:
     // the tool exists to catch a blow-up at scale, and a blow-up must
-    // not destroy the 11 slopes already measured (r07 review; Bench's
+    // not destroy the 11 slopes already measured (Bench's
     // own try/catch discipline)
     def time(name: String, dir: String): Double =
       try {
@@ -162,7 +154,7 @@ object ScaleSlope {
           Harness.settle(spark)
           -1.0
       }
-    // calib-BRACKETED (r09 verdict #2/#3): a slope ledger is only
+    // calib-BRACKETED: a slope ledger is only
     // comparable across sessions if each query's bracket shows what the
     // host was doing while IT ran — one probe before every query's
     // reps, one after the last (the bench-timeline discipline applied
@@ -201,7 +193,7 @@ object ScaleSlope {
   }
 
   /** Write the FACTOR× replicated corpus (idempotent overwrite). */
-  private[tools] def buildCorpus(spark: SparkSession, base: String, out: String,
+  private def buildCorpus(spark: SparkSession, base: String, out: String,
       factor: Int): Unit = {
     val copies = spark.range(factor).select(col("id").as("k"))
     def load(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
@@ -236,7 +228,7 @@ object ScaleSlope {
     // dims pass through unchanged (fixed model side); events goes
     // through Tables.events — a raw read would crash on a
     // TIMESTAMP(NANOS) round, the exact footer case that reader
-    // normalizes (r07 review)
+    // normalizes
     Seq("region", "nation", "customer", "supplier", "part")
       .foreach(t => write(load(t), t))
     write(Tables.events(spark, base), "events")

@@ -3,7 +3,6 @@ package graft.tools
 import graft.core._
 import graft.operators._
 import graft.sources.ChainGen
-import org.apache.spark.sql.SparkSession
 
 /** Live smoke monitor — the reference's
   * `LiveSmokeMonitor.cs:12-60` contract: poll a store for up to
@@ -20,16 +19,12 @@ object SmokeMonitor {
     val root = args(0)
     val minBlocks = if (args.length > 1) args(1).toLong else 1L
     val timeoutSec = if (args.length > 2) args(2).toInt else 60
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     val store = new StateStore(root, spark)
     val reducers: Seq[ChainReducer] = ReducerGraphs.default(ChainGen.Watched)
     // by TABLE NAME, not position — reducers.head silently broke on any
-    // reorder of ReducerGraphs.default (r07 review; the q60 fix applied
+    // reorder of ReducerGraphs.default (the q60 fix applied
     // here too)
     val blocksSchema = reducers.flatMap(_.tables)
       .find(_.name == "blocks")

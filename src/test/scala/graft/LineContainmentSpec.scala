@@ -126,7 +126,7 @@ class LineContainmentSpec extends SparkSpec {
     // 1100003 ≡ 5 (mod 9): passes the parent predicate, reaches the
     // guard; block residue 1.1e6 ≥ SnipOff refuses (the snipOf
     // discipline at line grain). 3·10⁷ + 2 ≡ 5 (mod 9), residue 2:
-    // the ScaleSlope/ContainProf copy-shift convention passes.
+    // the ScaleSlope copy-shift convention passes.
     val bad = docsDf(Seq((1100003L, "s0", words("w", 48))))
     val e = intercept[Exception] {
       TextAnalysis.quoteOf(bad).collect()

@@ -686,7 +686,8 @@ class PlanAuditSpec extends SparkSpec {
     val dirs = Seq("exact" -> tmpDir("a100-se"), "bands" -> tmpDir("a100-sb"))
     graft.queries.Dedup.lexPartials(spark.read.parquet(fDir), 0L)
       .write(dirs, 0L)
-    val stored = graft.queries.Partials.read(spark, dirs)
+    val stored = graft.queries.Partials.read(spark, dirs,
+      graft.queries.Dedup.LexShape)
     val p = planOfDf(graft.queries.Dedup.probeLex(
       graft.queries.Dedup.collapseLex(stored.union(
         graft.queries.Dedup.lexPartials(spark.read.parquet(dDir), 1L))),
@@ -734,7 +735,8 @@ class PlanAuditSpec extends SparkSpec {
     val dirs = Seq("lists" -> tmpDir("a101-sl"))
     graft.queries.Similarity.semPartials(spark.read.parquet(fDir), cent, 0L)
       .write(dirs, 0L)
-    val stored = graft.queries.Partials.read(spark, dirs)
+    val stored = graft.queries.Partials.read(spark, dirs,
+      graft.queries.Similarity.SemShape)
     val p = planOfDf(graft.queries.Similarity.probeSem(
       graft.queries.Similarity.collapseSem(cent, stored.union(
         graft.queries.Similarity.semPartials(

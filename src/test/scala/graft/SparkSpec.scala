@@ -10,9 +10,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `df` and returns how many partition directories its file
+    * scans read — the scan's own "number of partitions read" metric, so
+    * a pruning assertion fails on a scan that opens a retracted
+    * partition, not only on a plan that lacks a partition filter. */
+  def partitionsRead(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    SparkSpec.scans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metrics("numPartitions").value
+    }.sum
+  }
 }
 
 object SparkSpec {
+  private object scans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

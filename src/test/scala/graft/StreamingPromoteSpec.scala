@@ -213,14 +213,14 @@ class StreamingPromoteSpec extends SparkSpec {
     } finally q.stop()
     val oneShot = builtRows(docs.filter(m < 5))
     assert(oneShot.nonEmpty, "fixture census is empty — spec is vacuous")
-    assert(censusRows(Partials.read(sp, dirs)) == oneShot,
+    assert(censusRows(Partials.read(sp, dirs, TextAnalysis.CensusShape)) == oneShot,
       "streamed census diverged from the one-shot build (gate leak?)")
     // demote the SECOND delta micro-batch (batch id 1): the directory
     // drop must equal a census that never counted those documents
     Partials.demote(dirs, 1L)
     val without = builtRows(
       frozen.union(groups(0).toSeq.toDF("doc_id", "text", "source")))
-    assert(censusRows(Partials.read(sp, dirs)) == without,
+    assert(censusRows(Partials.read(sp, dirs, TextAnalysis.CensusShape)) == without,
       "demoted census diverged from never-promoted")
   }
 
@@ -255,7 +255,7 @@ class StreamingPromoteSpec extends SparkSpec {
         .unionByName(docs.filter(m >= 5))
       val dirs = Seq("g" -> tmpDir("spromote-cg"),
         "sizes" -> tmpDir("spromote-csz"))
-      StreamingPromote.promoteBatch(Dedup.containPartials(frozen, -1L),
+      StreamingPromote.promoteBatch(Dedup.containPartials(frozen, -1L, "spc"),
         dirs, -1L)
       val deltaRows = delta.as[(Long, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped(
@@ -264,7 +264,7 @@ class StreamingPromoteSpec extends SparkSpec {
       val mem = MemoryStream[(Long, String)]
       val q = StreamingPromote.promote(
         mem.toDF().toDF("doc_id", "text"), "doc_id", dirs)(
-        Dedup.containPartials)
+        Dedup.containPartials(_, _, "spc"))
       try {
         mem.addData(chunks(0).toIndexedSeq)
         q.processAllAvailable()
@@ -299,7 +299,7 @@ class StreamingPromoteSpec extends SparkSpec {
         .union(chunks(2).toSeq.toDF("doc_id", "text"))
       val gp = Dedup.gramIds(probeDocs)
       val want = containRows(Dedup.probeContain(
-        Dedup.collapseContain(Dedup.containPartials(surviving, 0L)), gp,
+        Dedup.collapseContain(Dedup.containPartials(surviving, 0L, "tpw")), gp,
         gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "tpromw"))
       assert(containRows(StreamingPromote.probeContainLive(
         sp, dirs, probeDocs)) == want,
