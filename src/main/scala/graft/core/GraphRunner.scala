@@ -45,7 +45,7 @@ object GraphRunner {
   /** Hashes that are ENGINE sentinels, not chain positions — never
     * persisted into a checkpoint window (a fake-hash point would later
     * be offered as an intersection candidate and can never match a
-    * block, hard-failing the next sync — the r08 Rewind finding).
+    * block, hard-failing the next sync after a rewind).
     */
   private[core] val SentinelHashes =
     Set("resume", "rebuild", "origin", "rewind")
@@ -69,8 +69,7 @@ final class GraphRunner(
   // a misspelled configured-start key would silently fall back to
   // origin, count the intended reducer as a FRESH root, and trigger a
   // destructive genesis rebuild on a populated store — reject typos
-  // with the same strictness names and dependencies already get (r07
-  // review)
+  // with the same strictness names and dependencies already get
   require(configuredStarts.keySet.subsetOf(reducers.map(_.name).toSet),
     s"configuredStarts for unknown reducer(s): ${
       (configuredStarts.keySet -- reducers.map(_.name)).mkString(", ")}")
@@ -211,9 +210,11 @@ final class GraphRunner(
   }
 
   /** The most-advanced reducer checkpoint (the engine's notion of tip). */
-  def maxCheckpointSlot: Long =
-    store.checkpoints.values
-      .flatMap(CheckpointWindow.latest).map(_.slot).maxOption.getOrElse(-1L)
+  def maxCheckpointSlot: Long = tipOf(store.checkpoints)
+
+  private def tipOf(cps: Map[String, Seq[Point]]): Long =
+    cps.values.flatMap(CheckpointWindow.latest).map(_.slot).maxOption
+      .getOrElse(-1L)
 
   /** Process an event sequence: accumulate roll-forwards, flush on batch
     * size (T1 trigger a), on open-batch age ≥ maxDelayMs (trigger b — the
@@ -319,39 +320,41 @@ final class GraphRunner(
     // executor cache, released after the commit. Reducers at the same
     // dependency depth are independent, so their outputs materialize as
     // CONCURRENT Spark actions (the reference runs its reducers'
-    // RollForwardAsync concurrently per batch too).
+    // RollForwardAsync concurrently per batch too). A reducer's ledger
+    // leg spans its whole share of the batch: its state reads, its plan
+    // building and staged collects, and its output collect.
     val toUnpersist = mutable.ArrayBuffer[DataFrame]()
+    def build(r: ChainReducer): (String, Map[String, DataFrame]) =
+      Ledger.leg(r.name) {
+        // T9: blocks at or before the reducer's start point are not
+        // delivered to it (a late-starting reducer indexes from its
+        // start, not genesis — reference `StartPoints.cs:201-215`).
+        val startSlot = startPoints(r.name).slot
+        val in = if (startSlot >= 0) blocksDf.filter(col("slot") > startSlot)
+                 else blocksDf
+        // plan building reads the store and registers staged frames on
+        // the shared context: one reducer at a time, while the output
+        // collects of the others run
+        val out = ctx.synchronized(r.rollForward(in, ctx))
+        // a key outside the reducer's declared tables would silently
+        // clobber another reducer's append (or die later in slotCols
+        // with no attribution) — fail here, naming the offender
+        val bad = out.keys.filterNot(declaredTables(r.name))
+        require(bad.isEmpty, s"reducer ${r.name} returned undeclared " +
+          s"table(s): ${bad.mkString(", ")} (declared: ${
+            declaredTables(r.name).mkString(", ")})")
+        r.name -> out.map { case (t, df) =>
+          if (store.preferLocalOutputs) t -> BatchContext.localized(spark, df)
+          else {
+            val c = df.cache(); toUnpersist += c; t -> c
+          }
+        }
+      }
     try {
       levels.foreach { level =>
-        val built = level.map { r =>
-          // T9: blocks at or before the reducer's start point are not
-          // delivered to it (a late-starting reducer indexes from its
-          // start, not genesis — reference `StartPoints.cs:201-215`).
-          val startSlot = startPoints(r.name).slot
-          val in = if (startSlot >= 0) blocksDf.filter(col("slot") > startSlot)
-                   else blocksDf
-          val out = r.rollForward(in, ctx)
-          // a key outside the reducer's declared tables would silently
-          // clobber another reducer's append (or die later in slotCols
-          // with no attribution) — fail here, naming the offender
-          val bad = out.keys.filterNot(declaredTables(r.name))
-          require(bad.isEmpty, s"reducer ${r.name} returned undeclared " +
-            s"table(s): ${bad.mkString(", ")} (declared: ${
-              declaredTables(r.name).mkString(", ")})")
-          r.name -> out
-        }
-        val shapedByReducer: Seq[(String, Map[String, DataFrame])] =
-          if (store.preferLocalOutputs)
-            Overlap.all(built.map { case (name, out) => () =>
-              name -> Ledger.leg(name)(out.map { case (t, df) =>
-                t -> BatchContext.localized(spark, df)
-              })
-            })
-          else built.map { case (name, out) =>
-            name -> out.map { case (t, df) =>
-              val c = df.cache(); toUnpersist += c; t -> c
-            }
-          }
+        val shapedByReducer =
+          if (store.preferLocalOutputs) Overlap.all(level.map(r => () => build(r)))
+          else level.map(build)
         shapedByReducer.foreach { case (name, out) =>
           ctx.outputs = ctx.outputs.updated(name, out)
           out.foreach { case (t, df) => appends(t) = (df, slotCols(t)) }
@@ -451,12 +454,12 @@ final class GraphRunner(
       case Inclusive => point.slot
       case Exclusive => point.slot + 1
     }
-    val current = maxCheckpointSlot
+    val stored = store.checkpoints
+    val current = tipOf(stored)
     if (guarded)
       require(current < 0 || current - delSlot < maxRollbackSlots,
         s"rollback to $delSlot exceeds MaxRollbackSlots=$maxRollbackSlots " +
           s"behind current $current")
-    val stored = store.checkpoints
     // an EXCLUSIVE rollback's point SURVIVES on-chain by definition —
     // keep it in each window. Without this, a rollback deeper than the
     // ~10-slot window depth (any real Rewind, any deep reorg) emptied

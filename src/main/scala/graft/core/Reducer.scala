@@ -49,6 +49,11 @@ final case class TableDef(name: String, schema: StructType,
   * `DependentTransactionReducer.cs:28-32`). Dataflow dependency inside one
   * batch is free here: the child's plan simply consumes the parent's
   * DataFrame.
+  *
+  * A context lives for one batch, and nothing commits while it does, so
+  * `table` reads each table's committed state once and hands every later
+  * caller (a reducer's spend matching, its child's `tableWithBatch`, the
+  * commit's compactors) the same relation.
   */
 final class BatchContext(
     val spark: SparkSession,
@@ -56,7 +61,11 @@ final class BatchContext(
     defs: Map[String, TableDef],
     var outputs: Map[String, Map[String, DataFrame]]) {
 
-  def table(name: String): DataFrame = store.read(name, defs(name).schema)
+  private val committed = scala.collection.mutable.Map[String, DataFrame]()
+
+  def table(name: String): DataFrame = committed.synchronized {
+    committed.getOrElseUpdate(name, store.read(name, defs(name).schema))
+  }
 
   /** Only the newest committed segment of a table — the bounded prior-
     * state read for tables whose latest segment is self-contained (every

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -106,25 +106,22 @@ final class WalletUtxoReducer(watched: Map[String, String]) extends ChainReducer
       compactWith = Some(Compaction.DropUnmatched(
         "utxo_created", Seq("txHash", "txIndex"), "spentSlot"))))
 
-  private def watchedDf(spark: SparkSession): DataFrame =
-    ChainReducers.watchedDf(spark, watched)
-
   def rollForward(blocks: DataFrame, ctx: BatchContext): Map[String, DataFrame] = {
     // O6: tx → created outputs with positional index; O2: watched filter
-    // as a broadcast join on the raw address (P7: no decode in hot path).
+    // as a map-literal lookup on the raw address (P7: no decode in the
+    // hot path, and no broadcast stage in front of the staged collect).
     // `created` feeds BOTH returned tables (spent's matchable union
     // embeds it) — stage it once so the two collects share one
-    // execution instead of running the explode+join subtree twice.
+    // execution instead of running the explode+filter subtree twice.
     val created = ctx.stage(blocks
       .select(col("slot"), explode(col("transactions")).as("tx"))
       .select(col("slot"), col("tx.txHash").as("txHash"),
         posexplode(col("tx.outputs")).as(Seq("txIndex", "o")))
       .select(col("txHash"), col("txIndex").cast("int").as("txIndex"),
         col("slot"), col("o.address").as("address"),
+        typedLit(watched).apply(col("o.address")).as("addressName"),
         col("o.lovelace").as("amount"))
-      .join(broadcast(watchedDf(ctx.spark)), "address")
-      .select(col("txHash"), col("txIndex"), col("slot"), col("address"),
-        col("addressName"), col("amount")))
+      .filter(col("addressName").isNotNull))
     // O6: tx → spent refs
     val refs = blocks
       .select(col("slot").as("spentSlot"), explode(col("transactions")).as("tx"))
@@ -157,18 +154,33 @@ object WalletUtxoReducer {
   * that block — an incrementally-maintained aggregate with full history.
   * Reference `WatchedAddressBalanceReducer.cs:79-96`.
   *
-  * Incremental design: prior balance per address comes from this table's
-  * own latest row (O14's latest-per-key read), batch deltas (+amount at
-  * creation slot, −amount at spend slot) are cumulative-summed over the
-  * batch's block grid. Work per batch is O(batch), not O(history).
+  * One relation, one exchange: the batch's rows are a tagged union,
+  * partitioned once on `addressName` and read by one running window
+  * ordered by (prior rows first, slot, kind).
+  *  - `Prior`: the rows of this table's newest committed segment (O14's
+  *    latest-per-key read). Every batch writes every watched address at
+  *    every block, so that segment holds each address's latest balance
+  *    and the read is O(previous batch), not O(snapshot history).
+  *    `last(base, ignoreNulls)` over the running frame is then the
+  *    balance at the segment's highest slot, `max_by(balance, slot)`.
+  *  - `Delta`: +amount at a creation slot, −amount at a spend slot. Only
+  *    slots of this reducer's own blocks count: a parent that starts
+  *    earlier delivers creates and spends no snapshot covers.
+  *  - `Grid`: one row per block and watched address, exploded from the
+  *    watched-set literal. It sorts after the deltas of its slot, so the
+  *    running `sum(delta)` includes them.
+  * Only grid rows are kept, and of a block slot delivered twice (at-least-
+  * once streaming input) only the first. At a few hundred rows per batch
+  * each query stage costs more than its compute, so the plan has one
+  * shuffle and no join beyond the spend match and the slot filter.
   */
 final class BalanceSnapshotReducer(watched: Map[String, String]) extends ChainReducer {
-  // one name per address, ONE ADDRESS PER NAME: the snapshot grid keys
-  // on addressName while carrying one row per address, so two addresses
-  // sharing a name would double-join every delta and assign the running
-  // sums nondeterministically between them — corrupt balances that the
-  // prior-snapshot read then compounds forever. The reference's config
-  // is name-keyed (one address per name); fail loudly on anything else.
+  // one name per address, ONE ADDRESS PER NAME: the snapshot window
+  // partitions on addressName while each grid row carries one address,
+  // so two addresses sharing a name would sum each other's deltas into
+  // both running balances — corrupt balances that the prior-snapshot
+  // read then compounds forever. The reference's config is name-keyed
+  // (one address per name); fail loudly on anything else.
   require(watched.values.toSet.size == watched.size,
     s"watched address names must be unique: ${watched.values.toSeq.sorted}")
   val name = "balance_by_address"
@@ -181,54 +193,54 @@ final class BalanceSnapshotReducer(watched: Map[String, String]) extends ChainRe
     StructField("balance", LongType)))))
 
   def rollForward(blocks: DataFrame, ctx: BatchContext): Map[String, DataFrame] = {
+    import BalanceSnapshotReducer._
     import org.apache.spark.sql.expressions.Window
-    val spark = ctx.spark
-    import spark.implicits._
+    def tagged(df: DataFrame, kind: Int, address: Column, base: Column,
+        delta: Column): DataFrame =
+      df.select(col("addressName"), address.cast(StringType).as("address"),
+        col("slot"), lit(kind).as("kind"), base.cast(LongType).as("base"),
+        delta.cast(LongType).as("delta"))
+    val none = lit(null)
     val created = ctx.parentOutput("wallet_utxo", "utxo_created")
     val spentRefs = ctx.parentOutput("wallet_utxo", "utxo_spent")
     val allCreated = ctx.tableWithBatch("wallet_utxo", "utxo_created")
+    val prior = tagged(ctx.latestSegment("balance_snapshots"), Prior,
+      none, col("balance"), none)
     val plus = created.select(col("addressName"), col("slot"),
       col("amount").as("delta"))
     val minus = spentRefs
       .join(allCreated, Seq("txHash", "txIndex"))
       .select(col("addressName"), col("spentSlot").as("slot"),
         (-col("amount")).as("delta"))
-    val deltas = plus.unionByName(minus)
-      .groupBy(col("addressName"), col("slot"))
-      .agg(sum(col("delta")).as("delta"))
-    // Prior balance per address = latest committed snapshot (O14 read).
-    // Every batch writes a snapshot for EVERY watched address at every
-    // block (the grid below), so the newest committed segment alone
-    // contains the latest balance of every address — the prior read is
-    // O(previous batch), not O(snapshot history).
-    val prior = ctx.latestSegment("balance_snapshots")
-      .groupBy(col("addressName"))
-      .agg(max_by(col("balance"), col("slot")).as("prior"))
-    val grid = blocks.select(col("slot")).distinct()
-      .crossJoin(broadcast(ChainReducers.watchedDf(spark, watched)))
-    val w = Window.partitionBy(col("addressName")).orderBy(col("slot"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val snaps = grid
-      .join(deltas, Seq("addressName", "slot"), "left_outer")
-      .join(broadcast(prior), Seq("addressName"), "left_outer")
-      .withColumn("balance",
-        coalesce(col("prior"), lit(0L)) +
-          sum(coalesce(col("delta"), lit(0L))).over(w))
+    val deltas = tagged(plus.unionByName(minus)
+      .join(blocks.select(col("slot")), Seq("slot"), "left_semi"),
+      Delta, none, none, col("delta"))
+    val grid = tagged(blocks.select(col("slot"),
+        explode(typedLit(watched.toSeq.sorted)).as("w"))
+      .select(col("slot"), col("w._1").as("address"),
+        col("w._2").as("addressName")),
+      Grid, col("address"), none, none)
+    val ordered = Window.partitionBy(col("addressName"))
+      .orderBy(col("kind") =!= Prior, col("slot"), col("kind"))
+    val running =
+      ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val repeated = lag(col("kind"), 1).over(ordered) === Grid &&
+      lag(col("slot"), 1).over(ordered) === col("slot")
+    val snaps = prior.unionByName(deltas).unionByName(grid)
+      .select(col("addressName"), col("address"), col("slot"), col("kind"),
+        (coalesce(last(col("base"), ignoreNulls = true).over(running), lit(0L)) +
+          coalesce(sum(col("delta")).over(running), lit(0L))).as("balance"),
+        coalesce(repeated, lit(false)).as("repeated"))
+      .filter(col("kind") === Grid && !col("repeated"))
       .select(lit(name).as("reducer"), col("addressName"), col("address"),
         col("slot"), col("balance"))
     Map("balance_snapshots" -> snaps)
   }
 }
 
-/** Shared helpers for the reducer family. */
-object ChainReducers {
-  /** The watched-address relation BOTH watched reducers join against —
-    * one spelling, so the two reducers' views of the watched set cannot
-    * drift (column naming, normalization) independently.
-    */
-  def watchedDf(spark: SparkSession,
-      watched: Map[String, String]): DataFrame = {
-    import spark.implicits._
-    watched.toSeq.toDF("address", "addressName")
-  }
+object BalanceSnapshotReducer {
+  /** Row kinds of the snapshot window, in their order within one slot. */
+  private final val Prior = 0
+  private final val Delta = 1
+  private final val Grid = 2
 }

@@ -117,14 +117,14 @@ class GraphRunnerSpec extends SparkSpec {
   }
 
   test("deep rewind beyond the checkpoint window: restart replays WITHOUT duplicating retained rows") {
-    // r07 review regression: the checkpoint window holds only ~10
-    // newest distinct slots, and applyRollback used to merely TRIM it
-    // — a rewind deeper than the window emptied every window while the
-    // tables kept their rows below the rewind slot; the next restart
-    // then saw "no checkpoints", replayed from genesis, and silently
-    // DOUBLED the retained prefix. Exclusive rollbacks now persist
-    // their surviving point; reconcileStartup additionally rebuilds
-    // when data exists with zero checkpoints.
+    // the checkpoint window holds only ~10 newest distinct slots: a
+    // rollback that merely TRIMMED it would empty every window on a
+    // rewind deeper than the window while the tables keep their rows
+    // below the rewind slot, and the next restart would see "no
+    // checkpoints", replay from genesis, and silently DOUBLE the
+    // retained prefix. Exclusive rollbacks therefore persist their
+    // surviving point, and reconcileStartup rebuilds when data exists
+    // with zero checkpoints.
     val blocks = ChainGen.generate(40, seed = 7L)
     val oracle = ChainGen.balanceOracle(blocks)
     val root = tmpDir("deep-rewind")
@@ -209,5 +209,48 @@ class GraphRunnerSpec extends SparkSpec {
       EngineShuffle.exit(spark)
       assert(spark.conf.get(key) == user, "user width not restored")
     } finally spark.conf.set(key, user)
+  }
+
+  test("a batch reads each committed table once; a rollback reads the checkpoints once") {
+    // forwarding store that counts its state reads
+    final class Counting(inner: Store) extends Store {
+      val reads = scala.collection.mutable.ArrayBuffer[String]()
+      def root: String = inner.root
+      override def preferLocalOutputs: Boolean = inner.preferLocalOutputs
+      def batchId: Long = inner.batchId
+      def checkpoints: Map[String, Seq[Point]] = {
+        reads += "checkpoints"; inner.checkpoints
+      }
+      def read(table: String, schema: StructType): DataFrame = {
+        reads += table; inner.read(table, schema)
+      }
+      def readLatestSegment(table: String, schema: StructType): DataFrame = {
+        reads += s"latest:$table"; inner.readLatestSegment(table, schema)
+      }
+      def commit(batchId: Long, appends: Map[String, (DataFrame, String)],
+          checkpoints: Map[String, Seq[Point]],
+          compactors: Map[String, BoundCompactor],
+          onSegment: (String, Double) => Unit): Boolean =
+        inner.commit(batchId, appends, checkpoints, compactors, onSegment)
+      def rollback(delSlot: Long, slotCols: Map[String, String],
+          checkpoints: Map[String, Seq[Point]]): Unit =
+        inner.rollback(delSlot, slotCols, checkpoints)
+    }
+    val blocks = ChainGen.generate(12, seed = 42L)
+    Seq[String => Store](new JdbcStore(_, spark), new StateStore(_, spark))
+      .foreach { mk =>
+        val store = new Counting(mk(tmpDir("reads")))
+        val runner = new GraphRunner(spark, store,
+          ReducerGraphs.default(ChainGen.Watched))
+        runner.flush(blocks.take(6))
+        store.reads.clear()
+        runner.flush(blocks.drop(6))
+        val perTable = store.reads.groupBy(identity).view.mapValues(_.size).toMap
+        assert(perTable.get("utxo_created").contains(1), perTable)
+        assert(perTable.values.forall(_ == 1), perTable)
+        store.reads.clear()
+        runner.applyRollback(Point(blocks(8).hash, blocks(8).slot), Exclusive)
+        assert(store.reads.toSeq == Seq("checkpoints"), store.reads)
+      }
   }
 }

@@ -92,4 +92,25 @@ class LedgerSpec extends SparkSpec {
     assert(Ledger.df(spark).filter("leg = 'outer/inner' AND jobs = 1").count() == 1)
     assert(Ledger.within("outer/inner", "outer") && !Ledger.within("outerx", "outer"))
   }
+
+  test("a chain batch runs every action inside a reducer's or the commit's leg") {
+    // a reducer's leg spans its rollForward too: the wallet_utxo staged
+    // collect and balance's eager analysis land in their reducer's row,
+    // one window per reducer per batch, nothing in the caller's own row
+    import graft.core._
+    val blocks = graft.sources.ChainGen.generate(12, seed = 42L)
+    val reducers = graft.operators.ReducerGraphs.default(
+      graft.sources.ChainGen.Watched)
+    val runner = new GraphRunner(spark,
+      new JdbcStore(tmpDir("ledger-chain"), spark), reducers)
+    runner.flush(blocks.take(6))
+    Ledger.take(spark)
+    Ledger.leg("sync")(runner.flush(blocks.drop(6)))
+    val r = rowsOf(Ledger.take(spark))
+    assert(r("sync").executions == 0 && r("sync").jobs == 0,
+      s"actions outside every reducer leg: ${r("sync")}")
+    reducers.foreach(red => assert(r(s"sync/${red.name}").entries == 1))
+    assert(r("sync/wallet_utxo").executions >= 3) // staged + two outputs
+    assert(r("sync/commit").entries == 1)
+  }
 }

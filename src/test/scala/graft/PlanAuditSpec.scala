@@ -606,17 +606,16 @@ class PlanAuditSpec extends SparkSpec {
       s"document text crosses the wire: ${e.child.output.map(_.name)}"))
   }
 
-  // ---- pre-sort boundary classifier (the r12 q104/q106 lesson made
-  // mechanical — r12 verdict #6): a global ORDER BY's range partitioner
+  // ---- pre-sort boundary classifier: a global ORDER BY's range partitioner
   // SAMPLES its child, executing it once before the real pass — but the
   // sampling pass REUSES any shuffle map outputs below it, so only a
   // chain that runs scan-stage all the way up to the sort pays its work
   // twice. Decision rule for "should this entry get a pre-sort manifest
   // cut":
   //   shuffle-terminated → the cut is a NO-OP — don't add one (q104 and
-  //     q106 were measured as exactly this in r12 and kept plain);
+  //     q106 measure exactly this and stay plain);
   //   scan-stage → the sampler re-runs the whole chain — cut iff the
-  //     chain is expensive (q105/q112: real ~2×, cut in r12; q126's
+  //     chain is expensive (q105/q112: real ~2×, so they cut; q126's
   //     single cheap scan absorbs the second pass and stays plain).
 
   /** Classify what the demo sort's range sampler would re-execute:
@@ -649,7 +648,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   // ---- frozen-index lifecycle (q100–q103): the STRUCTURAL claims the
-  // FrozenIndexSpec equivalences assume, machine-checked (r09 verdict #4)
+  // FrozenIndexSpec equivalences assume, machine-checked
 
   /** Executed plan with AQE off, for a DataFrame built inline (the
     * planOf twin for lifecycle plans that need constructed files).
@@ -927,8 +926,8 @@ class PlanAuditSpec extends SparkSpec {
   test("q118/q122: the keep-first ELECTION subtree itself is digest-only — no wide column in any of its exchanges") {
     // the builders materialize the drop index (the manifest cut), so
     // the election's winner-groupBy / digest-join / per-doc-agg
-    // exchanges are invisible to the tests above (r11 advice: their
-    // assertions were vacuous for this subtree) — audit it directly,
+    // exchanges are invisible to the tests above (their assertions
+    // would be vacuous for this subtree) — audit it directly,
     // un-materialized, via the shared keepFirstDrops spelling
     import graft.queries.TextAnalysis
     val docs = Tables.documents(spark, sf)
@@ -1025,5 +1024,57 @@ class PlanAuditSpec extends SparkSpec {
     val exchanges = p.collect { case e: Exchange => e }
     assert(exchanges.isEmpty,
       s"the stateless scorer grew a shuffle:\n$p")
+  }
+
+  /** Query executions of every SQL action `body` runs, after it ran. */
+  private def executionsOf(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
+  }
+
+  test("chain sync: balance snapshots run through one shuffle; the staged created collect broadcasts nothing") {
+    // the executed (final adaptive) plans of the default graph's second
+    // JDBC-store batch, the one with committed state and a prior segment:
+    // each extra exchange or broadcast is one more query stage per commit
+    import graft.core._
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val blocks = graft.sources.ChainGen.generate(20, seed = 42L)
+    val runner = new GraphRunner(spark,
+      new JdbcStore(tmpDir("plan-chain"), spark),
+      graft.operators.ReducerGraphs.default(graft.sources.ChainGen.Watched))
+    runner.flush(blocks.take(10))
+    val plans = executionsOf(runner.flush(blocks.drop(10)))
+    def named(cols: String*) = plans.filter(qe =>
+      qe.analyzed.output.map(_.name) == cols &&
+        !qe.analyzed.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val Seq(balance) = named("reducer", "addressName", "address", "slot", "balance")
+    val Seq(created) = named("txHash", "txIndex", "slot", "address",
+      "addressName", "amount")
+    val audit = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val bp = balance.executedPlan
+    val shuffles = audit.collectWithSubqueries(bp) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"balance plan has ${shuffles.size} shuffles:\n$bp")
+    assert(audit.collectWithSubqueries(bp) {
+      case j: BroadcastNestedLoopJoinExec => j }.isEmpty, bp.toString)
+    val cp = created.executedPlan
+    assert(audit.collectWithSubqueries(cp) {
+      case e: BroadcastExchangeExec => e }.isEmpty, cp.toString)
   }
 }
