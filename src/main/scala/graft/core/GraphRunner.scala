@@ -99,34 +99,6 @@ final class GraphRunner(
     */
   def reducerNames: Set[String] = byName.keySet
 
-  /** Engine-side shuffle width. A micro-batch is bounded by the trigger
-    * size (T1), so the session's shuffle parallelism — sized for
-    * full-scan analytics (32 here, thousands on a cluster) — schedules
-    * mostly-empty shuffle tasks in every reducer join/agg of every
-    * batch. Measured on local[32] @ batch 500: 32→8 partitions lifted
-    * the JDBC chain rate ~33% (426→565 blk/s median) with the segment
-    * store seeing a similar gain. The width is applied around the
-    * engine's own actions via the depth-counted [[EngineShuffle]]
-    * guard (concurrent runners on one session don't clobber each
-    * other's restore; an analytics query PLANNED during an engine
-    * action does see the narrow width — run analytics on their own
-    * session if that window matters). `graft.engine.
-    * shufflePartitions`: override for deployments whose per-batch state
-    * joins need cluster-wide width (e.g. a segment store with a huge
-    * live set); 0 disables the override entirely.
-    */
-  private val engineShuffleParts: Int =
-    spark.conf.getOption("graft.engine.shufflePartitions").map(_.toInt)
-      .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
-
-  private def withEngineShuffle[A](f: => A): A =
-    if (engineShuffleParts <= 0) f
-    else {
-      EngineShuffle.enter(spark, engineShuffleParts)
-      try f
-      finally EngineShuffle.exit(spark)
-    }
-
   // ---- graph validation (reference ReducerExtension.cs:110-124,
   // CardanoIndexWorker.DependencyGraph.cs:8-51) ----
   reducers.foreach { r =>
@@ -306,9 +278,11 @@ final class GraphRunner(
     * newest distinct-slot points (newest first); `minSlot` = the batch's
     * lowest slot (prior checkpoint points at or past it are superseded —
     * the set-level equivalent of folding `addRollForward` per block).
+    * Reducers plan at the session's shuffle width: AQE coalesces a
+    * micro-batch's post-shuffle partitions to one task.
     */
   private def flushImpl(blocksDf: DataFrame, top: Seq[Point],
-      minSlot: Long): Unit = withEngineShuffle {
+      minSlot: Long): Unit = {
     val batchId = store.batchId + 1
     val ctx = new BatchContext(spark, store, tableDefs, Map.empty)
     val appends = mutable.LinkedHashMap[String, (DataFrame, String)]()
@@ -619,58 +593,5 @@ final class GraphRunner(
         floor = math.min(floor, kept)
         true
     })
-  }
-}
-
-/** Depth-counted, session-keyed engine-width override. A plain
-  * save/set/restore races between concurrently-flushing runners on one
-  * session (the multi-root Worker shape): B would "save" A's engine
-  * override and restore it as the user width, leaving the session
-  * narrowed forever. Here the FIRST entrant per session saves the
-  * user's width and only the LAST exitor restores it; overlapping
-  * engine actions run at the most recent entrant's width (they all
-  * want a narrow engine width — which one is immaterial).
-  */
-private[graft] object EngineShuffle {
-  // per-session STACK of entrant widths (not a bare depth counter): two
-  // runners on one session may use DIFFERENT engineShuffleParts, and an
-  // inner exit must restore the OUTER entrant's width — a counter alone
-  // left the inner width in force for the rest of the outer action. The
-  // user's own width is captured once at first entry and restored last.
-  private val state =
-    mutable.Map[SparkSession, (List[Int], Option[String])]()
-  def enter(spark: SparkSession, width: Int): Unit = synchronized {
-    // EXPLICIT-set detection, not RuntimeConfig.getOption: getOption
-    // answers the registered default ("200") even when the caller never
-    // set a width, which made the unset-restore leg below unreachable
-    // and silently pinned the default as if user-chosen.
-    // SQLConf.contains consults only explicitly-set session entries.
-    val (stack, saved) = state.getOrElse(spark,
-      (Nil,
-        if (spark.sessionState.conf.contains("spark.sql.shuffle.partitions"))
-          spark.conf.getOption("spark.sql.shuffle.partitions")
-        else None))
-    state(spark) = (width :: stack, saved)
-    spark.conf.set("spark.sql.shuffle.partitions", width)
-  }
-  def exit(spark: SparkSession): Unit = synchronized {
-    val (stack, saved) = state(spark)
-    stack.tail match {
-      case outer :: _ =>
-        state(spark) = (stack.tail, saved)
-        spark.conf.set("spark.sql.shuffle.partitions", outer)
-      case Nil =>
-        state.remove(spark)
-        saved match {
-          case Some(p) => spark.conf.set("spark.sql.shuffle.partitions", p)
-          // the caller never EXPLICITLY set a width (see enter's
-          // explicit-set detection): restore to "unset" so the session
-          // falls back to its default, instead of silently keeping the
-          // narrow engine width — or the pinned default — for all
-          // later analytics (every harness session sets the width
-          // explicitly, so this leg is defense for embedding callers)
-          case None => spark.conf.unset("spark.sql.shuffle.partitions")
-        }
-    }
   }
 }

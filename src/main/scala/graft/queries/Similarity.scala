@@ -34,11 +34,11 @@ object Similarity extends QueryModule {
     graft.functions.VectorFunctions.floatDot(x, y)
 
   /** The ONE DuckDB spelling of the float dot product — private[graft]
-    * so q34's oracle (Dedup) shares it instead of hand-copying (r08
-    * review): a precision/cast change must reach every embedding
-    * oracle or none. The lambda variable is `i` — callers must not use
-    * 1-letter table aliases named `i` near it (DuckDB silently
-    * captures the alias; the r07 q99 lesson).
+    * so q34's oracle (Dedup) shares it instead of hand-copying it: a
+    * precision/cast change must reach every embedding oracle or none.
+    * The lambda variable is `i` — callers must not use 1-letter table
+    * aliases named `i` near it (DuckDB silently captures the alias, as
+    * q99's oracle once showed).
     */
   private[graft] def dotSql(x: String, y: String): String =
     s"list_sum(list_transform(range(1, len($x) + 1), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
@@ -90,8 +90,8 @@ object Similarity extends QueryModule {
   // shared numeric thresholds live HERE, above every SQL val that
   // interpolates them: an eager val interpolating a later-declared
   // constant runs before its initializer and silently bakes 0.0 into
-  // the oracle (the q99Sql incident — r08 review moved the whole
-  // hazard class to the top of the object)
+  // the oracle (the q99Sql incident; keeping every such constant at
+  // the top of the object removes the whole hazard class)
   private[graft] val SemTau = 0.35 // intra-cluster cosine drop threshold
   // semantic-decontamination threshold for eval-vs-train EMBEDDING
   // contamination (q89): data-calibrated for the synthetic corpus,
@@ -316,8 +316,8 @@ object Similarity extends QueryModule {
     * [[ivfQueryWithFraction]] — ONE spelling of the inverted lists,
     * the probe set, the rounded cosine, and the (cosine desc, cand_id)
     * tie-break, so the q96 certificate can never grade a different
-    * probe than q37/q88 execute (r08 review: the tail was previously
-    * hand-copied in both). Returns (top5, assign, probes).
+    * probe than q37/q88 execute (a hand-copied tail could drift).
+    * Returns (top5, assign, probes).
     */
   private def ivfRanked(scoredCent: DataFrame, nProbe: Int, nq: Long)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -347,8 +347,7 @@ object Similarity extends QueryModule {
   /** Mean probed-list size over the query set as a fraction of the
     * corpus, EXCLUDING the query's own row (its crank-1 list always
     * contains itself; the LSH twin's probedFraction already excludes
-    * self, and the two ride side by side as matched-cost metrics —
-    * r08 review).
+    * self, and the two ride side by side as matched-cost metrics).
     */
   private def probedFracOf(assign: DataFrame, probes: DataFrame,
       n: Double): Double = {
@@ -405,10 +404,10 @@ object Similarity extends QueryModule {
 
   /** [[ivfQuery]] plus its probed fraction from ONE materialized
     * centroid-ranking pass — q96 needs both, and calling ivfQuery and
-    * ivfProbedFraction separately re-ran the corpus × NCent ranking
-    * (and its scratch materialization) twice per invocation (r07
-    * review). Same subplans — centroidRanks is the one shared spelling
-    * — so the result is bit-identical to the separate calls.
+    * ivfProbedFraction separately would run the corpus × NCent ranking
+    * (and its scratch materialization) twice per invocation. Same
+    * subplans — centroidRanks is the one shared spelling — so the
+    * result is bit-identical to the separate calls.
     */
   private[graft] def ivfQueryWithFraction(s: SparkSession, d: String,
       mkCent: DataFrame => DataFrame, nProbe: Int = NProbe,
@@ -961,39 +960,26 @@ object Similarity extends QueryModule {
 
   private[graft] def kmeans(s: SparkSession, d: String,
       iters: Int = KmIters): (DataFrame, DataFrame, Seq[Double]) = {
-    // the training loop is ~10 jobs over MODEL-sized relations (the
-    // N×K argmin, a (cid, dim) aggregate of K·Dim rows, a scalar
-    // probe): at the catalog's corpus shuffle width each pays 32 tasks
-    // of scheduling for rows that fit one buffer — run the loop narrow
-    // and restore (the q73/GraphRunner discipline; r14 verdict #4,
-    // where the 8-core bench ran q59 2.6× FASTER than 32-core). Values
-    // checked unchanged at sf0.001/0.01/0.1 (assignment is a per-vector
-    // argmin — partitioning-independent by construction; the update
-    // means and the wcss probe are float sums whose partial order the
-    // narrower width changes only below the entry's 2-dp rounding and
-    // far below q85's descent margins — outputs diffed bit-equal).
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, s.conf.getOption("graft.q59.par").getOrElse("8"))
-    try kmeansNarrow(s, d, iters)
-    finally s.conf.set(key, saved)
-  }
-
-  private def kmeansNarrow(s: SparkSession, d: String,
-      iters: Int): (DataFrame, DataFrame, Seq[Double]) = {
+    // the loop plans at the session's shuffle width: AQE coalesces the
+    // post-shuffle partitions of its model-sized relations (the N×K
+    // argmin, a (cid, dim) aggregate of K·Dim rows, a scalar probe).
+    // Assignment is a per-vector argmin, independent of partitioning;
+    // the update means and the wcss probe are float sums whose order
+    // the width moves only below the entry's 2-dp rounding and far
+    // below q85's descent margins.
     val (e0, cent0) = kmeansInputs(s, d)
     val e = Scratch.materialize(e0, "q59_e")
     var cent = cent0
     val wcss = Seq.newBuilder[Double]
     var assign: DataFrame = null
-    // managed release of the DEAD rounds (the q93 discipline, closing
-    // the r11 Similarity-pass residual): round k−1's assignment is
-    // unreadable the moment cent(k) materializes, and cent(k−1) the
-    // moment cent(k) does — without release, localCheckpoint mode pins
-    // (iters+1) assignment relations × warmup+reps in block-manager
-    // storage for the session (harmless at this corpus's embedding
-    // size, the q93 failure shape if embeddings ever become the wide
-    // table). The RETURNED final assign/cent are never released.
+    // managed release of the DEAD rounds (the q93 discipline): round
+    // k−1's assignment is unreadable the moment cent(k) materializes,
+    // and cent(k−1) the moment cent(k) does — without release,
+    // localCheckpoint mode pins (iters+1) assignment relations ×
+    // warmup+reps in block-manager storage for the session (harmless at
+    // this corpus's embedding size, the q93 failure shape if embeddings
+    // ever become the wide table). The RETURNED final assign/cent are
+    // never released.
     var releasePrevAssign: () => Unit = () => ()
     var releasePrevCent: () => Unit = () => ()
     for (round <- 0 to iters) {
@@ -1055,9 +1041,9 @@ object Similarity extends QueryModule {
   /** Driver-side k-means model — centroid arrays (KmK × Dim floats),
     * the accepted WCSS trace, and the assignment count: everything the
     * certificate (q85) and the trained-IVF entries (q88/q96) need,
-    * bounded by MODEL size so it can live in [[ModelCache]] (the r06
-    * duplicated-training fix — the certificates used to re-run the full
-    * Lloyd loop).
+    * bounded by MODEL size so it can live in [[ModelCache]]: the
+    * certificates read the cached model instead of re-running the full
+    * Lloyd loop.
     */
   private[graft] final case class KmModel(cent: Seq[(Long, Seq[Float])],
       wcss: Seq[Double], nAssigned: Long)
@@ -1238,8 +1224,8 @@ object Similarity extends QueryModule {
   private[graft] val CertProbeCap = 0.40 // ~NProbe/NCent plus skew allowance
 
   /** Trained-IVF CERTIFICATE (q96) — the driver-verifiable projection of
-    * the rows-only q88, closing the catalog's last oracle gap (r06
-    * verdict #1): trained centroids are float means and can never hash
+    * the rows-only q88, closing the catalog's last oracle gap: trained
+    * centroids are float means and can never hash
     * cross-engine, but the RETRIEVAL CLAIMS can. The entry emits the
     * EXACT brute-force top-5 relation for the 50-query certificate set
     * — which DuckDB re-derives independently, a real parity check on
@@ -1406,7 +1392,7 @@ object Similarity extends QueryModule {
   // lazy (the q99Sql discipline): this val interpolates ANOTHER
   // OBJECT's val, and the eager-init graph is cyclic — TextAnalysis
   // touches Dedup.PackTokRe, Dedup's q34Sql touches this object
-  // (dotSql, r08), and an eager read here then sees TextAnalysis
+  // (dotSql), and an eager read here then sees TextAnalysis
   // MID-init with bm25SqlCtes still null, baking "WITH null," into
   // the oracle (caught by the full gate the same day it was
   // introduced)

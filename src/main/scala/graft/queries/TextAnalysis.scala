@@ -586,7 +586,7 @@ object TextAnalysis extends QueryModule {
     // adjacent pairs via the shared plain-JVM extractor (same \S+
     // class): the transform(sequence, element_at) lambda spelling is
     // CodegenFallback-interpreted — the q24 lesson measured it 3.5x
-    // slower — and duplicated what bigramEntries already does (r08)
+    // slower — and duplicated what bigramEntries already does
     val bigrams = bigramEntries(Tables.documents(s, d))
       .select(col("doc_id"), concat_ws(" ", col("w1"), col("w2")).as("g"))
     val bg = bigrams.groupBy(col("doc_id"), col("g"))
@@ -785,8 +785,8 @@ object TextAnalysis extends QueryModule {
     * literals — NO global window, no single-partition rank funnel
     * (the trap a naive ntile spelling would hit).
     *
-    * Boundary parity is INTEGER-exact, not rounded-double (r10 ADVICE:
-    * both engines linearly interpolate percentiles in doubles, so a
+    * Boundary parity is INTEGER-exact, not rounded-double (both
+    * engines linearly interpolate percentiles in doubles, so a
     * boundary within ~1 ulp of a .00005 edge could round differently
     * at 4 dp and flip a phase on an unlucky corpus). Here the
     * percentile runs over the difficulty in exact ten-thousandths
@@ -1041,8 +1041,8 @@ object TextAnalysis extends QueryModule {
     // TRAINING entry: always retrain, refresh the shared rank map so
     // the encode consumers (q71/q75) reuse THIS training instead of
     // re-running the 16 merge rounds — the ModelCache discipline the
-    // classifier/k-means families already follow (r08 review: BPE
-    // trained three times per catalog pass)
+    // classifier/k-means families already follow (without it, BPE
+    // trains three times per catalog pass)
     val merges = bpeTrainOn(bpeVocab(s, d), BpeMerges)
     ModelCache.put("bpe", d,
       merges.zipWithIndex.map { case ((l, r, _), i) => (l, r) -> i }.toMap)
@@ -1109,30 +1109,16 @@ object TextAnalysis extends QueryModule {
       : (Array[Double], Seq[Double]) = {
     val s = feats.sparkSession
     import s.implicits._
-    // the training loop is ~30 driver-probe jobs over a model-sized
-    // relation: at the catalog's corpus shuffle width each would pay
-    // 32 tasks × 3 stages of scheduling for rows that fit one buffer —
-    // run the loop narrow and restore (the GraphRunner discipline)
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    s.conf.set(key, s.conf.getOption("graft.q73.par").getOrElse("4"))
-    try {
-      clsTrainNarrow(s, feats, labels)
-    } finally s.conf.set(key, saved)
-  }
-
-  private def clsTrainNarrow(s: SparkSession, feats: DataFrame,
-      labels: DataFrame): (Array[Double], Seq[Double]) = {
-    import s.implicits._
-    // the loop is job-fixed-cost-bound: a 4/8/16/32 partition sweep is
-    // flat-to-worse, and fusing the per-round gradient into the
-    // line-search job (4 decimal gradients per probe) measures SLOWER
-    // than the split shape, so this spelling is the floor. Each phase
-    // is a ledger leg (the materialize is one by its scratch name).
+    // the loop is job-fixed-cost-bound. Its aggregations plan at the
+    // session's shuffle width, and AQE coalesces their model-sized
+    // post-shuffle partitions. The feature triples keep a plan-local 4
+    // partitions: a 4/8/16/32 sweep of that width is flat-to-worse, and
+    // fusing the per-round gradient into the line-search job (4 decimal
+    // gradients per probe) measures SLOWER than the split shape, so this
+    // spelling is the floor. Each phase is a ledger leg (the
+    // materialize is one by its scratch name).
     val f = Scratch.materialize(
-      feats.join(labels, "doc_id").repartition(
-        s.conf.getOption("graft.q73.par").map(_.toInt).getOrElse(4)),
-      "q73_feats")
+      feats.join(labels, "doc_id").repartition(4), "q73_feats")
     val Seq((n, nPos)) = Ledger.leg("label-counts")(labels
       .agg(count(lit(1)).cast("double"), sum(col("y")).cast("double"))
       .as[(Double, Double)].collect().toSeq)
@@ -1243,8 +1229,8 @@ object TextAnalysis extends QueryModule {
     */
   /** Driver-side classifier model — the (ClsD+2)-vector of weights and
     * the accepted-loss trace: everything q86's certificate needs,
-    * model-sized, so it lives in [[ModelCache]] (the r06 duplicated-
-    * training fix — q86 used to re-run q73's full GD loop).
+    * model-sized, so it lives in [[ModelCache]] and q86 reads it
+    * instead of re-running q73's full GD loop.
     */
   private[graft] final case class ClsModel(w: IndexedSeq[Double],
       losses: Seq[Double])
@@ -1312,8 +1298,8 @@ object TextAnalysis extends QueryModule {
     * re-derivation). Collected as a bounded model-sized probe and
     * cached per dataset ("clsCnt"), which is what lets the certificate
     * skip its corpus re-scoring pass entirely when q73 has already
-    * scored this session (r09 verdict #6 — the corpus-sized scored
-    * relation stays OUT of the cache; only this statistic goes in).
+    * scored this session (the corpus-sized scored relation stays OUT
+    * of the cache; only this statistic goes in).
     */
   private[graft] def clsMarginCounts(scored: DataFrame)
       : Seq[(Double, Long, Long)] = {
@@ -1344,7 +1330,7 @@ object TextAnalysis extends QueryModule {
 
   private def q73(s: SparkSession, d: String): DataFrame = {
     val (scored0, _) = clsScored(s, d)
-    // materialized (the q86 discipline — r08 review): clsBestThr's
+    // materialized (the q86 discipline): clsBestThr's
     // probe and the returned relation otherwise EXECUTE the scoring
     // plan twice, and a per-doc double margin summed in two
     // independently-ordered executions could round differently at a
@@ -1466,8 +1452,8 @@ object TextAnalysis extends QueryModule {
   private def q86(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // the margin-count statistic is every number this certificate
-    // needs (r09 verdict #6: the 30×-steepest slope was this entry
-    // re-scoring the corpus q73 had just scored). Reuse q73's counts
+    // needs (re-scoring the corpus q73 had just scored would be the
+    // catalog's steepest 30× slope). Reuse q73's counts
     // when this session trained already; a standalone run pays ONE
     // scoring+count pass — no materialize (the counts are the only
     // consumer), no second threshold pass, no third probe pass.
@@ -1513,8 +1499,8 @@ object TextAnalysis extends QueryModule {
   }
 
   /** Per-SOURCE sketch certificate (q125) — q84's envelope check at the
-    * granularity the sketch profile is actually consumed at (r11
-    * verdict #7: q84 pins per-language bounds over 5 wide groups; a
+    * granularity the sketch profile is actually consumed at (q84
+    * pins per-language bounds over 5 wide groups; a
     * per-source regression — 20 narrower groups, smaller cardinalities
     * where HLL++ relative error is worst — could hide inside a green
     * q84). Same contract: exact per-source distinct-doc and vocabulary
@@ -1994,7 +1980,7 @@ object TextAnalysis extends QueryModule {
       when(docId % 13 === 5, lit(" sn 9555-123-4567")).otherwise(lit("")),
       when(docId % 17 === 2, concat(lit(" from 10."),
         (docId % 256).cast("string"), lit("."),
-        // parameter-derived (r11 advice: an expr() here hardcoded the
+        // parameter-derived (an expr() here would hardcode the
         // "doc_id" name, silently ignoring a renamed/derived id col);
         // shiftright(·,8) IS div-256 for the non-negative id domain
         (shiftright(docId.cast("long"), 8) % 256).cast("string"), lit("."),
@@ -2143,9 +2129,9 @@ object TextAnalysis extends QueryModule {
     * digest, losers aggregated into per-doc drop-index sets. ONE
     * spelling shared by q118 and q122 (whose election differs only in
     * the chrome anti-join upstream), UN-materialized — exposed so
-    * PlanAuditSpec can audit the election's exchanges directly (the
-    * r11 advice: the builders' materialize cut truncates lineage, so
-    * auditing their output plans never saw these exchanges at all).
+    * PlanAuditSpec can audit the election's exchanges directly (q118's
+    * and q122's materialize cut truncates lineage, so auditing their
+    * output plans never sees these exchanges at all).
     */
   private[graft] def keepFirstDrops(li: DataFrame): DataFrame = {
     val winners = li.groupBy(col("lmd5"))

@@ -194,23 +194,6 @@ class GraphRunnerSpec extends SparkSpec {
       "replacement blocks below the old floor must not be dropped")
   }
 
-  test("EngineShuffle: nested entrants with UNEQUAL widths restore the outer width on inner exit") {
-    val key = "spark.sql.shuffle.partitions"
-    val user = spark.conf.get(key)
-    try {
-      EngineShuffle.enter(spark, 8)
-      assert(spark.conf.get(key) == "8")
-      EngineShuffle.enter(spark, 3) // a second runner, different width
-      assert(spark.conf.get(key) == "3")
-      EngineShuffle.exit(spark)
-      // the OUTER entrant's width must be back in force, not the inner's
-      assert(spark.conf.get(key) == "8",
-        "inner exit left its own width in force for the outer action")
-      EngineShuffle.exit(spark)
-      assert(spark.conf.get(key) == user, "user width not restored")
-    } finally spark.conf.set(key, user)
-  }
-
   test("a batch reads each committed table once; a rollback reads the checkpoints once") {
     // forwarding store that counts its state reads
     final class Counting(inner: Store) extends Store {

@@ -1026,26 +1026,6 @@ class PlanAuditSpec extends SparkSpec {
       s"the stateless scorer grew a shuffle:\n$p")
   }
 
-  /** Query executions of every SQL action `body` runs, after it ran. */
-  private def executionsOf(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        seen.add(qe)
-      def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      body
-      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
-    } finally spark.listenerManager.unregister(l)
-    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
-  }
-
   test("chain sync: balance snapshots run through one shuffle; the staged created collect broadcasts nothing") {
     // the executed (final adaptive) plans of the default graph's second
     // JDBC-store batch, the one with committed state and a prior segment:

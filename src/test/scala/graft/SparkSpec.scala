@@ -22,6 +22,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         s.metrics("numPartitions").value
     }.sum
   }
+
+  /** Query executions of every SQL action `body` runs, after it ran. */
+  def executionsOf(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
+  }
 }
 
 object SparkSpec {
