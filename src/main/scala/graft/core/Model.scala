@@ -29,13 +29,12 @@ final case class Tx(
     outputs: Seq[TxOutput])
 
 /** Chain eras — mirror of the reference's enumeration
-  * (`Data/Models/Enums/Era.cs:6-24`). A wire era byte outside the KNOWN
-  * range is NOT rejected by the binary envelope codec: BlockCodec
-  * passes it through (dropping unknown eras would silently stall
-  * ingestion at a hard fork) and counts it in the unknown-era
-  * telemetry; only the strict CBOR decode path rejects. Consumers must
-  * not assume `Block.era` ∈ [Byron, Conway] (r08 review — this comment
-  * previously claimed rejection).
+  * (`Data/Models/Enums/Era.cs:6-24`). The block decoder
+  * ([[graft.sources.CborBlock]]) accepts only the Shelley-family eras
+  * (Shelley..Conway): a wire era index outside that range — Byron, or
+  * a hard fork the decoder does not know yet — is rejected as an
+  * undecodable block and counted in `CborBlock.unsupportedEraCount`, so
+  * a fork shows in telemetry instead of as misparsed blocks.
   */
 object Era {
   val Unknown = 0
@@ -47,12 +46,6 @@ object Era {
   val Babbage = 6
   val Conway = 7
   val Max: Int = Conway
-  /** True for a NAMED chain era — Unknown (0) is the sentinel for "the
-    * wire said something we don't recognize" and must count as unknown
-    * in telemetry, not as known (r08 review: era byte 0x00 previously
-    * evaded the unknown-era counter that exists to surface it).
-    */
-  def isKnown(era: Int): Boolean = era > Unknown && era <= Max
   def name(era: Int): String = era match {
     case Byron => "byron"; case Shelley => "shelley"
     case Allegra => "allegra"; case Mary => "mary"

@@ -127,9 +127,8 @@ object Events extends QueryModule {
     val ev = Tables.events(s, d)
       .select(col("user_id"), col("event_type"), col("ts"))
     // v and c each feed multiple legs (the next stage AND the final
-    // join) — unmaterialized, the expanded tree re-ran the events scan
-    // six times per execution (r07 review; the q31/q74 multi-leg
-    // discipline)
+    // join) — unmaterialized, the expanded tree re-runs the events scan
+    // six times per execution (the q31/q74 multi-leg discipline)
     val v = Scratch.materialize(
       ev.filter(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts")).as("v_ts")),
@@ -250,18 +249,16 @@ object Events extends QueryModule {
     * salt.
     */
   /** Salt replication derived from the session (never a literal core
-    * count — the Scratch.par discipline, r08 review): each hot key
-    * spreads over the actual reducer width, floored at 8 so the
-    * technique stays observable on tiny test sessions. The result is
-    * salt-invariant (the oracle joins unsalted).
+    * count — [[Scratch.par]]): each hot key spreads over the actual
+    * reducer width, floored at 8 so the technique stays observable on
+    * tiny test sessions. The result is salt-invariant (the oracle joins
+    * unsalted).
     */
-  private def saltR(s: SparkSession): Int =
-    math.max(8, s.conf.getOption("graft.par").map(_.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism))
+  private def saltR(df: DataFrame): Int = math.max(8, Scratch.par(df))
 
   private def q52(s: SparkSession, d: String): DataFrame = {
-    val SaltR = saltR(s)
     val ev = Tables.events(s, d)
+    val SaltR = saltR(ev)
     // deterministic dim derived from the key itself (mirrored in SQL):
     // weight = len(event_type) / 10.0
     val dim = ev.select(col("event_type")).distinct()

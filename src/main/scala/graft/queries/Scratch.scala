@@ -12,13 +12,9 @@ object Scratch {
 
   /** Partition count for a repartition barrier: the session's default
     * parallelism (32 on the local[32] harness, executors × cores on a
-    * cluster). Overridable via `graft.par` for experiments.
+    * cluster).
     */
-  def par(df: DataFrame): Int = {
-    val s = df.sparkSession
-    s.conf.getOption("graft.par").map(_.toInt)
-      .getOrElse(s.sparkContext.defaultParallelism)
-  }
+  def par(df: DataFrame): Int = df.sparkSession.sparkContext.defaultParallelism
 
   /** Scratch root for materialized subtrees. Defaults under java.io.tmpdir;
     * a deployment points `graft.scratch.dir` at durable shared storage
@@ -101,7 +97,7 @@ object Scratch {
     * eager=true — and evaluates EVERY output column (both modes write
     * the full schema). Callers rely on this for side-effecting output
     * columns (the CC convergence accumulator); a third mode must keep
-    * both halves of the contract or connectedComponents' round-1 guard
+    * both halves of the contract or connectedComponents' first-iteration guard
     * fails loudly. Being an action, every materialize is the
     * [[graft.Ledger]] leg `name`.
     */

@@ -62,7 +62,7 @@ final class CborReader(buf: Array[Byte]) {
         // a uint64 ≥ 2^63 reads as NEGATIVE and would collide with the
         // indefinite-length sentinel (-1), silently switching a
         // definite item to indefinite parsing and misaligning the
-        // stream (r07 review) — no legitimate length/slot needs it
+        // stream — no legitimate length/slot needs it
         if (v < 0) fail("uint64 argument out of range")
         v
       } else if (info == 31 && major >= 2 && major <= 5) -1L
@@ -151,13 +151,13 @@ final class CborReader(buf: Array[Byte]) {
     first
   }
 
-  /** Nesting bound for [[skipItem]] (r11 review): a crafted payload of
-    * N stacked containers/tags (`C6 C6 C6 …` or `81 81 81 …`) recursed
-    * N deep and threw StackOverflowError — an ERROR, which escapes the
-    * decoders' `catch Exception` fences, so one adversarial wire blob
-    * would kill the task (the retry storm the decode contract forbids;
-    * the mp4 box-walk depth-bound class, r07). Real blocks nest a
-    * handful of levels; 128 is orders beyond any CDDL shape.
+  /** Nesting bound for [[skipItem]]: unbounded, a crafted payload of N
+    * stacked containers/tags (`C6 C6 C6 …` or `81 81 81 …`) would
+    * recurse N deep and throw StackOverflowError — an ERROR, which
+    * escapes the decoders' `catch Exception` fences, so one adversarial
+    * wire blob would kill the task (the retry storm the decode contract
+    * forbids; the same class as an unbounded mp4 box walk). Real blocks
+    * nest a handful of levels; 128 is orders beyond any CDDL shape.
     */
   private val MaxDepth = 128
 
@@ -170,7 +170,7 @@ final class CborReader(buf: Array[Byte]) {
     major match {
       case 0 | 1 => () // value lives in the head
       case 2 | 3 =>
-        // guard ORDER matters (r07 review): `pos + arg` with a huge
+        // guard ORDER matters: `pos + arg` with a huge
         // Long arg overflows NEGATIVE and passes the length check,
         // then `arg.toInt` truncation could move pos BACKWARD — an
         // infinite loop inside an enclosing indefinite container on
@@ -190,7 +190,7 @@ final class CborReader(buf: Array[Byte]) {
       case 4 =>
         // arg.toInt on a count > Int.MaxValue would overflow NEGATIVE,
         // skip zero elements, and keep parsing misaligned — fail loudly
-        // like readArrayHeader does (ADVICE r06)
+        // like readArrayHeader does
         if (arg >= 0) {
           if (arg > Int.MaxValue) fail(s"array too large: $arg")
           skipItems(arg.toInt, depth + 1)
@@ -266,7 +266,8 @@ final class CborReader(buf: Array[Byte]) {
 object CborBlock {
 
   /** Blocks rejected for an unsupported era (Byron / unknown index) —
-    * per-JVM telemetry, the BlockCodec.unknownEraCount convention.
+    * per-JVM telemetry (per-executor on a cluster): nonzero after a hard
+    * fork the decoder does not know yet.
     */
   val unsupportedEraCount = new java.util.concurrent.atomic.LongAdder
 
@@ -329,7 +330,7 @@ object CborBlock {
         // (readBytes/rawItem copy, hashes are strings) and decode is
         // fully eager, so nothing in the returned Block aliases the
         // caller's buffer — the full-buffer copyOf here was pure
-        // memcpy on the ingest hot path (r07 review)
+        // memcpy on the ingest hot path
       val r = new CborReader(inner)
       val top = r.readArrayHeader()
       if (top != 2) return None

@@ -8,7 +8,7 @@ import graft.core._
   * as a real chain producer's does: each tx spends outputs of earlier
   * blocks BY THEIR REAL HASH, and every block's prev-hash links the
   * real header digest of its predecessor. One implementation shared by
-  * CborCodecSpec, TcpChainSyncSpec and the benchmark's chain
+  * CborCodecSpec, MuxChainSyncSpec and the benchmark's chain
   * catch-up, so the specs and the benchmark exercise the same chain
   * shape.
   */

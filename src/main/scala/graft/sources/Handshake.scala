@@ -1,11 +1,10 @@
 package graft.sources
 
-/** The Ouroboros HANDSHAKE mini-protocol — the one mini-protocol the
-  * r07 verdict still listed as skipped on the loopback bearers. Every
-  * real peer requires version + networkMagic negotiation BEFORE
-  * chain-sync speaks (the reference gets it from its client library —
-  * `N2NProvider.cs:89` via PeerClient); here it is implemented from the
-  * PUBLIC node-to-node handshake CDDL (ouroboros-network spec):
+/** The Ouroboros HANDSHAKE mini-protocol. Every real peer requires
+  * version + networkMagic negotiation BEFORE chain-sync speaks (the
+  * reference gets it from its client library — `N2NProvider.cs:89` via
+  * PeerClient); here it is implemented from the PUBLIC node-to-node
+  * handshake CDDL (ouroboros-network spec):
   *
   *   msgProposeVersions = [0, versionTable]
   *   msgAcceptVersion   = [1, versionNumber, versionData]
@@ -21,11 +20,10 @@ package graft.sources
   * version proposed that it also supports; disjoint version sets refuse
   * with versionMismatch (listing the responder's supported set); a
   * networkMagic disagreement on the chosen version refuses with
-  * `refused`. On the mux bearer the exchange rides mini-protocol id 0;
-  * on the simplified length-prefixed TCP bearer it is the first frame
-  * exchange on the connection. Either way chain-sync may not speak
-  * until the accept lands — both servers enforce it by reading the
-  * proposal as the connection's first message.
+  * `refused`. On the mux bearer the exchange rides mini-protocol id 0,
+  * and chain-sync may not speak until the accept lands — the server
+  * enforces it by reading the proposal as the connection's first
+  * message.
   */
 object HandshakeWire {
 
@@ -48,8 +46,14 @@ object HandshakeWire {
       initiatorOnly: Boolean = false, peerSharing: Long = 0L,
       query: Boolean = false)
 
-  /** Versions both bearers speak by default. */
+  /** Versions the mux bearer speaks by default. */
   val DefaultVersions: Seq[Long] = Seq(13L, 14L)
+
+  /** Loopback networkMagic both sides default to — any value works as
+    * long as initiator and responder agree; disagreement is the refuse
+    * path the specs exercise.
+    */
+  val DefaultMagic = 42L
 
   def propose(versions: Seq[(Long, VersionData)]): Array[Byte] = {
     val w = new CborWriter

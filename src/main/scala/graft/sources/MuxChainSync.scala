@@ -5,8 +5,59 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.net.{InetAddress, ServerSocket, Socket}
 import scala.collection.mutable
 
-/** The MULTIPLEXED N2N bearer — the residual the round-6 TCP work left
-  * open ("no full mux"): the reference's N2N source does NOT stream
+/** Chain-sync messages, from the PUBLIC node-to-node CDDL
+  * (ouroboros-network spec):
+  *
+  *   msgRequestNext       = [0]
+  *   msgAwaitReply        = [1]
+  *   msgRollForward       = [2, header, tip]
+  *   msgRollBackward      = [3, point, tip]
+  *   msgFindIntersect     = [4, [point+]]
+  *   msgIntersectFound    = [5, point, tip]
+  *   msgIntersectNotFound = [6, tip]
+  *   point                = [] / [slot, hash-bytes] ; [] = origin
+  */
+object ChainSyncWire {
+  val MsgRequestNext = 0L
+  val MsgAwaitReply = 1L
+  val MsgRollForward = 2L
+  val MsgRollBackward = 3L
+  val MsgFindIntersect = 4L
+  val MsgIntersectFound = 5L
+  val MsgIntersectNotFound = 6L
+
+  // hashes on this wire are the CONTENT-DERIVED hex digests real CBOR
+  // blocks carry (BLAKE2b-256), through CborBlock's strict hex helpers —
+  // a non-hex id has no place in the protocol and fails loudly there
+  def pointCbor(w: CborWriter, p: Option[Point]): Unit = p match {
+    case None => w.arrayHeader(0) // origin
+    case Some(pt) =>
+      w.arrayHeader(2)
+      w.uint(pt.slot)
+      w.bytes(CborBlock.unhex(pt.hash))
+  }
+
+  def readPoint(r: CborReader): Option[Point] =
+    r.readArrayHeader() match {
+      case 0 => None
+      case 2 =>
+        val slot = r.readUInt()
+        val hash = CborBlock.hex(r.readBytes())
+        Some(Point(hash, slot))
+      case n => throw new IllegalArgumentException(s"point arity $n")
+    }
+}
+
+/** What the server replays after the negotiated intersection. Rollback
+  * points map to engine events as `ArgusUtil.RollBackwardResponse`
+  * does: a specific point ⇒ Exclusive (the point itself survives),
+  * origin ⇒ Inclusive at slot 0.
+  */
+sealed trait ServedEvent
+final case class ServeForward(wire: Array[Byte], block: Block) extends ServedEvent
+final case class ServeBack(point: Point) extends ServedEvent
+
+/** The node-to-node bearer: the reference's N2N source does NOT stream
   * whole blocks over chain-sync; it runs TWO mini-protocols over ONE
   * bearer — chain-sync serves HEADERS, BlockFetch fetches the BODIES
   * for each contiguous header run as one range — multiplexed by the
@@ -21,10 +72,11 @@ import scala.collection.mutable
   *     boundaries from CBOR item completeness — exactly how the real
   *     demuxer's consumers work (the spec-pinned segmentation test
   *     shrinks the limit to force multi-frame messages).
-  *   - chain-sync messages reuse [[ChainSyncWire]]'s public CDDL
-  *     constructor indices; RollForward here carries the HEADER POINT
-  *     (slot + hash — the fields `TryExtractHeaderPoint` consumes), not
-  *     the block.
+  *   - handshake (mini-protocol 0, [[HandshakeWire]]) negotiates
+  *     version + networkMagic before chain-sync or BlockFetch may speak.
+  *   - chain-sync messages are [[ChainSyncWire]]'s public CDDL;
+  *     RollForward here carries the HEADER POINT (slot + hash — the
+  *     fields `TryExtractHeaderPoint` consumes), not the block.
   *   - BlockFetch (public CDDL): msgRequestRange = [0, point, point],
   *     msgClientDone = [1], msgStartBatch = [2], msgNoBlocks = [3],
   *     msgBlock = [4, blockBytes], msgBatchDone = [5].
@@ -40,15 +92,12 @@ import scala.collection.mutable
   * pre-rollback run is fetched and yielded before the rollback event
   * (the reference's ChainEvent buffering).
   *
-  * Round 8 closed two of the former offline simplifications: the
-  * HANDSHAKE mini-protocol (id 0, [[HandshakeWire]]) now negotiates
-  * version + networkMagic before chain-sync may speak, and
   * MsgAwaitReply is NON-TERMINAL when the server is `followable` and
   * the client `followTip` — a request that reaches the tip is answered
   * with AwaitReply and then its REAL header reply when the chain grows
   * (`append`), the reference's keep-following semantics
-  * (`N2NProvider.cs:141-143`). Default mode stays batch-terminal
-  * (AvailableNow catch-up). Remaining irreducible residual: no live
+  * (`N2NProvider.cs:141-143`). Default mode is batch-terminal
+  * (AvailableNow catch-up). Both ends run in-process: there is no live
   * node to dial.
   */
 object Mux {
@@ -140,9 +189,10 @@ final class MuxDemux(in: DataInputStream) {
 
   /** Non-blocking variant: a complete `proto` message from the buffer,
     * pulling further frames only while at least `minAvailable` bytes
-    * are already on the socket (a complete small frame — the same
-    * lower-bound drain heuristic as the TCP bearer: exact on loopback,
-    * never blocks mid-frame on a chunking bearer).
+    * are already on the socket (a complete small frame): exact on
+    * loopback, where frames arrive whole; on a chunking bearer a split
+    * frame is simply not pulled this round, so a drain built on it
+    * counts a LOWER bound and never blocks mid-frame.
     */
   def tryNextMessage(proto: Int, minAvailable: Int): Option[Array[Byte]] = {
     var m = takeComplete(proto)
@@ -192,7 +242,7 @@ final class MuxChainSyncServer(
     chain: Seq[(Array[Byte], Block)],
     script: Option[Seq[ServedEvent]] = None,
     maxSegment: Int = Mux.MaxSegment,
-    networkMagic: Long = ChainSyncServer.DefaultMagic,
+    networkMagic: Long = HandshakeWire.DefaultMagic,
     versions: Seq[Long] = HandshakeWire.DefaultVersions,
     followable: Boolean = false) {
   import ChainSyncWire._
@@ -233,7 +283,7 @@ final class MuxChainSyncServer(
   // snapshot is IN it (forwardsAll extends the replay source, not just
   // the body index), one appended after arrives on that connection's
   // own queue; a dead connection can neither steal nor lose another
-  // follower's events (r08 review)
+  // follower's events
   private val followers = scala.collection.mutable.Buffer[
     java.util.concurrent.LinkedBlockingQueue[ServedEvent]]()
 
@@ -285,7 +335,8 @@ final class MuxChainSyncServer(
     // bumped (under the server lock) by the re-intersect drain: the
     // pump compares it around its dequeue so an event pulled JUST
     // before a drain is discarded instead of served after the new
-    // snapshot (r09 advice — the clear()+set(0) alone left that window)
+    // snapshot (clearing the queue and the owed count alone leaves
+    // that window open)
     val liveGen = new java.util.concurrent.atomic.AtomicInteger(0)
     var registered = false
 
@@ -296,7 +347,7 @@ final class MuxChainSyncServer(
     // per protocol); torn frames are not.
     def send(proto: Int, payload: Array[Byte]): Unit = out.synchronized {
       // count actual FRAMES on the wire, not messages — under a small
-      // segment limit one message emits many frames (r07 review)
+      // segment limit one message emits many frames
       val frames = math.max(1,
         (payload.length + maxSegment - 1) / maxSegment)
       if (proto == Mux.ProtoChainSync) chainSyncFrames += frames
@@ -457,9 +508,11 @@ final class MuxChainSyncServer(
             out.flush()
           case (Mux.ProtoChainSync, MsgRequestNext) =>
             pending += 1
-            // settle once per connection so the opening burst's
-            // high-water mark is observed reliably (the TCP bearer's
-            // r06-advice fix applied here from the start)
+            // the client's OPENING window goes out in one flush, but on
+            // a loaded host loopback delivery can lag this read — settle
+            // until the available byte count stops growing (bounded
+            // ~100ms, once per connection) so the opening burst's
+            // high-water mark is not a timing race
             if (firstBurst) {
               firstBurst = false
               var last = -1
@@ -541,7 +594,7 @@ final class MuxChainSyncServer(
   * every RequestRange — the documented deadlock-freedom discipline.
   */
 final class MuxChainProvider(host: String, port: Int, maxDepth: Int = 20,
-    networkMagic: Long = ChainSyncServer.DefaultMagic,
+    networkMagic: Long = HandshakeWire.DefaultMagic,
     proposeVersions: Seq[Long] = HandshakeWire.DefaultVersions,
     followTip: Boolean = false)
     extends ChainProvider {
@@ -567,40 +620,44 @@ final class MuxChainProvider(host: String, port: Int, maxDepth: Int = 20,
     val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
     val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
     val demux = new MuxDemux(in)
-    try handshake(out, demux)
-    catch { case e: Throwable => sock.close(); throw e }
 
     def sendCs(payload: Array[Byte]): Unit =
       Mux.writeMsg(out, Mux.ProtoChainSync, responder = false, payload)
     def sendBf(payload: Array[Byte]): Unit =
       Mux.writeMsg(out, Mux.ProtoBlockFetch, responder = false, payload)
 
-    val w = new CborWriter
-    w.arrayHeader(2); w.uint(MsgFindIntersect)
-    if (candidates.isEmpty) { w.arrayHeader(1); pointCbor(w, None) }
-    else {
-      w.arrayHeader(candidates.size)
-      candidates.sortBy(-_.slot).foreach(p => pointCbor(w, Some(p)))
-    }
-    sendCs(w.result()); out.flush()
-    val r0 = new CborReader(demux.nextMessage(Mux.ProtoChainSync))
-    r0.readArrayHeader()
+    // the handshake and the whole intersect exchange close the socket on
+    // ANY failure, not just the decoded IntersectNotFound/unexpected-reply
+    // arms: a refusal, a failed write, or a reply that fails CBOR decode
+    // would otherwise leak the connection (and the server's handler
+    // thread) on every retry
     var tipSlot = 0L
-    r0.readUInt() match {
-      case MsgIntersectFound =>
-        readPoint(r0) // opening MsgRollBackward re-delivers it
-        tipSlot = readPoint(r0).map(_.slot).getOrElse(0L)
-      case MsgIntersectNotFound =>
-        sock.close()
-        throw new IllegalStateException(
-          s"Failed to find any valid intersection point. All " +
-            s"${candidates.size} saved intersection(s) have been rolled " +
-            "back. Consider resetting the reducer state or increasing " +
-            "the rollback buffer size.")
-      case other =>
-        sock.close()
-        throw new IllegalStateException(s"unexpected reply $other")
-    }
+    try {
+      handshake(out, demux)
+      val w = new CborWriter
+      w.arrayHeader(2); w.uint(MsgFindIntersect)
+      if (candidates.isEmpty) { w.arrayHeader(1); pointCbor(w, None) }
+      else {
+        w.arrayHeader(candidates.size)
+        candidates.sortBy(-_.slot).foreach(p => pointCbor(w, Some(p)))
+      }
+      sendCs(w.result()); out.flush()
+      val r0 = new CborReader(demux.nextMessage(Mux.ProtoChainSync))
+      r0.readArrayHeader()
+      r0.readUInt() match {
+        case MsgIntersectFound =>
+          readPoint(r0) // opening MsgRollBackward re-delivers it
+          tipSlot = readPoint(r0).map(_.slot).getOrElse(0L)
+        case MsgIntersectNotFound =>
+          throw new IllegalStateException(
+            s"Failed to find any valid intersection point. All " +
+              s"${candidates.size} saved intersection(s) have been rolled " +
+              "back. Consider resetting the reducer state or increasing " +
+              "the rollback buffer size.")
+        case other =>
+          throw new IllegalStateException(s"unexpected reply $other")
+      }
+    } catch { case e: Throwable => sock.close(); throw e }
 
     new Iterator[BlockEvent] with AutoCloseable {
       private var drained = false
@@ -734,7 +791,7 @@ final class MuxChainProvider(host: String, port: Int, maxDepth: Int = 20,
       private def pump(): Unit = try {
         if (finished) return // idempotent past exhaustion: a second
         // hasNext()/next() must answer from state, not write on the
-        // closed socket (r07 review; the TCP bearer's guard)
+        // closed socket
         while (queue.isEmpty && !drained) refill()
         if (queue.isEmpty && drained) {
           finished = true

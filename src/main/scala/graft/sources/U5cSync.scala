@@ -5,7 +5,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.net.{InetAddress, ServerSocket, Socket}
 
 /** A loopback U5C (UTxO RPC) bearer for the chain-sync seam — the S4
-  * analogue of the TCP chain-sync work: there is no gRPC stack and no
+  * analogue of the mux chain-sync bearer: there is no gRPC stack and no
   * live Dolos/node offline, but the PROTOCOL CONTENT — protobuf-encoded
   * FollowTip messages, the Apply/Undo/Reset action triple, and the
   * reference's mapping of those actions onto engine rollback semantics
@@ -20,10 +20,9 @@ import java.net.{InetAddress, ServerSocket, Socket}
   *   - each message rides in the gRPC MESSAGE frame: 1-byte compressed
   *     flag (0) + 4-byte big-endian length + payload. The HTTP/2
   *     transport a real gRPC channel multiplexes over is NOT
-  *     implemented (the same honest simplification the TCP bearer
-  *     makes about the Ouroboros mux); stream end and error status —
-  *     HTTP/2 trailers in real gRPC — are modeled as flag bytes 0xFF
-  *     (ok) and 0xFE (error + utf8 message).
+  *     implemented; stream end and error status — HTTP/2 trailers in
+  *     real gRPC — are modeled as flag bytes 0xFF (ok) and 0xFE
+  *     (error + utf8 message).
   *
   * Message model (utxorpc `sync` service, FollowTip):
   *   FollowTipRequest  { repeated BlockRef intersect = 1 }
@@ -339,10 +338,10 @@ final class U5cProvider(host: String, port: Int) extends ChainProvider {
   def startChainSync(candidates: Seq[Point]): Iterator[BlockEvent] = {
     val sock = new Socket(InetAddress.getByName(host), port)
     // everything between connect and the iterator (whose pull() has its
-    // own close-on-exception) must release the socket on failure — the
-    // TcpChainProvider intersect-exchange leak class (r11 session-2
-    // review): a stream-acquisition or request-write failure here would
-    // otherwise leak the connection and the server's handler thread
+    // own close-on-exception) must release the socket on failure, as the
+    // mux provider's intersect exchange does: a stream-acquisition or
+    // request-write failure here would otherwise leak the connection and
+    // the server's handler thread
     val (in, out) =
       try {
         sock.setTcpNoDelay(true)

@@ -4,13 +4,11 @@ import graft.core._
 import graft.sources._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The handshake mini-protocol — the one Ouroboros mini-protocol the
-  * loopback bearers previously skipped (r07 verdict #4). Codec
-  * round-trips, the negotiation matrix (highest common version, version
-  * mismatch, networkMagic mismatch, garbage proposal), and the refuse
-  * paths are each observed ON THE WIRE on both the TCP and the mux
-  * bearer: a client that fails the handshake gets a spec-shaped refuse
-  * and chain-sync never speaks.
+/** The handshake mini-protocol. Codec round-trips, the negotiation
+  * matrix (highest common version, version mismatch, networkMagic
+  * mismatch, garbage proposal), and the refuse paths observed ON THE
+  * WIRE on the mux bearer: a client that fails the handshake gets a
+  * spec-shaped refuse and neither data mini-protocol ever speaks.
   */
 class HandshakeSpec extends AnyFunSuite {
   import HandshakeWire._
@@ -64,45 +62,6 @@ class HandshakeSpec extends AnyFunSuite {
     }
   }
 
-  test("TCP bearer: version+magic agreement precedes chain-sync; the agreed version is observed on both ends") {
-    val server = new ChainSyncServer(chain(8), networkMagic = 764824073L)
-    try {
-      val p = new TcpChainProvider("127.0.0.1", server.port,
-        networkMagic = 764824073L)
-      val blocks = p.startChainSync(Seq.empty).collect {
-        case RollForward(b) => b
-      }.toVector
-      assert(blocks.size == 8, "chain-sync ran after the handshake")
-      assert(p.lastNegotiatedVersion == 14L &&
-        server.negotiatedVersion == 14L,
-        s"client=${p.lastNegotiatedVersion} server=${server.negotiatedVersion}")
-    } finally server.close()
-  }
-
-  test("TCP bearer: magic mismatch refuses on the wire and the client fails loudly") {
-    val server = new ChainSyncServer(chain(4), networkMagic = 1L)
-    try {
-      val ex = intercept[IllegalStateException] {
-        new TcpChainProvider("127.0.0.1", server.port, networkMagic = 2L)
-          .startChainSync(Seq.empty)
-      }
-      assert(ex.getMessage.contains("refused") &&
-        ex.getMessage.contains("networkMagic"), ex.getMessage)
-      assert(server.negotiatedVersion == -1L, "nothing negotiated")
-    } finally server.close()
-  }
-
-  test("TCP bearer: disjoint versions refuse with the responder's supported set") {
-    val server = new ChainSyncServer(chain(4), versions = Seq(13L, 14L))
-    try {
-      val ex = intercept[IllegalStateException] {
-        new TcpChainProvider("127.0.0.1", server.port,
-          proposeVersions = Seq(7L, 8L)).startChainSync(Seq.empty)
-      }
-      assert(ex.getMessage.contains("versionMismatch"), ex.getMessage)
-    } finally server.close()
-  }
-
   test("mux bearer: handshake rides mini-protocol 0 before chain-sync and BlockFetch") {
     val server = new MuxChainSyncServer(chain(8))
     try {
@@ -131,22 +90,44 @@ class HandshakeSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  test("mux bearer: disjoint versions refuse with the responder's supported set") {
+    val server = new MuxChainSyncServer(chain(4), versions = Seq(13L, 14L))
+    try {
+      val ex = intercept[IllegalStateException] {
+        new MuxChainProvider("127.0.0.1", server.port,
+          proposeVersions = Seq(7L, 8L)).startChainSync(Seq.empty)
+      }
+      assert(ex.getMessage.contains("versionMismatch") &&
+        ex.getMessage.contains("13") && ex.getMessage.contains("14"),
+        ex.getMessage)
+      assert(server.negotiatedVersion == -1L, "nothing negotiated")
+      assert(server.chainSyncFrames == 0 && server.blockFetchFrames == 0,
+        "refused handshake must gate the data mini-protocols")
+    } finally server.close()
+  }
+
   test("garbage proposal refuses with handshakeDecodeError instead of killing the handler") {
-    val server = new ChainSyncServer(chain(4))
+    import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+    val server = new MuxChainSyncServer(chain(4))
     try {
       val sock = new java.net.Socket("127.0.0.1", server.port)
-      val out = new java.io.DataOutputStream(sock.getOutputStream)
-      val in = new java.io.DataInputStream(sock.getInputStream)
-      ChainSyncWire.writeFrame(out, Array[Byte](0x1f, 0x33, -1, 0x00))
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      val demux = new MuxDemux(
+        new DataInputStream(new BufferedInputStream(sock.getInputStream)))
+      // a COMPLETE CBOR item that is not a proposal: the demux only hands
+      // whole items to the handshake, so the garbage must parse as CBOR
+      val w = new CborWriter
+      w.arrayHeader(2); w.uint(7L); w.uint(7L)
+      Mux.writeMsg(out, ProtoHandshake, responder = false, w.result())
       out.flush()
-      val reply = readReply(ChainSyncWire.readFrame(in))
-      reply match {
+      readReply(demux.nextMessage(ProtoHandshake)) match {
         case Refused(d) => assert(d.contains("handshakeDecodeError"), d)
         case other => fail(s"$other")
       }
       sock.close()
+      assert(server.chainSyncFrames == 0 && server.blockFetchFrames == 0)
       // the server survives and serves a well-behaved client afterwards
-      val p = new TcpChainProvider("127.0.0.1", server.port)
+      val p = new MuxChainProvider("127.0.0.1", server.port)
       assert(p.startChainSync(Seq.empty).size == 5) // rollback + 4 blocks
     } finally server.close()
   }

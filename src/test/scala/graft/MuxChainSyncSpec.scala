@@ -111,6 +111,43 @@ class MuxChainSyncSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("a malformed intersect reply fails loudly AND releases the connection") {
+    // a reply that dies in CBOR decode throws before the reply match;
+    // the fake server seeing EOF after the client's failure is the
+    // on-the-wire proof that the client closed its socket
+    import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+    import java.net.{InetAddress, ServerSocket}
+    val srv = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
+    @volatile var sawEof = false
+    val t = new Thread(() => {
+      val s = srv.accept()
+      val in = new DataInputStream(new BufferedInputStream(s.getInputStream))
+      val out = new DataOutputStream(new BufferedOutputStream(s.getOutputStream))
+      val demux = new MuxDemux(in)
+      val (reply, _) = HandshakeWire.negotiate(
+        demux.nextMessage(HandshakeWire.ProtoHandshake),
+        HandshakeWire.DefaultVersions, HandshakeWire.DefaultMagic)
+      Mux.writeMsg(out, HandshakeWire.ProtoHandshake, responder = true, reply)
+      out.flush()
+      demux.nextMessage(Mux.ProtoChainSync) // the FindIntersect
+      // a complete CBOR item (a 2-byte string) that is no intersect reply
+      Mux.writeMsg(out, Mux.ProtoChainSync, responder = true,
+        Array[Byte](0x42, 0x00, 0x00))
+      out.flush()
+      // a closed client surfaces as EOF/reset on the next read
+      try { in.readInt(); () }
+      catch { case _: java.io.IOException => sawEof = true }
+      s.close()
+    })
+    t.setDaemon(true); t.start()
+    try {
+      val provider = new MuxChainProvider("127.0.0.1", srv.getLocalPort)
+      intercept[Exception] { provider.startChainSync(Seq.empty) }
+      t.join(5000)
+      assert(sawEof, "client socket was not released after the failed intersect")
+    } finally srv.close()
+  }
+
   test("ProviderSync drives the UTxO graph from the mux socket to oracle balances") {
     val sp = spark
     val (chain, watched) = genChain(16, seed = 36)

@@ -3,15 +3,14 @@ package graft
 import graft.core._
 import graft.sources._
 
-/** ONE provider-conformance suite across ALL FIVE bearers (r07 verdict
-  * #6): Mock, File, TCP chain-sync, mux (headers+bodies), and U5C each
-  * re-prove the same seam contract through the same parameterized
-  * assertions — StoreContractSpec's discipline applied to the source
-  * layer, so a new bearer (or a regression in one) is caught by
-  * construction rather than by five hand-copied specs. The
-  * bearer-specific extras (pipelining high-water marks, frame counts,
-  * segmentation, Undo mapping) stay in the per-bearer specs; this suite
-  * pins what they must all share:
+/** ONE provider-conformance suite across ALL FOUR bearers: Mock, File,
+  * mux (headers+bodies), and U5C each re-prove the same seam contract
+  * through the same parameterized assertions — StoreContractSpec's
+  * discipline applied to the source layer, so a new bearer (or a
+  * regression in one) is caught by construction rather than by four
+  * hand-copied specs. The bearer-specific extras (pipelining high-water
+  * marks, frame counts, segmentation, Undo mapping) stay in the
+  * per-bearer specs; this suite pins what they must all share:
   *
   *   1. origin sync OPENS with a rollback, then replays the chain in
   *      slot order with decode fidelity;
@@ -90,29 +89,6 @@ class ProviderConformanceSpec extends SparkSpec {
       }
     },
     new Bearer {
-      val name = "tcp"
-      def make(chain: Seq[(Array[Byte], Block)], script: Option[Seq[CEvent]]) = {
-        val server = new ChainSyncServer(chain, script.map(_.map {
-          case Fwd(w, b) => ServeForward(w, b)
-          case Back(p) => ServeBack(p)
-        }))
-        (new TcpChainProvider("127.0.0.1", server.port), () => server.close())
-      }
-      override def handshakes = true
-      override def makeMismagic(chain: Seq[(Array[Byte], Block)]) = {
-        val server = new ChainSyncServer(chain)
-        (new TcpChainProvider("127.0.0.1", server.port,
-          networkMagic = ChainSyncServer.DefaultMagic + 1),
-          () => server.close())
-      }
-      override def followable = true
-      override def makeFollow(chain: Seq[(Array[Byte], Block)]) = {
-        val server = new ChainSyncServer(chain, followable = true)
-        (new TcpChainProvider("127.0.0.1", server.port, followTip = true),
-          (w, b) => server.append(w, b), () => server.close())
-      }
-    },
-    new Bearer {
       val name = "mux"
       def make(chain: Seq[(Array[Byte], Block)], script: Option[Seq[CEvent]]) = {
         val server = new MuxChainSyncServer(chain, script.map(_.map {
@@ -125,7 +101,7 @@ class ProviderConformanceSpec extends SparkSpec {
       override def makeMismagic(chain: Seq[(Array[Byte], Block)]) = {
         val server = new MuxChainSyncServer(chain)
         (new MuxChainProvider("127.0.0.1", server.port,
-          networkMagic = ChainSyncServer.DefaultMagic + 1),
+          networkMagic = HandshakeWire.DefaultMagic + 1),
           () => server.close())
       }
       override def followable = true
