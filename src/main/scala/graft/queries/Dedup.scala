@@ -564,7 +564,7 @@ object Dedup extends QueryModule {
   }
 
   private val q34Sql = {
-    import Similarity.dotSql // the ONE cosine-oracle spelling (r08 review)
+    import Similarity.dotSql // the ONE cosine-oracle spelling
     s"""WITH e AS (
        |  SELECT vec_id, label, embedding,
        |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
@@ -976,8 +976,8 @@ object Dedup extends QueryModule {
   /** THE training-token regex (q20's "BPE-ish" class) — one spelling
     * shared by packing (q62/q67/q87/q98), mixture budgets (q68),
     * tensors (q75), token counts (q20), and the streaming twins: a
-    * tokenizer tweak must move every n_tok consumer together (r07
-    * review: eight hand-copies across four files).
+    * tokenizer tweak must move every n_tok consumer together, which
+    * eight hand-copies across four files could not guarantee.
     */
   private[graft] val PackTokRe = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
@@ -1227,7 +1227,7 @@ object Dedup extends QueryModule {
     // over corpus text. The eval-shard gram scan (UNFILTERED eval —
     // the benchmark is external, quality filtering does not apply) is
     // an independent corpus pass — it overlaps the trx materialize on
-    // a driver thread (r14, guide §2.6) and broadcasts exactly as the
+    // a driver thread (guide §2.6) and broadcasts exactly as the
     // lazy subtree did.
     val (trx, ev) = Overlap.pair(
       Scratch.materialize(
@@ -1535,21 +1535,27 @@ object Dedup extends QueryModule {
       .groupBy(col("norm_md5")).agg(min(col("doc_id")).as("idx_doc")),
     bandEntries(docs.select(col("doc_id"), col("text"))))
 
-  /** One batch's lexical partials: `exact` keeps per-(norm_md5, batch)
-    * partial mins instead of one collapsed min — a plain min is not
-    * subtractable, per-batch partials are — and `bands` is append-only
-    * (band keys are per-document). Frozen text is never read again:
-    * later promotes union their own partials in.
-    */
   /** The stored lexical relations' schemas ([[Partials.read]]). */
   private[graft] val LexShape = Map(
     "exact" -> "norm_md5 STRING, idx_doc BIGINT, batch_id BIGINT",
     "bands" -> "doc_id BIGINT, band_key STRING, batch_id BIGINT")
 
-  private[graft] def lexPartials(docs: DataFrame, batchId: Long): Partials = {
-    val b = buildLexIndex(docs)
-    Partials.tagged(batchId, "exact" -> b.exact, "bands" -> b.bands)
-  }
+  /** The lexical partials of `docs`, each row in batch `batch` (over
+    * doc_id): `exact` keeps per-(norm_md5, batch) partial mins instead
+    * of one collapsed min — a plain min is not subtractable, per-batch
+    * partials are — and `bands` is append-only (band keys are
+    * per-document). Frozen text is never read again: later promotes
+    * union their own partials in.
+    */
+  private[graft] def lexPartials(docs: DataFrame, batch: Column): Partials =
+    Partials(Seq(
+      "exact" -> docs.select(normMd5(col("text")).as("norm_md5"),
+          col("doc_id"), batch.as("batch_id"))
+        .groupBy(col("norm_md5"), col("batch_id"))
+        .agg(min(col("doc_id")).as("idx_doc"))
+        .select(col("norm_md5"), col("idx_doc"), col("batch_id")),
+      "bands" -> bandEntries(docs.select(col("doc_id"), col("text")))
+        .withColumn("batch_id", batch)))
 
   /** Collapse surviving partials to the probe shape: min over each key's
     * batch partials (a per-key group of batches, not of documents).
@@ -1582,23 +1588,24 @@ object Dedup extends QueryModule {
       .orderBy(col("doc_id"))
   }
 
-  /** Frozen-index MERGE equivalence (q100): bootstrap the lexical index
-    * over the frozen third (doc_id ≡ 0,1,2 mod 10) as batch 0, STORE it
-    * (the stand-in for the bucketed index tables a deployment keeps),
-    * union the next batch's partials (≡ 3,4,5) into the stored state,
-    * then probe a third batch (≡ 6..9) against the collapsed index. The
-    * DuckDB oracle answers the same probe against an index REBUILT from
-    * scratch over frozen∪delta — the hash gate IS the merged ≡ rebuilt
-    * proof, which is exactly what lets a 100 TB deployment promote
-    * daily batches without ever re-indexing the corpus.
+  /** Frozen-index MERGE equivalence (q100): the lexical partials of the
+    * frozen third (doc_id ≡ 0,1,2 mod 10) as batch 0 and the next batch
+    * (≡ 3,4,5) as batch 1, all batches stored at once (the stand-in for
+    * the bucketed index tables a deployment keeps) in one scan, then a
+    * third batch (≡ 6..9) probes the collapsed index — the per-key min
+    * over batch partials IS the merge. The DuckDB oracle answers the
+    * same probe against an index REBUILT from scratch over frozen∪delta
+    * — the hash gate IS the merged ≡ rebuilt proof, which is exactly
+    * what lets a 100 TB deployment promote daily batches without ever
+    * re-indexing the corpus.
     */
   private def q100(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 10
     // the merge consumes stored INDEX STATE, provably not frozen text
-    val stored = lexPartials(docs.filter(m < 3), 0L).store("q100")
-    val merged = stored.union(lexPartials(docs.filter(m >= 3 && m < 6), 1L))
-    probeLex(collapseLex(merged), docs.filter(m >= 6))
+    val stored = lexPartials(docs.filter(m < 6),
+      when(m < 3, lit(0L)).otherwise(lit(1L))).store("q100")
+    probeLex(collapseLex(stored), docs.filter(m >= 6))
   }
 
   private val q100Sql = {
@@ -1635,23 +1642,22 @@ object Dedup extends QueryModule {
   }
 
   /** Frozen-index RETRACTION equivalence (q102) — the lifecycle q100
-    * cannot run backwards: bootstrap the index over the frozen third
-    * (doc_id ≡ 0,1,2 mod 10) as batch 0, promote batch 1 (≡ 3,4) and
-    * batch 2 (≡ 5,6), STORE the provenance-tagged state partitioned by
-    * batch_id, then RETRACT batch 2 (the "bad data found after promote"
-    * event) and probe the remainder (≡ 7,8,9) against the demoted
-    * index. The DuckDB oracle probes an index REBUILT from scratch over
-    * only batches 0∪1 — the hash gate is the demoted ≡ rebuilt-without
-    * proof, the retraction analogue of q100's merged ≡ rebuilt.
+    * cannot run backwards: the frozen third (doc_id ≡ 0,1,2 mod 10) as
+    * batch 0, batch 1 (≡ 3,4) and batch 2 (≡ 5,6), all batches stored
+    * at once partitioned by batch_id, then RETRACT batch 2 (the "bad
+    * data found after promote" event) and probe the remainder (≡ 7,8,9)
+    * against the demoted index. The DuckDB oracle probes an index
+    * REBUILT from scratch over only batches 0∪1 — the hash gate is the
+    * demoted ≡ rebuilt-without proof, the retraction analogue of q100's
+    * merged ≡ rebuilt.
     */
   private def q102(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 10
     // the stored index: retraction consumes partitioned INDEX STATE —
     // batch 2's files are pruned out, frozen text is never read
-    val stored = lexPartials(docs.filter(m < 3), 0L)
-      .union(lexPartials(docs.filter(m >= 3 && m < 5), 1L))
-      .union(lexPartials(docs.filter(m >= 5 && m < 7), 2L))
+    val stored = lexPartials(docs.filter(m < 7),
+      when(m < 3, lit(0L)).when(m < 5, lit(1L)).otherwise(lit(2L)))
       .store("q102")
     probeLex(collapseLex(stored.retract(2L)), docs.filter(m >= 7))
   }
@@ -1736,8 +1742,8 @@ object Dedup extends QueryModule {
   private[graft] def cutText(text: String, cutSeq: Seq[Long])
       : (Long, String) = {
     // null text rewrites to the empty document, like the oracle's
-    // COALESCE legs (r08 review: the NPE would kill the job where
-    // the oracle returns normally)
+    // COALESCE legs (an NPE would kill the job where the oracle
+    // returns normally)
     val words =
       if (text == null) Array.empty[String]
       else WordRe.findAllIn(text).toArray
@@ -2185,6 +2191,19 @@ object Dedup extends QueryModule {
   private[graft] final case class ContainIndex(
       g: DataFrame, sizes: DataFrame, dfs: DataFrame)
 
+  private[graft] object ContainIndex {
+    /** The index over `(doc_id, gid)` postings: sizes and dfs are counts
+      * over the postings themselves — the one constructor for every
+      * grain (word grams, surviving lines) and every surface. */
+    def of(g: DataFrame): ContainIndex = ContainIndex(g, postingSizes(g),
+      g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
+  }
+
+  /** Per-doc posting counts `(doc_id, ng)` — an index's sizes and a
+    * probe's own, one spelling. */
+  private def postingSizes(g: DataFrame): DataFrame =
+    g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng"))
+
   private[graft] def buildContainIndex(corpus: DataFrame,
       tag: String = "q127"): ContainIndex = {
     // materialized — sizes/dfs here plus the probe's three legs consume
@@ -2195,34 +2214,32 @@ object Dedup extends QueryModule {
     // discipline): several containment surfaces coexist in one session.
     val g = Scratch.materialize(gramIds(corpus), s"${tag}_grams")
       .toDF("doc_id", "gid")
-    ContainIndex(g,
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")),
-      g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
+    ContainIndex.of(g)
   }
 
-  /** Probe `delta` documents (as their [[gramIds]] relation + per-doc
-    * sizes) for engulfment in the index's documents — the ONE kernel
-    * behind batch q127 (where delta IS the index corpus) and the
-    * streaming twin (where delta is a micro-batch against a frozen
-    * index). Probe grams are each delta doc's `ContainProbes` rarest
-    * BY INDEX df — a gram absent from the index never probes (it
+  /** Probe `delta` documents (as `(doc_id, gid)` postings — [[gramIds]]
+    * or surviving line gids; per-doc sizes derive from them) for
+    * engulfment in the index's documents — the ONE kernel behind batch
+    * q127/q130 (where delta IS the index corpus), the lifecycle entries
+    * and the streaming twins (where delta is a micro-batch against a
+    * frozen index). Probe grams are each delta doc's `ContainProbes`
+    * rarest BY INDEX df — a gram absent from the index never probes (it
     * proves the doc is not fully contained in any index doc, and for
     * τ < 1 the probe-miss contract applies as stated on q127).
     */
   private[graft] def probeContain(idx: ContainIndex, deltaG: DataFrame,
-      deltaSizes: DataFrame, tag: String = "q127"): DataFrame =
-    probeContainManaged(idx, deltaG, deltaSizes, tag)._1
+      tag: String = "q127"): DataFrame =
+    probeContainManaged(idx, deltaG, tag)._1
 
-  /** [[probeContain]] with the candidate cut's RELEASE handle (r12
-    * advice): the exact-confirm's candidate materialization pins a
-    * localCheckpoint per invocation, which the batch entries amortize
-    * (Harness.settle sweeps after every rep/entry) but an unbounded
-    * stream cannot — `Harness.settle` mid-stream would also drop the
-    * frozen index's own checkpoint, which cannot recompute. The
-    * streaming twin calls this form and releases after each
-    * micro-batch's verdict write lands. */
+  /** [[probeContain]] with the candidate cut's RELEASE handle: the
+    * exact-confirm's candidate materialization pins a localCheckpoint
+    * per invocation, which the batch entries amortize (Harness.settle
+    * sweeps after every rep/entry) but an unbounded stream cannot —
+    * `Harness.settle` mid-stream would also drop the frozen index's own
+    * checkpoint, which cannot recompute. The streaming twin calls this
+    * form and releases after each micro-batch's verdict write lands. */
   private[graft] def probeContainManaged(idx: ContainIndex,
-      deltaG: DataFrame, deltaSizes: DataFrame, tag: String = "q127")
+      deltaG: DataFrame, tag: String = "q127")
       : (DataFrame, () => Unit) = {
     import org.apache.spark.sql.expressions.Window
     val dfCap = deltaG.sparkSession.conf
@@ -2238,19 +2255,19 @@ object Dedup extends QueryModule {
       .withColumn("np", count(lit(1)).over(winAll))
       .where(col("rk") <= ContainProbes && col("df") <= dfCap)
       .select(col("doc_id").as("d"), col("gid"), col("np"))
-      // REACHABILITY PRUNE (r14, q134 30× attribution): a probe doc
-      // can report only if n_shared ≥ τ·nd, and n_shared ≤ np, so
-      // np < τ·nd is hopeless BEFORE any candidate exists. Without
-      // this, a doc whose only index-present line is retired-chrome
-      // (df ~ n_docs of its source after a q134-direction re-freeze)
-      // fanned out into df candidates that τ always rejected — the
-      // stop-bucket argument applied at the probe, value-neutral by
-      // construction (no pair at or above τ is prunable). The filter
+      // REACHABILITY PRUNE: a probe doc can report only if
+      // n_shared ≥ τ·nd, and n_shared ≤ np, so np < τ·nd is hopeless
+      // BEFORE any candidate exists. Without it, a doc whose only
+      // index-present line is retired chrome (df ~ n_docs of its source
+      // after a q134-direction re-freeze) fans out into df candidates
+      // that τ always rejects — at 30× the dominant cost of q134. This
+      // is the stop-bucket argument applied at the probe, value-neutral
+      // by construction (no pair at or above τ is prunable). The filter
       // sits BEFORE the idx.g expansion, so the doomed fan-out never
       // shuffles. (The SQL twins keep the unpruned candidate set —
       // identical report, the prune is plan-only.)
-      .join(deltaSizes.select(col("doc_id").as("d"), col("ng").as("nd")),
-        "d")
+      .join(postingSizes(deltaG)
+        .select(col("doc_id").as("d"), col("ng").as("nd")), "d")
       .where(col("np").cast("double") >= col("nd").cast("double") * ContainTau)
       .select(col("d"), col("gid"), col("nd"))
     val cand = probes
@@ -2299,7 +2316,7 @@ object Dedup extends QueryModule {
     * kernel with delta ≡ the index corpus. */
   private[graft] def containmentReport(corpus: DataFrame): DataFrame = {
     val idx = buildContainIndex(corpus)
-    probeContain(idx, idx.g, idx.sizes)
+    probeContain(idx, idx.g)
   }
 
   // ---- q128/q129: the INCREMENTAL lifecycle of the containment index,
@@ -2316,22 +2333,25 @@ object Dedup extends QueryModule {
 
   /** Per-doc gram-set sizes off tagged postings `(doc_id, gid,
     * batch_id)` — derived from the postings, never a second text pass. */
-  private[graft] def containSizes(g: DataFrame): DataFrame =
+  private def containSizes(g: DataFrame): DataFrame =
     g.groupBy(col("doc_id"), col("batch_id")).agg(count(lit(1)).as("ng"))
       .select(col("doc_id"), col("ng"), col("batch_id"))
 
-  /** One batch's containment partials (`g` postings, `sizes`) with the
-    * gram scan materialized once: both relations read the stored scan,
-    * so writing or storing them never re-expands the batch's grams. The
-    * release handle frees the scan once a streaming promote's writes
-    * land, keeping per-batch scratch bounded on an unbounded stream.
-    * The scan is named by the store's `tag` and the batch id, so two
-    * stores promoting the same batch id never share a scratch path. */
-  private[graft] def containPartials(docs: DataFrame, batchId: Long,
+  /** The containment partials (`g` postings, `sizes`) of a `(doc_id,
+    * gid)` postings relation — word grain passes [[gramIds]], line grain
+    * `TextAnalysis.lineGramIds` under its frozen chrome — each row in
+    * batch `batch` (over doc_id). The postings are materialized once, so
+    * both relations read the stored scan and writing them never
+    * re-expands the text. The release handle frees the scan once a
+    * streaming promote's writes land, keeping per-batch scratch bounded
+    * on an unbounded stream; the scan is named by the store's `tag` and
+    * the batch ([[Partials.scanName]]). */
+  private[graft] def containPartials(postings: DataFrame, batch: Column,
       tag: String): Partials = {
-    val (gRaw, release) =
-      Scratch.materializeManaged(gramIds(docs), s"${tag}_cip${batchId}_g")
-    val g = gRaw.toDF("doc_id", "gid").withColumn("batch_id", lit(batchId))
+    val (gRaw, release) = Scratch.materializeManaged(
+      postings.select(col("doc_id"), col("gid")),
+      Partials.scanName(tag, batch, "cip"))
+    val g = gRaw.toDF("doc_id", "gid").withColumn("batch_id", batch)
     Partials(Seq("g" -> g, "sizes" -> containSizes(g)), release)
   }
 
@@ -2340,18 +2360,20 @@ object Dedup extends QueryModule {
     "g" -> "doc_id BIGINT, gid BIGINT, batch_id BIGINT",
     "sizes" -> "doc_id BIGINT, ng BIGINT, batch_id BIGINT")
 
-  /** Store tagged postings, then the sizes derived from the STORED
-    * postings — the batch entries' one-scan build (q128/q129/q131/q132):
-    * batch_id is a per-row function of doc_id, so one tagged scan IS the
-    * union of the per-batch partials, with one text pass instead of one
-    * per batch. */
-  private[graft] def storeContain(g: DataFrame, tag: String): Partials = {
-    val sg = Partials(Seq("g" -> g)).store(tag)
+  /** [[containPartials]] for the batch entries (q128/q129/q131/q132):
+    * store the postings, each row in batch `batch`, then the sizes
+    * derived from the STORED postings — so the postings materialize
+    * once, as the store itself, and one text pass serves every batch. */
+  private[graft] def storeContain(postings: DataFrame, batch: Column,
+      tag: String): Partials = {
+    val sg = Partials(Seq("g" -> postings.select(col("doc_id"), col("gid"),
+      batch.as("batch_id")))).store(tag)
     sg ++ Partials(Seq("sizes" -> containSizes(sg("g")))).store(tag)
   }
 
   /** Collapse surviving partials to the probe-ready index: df is ONE
-    * count over the stored postings, so promote stays delta-only. */
+    * count over the stored postings, so promote stays delta-only; the
+    * sizes are the stored ones. */
   private[graft] def collapseContain(p: Partials): ContainIndex = {
     val g = p("g").drop("batch_id")
     ContainIndex(g, p("sizes").drop("batch_id"),
@@ -2359,13 +2381,13 @@ object Dedup extends QueryModule {
   }
 
   /** Containment-index MERGE equivalence (q128): the frozen batch
-    * (doc_id ≡ 0,1,2 mod 7) and the promoted delta (≡ 3,4) land in the
-    * store as batches 0 and 1, then snippets of the INDEX population
-    * (guaranteed engulfments) plus the unseen docs (≡ 5,6) probe the
-    * collapsed index. Oracle = the probe against the index REBUILT over
-    * frozen∪delta — merged ≡ rebuilt, the delta-only-work proof (the
-    * q115 census pattern on the append algebra). Batch moduli 7/9 are
-    * coprime to the generator's 20-source round-robin.
+    * (doc_id ≡ 0,1,2 mod 7) and the promoted delta (≡ 3,4) as batches 0
+    * and 1, all batches stored at once, then snippets of the INDEX
+    * population (guaranteed engulfments) plus the unseen docs (≡ 5,6)
+    * probe the collapsed index. Oracle = the probe against the index
+    * REBUILT over frozen∪delta — merged ≡ rebuilt, the delta-only-work
+    * proof (the q115 census pattern on the append algebra). Batch
+    * moduli 7/9 are coprime to the generator's 20-source round-robin.
     */
   private def q128(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -2373,32 +2395,30 @@ object Dedup extends QueryModule {
     // the probe-side gram scan is independent of the whole index chain,
     // so it overlaps the store on a driver thread
     val (live, gp) = Overlap.pair(
-      storeContain(gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
-        .withColumn("batch_id", when(m < 3, lit(0L)).otherwise(lit(1L))),
-        "q128"),
+      storeContain(gramIds(docs.filter(m < 5)),
+        when(m < 3, lit(0L)).otherwise(lit(1L)), "q128"),
       probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q128"))
-    probeFromG(collapseContain(live), gp, "q128")
+    probeContain(collapseContain(live), gp, "q128")
   }
 
-  /** Containment-index RETRACTION equivalence (q129): promote batches
-    * 0/1/2 (doc_id ≡ 0,1 / 2,3 / 4 mod 7), store partitioned by
-    * batch_id, retract batch 2 (the re-crawled source recalled after
-    * promote), and probe snippets of the FULL promoted population —
-    * snippets of batch-2 parents lose their container, so the
-    * retraction is observable in the report, and the oracle is the
+  /** Containment-index RETRACTION equivalence (q129): batches 0/1/2
+    * (doc_id ≡ 0,1 / 2,3 / 4 mod 7), all batches stored at once
+    * partitioned by batch_id, retract batch 2 (the re-crawled source
+    * recalled after promote), and probe snippets of the FULL promoted
+    * population — snippets of batch-2 parents lose their container, so
+    * the retraction is observable in the report, and the oracle is the
     * probe against the index REBUILT over batches 0∪1 only: demoted ≡
     * rebuilt-without.
     */
   private def q129(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    // one tagged scan, the probe scan overlapped beside it (see q128)
+    // one gram scan, the probe scan overlapped beside it (see q128)
     val (stored, gp) = Overlap.pair(
-      storeContain(gramIds(docs.filter(m < 5)).toDF("doc_id", "gid")
-        .withColumn("batch_id", when(m < 2, lit(0L))
-          .when(m < 4, lit(1L)).otherwise(lit(2L))), "q129"),
+      storeContain(gramIds(docs.filter(m < 5)),
+        when(m < 2, lit(0L)).when(m < 4, lit(1L)).otherwise(lit(2L)), "q129"),
       probeGramsOf(docs.filter(m < 5), docs.filter(m >= 5), "q129"))
-    probeFromG(collapseContain(stored.retract(2L)), gp, "q129")
+    probeContain(collapseContain(stored.retract(2L)), gp, "q129")
   }
 
   /** The lifecycle entries' shared probe-side gram scan: snippets of
@@ -2414,15 +2434,9 @@ object Dedup extends QueryModule {
       .toDF("doc_id", "gid")
   }
 
-  /** The probe over a materialized probe-gram relation. */
-  private def probeFromG(idx: ContainIndex, gp: DataFrame,
-      tag: String): DataFrame =
-    probeContain(idx, gp,
-      gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), tag)
-
   /** The two-population probe oracle (index population `idxPred`,
     * probe = snippets of `snipPred` parents ∪ `probePred` docs) — the
-    * SQL twin of [[probeLifecycle]] over [[collapseContain]]-shaped
+    * SQL twin of [[probeContain]] over [[collapseContain]]-shaped
     * state, shared by q128 and q129. */
   private def containSqlFor(idxPred: String, snipPred: String,
       probePred: String): String =

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Overlap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partitioned index state: named relations whose rows carry the
@@ -11,8 +11,14 @@ import org.apache.spark.sql.functions._
   * containment and chrome re-freeze q131–q134) stores its state this
   * way, and so does every StreamingPromote family — so one
   * spelling of the lifecycle serves them all; a family contributes only
-  * its per-batch `build` and the `collapse` that turns surviving
-  * partials into its probe shape.
+  * its `build` and the `collapse` that turns surviving partials into
+  * its probe shape.
+  *
+  * Every build takes its batch as a COLUMN over the family's row id
+  * (`doc_id`, `vec_id`), evaluated on the per-document rows before any
+  * aggregation: a streaming promote passes `lit(id)`, and a catalog
+  * entry builds all its batches in one scan with a `when(…)` column —
+  * one build spelling whatever the batch shape.
   *
   * The algebra restates the reference's retraction-first design
   * (`ReducerGraphProcessor.cs:176-209` rolls reducer state back by
@@ -84,9 +90,12 @@ object Partials {
   /** Where a value lives on disk: relation name → directory. */
   type Dirs = Seq[(String, String)]
 
-  /** Tag every relation's rows with one batch id. */
-  def tagged(batchId: Long, rels: (String, DataFrame)*): Partials =
-    Partials(rels.map { case (n, df) => n -> df.withColumn("batch_id", lit(batchId)) })
+  /** Scratch name of a build's materialized scan, keyed by the store
+    * `tag` and the `batch` column: a streaming promote's `lit(id)` per
+    * micro-batch, or two batches of one store built side by side, never
+    * share a path, and a replayed micro-batch reuses its own. */
+  private[graft] def scanName(tag: String, batch: Column, rel: String): String =
+    s"${tag}_${rel}_${Integer.toHexString(batch.toString.hashCode)}"
 
   /** The stored value, partition-discovered; `batch_id` is cast back to
     * long (partition inference narrows it to int). `shape` is the

@@ -102,15 +102,7 @@ object Scratch {
     * [[graft.Ledger]] leg `name`.
     */
   def materialize(df: DataFrame, name: String): DataFrame =
-    graft.Ledger.leg(name)(df.sparkSession.conf.getOption("graft.scratch.dir") match {
-      case Some(_) =>
-        val root = scratchRoot(df)
-        installCleanup(root)
-        val path = Paths.get(root, name).toString
-        df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint()
-    })
+    materializeManaged(df, name)._1
 
   /** [[materialize]] with an explicit RELEASE handle — for iterative
     * kernels (q93's rank rounds, the CC label ping-pong) whose round-k−1
@@ -131,14 +123,45 @@ object Scratch {
     * recompute, so a released frame must never be scanned again.
     */
   def materializeManaged(df: DataFrame, name: String)
-      : (DataFrame, () => Unit) =
+      : (DataFrame, () => Unit) = materializeAs(df, name, None)
+
+  /** [[materialize]] with a PARTITION column — for stored state whose
+    * lifecycle operations are per-partition, e.g. the provenance-tagged
+    * dedup indexes (q102/q103) whose RETRACTION of batch B is
+    * `filter(batch_id =!= B)`: over a batch_id-partitioned store that
+    * filter is partition PRUNING — the retracted batch's files are
+    * never opened, and physically dropping the batch is one directory
+    * delete.
+    *
+    * localCheckpoint mode keeps the same semantics minus the pruning —
+    * correctness never depends on the layout, only retraction COST does.
+    */
+  def materializePartitioned(df: DataFrame, name: String, partCol: String)
+      : DataFrame = materializeAs(df, name, Some(partCol))._1
+
+  /** The one materialize path behind all three forms. Durable mode
+    * reads the written parquet back under the WRITTEN schema, never an
+    * inferred one: a zero-row relation leaves no data file (a
+    * partitioned write only `_SUCCESS`), so inference would fail where
+    * the stated schema reads back empty, and a partition column keeps
+    * its written type instead of the narrower inferred one (a long
+    * batch_id would read back as int). */
+  private def materializeAs(df: DataFrame, name: String,
+      partCol: Option[String]): (DataFrame, () => Unit) =
     graft.Ledger.leg(name)(df.sparkSession.conf.getOption("graft.scratch.dir") match {
       case Some(_) =>
         val root = scratchRoot(df)
         installCleanup(root)
         val path = Paths.get(root, name).toString
-        df.write.mode("overwrite").parquet(path)
-        (df.sparkSession.read.parquet(path), () => deleteTree(path))
+        val w = df.write.mode("overwrite")
+        partCol.fold(w)(w.partitionBy(_)).parquet(path)
+        val back = df.sparkSession.read.schema(df.schema).parquet(path)
+        // partitionBy moves the partition column to the schema tail on
+        // read-back; restore the written column order so both scratch
+        // modes present one shape
+        (partCol.fold(back)(_ => back.select(df.columns.map(
+          org.apache.spark.sql.functions.col).toIndexedSeq: _*)),
+          () => deleteTree(path))
       case None =>
         val cp = df.localCheckpoint()
         val release = () => cp.queryExecution.logical match {
@@ -147,39 +170,5 @@ object Scratch {
           case _ => () // unexpected plan shape: fall back to GC reclaim
         }
         (cp, release)
-    })
-
-  /** [[materialize]] with a PARTITION column — for stored state whose
-    * lifecycle operations are per-partition, e.g. the provenance-tagged
-    * dedup indexes (q102/q103) whose RETRACTION of batch B is
-    * `filter(batch_id =!= B)`: over a batch_id-partitioned store that
-    * filter is partition PRUNING — the retracted batch's files are
-    * never opened, and physically dropping the batch is one directory
-    * delete. The partition column is read back as part of the schema
-    * (cast back to the written dtype: partition-value inference would
-    * otherwise narrow a long batch_id to int, changing the schema
-    * between scratch modes).
-    *
-    * localCheckpoint mode keeps the same semantics minus the pruning —
-    * correctness never depends on the layout, only retraction COST does.
-    */
-  def materializePartitioned(df: DataFrame, name: String, partCol: String)
-      : DataFrame =
-    graft.Ledger.leg(name)(df.sparkSession.conf.getOption("graft.scratch.dir") match {
-      case Some(_) =>
-        val root = scratchRoot(df)
-        installCleanup(root)
-        val path = Paths.get(root, name).toString
-        df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-        val written = df.schema(partCol).dataType
-        df.sparkSession.read.parquet(path)
-          .withColumn(partCol,
-            org.apache.spark.sql.functions.col(partCol).cast(written))
-          // partitionBy moves partCol to the schema tail on read-back;
-          // restore the written column order so both scratch modes
-          // present one shape
-          .select(df.columns.map(org.apache.spark.sql.functions.col)
-            .toIndexedSeq: _*)
-      case None => df.localCheckpoint()
     })
 }

@@ -486,13 +486,14 @@ object Similarity extends QueryModule {
   private[graft] final case class SemIndex(cent: DataFrame, lists: DataFrame)
 
   /** Nearest-list assignment of a vector relation under a given
-    * quantizer — the per-batch unit of index construction (broadcast
-    * centroids; one narrow shuffle on cid).
+    * quantizer — the unit of index construction (broadcast centroids;
+    * one narrow shuffle on cid). `carry` columns of `e` ride along.
     */
-  private def assignLists(e: DataFrame, cent: DataFrame): DataFrame =
+  private def assignLists(e: DataFrame, cent: DataFrame,
+      carry: Column*): DataFrame =
     centroidRanks(e, cent).filter(col("crank") === 1)
-      .select(col("vec_id").as("idx_id"), col("cid"),
-        col("embedding").as("i_emb"), col("nrm").as("i_nrm"))
+      .select(Seq(col("vec_id").as("idx_id"), col("cid"),
+        col("embedding").as("i_emb"), col("nrm").as("i_nrm")) ++ carry: _*)
 
   private[graft] def buildSemIndex(e: DataFrame, cent: DataFrame): SemIndex =
     SemIndex(cent, assignLists(e, cent))
@@ -519,23 +520,21 @@ object Similarity extends QueryModule {
   }
 
   /** Semantic frozen-index MERGE equivalence (q101) — q100's lifecycle
-    * story for the embedding signal: bootstrap the inverted lists over
-    * the frozen corpus (vec_id ≥ DeltaMax, quantizer = the seeded
-    * centroids inside it) as batch 0, STORE them, union the delta
-    * batch's lists (DeltaMax/2 ≤ vec_id < DeltaMax), then probe the next
-    * batch (vec_id < DeltaMax/2) against the collapsed index. The oracle
-    * rebuilds the index from scratch over frozen∪delta under the same
-    * quantizer — hash equality is the merged ≡ rebuilt proof.
+    * story for the embedding signal: the inverted lists of the frozen
+    * corpus (vec_id ≥ DeltaMax, quantizer = the seeded centroids inside
+    * it) as batch 0 and of the delta (DeltaMax/2 ≤ vec_id < DeltaMax) as
+    * batch 1, all batches assigned and stored at once, then probe the
+    * next batch (vec_id < DeltaMax/2) against the collapsed index. The
+    * oracle rebuilds the index from scratch over frozen∪delta under the
+    * same quantizer — hash equality is the merged ≡ rebuilt proof.
     */
   private def q101(s: SparkSession, d: String): DataFrame = {
     val e = Scratch.materialize(withNorm(Tables.embeddings(s, d)), "q101_e")
     val cent = Scratch.materialize(seededCent(e), "q101_cent")
-    val stored = semPartials(e.filter(col("vec_id") >= DeltaMax), cent, 0L)
-      .store("q101")
-    val merged = stored.union(semPartials(
-      e.filter(col("vec_id") >= DeltaMax / 2 && col("vec_id") < DeltaMax),
-      cent, 1L))
-    probeSem(collapseSem(cent, merged), e.filter(col("vec_id") < DeltaMax / 2))
+    val v = col("vec_id")
+    val stored = semPartials(e.filter(v >= DeltaMax / 2), cent,
+      when(v >= DeltaMax, lit(0L)).otherwise(lit(1L))).store("q101")
+    probeSem(collapseSem(cent, stored), e.filter(v < DeltaMax / 2))
   }
 
   /** The (normalized embeddings, frozen quantizer) pair q99/q101/q103
@@ -553,43 +552,43 @@ object Similarity extends QueryModule {
   private[graft] val SemShape = Map(
     "lists" -> "idx_id BIGINT, cid BIGINT, i_emb ARRAY<FLOAT>, i_nrm DOUBLE, batch_id BIGINT")
 
-  /** One batch's semantic partials: its `lists` rows, assigned under
-    * the FROZEN quantizer `cent`. Assignment is per-vector under a fixed
-    * quantizer, so the lists are append-only and a batch's rows are
-    * exactly what its retraction drops. The quantizer is shared state,
-    * not a relation: promote never retrains it and retraction never
-    * touches it, so it is passed to [[collapseSem]] instead.
+  /** The semantic partials of `e`: its `lists` rows, assigned under
+    * the FROZEN quantizer `cent`, each in batch `batch` (over vec_id).
+    * Assignment is per-vector under a fixed quantizer, so the lists are
+    * append-only and a batch's rows are exactly what its retraction
+    * drops. The quantizer is shared state, not a relation: promote never
+    * retrains it and retraction never touches it, so it is passed to
+    * [[collapseSem]] instead.
     */
   private[graft] def semPartials(e: DataFrame, cent: DataFrame,
-      batchId: Long): Partials =
-    Partials.tagged(batchId, "lists" -> assignLists(e, cent))
+      batch: Column): Partials =
+    Partials(Seq("lists" -> assignLists(e.withColumn("batch_id", batch),
+      cent, col("batch_id"))))
 
   /** Collapse to the probe shape: provenance off, [[probeSem]] on. */
   private[graft] def collapseSem(cent: DataFrame, p: Partials): SemIndex =
     SemIndex(cent, p("lists").drop("batch_id"))
 
   /** Semantic frozen-index RETRACTION equivalence (q103) — q102's
-    * story for the embedding signal: bootstrap the inverted lists over
-    * the frozen corpus (vec_id ≥ DeltaMax) as batch 0, promote batch 1
-    * ([3·DeltaMax/4, DeltaMax)) and batch 2 ([DeltaMax/2, 3·DeltaMax/4))
-    * under the frozen quantizer, STORE the tagged lists partitioned by
-    * batch_id, RETRACT batch 2, then probe vec_id < DeltaMax/2 against
-    * the demoted index. The oracle probes lists rebuilt from scratch
-    * over batches 0∪1 only — hash equality is the demoted ≡
-    * rebuilt-without proof.
+    * story for the embedding signal: the inverted lists of the frozen
+    * corpus (vec_id ≥ DeltaMax) as batch 0, of [3·DeltaMax/4, DeltaMax)
+    * as batch 1 and of [DeltaMax/2, 3·DeltaMax/4) as batch 2, all
+    * batches assigned under the frozen quantizer and stored at once
+    * partitioned by batch_id, RETRACT batch 2, then probe
+    * vec_id < DeltaMax/2 against the demoted index. The oracle probes
+    * lists rebuilt from scratch over batches 0∪1 only — hash equality
+    * is the demoted ≡ rebuilt-without proof.
     */
   private def q103(s: SparkSession, d: String): DataFrame = {
     val e = Scratch.materialize(withNorm(Tables.embeddings(s, d)), "q103_e")
     val cent = Scratch.materialize(seededCent(e), "q103_cent")
-    val q3 = DeltaMax * 3 / 4
+    val v = col("vec_id")
     val h = DeltaMax / 2
-    val stored = semPartials(e.filter(col("vec_id") >= DeltaMax), cent, 0L)
-      .union(semPartials(
-        e.filter(col("vec_id") >= q3 && col("vec_id") < DeltaMax), cent, 1L))
-      .union(semPartials(
-        e.filter(col("vec_id") >= h && col("vec_id") < q3), cent, 2L))
+    val stored = semPartials(e.filter(v >= h), cent,
+      when(v >= DeltaMax, lit(0L)).when(v >= DeltaMax * 3 / 4, lit(1L))
+        .otherwise(lit(2L)))
       .store("q103")
-    probeSem(collapseSem(cent, stored.retract(2L)), e.filter(col("vec_id") < h))
+    probeSem(collapseSem(cent, stored.retract(2L)), e.filter(v < h))
   }
 
   // lazy: the q99Sql/q101Sql discipline (interpolates SemTau)

@@ -1746,20 +1746,27 @@ object TextAnalysis extends QueryModule {
   // census over the surviving documents — a re-crawled source's chrome
   // can be demoted without re-counting the corpus.
 
-  /** One batch's census partials: `counts` (source, lmd5, cnt)
-    * distinct-doc counts and `srcn` (source, n_docs). */
   private[graft] val CensusShape = Map(
     "counts" -> "source STRING, lmd5 STRING, cnt BIGINT, batch_id BIGINT",
     "srcn" -> "source STRING, n_docs BIGINT, batch_id BIGINT")
 
-  private[graft] def censusPartials(docs: DataFrame, batchId: Long)
+  /** The census partials of a `(source, doc_id, lmd5)` line relation
+    * ([[lineDigests]] of pages, or a stored line scan), each row in
+    * batch `batch` (over doc_id): `counts` (source, lmd5, cnt)
+    * distinct-doc counts and `srcn` (source, n_docs). n_docs counts the
+    * distinct doc ids of the lines, which is the page count because
+    * every page emits its header line — the q115/q116 oracles count
+    * pages and pin the equality. */
+  private[graft] def censusPartials(li: DataFrame, batch: Column)
       : Partials = {
-    val pd = pageDocs(docs)
-    Partials.tagged(batchId,
-      "counts" -> lineDigests(pd)
-        .groupBy(col("source"), col("lmd5"))
-        .agg(countDistinct(col("doc_id")).as("cnt")),
-      "srcn" -> pd.groupBy(col("source")).agg(count(lit(1)).as("n_docs")))
+    val tagged = li.withColumn("batch_id", batch)
+    Partials(Seq(
+      "counts" -> tagged.groupBy(col("source"), col("lmd5"), col("batch_id"))
+        .agg(countDistinct(col("doc_id")).as("cnt"))
+        .select(col("source"), col("lmd5"), col("cnt"), col("batch_id")),
+      "srcn" -> tagged.groupBy(col("source"), col("batch_id"))
+        .agg(countDistinct(col("doc_id")).as("n_docs"))
+        .select(col("source"), col("n_docs"), col("batch_id"))))
   }
 
   /** SUM-collapse the surviving partials and threshold — the stored
@@ -1788,10 +1795,10 @@ object TextAnalysis extends QueryModule {
       pageDocs(probeDocs).join(broadcast(boiler), Seq("source"), "left"),
       col("bset"))
 
-  /** Census-index MERGE equivalence (q115): bootstrap the census over
-    * the frozen batch (doc_id ≡ 0,1,2 mod 7), STORE it, promote the
-    * delta (≡ 3,4) by appending its partial census, then strip the
-    * arriving batch (≡ 5,6) against the collapsed chrome sets. The
+  /** Census-index MERGE equivalence (q115): the census partials of the
+    * frozen batch (doc_id ≡ 0,1,2 mod 7) and the delta (≡ 3,4) as
+    * batches 0 and 1, all batches stored at once, SUM-collapsed to the
+    * merged census the arriving batch (≡ 5,6) strips against. The
     * split modulus is 7 — COPRIME to the generator's 20-source
     * round-robin, so every source spans index and probe batches (a
     * mod-10 split would give the probe docs sources the index never
@@ -1809,11 +1816,10 @@ object TextAnalysis extends QueryModule {
   private def q115(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    // the merge consumes stored INDEX STATE, provably not the frozen
-    // batch's text
-    val stored = censusPartials(docs.filter(m < 3), 0L).store("q115")
-    censusRows(collapsedCensus(
-      stored.union(censusPartials(docs.filter(m >= 3 && m < 5), 1L))))
+    // the merge consumes stored INDEX STATE, provably not the text
+    val stored = censusPartials(lineDigests(pageDocs(docs.filter(m < 5))),
+      when(m < 3, lit(0L)).otherwise(lit(1L))).store("q115")
+    censusRows(collapsedCensus(stored))
   }
 
   /** The lifecycle entries' output shape over a collapsed census. */
@@ -1823,9 +1829,9 @@ object TextAnalysis extends QueryModule {
         col("n_docs").cast("long").as("n_docs"))
       .orderBy(col("source"), col("lmd5"))
 
-  /** Census-index RETRACTION equivalence (q116): promote batches 0/1/2
-    * (doc_id ≡ 0,1 / 2,3 / 4 mod 7), store partitioned by batch_id,
-    * retract batch 2 (the re-crawled source recalled after promote),
+  /** Census-index RETRACTION equivalence (q116): batches 0/1/2 (doc_id
+    * ≡ 0,1 / 2,3 / 4 mod 7), all batches stored at once partitioned by
+    * batch_id, retract batch 2 (the re-crawled source recalled after promote),
     * and emit the demoted collapsed census. Oracle = the census
     * REBUILT over batches 0∪1 only — demoted ≡ rebuilt-without, count
     * by count (a retraction-ignoring bug keeps batch 2's additions in
@@ -1835,9 +1841,8 @@ object TextAnalysis extends QueryModule {
   private def q116(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val m = col("doc_id") % 7
-    val stored = censusPartials(docs.filter(m < 2), 0L)
-      .union(censusPartials(docs.filter(m >= 2 && m < 4), 1L))
-      .union(censusPartials(docs.filter(m === 4), 2L))
+    val stored = censusPartials(lineDigests(pageDocs(docs.filter(m < 5))),
+      when(m < 2, lit(0L)).when(m < 4, lit(1L)).otherwise(lit(2L)))
       .store("q116")
     censusRows(collapsedCensus(stored.retract(2L)))
   }
@@ -2767,57 +2772,24 @@ object TextAnalysis extends QueryModule {
   /** ONE corpus page-line scan serving BOTH line-containment consumers
     * (at 100× separate [[lineDigests]] plans for the census and the
     * index would each re-run the exploded [[pageLines]] HOF chain —
-    * 39 s + 48 s of the entry's ~108 s): materialize `(source, doc_id, lmd5)` once, derive the
-    * chrome census AND the surviving-line index from the stored
-    * relation. Returns (line relation, broadcast chrome pairs). */
-  private[graft] def lineRelAndChrome(pd: DataFrame,
-      tag: String): (DataFrame, DataFrame) = {
+    * 39 s + 48 s of the entry's ~108 s): materialize `(source, doc_id,
+    * lmd5)` once, derive the chrome census AND the surviving-line index
+    * from the stored relation. The census freezes over the
+    * `censusSlice` rows only (a doc_id predicate — a lifecycle entry's
+    * bootstrap batch; default all rows), so a lifecycle's whole
+    * promoted population still takes one text pass. Returns (line
+    * relation, broadcast chrome pairs). */
+  private[graft] def lineRelAndChrome(pd: DataFrame, tag: String,
+      censusSlice: Column = lit(true)): (DataFrame, DataFrame) = {
     val li = Scratch.materialize(lineDigests(pd), s"${tag}_li")
       .toDF("source", "doc_id", "lmd5")
     val boiler = Scratch.materialize(
-      boilerCensusOfLines(li)
+      boilerCensusOfLines(li.where(censusSlice))
         .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset")),
       s"${tag}_boiler").toDF("source", "bset")
     (li,
       broadcast(boiler.select(col("source"), explode(col("bset")).as("lmd5"))))
   }
-
-  /** One-scan lifecycle front half (guide §6 — scans, not threads):
-    * materialize the page-line relation ONCE over the full
-    * promoted population with `batch_id` derived per row (batch
-    * membership is a pure function of doc_id), and freeze the chrome
-    * census over the `censusPred` slice only. Value-identical to
-    * scanning each batch separately — [[lineDigests]] is a per-document
-    * function, so the tagged union of disjoint slices IS the tagged
-    * single scan — with one text pass instead of one per batch, and the
-    * census spelled over exactly the rows the per-slice scan produced
-    * ([[boilerCensusOfLines]], the one spelling). */
-  private def taggedLinesAndChrome(docs: DataFrame, batchCol: Column,
-      censusPred: Column, tag: String): (DataFrame, DataFrame) = {
-    val li = Scratch.materialize(
-      lineDigests(pageDocs(docs)).withColumn("batch_id", batchCol),
-      s"${tag}_li").toDF("source", "doc_id", "lmd5", "batch_id")
-    val boiler = Scratch.materialize(
-      boilerCensusOfLines(li.where(censusPred)
-          .select(col("source"), col("doc_id"), col("lmd5")))
-        .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset")),
-      s"${tag}_boiler").toDF("source", "bset")
-    (li, broadcast(
-      boiler.select(col("source"), explode(col("bset")).as("lmd5"))))
-  }
-
-  /** The tagged per-batch surviving-line partials over a stored tagged
-    * line relation — [[lineGramIdsOfRel]] per batch in ONE plan:
-    * batch_id re-derives from doc_id after the per-doc distinct
-    * (well-defined because a doc is in exactly one batch), so the
-    * result is the union of the per-batch partials without re-reading
-    * text. */
-  private def taggedLineGrams(li: DataFrame, chromePairs: DataFrame,
-      batchCol: Column): DataFrame =
-    li.join(chromePairs, Seq("source", "lmd5"), "left_anti")
-      .select(col("doc_id"), Dedup.hex12ToLong(col("lmd5")).as("gid"))
-      .distinct()
-      .withColumn("batch_id", batchCol)
 
   /** Per-doc DISTINCT surviving-line gids (q64 48-bit convention —
     * 8-byte keys across every probe shuffle) over a `(source, doc_id,
@@ -2848,10 +2820,7 @@ object TextAnalysis extends QueryModule {
     // probe's three legs
     val g = Scratch.materialize(lineGramIdsOfRel(li, chromePairs),
       "q130_lines").toDF("doc_id", "gid")
-    val idx = Dedup.ContainIndex(g,
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")),
-      g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
-    Dedup.probeContain(idx, g, idx.sizes, "q130")
+    Dedup.probeContain(Dedup.ContainIndex.of(g), g, "q130")
       .withColumnRenamed("n_grams", "n_lines")
   }
 
@@ -2913,18 +2882,6 @@ object TextAnalysis extends QueryModule {
   // a production promote actually runs, not a census rebuilt per
   // delta (which would be corpus-linear work on every micro-batch).
 
-  /** One batch's line-grain containment partials (`g`, `sizes`) under
-    * a FROZEN chrome set, the line scan materialized once so both
-    * relations read the stored scan; the release handle frees it once a
-    * streaming promote's writes land (see [[Dedup.containPartials]]). */
-  private[graft] def lineContainPartials(docs: DataFrame,
-      chrome: DataFrame, batchId: Long, tag: String): Partials = {
-    val (gRaw, release) = Scratch.materializeManaged(
-      lineGramIds(pageDocs(docs), chrome), s"${tag}_lcp${batchId}_g")
-    val g = gRaw.toDF("doc_id", "gid").withColumn("batch_id", lit(batchId))
-    Partials(Seq("g" -> g, "sizes" -> Dedup.containSizes(g)), release)
-  }
-
   /** The lifecycle entries' shared probe-side line scan: constructed
     * quotes of `quoteBase` parents ∪ the unseen `rest` docs, reduced to
     * surviving line gids under the frozen `chrome`, materialized. Split
@@ -2941,18 +2898,12 @@ object TextAnalysis extends QueryModule {
       .toDF("doc_id", "gid")
   }
 
-  /** The probe over a materialized probe-gram relation. */
-  private def probeFromG(idx: Dedup.ContainIndex, gp: DataFrame,
-      tag: String): DataFrame =
-    Dedup.probeContain(idx, gp,
-      gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), tag)
-      .withColumnRenamed("n_grams", "n_lines")
-
   /** Line-containment MERGE equivalence (q131): freeze the chrome
     * census over the bootstrap batch (doc_id ≡ 0,1,2 mod 7), store its
-    * partials and the delta's (≡ 3,4) under the frozen chrome as
-    * batches 0 and 1, then probe quotes of the INDEX population
-    * (guaranteed line-set engulfments) plus the unseen docs (≡ 5,6).
+    * postings and the delta's (≡ 3,4) under the frozen chrome as
+    * batches 0 and 1, all batches at once, then probe quotes of the
+    * INDEX population (guaranteed line-set engulfments) plus the unseen
+    * docs (≡ 5,6).
     * Oracle = the probe against the index REBUILT over frozen∪delta
     * with the census still spelled over the bootstrap only — merged ≡
     * rebuilt under frozen chrome. Batch modulus 7 is coprime to the
@@ -2962,21 +2913,22 @@ object TextAnalysis extends QueryModule {
     val docs = Tables.documents(s, d).select(
       col("doc_id").cast("long").as("doc_id"), col("source"), col("text"))
     val m = col("doc_id") % 7
-    val batchCol = when(col("doc_id") % 7 < 3, lit(0L)).otherwise(lit(1L))
-    val (li, chrome) = taggedLinesAndChrome(docs.filter(m < 5), batchCol,
-      col("batch_id") === 0L, "q131")
+    val (li, chrome) = lineRelAndChrome(pageDocs(docs.filter(m < 5)),
+      "q131", m < 3)
     // the probe-side line scan needs only the frozen chrome, so it
     // overlaps the store on a driver thread
     val (live, gp) = Overlap.pair(
-      Dedup.storeContain(taggedLineGrams(li, chrome, batchCol), "q131"),
+      Dedup.storeContain(lineGramIdsOfRel(li, chrome),
+        when(m < 3, lit(0L)).otherwise(lit(1L)), "q131"),
       probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
         "q131"))
-    probeFromG(Dedup.collapseContain(live), gp, "q131")
+    Dedup.probeContain(Dedup.collapseContain(live), gp, "q131")
+      .withColumnRenamed("n_grams", "n_lines")
   }
 
   /** Line-containment RETRACTION equivalence (q132): freeze the chrome
-    * census over batch 0 (doc_id ≡ 0,1 mod 7), promote batches 0/1/2
-    * (≡ 0,1 / 2,3 / 4) under it, store partitioned by batch_id,
+    * census over batch 0 (doc_id ≡ 0,1 mod 7), store batches 0/1/2
+    * (≡ 0,1 / 2,3 / 4) under it all at once, partitioned by batch_id,
     * retract batch 2 (the re-crawled source recalled after promote),
     * and probe quotes of the FULL promoted population — quotes of
     * batch-2 parents lose their container, so the retraction is
@@ -2987,15 +2939,16 @@ object TextAnalysis extends QueryModule {
     val docs = Tables.documents(s, d).select(
       col("doc_id").cast("long").as("doc_id"), col("source"), col("text"))
     val m = col("doc_id") % 7
-    val batchCol = when(col("doc_id") % 7 < 2, lit(0L))
-      .when(col("doc_id") % 7 < 4, lit(1L)).otherwise(lit(2L))
-    val (li, chrome) = taggedLinesAndChrome(docs.filter(m < 5), batchCol,
-      col("batch_id") === 0L, "q132")
+    val (li, chrome) = lineRelAndChrome(pageDocs(docs.filter(m < 5)),
+      "q132", m < 2)
     val (stored, gp) = Overlap.pair(
-      Dedup.storeContain(taggedLineGrams(li, chrome, batchCol), "q132"),
+      Dedup.storeContain(lineGramIdsOfRel(li, chrome),
+        when(m < 2, lit(0L)).when(m < 4, lit(1L)).otherwise(lit(2L)),
+        "q132"),
       probeLineGrams(chrome, docs.filter(m < 5), docs.filter(m >= 5),
         "q132"))
-    probeFromG(Dedup.collapseContain(stored.retract(2L)), gp, "q132")
+    Dedup.probeContain(Dedup.collapseContain(stored.retract(2L)), gp, "q132")
+      .withColumnRenamed("n_grams", "n_lines")
   }
 
   /** The two-population line-grain probe oracle under a FROZEN chrome
@@ -3084,47 +3037,35 @@ object TextAnalysis extends QueryModule {
   // keep the 8-byte-gid width. Moved rows keep their origin batch_id,
   // so retraction (partition prune) still composes after a re-freeze.
 
-  /** One batch's line-containment store WITH the quarantined chrome
-    * complement, off a `(source, doc_id, lmd5)` line relation: `surv`
-    * (the anti-join side) indexes, `strip` (the semi-join side) is
-    * quarantined — both `(source, doc_id, gid, batch_id)`, ONE split
-    * spelling so a line is on exactly one side of the store for its
-    * batch's frozen chrome. */
+  /** The line-containment store WITH the quarantined chrome
+    * complement, off a `(source, doc_id, lmd5)` line relation, each row
+    * in batch `batch` (over doc_id): `surv` (the anti-join side)
+    * indexes, `strip` (the semi-join side) is quarantined — both
+    * `(source, doc_id, gid, batch_id)`, ONE split spelling so a line is
+    * on exactly one side of the store for its batch's frozen chrome. */
   private[graft] def lineStatePartials(li: DataFrame, chromePairs: DataFrame,
-      batchId: Long): Partials = {
+      batch: Column): Partials = {
     def side(joinType: String): DataFrame =
       li.join(chromePairs, Seq("source", "lmd5"), joinType)
         .select(col("source"), col("doc_id"),
-          Dedup.hex12ToLong(col("lmd5")).as("gid"))
+          Dedup.hex12ToLong(col("lmd5")).as("gid"), batch.as("batch_id"))
         .distinct()
-    Partials.tagged(batchId,
-      "surv" -> side("left_anti"), "strip" -> side("left_semi"))
+    Partials(Seq("surv" -> side("left_anti"), "strip" -> side("left_semi")))
   }
 
-  /** One batch's census partials off the SAME line relation (the
-    * one-scan discipline: postings split and census read one stored
-    * scan) — [[censusPartials]]-shaped, so [[collapsedCensus]] applies.
-    * n_docs = distinct doc ids, the [[boilerCensusOfLines]]
-    * equivalence (every page emits its header line). */
-  private[graft] def lineCensusPartials(li: DataFrame, batchId: Long)
-      : Partials = Partials.tagged(batchId,
-    "counts" -> li.groupBy(col("source"), col("lmd5"))
-      .agg(countDistinct(col("doc_id")).as("cnt")),
-    "srcn" -> li.groupBy(col("source"))
-      .agg(countDistinct(col("doc_id")).as("n_docs")))
-
-  /** One micro-batch of `(doc_id, source, text)` pages for the
-    * re-freeze-capable store, under the currently published `chrome`:
-    * ONE digests scan, materialized, feeds the census partials AND both
+  /** `(doc_id, source, text)` pages for the re-freeze-capable store,
+    * each in batch `batch`, under the currently published `chrome`: ONE
+    * digests scan, materialized, feeds the census partials AND both
     * postings sides (release frees it once the writes land). The scan
-    * is named by the store's `tag` and the batch id. */
+    * is named by the store's `tag` and the batch
+    * ([[Partials.scanName]]). */
   private[graft] def lineRefreezePartials(docs: DataFrame, chrome: DataFrame,
-      batchId: Long, tag: String): Partials = {
+      batch: Column, tag: String): Partials = {
     val (liRaw, release) = Scratch.materializeManaged(
-      lineDigests(pageDocs(docs)), s"${tag}_li$batchId")
+      lineDigests(pageDocs(docs)), Partials.scanName(tag, batch, "li"))
     val li = liRaw.toDF("source", "doc_id", "lmd5")
-    val p = lineCensusPartials(li, batchId) ++
-      lineStatePartials(li, broadcast(chrome), batchId)
+    val p = censusPartials(li, batch) ++
+      lineStatePartials(li, broadcast(chrome), batch)
     p.copy(release = release)
   }
 
@@ -3166,12 +3107,8 @@ object TextAnalysis extends QueryModule {
     * re-freeze changes per-doc counts, and deriving at publish keeps
     * the move itself append/prune-pure. `source` is projected away
     * FIRST — probe shuffles stay (doc_id, 8-byte gid). */
-  private[graft] def collapseLineState(st: Partials): Dedup.ContainIndex = {
-    val g = st("surv").select(col("doc_id"), col("gid"))
-    Dedup.ContainIndex(g,
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")),
-      g.groupBy(col("gid")).agg(count(lit(1)).as("df")))
-  }
+  private[graft] def collapseLineState(st: Partials): Dedup.ContainIndex =
+    Dedup.ContainIndex.of(st("surv").select(col("doc_id"), col("gid")))
 
   /** The two entries' shared lifecycle over the promoted population
     * `pop` split by `bootPred` (bootstrap = batch 0, delta = batch 1;
@@ -3184,32 +3121,18 @@ object TextAnalysis extends QueryModule {
     * population — refrozen ≡ rebuilt-under-C_new. */
   private def lineRefreezeLifecycle(pop: DataFrame, bootPred: Column,
       rest: DataFrame, tag: String): DataFrame = {
-    // ONE tagged page-line scan produces both batches' line relations
-    // (batch membership is a per-row predicate of doc_id); C_new is
-    // materialized once, and the probe-side line scan (which depends
-    // only on C_new) overlaps the re-freeze/republish chain.
-    val li = Scratch.materialize(
-      lineDigests(pageDocs(pop)).withColumn("batch_id",
-        when(bootPred, lit(0L)).otherwise(lit(1L))),
-      s"${tag}_li").toDF("source", "doc_id", "lmd5", "batch_id")
-    def liOf(b: Long): DataFrame = li.where(col("batch_id") === b)
-      .select(col("source"), col("doc_id"), col("lmd5"))
-    val (li0, li1) = (liOf(0L), liOf(1L))
-    // C_old: the one boilerCensusOfLines spelling over the bootstrap
-    // relation, exactly as lineRelAndChrome freezes it
-    val oldChrome = broadcast(Scratch.materialize(
-      boilerCensusOfLines(li0)
-        .groupBy(col("source")).agg(collect_set(col("lmd5")).as("bset")),
-      s"${tag}_boiler").toDF("source", "bset")
-      .select(col("source"), explode(col("bset")).as("lmd5")))
+    // ONE page-line scan serves both batches (batch membership is a
+    // per-row predicate of doc_id) and freezes C_old over the bootstrap
+    // slice; C_new is materialized once, and the probe-side line scan
+    // (which depends only on C_new) overlaps the re-freeze/republish
+    // chain.
+    val batch = when(bootPred, lit(0L)).otherwise(lit(1L))
+    val (li, oldChrome) = lineRelAndChrome(pageDocs(pop), tag, bootPred)
     // the STORE: both sides land partitioned by batch_id before any
     // re-freeze — the move provably consumes stored postings, not text
-    val stored = lineStatePartials(li0, oldChrome, 0L)
-      .union(lineStatePartials(li1, oldChrome, 1L))
-      .store(tag)
+    val stored = lineStatePartials(li, oldChrome, batch).store(tag)
     val newChrome = broadcast(Scratch.materialize(
-      collapsedCensus(lineCensusPartials(li0, 0L)
-          .union(lineCensusPartials(li1, 1L)))
+      collapsedCensus(censusPartials(li, batch))
         .select(col("source"), col("lmd5")), s"${tag}_nc")
       .toDF("source", "lmd5"))
     val refrozen = refreezeLineState(stored, oldChrome, newChrome)
@@ -3220,8 +3143,9 @@ object TextAnalysis extends QueryModule {
       probeLineGrams(newChrome, pop, rest, tag))
     // name-preserving re-alias (fresh attribute ids for the probe's
     // self-joins) — NOT a positional rename, see refreezeLineState
-    probeFromG(collapseLineState(
+    Dedup.probeContain(collapseLineState(
       Partials(Seq("surv" -> rsurv.toDF(rsurv.columns: _*)))), gp, tag)
+      .withColumnRenamed("n_grams", "n_lines")
   }
 
   /** Chrome re-freeze, EMERGED direction (q133): the bootstrap is the

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.queries.Dedup
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -36,7 +35,7 @@ object StreamingContain {
     probeBatchManaged(batch, idx)._1
 
   /** [[probeBatch]] with the candidate cut's release handle — the
-    * streaming path's form (r12 advice): each micro-batch's probe pins
+    * streaming path's form: each micro-batch's probe pins
     * one candidate localCheckpoint, and on an unbounded stream those
     * accumulate without bound — `Harness.settle` cannot sweep
     * mid-stream because it would also drop the frozen index's own
@@ -45,13 +44,10 @@ object StreamingContain {
     * scanned again — the Scratch.materializeManaged contract).
     */
   def probeBatchManaged(batch: DataFrame,
-      idx: Dedup.ContainIndex): (DataFrame, () => Unit) = {
-    val gd = Dedup.gramIds(batch)
+      idx: Dedup.ContainIndex): (DataFrame, () => Unit) =
     // own scratch tag: the kernel's candidate materialization must not
     // collide with batch q127's name when both run in one session
-    Dedup.probeContainManaged(idx, gd,
-      gd.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "scontain")
-  }
+    Dedup.probeContainManaged(idx, Dedup.gramIds(batch), "scontain")
 
   /** The streaming wiring: every micro-batch of `(doc_id, text)`
     * documents probes the frozen index and appends its verdicts as
@@ -66,7 +62,7 @@ object StreamingContain {
       .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], _: Long) =>
         // release the batch's candidate checkpoint once its verdicts
         // are durably written — per-batch storage stays bounded no
-        // matter how long the stream runs (r12 advice)
+        // matter how long the stream runs
         val (verdicts, release) = probeBatchManaged(df, idx)
         try verdicts.write.mode("append").parquet(outDir)
         finally release()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.queries.{Dedup, Scratch, TextAnalysis}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -41,9 +40,7 @@ object StreamingLineContain {
     val g = Scratch.materialize(
       TextAnalysis.lineGramIdsOfRel(li, chrome), "slinec_lines")
       .toDF("doc_id", "gid")
-    FrozenLineIndex(chrome, Dedup.ContainIndex(g,
-      g.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")),
-      g.groupBy(col("gid")).agg(count(lit(1)).as("df"))))
+    FrozenLineIndex(chrome, Dedup.ContainIndex.of(g))
   }
 
   /** One micro-batch's verdicts — batch q130's probe kernel verbatim,
@@ -53,15 +50,14 @@ object StreamingLineContain {
     probeBatchManaged(batch, f)._1
 
   /** [[probeBatch]] with the candidate cut's release handle — the
-    * streaming path's form (the StreamingContain r12-advice
-    * discipline): release after the batch's verdict write lands so
-    * per-batch scratch stays bounded on an unbounded stream. */
+    * streaming path's form (the StreamingContain discipline): release
+    * after the batch's verdict write lands so per-batch scratch stays
+    * bounded on an unbounded stream. */
   def probeBatchManaged(batch: DataFrame,
       f: FrozenLineIndex): (DataFrame, () => Unit) = {
-    val gd = TextAnalysis.lineGramIds(
-      TextAnalysis.pageDocs(batch), f.chrome)
-    val (report, release) = Dedup.probeContainManaged(f.idx, gd,
-      gd.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "slinecont")
+    val (report, release) = Dedup.probeContainManaged(f.idx,
+      TextAnalysis.lineGramIds(TextAnalysis.pageDocs(batch), f.chrome),
+      "slinecont")
     (report.withColumnRenamed("n_grams", "n_lines"), release)
   }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.queries.{Dedup, Partials, Scratch, Similarity, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -48,14 +48,16 @@ object StreamingPromote {
 
   /** The gated streaming promote: every micro-batch of `stream`, gated
     * on `key`, lands as one promoted batch of `build`'s partials under
-    * `dirs`. Caller starts/stops the query. */
+    * `dirs` — the build sees its batch as the column `lit(id)`, the
+    * write its `batch_id=<id>` partition. Caller starts/stops the
+    * query. */
   def promote(stream: DataFrame, key: String, dirs: Partials.Dirs)(
-      build: (DataFrame, Long) => Partials): StreamingQuery =
+      build: (DataFrame, Column) => Partials): StreamingQuery =
     stream.dropDuplicates(key)
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], id: Long) =>
-        promoteBatch(build(df, id), dirs, id)
+        promoteBatch(build(df, lit(id)), dirs, id)
       }
       .start()
 
@@ -99,33 +101,29 @@ object StreamingPromote {
       Similarity.collapseSem(cent,
         Partials.read(spark, dirs, Similarity.SemShape)), probeE)
 
-  /** Probe the live containment state (`Dedup.containPartials`): batch
-    * q128's probe contract (rarest-gram probes by the COLLAPSED df,
-    * candidate-bounded confirm) over whatever has been promoted so far. */
+  /** Probe the live containment state (`Dedup.containPartials` over
+    * `Dedup.gramIds` postings): batch q128's probe contract
+    * (rarest-gram probes by the COLLAPSED df, candidate-bounded confirm)
+    * over whatever has been promoted so far. */
   def probeContainLive(spark: SparkSession, dirs: Partials.Dirs,
-      probeDocs: DataFrame): DataFrame = {
-    val idx = Dedup.collapseContain(
-      Partials.read(spark, dirs, Dedup.ContainShape))
-    val gp = Dedup.gramIds(probeDocs)
-    Dedup.probeContain(idx, gp,
-      gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "spromc")
-  }
+      probeDocs: DataFrame): DataFrame =
+    Dedup.probeContain(
+      Dedup.collapseContain(Partials.read(spark, dirs, Dedup.ContainShape)),
+      Dedup.gramIds(probeDocs), "spromc")
 
-  /** Probe the live line-containment state
-    * (`TextAnalysis.lineContainPartials`, every batch stripped against
-    * the FROZEN publish-time `chrome`): batch q131's probe contract, the
-    * probe side stripped against the SAME chrome. Chrome that emerges
-    * only within the delta stream indexes un-stripped until a re-freeze
-    * — the horizon the re-freeze store below removes. */
+  /** Probe the live line-containment state (`Dedup.containPartials`
+    * over `TextAnalysis.lineGramIds` postings, every batch stripped
+    * against the FROZEN publish-time `chrome`): batch q131's probe
+    * contract, the probe side stripped against the SAME chrome. Chrome
+    * that emerges only within the delta stream indexes un-stripped until
+    * a re-freeze — the horizon the re-freeze store below removes. */
   def probeLineContainLive(spark: SparkSession, chrome: DataFrame,
-      dirs: Partials.Dirs, probeDocs: DataFrame): DataFrame = {
-    val idx = Dedup.collapseContain(
-      Partials.read(spark, dirs, Dedup.ContainShape))
-    val gp = TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome)
-    Dedup.probeContain(idx, gp,
-      gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "spromlc")
+      dirs: Partials.Dirs, probeDocs: DataFrame): DataFrame =
+    Dedup.probeContain(
+      Dedup.collapseContain(Partials.read(spark, dirs, Dedup.ContainShape)),
+      TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome),
+      "spromlc")
       .withColumnRenamed("n_grams", "n_lines")
-  }
 
   // ---- the RE-FREEZE-capable line store (q133/q134's streaming side).
   // Four partitioned relations — surv + strip postings (BOTH sides of
@@ -148,7 +146,7 @@ object StreamingPromote {
     def parts: Partials.Dirs = Seq("surv" -> survDir, "strip" -> stripDir,
       "counts" -> cntDir, "srcn" -> srcnDir)
     /** The store's scratch key: per-batch scans of two stores never
-      * share a path. */
+      * share a path ([[Partials.scanName]]). */
     def tag: String = "sprf" + Integer.toHexString(survDir.hashCode)
   }
 
@@ -162,14 +160,14 @@ object StreamingPromote {
   private def readRefreeze(spark: SparkSession, dirs: LineRefreezeDirs)
       : Partials = Partials.read(spark, dirs.parts, RefreezeShape)
 
-  /** The re-freeze store's per-batch build: pages stripped against the
-    * chrome published when the micro-batch runs (empty before the
-    * bootstrap freeze → everything lands in surv, exactly the
-    * pre-publish state the bootstrap re-freeze then splits). */
-  def refreezePartials(dirs: LineRefreezeDirs)(batch: DataFrame,
-      batchId: Long): Partials =
-    TextAnalysis.lineRefreezePartials(batch,
-      publishedChrome(batch.sparkSession, dirs), batchId, dirs.tag)
+  /** The re-freeze store's build: pages stripped against the chrome
+    * published when the micro-batch runs (empty before the bootstrap
+    * freeze → everything lands in surv, exactly the pre-publish state
+    * the bootstrap re-freeze then splits). */
+  def refreezePartials(dirs: LineRefreezeDirs)(pages: DataFrame,
+      batch: Column): Partials =
+    TextAnalysis.lineRefreezePartials(pages,
+      publishedChrome(pages.sparkSession, dirs), batch, dirs.tag)
 
   /** The currently published chrome pairs `(source, lmd5)` — EMPTY
     * before the first freeze, which makes the bootstrap publish a plain
@@ -244,11 +242,9 @@ object StreamingPromote {
   def probeLineRefreezeLive(spark: SparkSession, dirs: LineRefreezeDirs,
       probeDocs: DataFrame): DataFrame = {
     val ta = TextAnalysis
-    val idx = ta.collapseLineState(readRefreeze(spark, dirs))
     val chrome = broadcast(publishedChrome(spark, dirs))
-    val gp = ta.lineGramIds(ta.pageDocs(probeDocs), chrome)
-    Dedup.probeContain(idx, gp,
-      gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "sprfp")
+    Dedup.probeContain(ta.collapseLineState(readRefreeze(spark, dirs)),
+      ta.lineGramIds(ta.pageDocs(probeDocs), chrome), "sprfp")
       .withColumnRenamed("n_grams", "n_lines")
   }
 }

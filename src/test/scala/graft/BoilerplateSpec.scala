@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.lit
 import graft.queries.TextAnalysis
 
 /** Behavioral gates for q114 per-source boilerplate stripping — the
@@ -20,6 +21,11 @@ class BoilerplateSpec extends SparkSpec {
     import sp.implicits._
     rows.toDF("doc_id", "text", "source")
   }
+
+  /** The census partials of `docs`, each in batch `batch`. */
+  private def census(docs: DataFrame, batch: Column) =
+    TextAnalysis.censusPartials(
+      TextAnalysis.lineDigests(TextAnalysis.pageDocs(docs)), batch)
 
   private def strip(rows: Seq[(Long, String, String)]
       ): Map[Long, (Long, Long, String, Long)] =
@@ -155,9 +161,9 @@ class BoilerplateSpec extends SparkSpec {
 
   test("q115 algebra: merged partial censuses equal the census rebuilt over the union — and the merge is observable") {
     val rows = lifecycleRows
-    val b0 = TextAnalysis.censusPartials(docsDf(rows.filter(_._1 < 6)), 0L)
+    val b0 = census(docsDf(rows.filter(_._1 < 6)), lit(0L))
     val merged = b0.union(
-      TextAnalysis.censusPartials(docsDf(rows.filter(_._1 >= 6)), 1L))
+      census(docsDf(rows.filter(_._1 >= 6)), lit(1L)))
     val rebuilt = TextAnalysis.boilerStrip(docsDf(rows))
     // stripping ALL docs against the merged-collapsed census must
     // equal the one-shot q114 rewrite over the union
@@ -180,11 +186,10 @@ class BoilerplateSpec extends SparkSpec {
   test("q116 algebra: retract equals rebuilt-without, is observable, and prunes partitions on the stored index") {
     val rows = lifecycleRows
     val sp = spark
-    val b01 = TextAnalysis.censusPartials(docsDf(rows.filter(_._1 < 4)), 0L)
-      .union(TextAnalysis.censusPartials(
-        docsDf(rows.filter(r => r._1 >= 4 && r._1 < 8)), 1L))
+    val b01 = census(docsDf(rows.filter(_._1 < 4)), lit(0L))
+      .union(census(docsDf(rows.filter(r => r._1 >= 4 && r._1 < 8)), lit(1L)))
     val p2 = b01.union(
-      TextAnalysis.censusPartials(docsDf(rows.filter(_._1 >= 8)), 2L))
+      census(docsDf(rows.filter(_._1 >= 8)), lit(2L)))
     val key = "graft.scratch.dir"
     sp.conf.set(key, tmpDir("boiler-part"))
     val stored = try p2.store("t116") finally sp.conf.unset(key)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import graft.queries.Dedup
 
 /** Behavioral gates for q127 containment/engulfment detection — the
@@ -147,8 +148,8 @@ class ContainmentSpec extends SparkSpec {
     // write. Structural gate, host-independent: the partial's legs must
     // scan the checkpointed relation (ExistingRDD), with the gram HOF
     // chain (regexp + md5) absent from their plans.
-    val p = Dedup.containPartials(
-      docsDf(Seq(1L -> words("a", 40), 2L -> words("b", 40))), 0L, "tcp")
+    val p = Dedup.containPartials(Dedup.gramIds(
+      docsDf(Seq(1L -> words("a", 40), 2L -> words("b", 40)))), lit(0L), "tcp")
     p.rels.foreach { case (leg, df) =>
       val s = df.queryExecution.executedPlan.toString
       assert(s.contains("ExistingRDD"),
@@ -163,15 +164,13 @@ class ContainmentSpec extends SparkSpec {
     import sp.implicits._
     val frozen = Seq(1L -> words("a", 40))
     val deltaParent = Seq(2L -> words("b", 40))
-    val b0 = Dedup.containPartials(docsDf(frozen), 0L, "tcp")
-    val merged = b0.union(Dedup.containPartials(docsDf(deltaParent), 1L, "tcp"))
+    val b0 = Dedup.containPartials(Dedup.gramIds(docsDf(frozen)), lit(0L), "tcp")
+    val merged = b0.union(
+      Dedup.containPartials(Dedup.gramIds(docsDf(deltaParent)), lit(1L), "tcp"))
     val probe = docsDf(Seq(102L -> words("b", 12)))
     def rows(p: graft.queries.Partials) = {
       val gp = Dedup.gramIds(probe)
-      Dedup.probeContain(Dedup.collapseContain(p), gp,
-        gp.groupBy(org.apache.spark.sql.functions.col("doc_id"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("ng")), "t128")
+      Dedup.probeContain(Dedup.collapseContain(p), gp, "t128")
         .as[(Long, Long, Long, Long, Double)].collect().toSet
     }
     assert(rows(b0).isEmpty, "frozen index must not know the delta parent")
@@ -182,10 +181,10 @@ class ContainmentSpec extends SparkSpec {
   test("q129 algebra: retract equals rebuilt-without, is observable, and prunes partitions on the stored postings") {
     val sp = spark
     import sp.implicits._
-    val b01 = Dedup.containPartials(docsDf(Seq(1L -> words("a", 40))), 0L, "tcp")
-      .union(Dedup.containPartials(docsDf(Seq(2L -> words("b", 40))), 1L, "tcp"))
-    val p2 = b01.union(
-      Dedup.containPartials(docsDf(Seq(3L -> words("c", 40))), 2L, "tcp"))
+    def build(id: Long, pfx: String) = Dedup.containPartials(
+      Dedup.gramIds(docsDf(Seq((id + 1) -> words(pfx, 40)))), lit(id), "tcp")
+    val b01 = build(0L, "a").union(build(1L, "b"))
+    val p2 = b01.union(build(2L, "c"))
     val key = "graft.scratch.dir"
     sp.conf.set(key, tmpDir("contain-part"))
     val stored = try p2.store("t129") finally sp.conf.unset(key)
@@ -198,10 +197,7 @@ class ContainmentSpec extends SparkSpec {
       103L -> words("c", 12)))
     def rows(p: graft.queries.Partials, tag: String) = {
       val gp = Dedup.gramIds(probe)
-      Dedup.probeContain(Dedup.collapseContain(p), gp,
-        gp.groupBy(org.apache.spark.sql.functions.col("doc_id"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("ng")), tag)
+      Dedup.probeContain(Dedup.collapseContain(p), gp, tag)
         .as[(Long, Long, Long, Long, Double)].collect().toSet
     }
     val got = rows(demoted, "t129d")

@@ -56,9 +56,9 @@ class FrozenIndexSpec extends SparkSpec {
   /** Promote each delta in order (batch ids 1, 2, …) onto `idx`. */
   private def lexMerge(idx: Partials, deltas: DataFrame*): Partials =
     deltas.zipWithIndex.foldLeft(idx) { case (p, (d, i)) =>
-      p.union(Dedup.lexPartials(d, i + 1L)) }
+      p.union(Dedup.lexPartials(d, lit(i + 1L))) }
 
-  private def lexFrozen: Partials = Dedup.lexPartials(frozenDocs, 0L)
+  private def lexFrozen: Partials = Dedup.lexPartials(frozenDocs, lit(0L))
 
   private def lexProbeP(idx: Partials, probe: DataFrame) =
     lexRows(Dedup.probeLex(Dedup.collapseLex(idx), probe))
@@ -114,7 +114,7 @@ class FrozenIndexSpec extends SparkSpec {
     // duplicate rows cannot move a min(idx_doc) — the probe contract
     // absorbs at-least-once delivery without a dedup pass
     val once = lexMerge(lexFrozen, deltaDocs)
-    val twice = once.union(Dedup.lexPartials(deltaDocs, 1L))
+    val twice = once.union(Dedup.lexPartials(deltaDocs, lit(1L)))
     assert(lexProbeP(twice, probeDocs) == lexProbeP(once, probeDocs))
   }
 
@@ -173,7 +173,7 @@ class FrozenIndexSpec extends SparkSpec {
     // duplicate inverted-list entries cannot move min-id dup verdicts
     // or max_cos — a retried semantic promote is absorbed the same way
     val once = semMerge(semFrozen, deltaE)
-    val twice = once.union(Similarity.semPartials(deltaE, cents, 1L))
+    val twice = once.union(Similarity.semPartials(deltaE, cents, lit(1L)))
     assert(semProbeP(twice, probeE) == semProbeP(once, probeE))
   }
 
@@ -181,7 +181,7 @@ class FrozenIndexSpec extends SparkSpec {
     val cent = roundtrip(cents, "sem-cent")
     val stored = Partials(Seq(
       "lists" -> roundtrip(semFrozen("lists"), "sem-lists")))
-    val merged = stored.union(Similarity.semPartials(deltaE, cent, 1L))
+    val merged = stored.union(Similarity.semPartials(deltaE, cent, lit(1L)))
     val rebuilt = Similarity.buildSemIndex(frozenE.union(deltaE), cents)
     assert(semRows(Similarity.probeSem(
         Similarity.collapseSem(cent, merged), probeE))
@@ -222,7 +222,7 @@ class FrozenIndexSpec extends SparkSpec {
 
   test("lexical: demote → re-promote round-trips to the merged verdicts") {
     val p2 = lexMerge(lexFrozen, deltaDocs, batch2Docs)
-    val back = p2.retract(2L).union(Dedup.lexPartials(batch2Docs, 3L))
+    val back = p2.retract(2L).union(Dedup.lexPartials(batch2Docs, lit(3L)))
     assert(lexProbeP(back, probeDocs) == lexProbeP(p2, probeDocs))
   }
 
@@ -254,12 +254,12 @@ class FrozenIndexSpec extends SparkSpec {
   // promoted, plus probes must fall back to 150 after retraction
   private def batch2E = embDF(140L -> v(0.87, 0.13, 0, 0))
 
-  private def semFrozen: Partials = Similarity.semPartials(frozenE, cents, 0L)
+  private def semFrozen: Partials = Similarity.semPartials(frozenE, cents, lit(0L))
 
   /** Promote each delta in order (batch ids 1, 2, …) onto `idx`. */
   private def semMerge(idx: Partials, deltas: DataFrame*): Partials =
     deltas.zipWithIndex.foldLeft(idx) { case (p, (d, i)) =>
-      p.union(Similarity.semPartials(d, cents, i + 1L)) }
+      p.union(Similarity.semPartials(d, cents, lit(i + 1L))) }
 
   private def semProbeP(idx: Partials, probe: DataFrame) =
     semRows(Similarity.probeSem(Similarity.collapseSem(cents, idx), probe))
@@ -277,7 +277,7 @@ class FrozenIndexSpec extends SparkSpec {
 
   test("semantic: demote → re-promote round-trips to the merged verdicts") {
     val p2 = semMerge(semFrozen, deltaE, batch2E)
-    val back = p2.retract(2L).union(Similarity.semPartials(batch2E, cents, 3L))
+    val back = p2.retract(2L).union(Similarity.semPartials(batch2E, cents, lit(3L)))
     assert(semProbeP(back, probeE) == semProbeP(p2, probeE))
   }
 }

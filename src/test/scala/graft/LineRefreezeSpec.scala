@@ -28,7 +28,7 @@ class LineRefreezeSpec extends SparkSpec {
     * entries' collapsedCensus spelling over one batch. */
   private def chromeOf(docs: DataFrame): DataFrame = {
     val li = TextAnalysis.lineDigests(TextAnalysis.pageDocs(docs))
-    TextAnalysis.collapsedCensus(TextAnalysis.lineCensusPartials(li, 0L))
+    TextAnalysis.collapsedCensus(TextAnalysis.censusPartials(li, lit(0L)))
       .select(col("source"), col("lmd5"))
   }
 
@@ -36,7 +36,7 @@ class LineRefreezeSpec extends SparkSpec {
       : Partials =
     TextAnalysis.lineStatePartials(
       TextAnalysis.lineDigests(TextAnalysis.pageDocs(docs)), chrome,
-      batchId)
+      lit(batchId))
 
   private def rows(df: DataFrame): Set[(String, Long, Long)] =
     df.select(col("source"), col("doc_id"), col("gid"))

@@ -2,21 +2,22 @@ package graft
 
 import graft.queries.{Dedup, Partials, Scratch, Similarity, TextAnalysis}
 import graft.streaming.StreamingPromote
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The [[Partials]] lifecycle laws, run over every index family's
   * `build` on the sf0.001 corpus: lexical, semantic, boilerplate
   * census, containment, line containment and the re-freeze store. Each
-  * family contributes two disjoint batches (0 and 1) and the collapse
-  * its probe reads; the laws are what every promote/demote in the
-  * catalog and in StreamingPromote relies on.
+  * family contributes two disjoint batches (0 and 1), its build (batch
+  * as a column) and the collapse its probe reads; the laws are what
+  * every promote/demote in the catalog and in StreamingPromote relies
+  * on.
   */
 class PartialsSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   private final case class Family(name: String, batch0: DataFrame,
-      batch1: DataFrame, build: (DataFrame, Long) => Partials,
+      batch1: DataFrame, build: (DataFrame, Column) => Partials,
       collapse: Partials => Seq[DataFrame], shape: Map[String, String])
 
   private def families: Seq[Family] = {
@@ -29,6 +30,7 @@ class PartialsSpec extends SparkSpec {
     val (_, chrome) = TextAnalysis.lineRelAndChrome(
       TextAnalysis.pageDocs(docs), "tpchrome")
     def containShape(idx: Dedup.ContainIndex) = Seq(idx.g, idx.sizes, idx.dfs)
+    def lines(d: DataFrame) = TextAnalysis.lineDigests(TextAnalysis.pageDocs(d))
     Seq(
       Family("lexical", d0, d1, Dedup.lexPartials, p => {
         val idx = Dedup.collapseLex(p); Seq(idx.exact, idx.bands) },
@@ -36,12 +38,15 @@ class PartialsSpec extends SparkSpec {
       Family("semantic", e.filter(vm === 0), e.filter(vm === 1),
         Similarity.semPartials(_, cent, _),
         p => Seq(Similarity.collapseSem(cent, p).lists), Similarity.SemShape),
-      Family("census", d0, d1, TextAnalysis.censusPartials,
+      Family("census", d0, d1,
+        (d, b) => TextAnalysis.censusPartials(lines(d), b),
         p => Seq(TextAnalysis.collapsedCensus(p)), TextAnalysis.CensusShape),
-      Family("containment", d0, d1, Dedup.containPartials(_, _, "tpc"),
+      Family("containment", d0, d1,
+        (d, b) => Dedup.containPartials(Dedup.gramIds(d), b, "tpc"),
         p => containShape(Dedup.collapseContain(p)), Dedup.ContainShape),
       Family("line containment", d0, d1,
-        TextAnalysis.lineContainPartials(_, chrome, _, "tplc"),
+        (d, b) => Dedup.containPartials(TextAnalysis.lineGramIds(
+          TextAnalysis.pageDocs(d), chrome), b, "tplc"),
         p => containShape(Dedup.collapseContain(p)), Dedup.ContainShape),
       Family("re-freeze store", d0, d1,
         TextAnalysis.lineRefreezePartials(_, chrome, _, "tprf"),
@@ -72,10 +77,10 @@ class PartialsSpec extends SparkSpec {
 
   test("retracting a union equals the original after collapse") {
     for (f <- families) {
-      val p0 = f.build(f.batch0, 0L)
+      val p0 = f.build(f.batch0, lit(0L))
       val want = f.collapse(p0).map(rows)
       assert(want.exists(_.nonEmpty), s"${f.name}: batch 0 collapses to nothing")
-      val merged = p0.union(f.build(f.batch1, 1L))
+      val merged = p0.union(f.build(f.batch1, lit(1L)))
       assert(f.collapse(merged).map(rows) != want,
         s"${f.name}: batch 1 is not observable in the collapse")
       assert(f.collapse(merged.retract(1L)).map(rows) == want,
@@ -85,7 +90,7 @@ class PartialsSpec extends SparkSpec {
 
   test("write then demote on disk equals retract; rewriting the same batch id is idempotent") {
     for (f <- families) {
-      val (p0, p1) = (f.build(f.batch0, 0L), f.build(f.batch1, 1L))
+      val (p0, p1) = (f.build(f.batch0, lit(0L)), f.build(f.batch1, lit(1L)))
       val dirs = dirsFor(f, p0)
       p0.write(dirs, 0L)
       p1.write(dirs, 1L)
@@ -108,7 +113,7 @@ class PartialsSpec extends SparkSpec {
     val key = "graft.scratch.dir"
     for (f <- families) {
       val tag = s"tp_${f.name.replace(' ', '_')}"
-      val merged = f.build(f.batch0, 0L).union(f.build(f.batch1, 1L))
+      val merged = f.build(f.batch0, lit(0L)).union(f.build(f.batch1, lit(1L)))
       spark.conf.set(key, tmpDir("partials-store"))
       try {
         val stored = merged.store(tag)
@@ -128,7 +133,7 @@ class PartialsSpec extends SparkSpec {
 
   test("a store whose every batch was demoted reads empty and probes to an empty answer") {
     val stores = families.map { f =>
-      val (p0, p1) = (f.build(f.batch0, 0L), f.build(f.batch1, 1L))
+      val (p0, p1) = (f.build(f.batch0, lit(0L)), f.build(f.batch1, lit(1L)))
       val dirs = dirsFor(f, p0)
       p0.write(dirs, 0L)
       p1.write(dirs, 1L)
@@ -170,9 +175,10 @@ class PartialsSpec extends SparkSpec {
     val (_, chrome) = TextAnalysis.lineRelAndChrome(
       TextAnalysis.pageDocs(docs), "tpchrome2")
     val builds: Seq[(String, (DataFrame, String) => Partials)] = Seq(
-      "containment" -> ((d, t) => Dedup.containPartials(d, 0L, t)),
+      "containment" -> ((d, t) =>
+        Dedup.containPartials(Dedup.gramIds(d), lit(0L), t)),
       "re-freeze store" -> ((d, t) => TextAnalysis.lineRefreezePartials(
-        d, chrome, 0L, t)))
+        d, chrome, lit(0L), t)))
     for ((name, build) <- builds) {
       val want = rowsOf(build(a, "tpwant"))
       spark.conf.set(key, tmpDir("partials-durable"))
@@ -183,6 +189,69 @@ class PartialsSpec extends SparkSpec {
           s"$name: the second store's build overwrote the first's scan")
         assert(rowsOf(second) != want)
       } finally spark.conf.unset(key)
+    }
+  }
+
+  test("durable scratch: an empty relation of every family's shape stores and reads back empty with its shape") {
+    val key = "graft.scratch.dir"
+    val shapes = Seq(Dedup.LexShape, Similarity.SemShape,
+      TextAnalysis.CensusShape, Dedup.ContainShape,
+      Map("surv" -> RefreezePostings, "strip" -> RefreezePostings))
+    def fields(t: org.apache.spark.sql.types.StructType) =
+      t.fields.toSeq.map(f => f.name -> f.dataType)
+    spark.conf.set(key, tmpDir("partials-empty"))
+    try shapes.zipWithIndex.foreach { case (shape, i) =>
+      val empty = Partials(shape.toSeq.map { case (n, ddl) =>
+        n -> spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      })
+      empty.store(s"tpempty$i").rels.foreach { case (n, df) =>
+        assert(fields(df.schema) == fields(
+          org.apache.spark.sql.types.StructType.fromDDL(shape(n))),
+          s"$n: stored empty relation changed shape")
+        assert(df.isEmpty, s"$n: stored empty relation reads back rows")
+      }
+    } finally spark.conf.unset(key)
+  }
+
+  test("the six merge/retract entries build each stored relation from one scan of their input") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val key = "graft.scratch.dir"
+    val audit =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    // every store is a parquet write in durable mode, so each stored
+    // relation's build is an execution of its own the listener sees
+    def counted(entry: String, node: PartialFunction[SparkPlan, Unit]): Int = {
+      spark.conf.set(key, tmpDir("partials-scans"))
+      try executionsOf(SparkEntry.queries(entry)(spark, sf).collect())
+        .map(qe => audit.collectWithSubqueries(qe.executedPlan)(node).size).sum
+      finally spark.conf.unset(key)
+    }
+    val docScans: PartialFunction[SparkPlan, Unit] = {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.contains("documents")) =>
+    }
+    // the semantic entries scan a materialized embedding relation: count
+    // their centroid assignments (the broadcast centroid fan-out) instead
+    val assignments: PartialFunction[SparkPlan, Unit] = {
+      case _: BroadcastNestedLoopJoinExec =>
+    }
+    // (entry, what is counted, stored relations, the probe's own: the
+    // lexical probe's exact and band legs, the semantic probe's
+    // assignment under both of its legs)
+    val cases = Seq(
+      ("q100_lex_index_merge", docScans, 2, 2),
+      ("q102_lex_index_retract", docScans, 2, 2),
+      ("q115_boiler_index_merge", docScans, 2, 0),
+      ("q116_boiler_index_retract", docScans, 2, 0),
+      ("q101_sem_index_merge", assignments, 1, 2),
+      ("q103_sem_index_retract", assignments, 1, 2))
+    for ((entry, node, stored, probe) <- cases) {
+      val n = counted(entry, node)
+      assert(n == stored + probe, s"$entry: $n scans for $stored stored " +
+        s"relations and $probe of the probe's own")
     }
   }
 }

@@ -683,13 +683,15 @@ class PlanAuditSpec extends SparkSpec {
     Seq((30L, "aa bb cc dd ee ff gg hh"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(pDir)
     val dirs = Seq("exact" -> tmpDir("a100-se"), "bands" -> tmpDir("a100-sb"))
-    graft.queries.Dedup.lexPartials(spark.read.parquet(fDir), 0L)
+    graft.queries.Dedup.lexPartials(spark.read.parquet(fDir),
+      org.apache.spark.sql.functions.lit(0L))
       .write(dirs, 0L)
     val stored = graft.queries.Partials.read(spark, dirs,
       graft.queries.Dedup.LexShape)
     val p = planOfDf(graft.queries.Dedup.probeLex(
       graft.queries.Dedup.collapseLex(stored.union(
-        graft.queries.Dedup.lexPartials(spark.read.parquet(dDir), 1L))),
+        graft.queries.Dedup.lexPartials(spark.read.parquet(dDir),
+          org.apache.spark.sql.functions.lit(1L)))),
       spark.read.parquet(pDir)))
     val paths = scanPaths(p)
     assert(paths.nonEmpty, p.toString)
@@ -732,14 +734,16 @@ class PlanAuditSpec extends SparkSpec {
       .write.mode("overwrite").parquet(cDir)
     val cent = spark.read.parquet(cDir)
     val dirs = Seq("lists" -> tmpDir("a101-sl"))
-    graft.queries.Similarity.semPartials(spark.read.parquet(fDir), cent, 0L)
+    graft.queries.Similarity.semPartials(spark.read.parquet(fDir), cent,
+      org.apache.spark.sql.functions.lit(0L))
       .write(dirs, 0L)
     val stored = graft.queries.Partials.read(spark, dirs,
       graft.queries.Similarity.SemShape)
     val p = planOfDf(graft.queries.Similarity.probeSem(
       graft.queries.Similarity.collapseSem(cent, stored.union(
         graft.queries.Similarity.semPartials(
-          spark.read.parquet(dDir), cent, 1L))),
+          spark.read.parquet(dDir), cent,
+          org.apache.spark.sql.functions.lit(1L)))),
       spark.read.parquet(pDir)))
     val paths = scanPaths(p)
     assert(paths.nonEmpty, p.toString)

@@ -83,7 +83,7 @@ class RocksDbStateSpec extends SparkSpec {
       val exactDir = tmpDir("rocks-promote-exact")
       val bandsDir = tmpDir("rocks-promote-bands")
       graft.streaming.StreamingPromote.promoteBatch(
-        graft.queries.Dedup.lexPartials(frozen, -1L),
+        graft.queries.Dedup.lexPartials(frozen, lit(-1L)),
         graft.streaming.StreamingPromote.lexDirs(exactDir, bandsDir), -1L)
       val deltaRows = delta.as[(Long, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped((deltaRows.length + 2) / 3).toSeq

@@ -40,7 +40,7 @@ class StreamingPromoteSpec extends SparkSpec {
     val exactDir = tmpDir("spromote-exact"); val bandsDir = tmpDir("spromote-bands")
     // bootstrap: the frozen corpus is a promoted batch like any other,
     // seeded under a reserved negative id before the stream starts
-    StreamingPromote.promoteBatch(Dedup.lexPartials(frozen, -1L),
+    StreamingPromote.promoteBatch(Dedup.lexPartials(frozen, lit(-1L)),
       StreamingPromote.lexDirs(exactDir, bandsDir), -1L)
     val deltaRows = delta.as[(Long, String)].collect()
     val groups = deltaRows.grouped(
@@ -71,7 +71,7 @@ class StreamingPromoteSpec extends SparkSpec {
     val sp = spark
     import sp.implicits._
     def promoteDirect(batchId: Long) = StreamingPromote.promoteBatch(
-      Dedup.lexPartials(groups(1).toSeq.toDF("doc_id", "text"), batchId),
+      Dedup.lexPartials(groups(1).toSeq.toDF("doc_id", "text"), lit(batchId)),
       StreamingPromote.lexDirs(exactDir, bandsDir), batchId)
     // redeliver the middle micro-batch under its ORIGINAL batch id —
     // what Structured Streaming does after a failure before the sink
@@ -106,7 +106,7 @@ class StreamingPromoteSpec extends SparkSpec {
     // and re-promoting the same documents under a fresh id restores
     // the full-merge verdicts (demote → re-promote round trip)
     StreamingPromote.promoteBatch(
-      Dedup.lexPartials(groups(1).toSeq.toDF("doc_id", "text"), 7L),
+      Dedup.lexPartials(groups(1).toSeq.toDF("doc_id", "text"), lit(7L)),
       StreamingPromote.lexDirs(exactDir, bandsDir), 7L)
     assert(lexRows(StreamingPromote.probeLexLive(sp, exactDir, bandsDir, probe))
       == lexRows(SparkEntry.queries("q100_lex_index_merge")(sp, sf)),
@@ -128,7 +128,7 @@ class StreamingPromoteSpec extends SparkSpec {
     val probe = e.filter(col("vec_id") < dm / 2)
     val dirs = Seq("lists" -> tmpDir("spromote-lists"))
     StreamingPromote.promoteBatch(
-      Similarity.semPartials(frozen, cent, -1L), dirs, -1L)
+      Similarity.semPartials(frozen, cent, lit(-1L)), dirs, -1L)
     val deltaRows = delta.select(col("vec_id"), col("embedding"), col("nrm"))
       .as[(Long, Array[Float], Double)].collect().sortBy(_._1)
     val chunks = deltaRows.grouped(
@@ -178,8 +178,14 @@ class StreamingPromoteSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSet
 
+  /** The census partials of `(doc_id, text, source)` documents. */
+  private def census(docs: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.Column) =
+    TextAnalysis.censusPartials(
+      TextAnalysis.lineDigests(TextAnalysis.pageDocs(docs)), batch)
+
   private def builtRows(docs: org.apache.spark.sql.DataFrame) =
-    censusRows(TextAnalysis.censusPartials(docs, 0L))
+    censusRows(census(docs, lit(0L)))
 
   test("census: streamed gated promote converges with the one-shot census; demote ≡ never-promoted; duplicate redelivery absorbed") {
     val sp = spark
@@ -193,14 +199,13 @@ class StreamingPromoteSpec extends SparkSpec {
     val dirs = Seq("counts" -> tmpDir("spromote-counts"),
       "srcn" -> tmpDir("spromote-srcn"))
     StreamingPromote.promoteBatch(
-      TextAnalysis.censusPartials(frozen, -1L), dirs, -1L)
+      census(frozen, lit(-1L)), dirs, -1L)
     val deltaRows = delta.as[(Long, String, String)].collect()
     val groups = deltaRows.grouped(
       math.max(1, (deltaRows.length + 1) / 2)).toSeq
     val mem = MemoryStream[(Long, String, String)]
     val q = StreamingPromote.promote(
-      mem.toDF().toDF("doc_id", "text", "source"), "doc_id", dirs)(
-      TextAnalysis.censusPartials)
+      mem.toDF().toDF("doc_id", "text", "source"), "doc_id", dirs)(census)
     try {
       groups.foreach { chunk =>
         mem.addData(chunk.toIndexedSeq)
@@ -255,16 +260,17 @@ class StreamingPromoteSpec extends SparkSpec {
         .unionByName(docs.filter(m >= 5))
       val dirs = Seq("g" -> tmpDir("spromote-cg"),
         "sizes" -> tmpDir("spromote-csz"))
-      StreamingPromote.promoteBatch(Dedup.containPartials(frozen, -1L, "spc"),
-        dirs, -1L)
+      def build(df: org.apache.spark.sql.DataFrame,
+          batch: org.apache.spark.sql.Column) =
+        Dedup.containPartials(Dedup.gramIds(df), batch, "spc")
+      StreamingPromote.promoteBatch(build(frozen, lit(-1L)), dirs, -1L)
       val deltaRows = delta.as[(Long, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped(
         math.max(1, (deltaRows.length + 2) / 3)).toSeq
       assert(chunks.length == 3 && chunks(0).length >= 4)
       val mem = MemoryStream[(Long, String)]
       val q = StreamingPromote.promote(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", dirs)(
-        Dedup.containPartials(_, _, "spc"))
+        mem.toDF().toDF("doc_id", "text"), "doc_id", dirs)(build)
       try {
         mem.addData(chunks(0).toIndexedSeq)
         q.processAllAvailable()
@@ -297,10 +303,10 @@ class StreamingPromoteSpec extends SparkSpec {
       val surviving = frozen
         .union(chunks(0).toSeq.toDF("doc_id", "text"))
         .union(chunks(2).toSeq.toDF("doc_id", "text"))
-      val gp = Dedup.gramIds(probeDocs)
       val want = containRows(Dedup.probeContain(
-        Dedup.collapseContain(Dedup.containPartials(surviving, 0L, "tpw")), gp,
-        gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "tpromw"))
+        Dedup.collapseContain(
+          Dedup.containPartials(Dedup.gramIds(surviving), lit(0L), "tpw")),
+        Dedup.gramIds(probeDocs), "tpromw"))
       assert(containRows(StreamingPromote.probeContainLive(
         sp, dirs, probeDocs)) == want,
         "demoted containment state diverged from rebuilt-without")
@@ -334,11 +340,14 @@ class StreamingPromoteSpec extends SparkSpec {
       // same frozen input every delta batch is stripped against
       val (_, chrome) = TextAnalysis.lineRelAndChrome(
         TextAnalysis.pageDocs(frozen), "tlcfreeze")
-      def build(df: org.apache.spark.sql.DataFrame, id: Long) =
-        TextAnalysis.lineContainPartials(df, chrome, id, "splc")
+      def build(df: org.apache.spark.sql.DataFrame,
+          batch: org.apache.spark.sql.Column) =
+        Dedup.containPartials(
+          TextAnalysis.lineGramIds(TextAnalysis.pageDocs(df), chrome), batch,
+          "splc")
       val dirs = Seq("g" -> tmpDir("spromote-lcg"),
         "sizes" -> tmpDir("spromote-lcsz"))
-      StreamingPromote.promoteBatch(build(frozen, -1L), dirs, -1L)
+      StreamingPromote.promoteBatch(build(frozen, lit(-1L)), dirs, -1L)
       val deltaRows = delta.as[(Long, String, String)].collect().sortBy(_._1)
       val chunks = deltaRows.grouped(
         math.max(1, (deltaRows.length + 2) / 3)).toSeq
@@ -377,11 +386,12 @@ class StreamingPromoteSpec extends SparkSpec {
       val surviving = frozen
         .union(chunks(0).toSeq.toDF("doc_id", "source", "text"))
         .union(chunks(2).toSeq.toDF("doc_id", "source", "text"))
-      val gp = TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome)
       val want = containRows(Dedup.probeContain(
-        Dedup.collapseContain(
-          TextAnalysis.lineContainPartials(surviving, chrome, 0L, "tlcw")),
-        gp, gp.groupBy(col("doc_id")).agg(count(lit(1)).as("ng")), "tlcwp"))
+        Dedup.collapseContain(Dedup.containPartials(
+          TextAnalysis.lineGramIds(TextAnalysis.pageDocs(surviving), chrome),
+          lit(0L), "tlcw")),
+        TextAnalysis.lineGramIds(TextAnalysis.pageDocs(probeDocs), chrome),
+        "tlcwp"))
       assert(containRows(StreamingPromote.probeLineContainLive(
         sp, chrome, dirs, probeDocs)) == want,
         "demoted line-containment state diverged from rebuilt-without")
