@@ -1545,13 +1545,17 @@ object Dedup extends QueryModule {
     * of one collapsed min — a plain min is not subtractable, per-batch
     * partials are — and `bands` is append-only (band keys are
     * per-document). Frozen text is never read again: later promotes
-    * union their own partials in.
+    * union their own partials in. `batch` is a grouping EXPRESSION,
+    * not a projected column: Catalyst drops a literal grouping
+    * expression, so a streaming promote's `lit(id)` leaves the plain
+    * per-norm_md5 min (a projected literal would stay a shuffle key of
+    * every micro-batch's build).
     */
   private[graft] def lexPartials(docs: DataFrame, batch: Column): Partials =
     Partials(Seq(
       "exact" -> docs.select(normMd5(col("text")).as("norm_md5"),
-          col("doc_id"), batch.as("batch_id"))
-        .groupBy(col("norm_md5"), col("batch_id"))
+          col("doc_id"))
+        .groupBy(col("norm_md5"), batch.as("batch_id"))
         .agg(min(col("doc_id")).as("idx_doc"))
         .select(col("norm_md5"), col("idx_doc"), col("batch_id")),
       "bands" -> bandEntries(docs.select(col("doc_id"), col("text")))

@@ -1756,18 +1756,16 @@ object TextAnalysis extends QueryModule {
     * distinct-doc counts and `srcn` (source, n_docs). n_docs counts the
     * distinct doc ids of the lines, which is the page count because
     * every page emits its header line — the q115/q116 oracles count
-    * pages and pin the equality. */
+    * pages and pin the equality. `batch` groups as an expression, so
+    * a literal drops out of the keys ([[Dedup.lexPartials]]). */
   private[graft] def censusPartials(li: DataFrame, batch: Column)
-      : Partials = {
-    val tagged = li.withColumn("batch_id", batch)
-    Partials(Seq(
-      "counts" -> tagged.groupBy(col("source"), col("lmd5"), col("batch_id"))
-        .agg(countDistinct(col("doc_id")).as("cnt"))
-        .select(col("source"), col("lmd5"), col("cnt"), col("batch_id")),
-      "srcn" -> tagged.groupBy(col("source"), col("batch_id"))
-        .agg(countDistinct(col("doc_id")).as("n_docs"))
-        .select(col("source"), col("n_docs"), col("batch_id"))))
-  }
+      : Partials = Partials(Seq(
+    "counts" -> li.groupBy(col("source"), col("lmd5"), batch.as("batch_id"))
+      .agg(countDistinct(col("doc_id")).as("cnt"))
+      .select(col("source"), col("lmd5"), col("cnt"), col("batch_id")),
+    "srcn" -> li.groupBy(col("source"), batch.as("batch_id"))
+      .agg(countDistinct(col("doc_id")).as("n_docs"))
+      .select(col("source"), col("n_docs"), col("batch_id"))))
 
   /** SUM-collapse the surviving partials and threshold — the stored
     * state's census view, (source, lmd5, cnt, n_docs) rows exactly
